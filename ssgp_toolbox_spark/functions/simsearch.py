@@ -1,17 +1,19 @@
 """Similarity search over the embeddings table (array<float>).
 
-- brute-force cosine top-k: the exactness baseline. Dot products via
-  ``zip_with`` + ``aggregate`` (JVM-side, no Python); ranking by
-  (rounded similarity desc, neighbor id asc) so results are
-  deterministic and engine-portable.
+- brute-force cosine top-k: the exactness baseline. Rounded cosines
+  come from one Arrow pandas-UDF kernel (``_cosine6``) whose
+  fold-order sums and HALF_UP 6dp rounding match the SQL oracle's
+  arithmetic value for value; ranking by (rounded similarity desc,
+  neighbor id asc) so results are deterministic and engine-portable.
 - the ANN family, all with seeded-hyperplane randomness whose 6dp
-  literals embed identically in the Spark plan and the DuckDB oracle:
+  constants are shared exactly by the Spark kernels and the DuckDB
+  oracle:
   * ``bucketed_topk`` — single-table multi-bit signature: maximal
     pruning, no recall bar (dedup-style prefilter).
   * ``lsh_topk`` — multi-table random-hyperplane LSH: the recall
     path; candidates = union over tables, shuffle key (table,bucket).
   * ``ivf_topk`` — coarse quantizer (declarative unrolled Lloyd) +
-    n_probe nearest cells; broadcast centroid table, cell-local scan.
+    n_probe nearest cells; shipped centroid matrix, cell-local scan.
   At 10^12 rows the bucket/cell key is the shuffle key; probe cost
   per query drops by the bucket count.
 """
@@ -23,33 +25,21 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def _cosine(a, b):
-    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, v: acc + v)
-    na = F.sqrt(F.aggregate(F.transform(a, lambda x: x * x),
-                            F.lit(0.0), lambda acc, v: acc + v))
-    nb = F.sqrt(F.aggregate(F.transform(b, lambda x: x * x),
-                            F.lit(0.0), lambda acc, v: acc + v))
-    return dot / (na * nb)
-
-
-# ---- Arrow twins of the Catalyst higher-order-function arithmetic ----
+# ---- Arrow similarity kernels ----
 #
 # Catalyst HOFs (zip_with/aggregate/transform) are interpreted per
 # ELEMENT: the 64-d fold chains cost ~0.5-1 ms/row and dominate every
 # similarity query at any corpus size (measured: the s03 corpus key
-# projection alone was 1.2 s for 2 000 rows). The kernels below are
-# bit-identical replacements, not approximations:
+# projection alone was 1.2 s for 2 000 rows). The kernels below
+# compute the same values as those HOF forms, not approximations:
 # - sums accumulate COLUMN BY COLUMN, i.e. the same left-to-right
 #   fold order as `aggregate(.., (acc, v) -> acc + v)` — no pairwise
 #   or BLAS reassociation, so every f64 intermediate matches;
 # - rounding uses copysign(floor(|x|·1e6 + 0.5), x)/1e6 — HALF_UP
 #   away from zero, `F.round(x, 6)` semantics for either sign.
-# Parity is asserted value-for-value on all harness corpora
-# (tests/test_ann_recall.py) and each call site is switchable back to
-# the Catalyst form (`ARROW_SIM`).
-
-ARROW_SIM = True
+# Parity with the Catalyst forms (kept in tests/oracles.py) is
+# asserted value-for-value on the harness corpus
+# (tests/test_ann_recall.py).
 
 
 def _seq_dot(X, Y):
@@ -68,29 +58,21 @@ def _round6_half_up(x):
     return np.copysign(np.floor(np.abs(x) * 1e6 + 0.5), x) / 1e6
 
 
-def _cos6_udf():
-    """round(cosine, 6) over two array<double> columns — the Arrow
-    twin of F.round(_cosine(a, b), 6)."""
+def _cosine6(a, b):
+    """Rounded (6dp HALF_UP) cosine similarity of two array<double>
+    columns."""
     import numpy as np
     import pandas as pd
 
-    def kernel(a, b):
-        A = np.stack(a.to_numpy())
-        B = np.stack(b.to_numpy())
+    def kernel(sa, sb):
+        A = np.stack(sa.to_numpy())
+        B = np.stack(sb.to_numpy())
         dot = _seq_dot(A, B)
         na = np.sqrt(_seq_dot(A, A))
         nb = np.sqrt(_seq_dot(B, B))
         return pd.Series(_round6_half_up(dot / (na * nb)))
 
-    return F.pandas_udf(kernel, "double")
-
-
-def _cosine6(a, b):
-    """Rounded cosine similarity: Arrow kernel by default, Catalyst
-    HOF fold when ``ARROW_SIM`` is off — same values either way."""
-    if ARROW_SIM:
-        return _cos6_udf()(a, b)
-    return F.round(_cosine(a, b), 6)
+    return F.pandas_udf(kernel, "double")(a, b)
 
 
 def _cast(df: DataFrame) -> DataFrame:
@@ -114,51 +96,20 @@ def cosine_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5) -> DataFr
             .select("qid", "nid", "sim", "rank"))
 
 
-def sign_bucket(emb_col, n_bits: int = 2):
-    """Component-sign bucket (leading ``n_bits`` components). Kept
-    only as the trivially-SQL-portable toy key; ``bucketed_topk`` uses
-    seeded hyperplane signatures (``lsh_table_keys``) instead."""
-    b = None
-    for i in range(n_bits):
-        bit = F.when(F.element_at(emb_col, i + 1) > 0, F.lit(1)).otherwise(F.lit(0))
-        b = bit if b is None else b * 2 + bit
-    return b
-
-
 def hyperplanes(n_bits: int = 16, dim: int = 64, seed: int = 7):
-    """Seeded random hyperplanes, rounded to 6dp so the same literal
-    constants embed exactly in both the Spark plan and the DuckDB
-    oracle SQL."""
+    """Seeded random hyperplanes, rounded to 6dp so the Spark kernels
+    and the DuckDB oracle SQL use exactly the same constants."""
     import numpy as np
 
     rng = np.random.default_rng(seed)
     return rng.standard_normal((n_bits, dim)).round(6)
 
 
-def lsh_table_keys(emb_col, planes, bits_per_table: int, n_tables: int):
-    """Per-table random-hyperplane bucket keys: table t's key packs
-    the sign bits of planes [t·b, (t+1)·b). Pure Catalyst (zip_with +
-    aggregate per plane) — no Python. Returns an array<int> of
-    ``n_tables`` keys."""
-    keys = []
-    for t in range(n_tables):
-        key = None
-        for j in range(bits_per_table):
-            h = planes[t * bits_per_table + j]
-            dot = F.aggregate(
-                F.zip_with(emb_col, F.array(*[F.lit(float(v)) for v in h]),
-                           lambda x, y: x * y),
-                F.lit(0.0), lambda acc, v: acc + v)
-            bit = F.when(dot > 0, F.lit(1)).otherwise(F.lit(0))
-            key = bit if key is None else key * 2 + bit
-        keys.append(key)
-    return F.array(*keys)
-
-
-def _lsh_keys_udf(planes, bits_per_table: int, n_tables: int):
-    """Arrow twin of ``lsh_table_keys`` (see the parity notes above
-    ``ARROW_SIM``): per-plane dots accumulate in the identical fold
-    order, signs and bit packing unchanged."""
+def lsh_keys(emb_col, planes, bits_per_table: int, n_tables: int):
+    """Per-table random-hyperplane bucket keys: an array<int> of
+    ``n_tables`` keys; table t's key packs the sign bits of planes
+    [t·b, (t+1)·b). Per-plane dots accumulate in fold order (see the
+    notes above ``_seq_dot``)."""
     import numpy as np
     import pandas as pd
 
@@ -178,15 +129,7 @@ def _lsh_keys_udf(planes, bits_per_table: int, n_tables: int):
             keys[:, t] = key
         return pd.Series([row.astype("int32").tolist() for row in keys])
 
-    return F.pandas_udf(kernel, "array<int>")
-
-
-def lsh_keys(emb_col, planes, bits_per_table: int, n_tables: int):
-    """Per-table LSH bucket keys — Arrow kernel by default, the
-    Catalyst expression when ``ARROW_SIM`` is off; identical keys."""
-    if ARROW_SIM:
-        return _lsh_keys_udf(planes, bits_per_table, n_tables)(emb_col)
-    return lsh_table_keys(emb_col, planes, bits_per_table, n_tables)
+    return F.pandas_udf(kernel, "array<int>")(emb_col)
 
 
 def lsh_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
@@ -239,8 +182,8 @@ def bucketed_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
     collision probability decays with (1 - θ/π)^n_bits, so use
     ``lsh_topk`` (multi-table union) or ``ivf_topk`` (coarse
     quantizer + probes) when recall matters. Signature reuses
-    ``lsh_table_keys`` with one table so Spark and the SQL oracle
-    share the exact hyperplane literals."""
+    ``lsh_keys`` with one table so Spark and the SQL oracle share the
+    exact hyperplane constants."""
     planes = hyperplanes(n_bits, seed=seed)
     key = lambda col: F.element_at(lsh_keys(col, planes, n_bits, 1), 1)
     q = _cast(queries).select(
@@ -260,9 +203,14 @@ def bucketed_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
             .select("qid", "nid", "sim", "rank"))
 
 
-def _norm_udf():
-    """Arrow twin of the normalize projection (see ``ARROW_SIM``):
-    fold-order squared-norm accumulation, per-element HALF_UP 6dp."""
+def _normalize(df: DataFrame, vec_col: str = "emb") -> DataFrame:
+    """Unit-normalize ``vec_col``: fold-order squared-norm
+    accumulation, per-element HALF_UP 6dp."""
+    # NOTE(perf, measured): the Catalyst higher-order fold costs
+    # ~40 µs/row/8 cores at 64-d (interpreted per element), and an
+    # unrolled 64-wide codegen variant gets inlined by project-collapse
+    # into every downstream reference until codegen OOMs — hence the
+    # Arrow kernel.
     import numpy as np
     import pandas as pd
 
@@ -272,72 +220,38 @@ def _norm_udf():
         out = _round6_half_up(X / norm[:, None])
         return pd.Series(list(out))
 
-    return F.pandas_udf(kernel, "array<double>")
+    return df.withColumn(
+        vec_col, F.pandas_udf(kernel, "array<double>")(F.col(vec_col)))
 
 
-def _normalize(df: DataFrame, vec_col: str = "emb") -> DataFrame:
-    # NOTE(perf, measured): the higher-order fold costs ~40 µs/row/8
-    # cores at 64-d (interpreted per element). An unrolled 64-wide
-    # codegen variant measures 3.7× faster in isolation but Catalyst's
-    # project-collapse inlines the array expression into EVERY
-    # downstream reference (e.g. 16 literal centroid distances), which
-    # explodes the expression tree and OOMs codegen — so the fast path
-    # is the Arrow kernel (``_norm_udf``), bit-identical by the
-    # ``ARROW_SIM`` construction and switchable back to the HOF form.
-    if ARROW_SIM:
-        return df.withColumn(vec_col, _norm_udf()(F.col(vec_col)))
-    norm = F.sqrt(F.aggregate(F.transform(F.col(vec_col), lambda x: x * x),
-                              F.lit(0.0), lambda a, v: a + v))
-    return df.withColumn(vec_col, F.transform(
-        F.col(vec_col), lambda x: F.round(x / norm, 6)))
+# Centroid tables up to this many cells ride along as a closure
+# capture (pickled into every task); larger ones ship as one
+# SparkContext.broadcast per executor.
+MAX_CLOSURE_CELLS = 4096
 
 
-def _centroid_dist(vec, cvec):
-    # squared L2 on normalized vectors (monotone in cosine), rounded so
-    # both engines argmin identical values
-    return F.round(F.aggregate(F.zip_with(vec, cvec, lambda a, b: (a - b) * (a - b)),
-                               F.lit(0.0), lambda a, v: a + v), 6)
+def _ship(payload, n_cells: int):
+    if n_cells <= MAX_CLOSURE_CELLS:
+        return payload
+    from pyspark.sql import SparkSession
+
+    return SparkSession.getActiveSession().sparkContext.broadcast(payload)
 
 
-def _lit_vec(vec) -> "F.Column":
-    return F.array(*[F.lit(float(v)) for v in vec])
-
-
-def _cell_dists(emb_col, centroids):
-    """Array of rounded squared-L2 distances to the driver-known
-    centroid literals (index i = cid i) — a single narrow projection,
-    the exact plan trick ``lsh_table_keys`` uses for planes."""
-    return F.array(*[_centroid_dist(emb_col, _lit_vec(v)) for v in centroids])
-
-
-def _argmin_cell(emb_col, centroids):
-    """argmin cell id with (dist, cid) tie-break: ``array_position``
-    returns the FIRST index of the minimum, i.e. the lowest cid among
-    equal (6dp-rounded) distances — identical to the former
-    ``row_number over (order by dist, cid)`` semantics."""
-    d = _cell_dists(emb_col, centroids)
-    return (F.array_position(d, F.array_min(d)) - 1).cast("int")
-
-
-def _ship_centroids(centroids, max_closure_cells: int):
+def _ship_centroids(centroids):
     """Centroid matrix as the task-side input for the Arrow kernels:
-    a plain closure capture (pickled into EVERY serialized task) up
-    to ``max_closure_cells``, a ``SparkContext.broadcast`` beyond —
-    shipped to each executor once over the torrent-style broadcast
-    channel instead of once per task. At the ~10^5-10^6 cells real
-    IVF wants at 10^12 rows, the (cells × dim) float64 matrix is
-    hundreds of MB: closure capture would re-ship it with every one
-    of ~10^5 tasks, broadcast ships it per executor. Same kernel,
-    same arithmetic either way (parity pinned in
+    a plain closure capture up to ``MAX_CLOSURE_CELLS``, a
+    ``SparkContext.broadcast`` beyond — shipped to each executor once
+    over the torrent-style broadcast channel instead of once per
+    task. At the ~10^5-10^6 cells real IVF wants at 10^12 rows, the
+    (cells × dim) float64 matrix is hundreds of MB: closure capture
+    would re-ship it with every one of ~10^5 tasks. Same kernel, same
+    arithmetic either way (parity pinned in
     tests/test_ann_recall.py)."""
     import numpy as np
 
-    C = np.ascontiguousarray(centroids, dtype=np.float64)  # (k, d)
-    if len(centroids) <= max_closure_cells:
-        return C
-    from pyspark.sql import SparkSession
-
-    return SparkSession.getActiveSession().sparkContext.broadcast(C)
+    return _ship(np.ascontiguousarray(centroids, dtype=np.float64),
+                 len(centroids))
 
 
 def _resolve_centroids(shipped):
@@ -345,14 +259,15 @@ def _resolve_centroids(shipped):
 
 
 def _assign_pandas_udf(shipped):
-    """Arrow-vectorized argmin-cell kernel for LARGE centroid tables:
-    one (batch × cells) distance matmul per Arrow batch against the
-    closure-captured or broadcast centroid matrix (``_ship_centroids``).
-    Rounds to 6dp with HALF_UP on the non-negative distances
+    """Arrow-vectorized argmin-cell kernel: one (batch × cells)
+    distance matmul per Arrow batch against the closure-captured or
+    broadcast centroid matrix (``_ship_centroids``). Rounds to 6dp
+    with HALF_UP on the non-negative distances
     (np.floor(d*1e6+0.5)/1e6) to match Spark's ``F.round`` semantics,
     and breaks ties toward the lowest cid (np.argmin first index) —
-    the same (dist, cid) order as the literal path; parity asserted
-    in tests/test_ann_recall.py."""
+    the (dist, cid) order of the s04 SQL oracle; parity with the
+    literal-centroid Catalyst form is asserted in
+    tests/test_ann_recall.py."""
     import numpy as np
     import pandas as pd
 
@@ -369,9 +284,8 @@ def _assign_pandas_udf(shipped):
 
 def _probe_pandas_udf(shipped, n_probe: int):
     """Arrow-vectorized n_probe-nearest-cells kernel (the query-side
-    counterpart of ``_assign_pandas_udf`` for large centroid tables):
-    same rounded distances, ranked by (dist, cid) via a stable
-    argsort — identical order to the literal array_sort path."""
+    counterpart of ``_assign_pandas_udf``): same rounded distances,
+    ranked by (dist, cid) via a stable argsort."""
     import numpy as np
     import pandas as pd
 
@@ -388,9 +302,7 @@ def _probe_pandas_udf(shipped, n_probe: int):
 
 
 def ivf_assign(vectors: DataFrame, centroids: list, vec_col: str = "emb",
-               out_col: str = "cid",
-               max_literal_cells: int = 0,
-               max_closure_cells: int = 4096) -> DataFrame:
+               out_col: str = "cid") -> DataFrame:
     """Corpus → cell assignment as a ZERO-SHUFFLE narrow projection:
     ``centroids`` is the driver-known list of (already 6dp-rounded)
     centroid vectors. No Exchange, no Window, no fan-out — at 10^12
@@ -399,74 +311,37 @@ def ivf_assign(vectors: DataFrame, centroids: list, vec_col: str = "emb",
     per-vector row_number shuffle (round-3 VERDICT "What's wrong" #3).
     Plan shape is pinned by tests/test_plans_and_skew.py.
 
-    Three physical strategies, same logical map:
-    - ``n_cells <= max_literal_cells``: centroids embed as 6dp plan
-      LITERALS (codegen expressions, exactly how lsh_table_keys
-      embeds planes) — the engine-portable path the s04 SQL oracle
-      mirrors bit-for-bit. OFF by default since the optimization
-      round: the n_cells × dim higher-order-function distance tree is
-      interpreted per element AND costs Catalyst seconds of
-      analysis/codegen per job — the Arrow kernel measures ~2× faster
-      at 16 cells and is bit-identical on every harness corpus
-      (asserted across sf0.001/0.01/0.1; the parity test pins the
-      routes), so the SQL-oracle guarantee is unchanged.
-    - up to ``max_closure_cells``: a vectorized Arrow kernel — one
-      (batch × cells) matmul per batch against the closure-captured
-      centroid matrix, HALF_UP-rounded to match F.round, first-index
-      tie-break.
-    - beyond: the SAME Arrow kernel, but the centroid matrix ships
-      as a ``SparkContext.broadcast`` (once per executor) instead of
-      a closure capture (once per task). Real IVF at 10^12 rows
-      wants ~sqrt(N) ≈ 10^5-10^6 cells, where a million-literal
-      Catalyst expression is impossible and re-pickling a
-      hundreds-of-MB matrix into every task would dominate task
-      launch; as a broadcast it is an ordinary side input. Kernel
-      parity across the two shipping modes is pinned in
-      tests/test_ann_recall.py.
+    The map is a vectorized Arrow kernel (``_assign_pandas_udf``):
+    one (batch × cells) matmul per batch, HALF_UP-rounded to match
+    F.round, first-index tie-break. The centroid matrix reaches the
+    tasks via ``_ship_centroids`` — a closure capture for small
+    tables, a ``SparkContext.broadcast`` for the ~10^5-10^6 cells
+    real IVF wants at 10^12 rows, where re-pickling a hundreds-of-MB
+    matrix into every task would dominate task launch.
 
-    Cross-strategy caveat: the two paths round via different
-    floating-point routes (fold-summed (a-b)^2 + BigDecimal HALF_UP
-    vs expanded x^2-2xc+c^2 + floor(d*1e6+0.5)); a distance within
-    ~1e-12 of a 5e-7 rounding boundary could in principle argmin to a
-    different cell. Parity is asserted on the test corpora; the
-    strategy choice is deterministic per (n_cells, max_literal_cells),
-    so any single configuration is always self-consistent — only the
-    SQL-oracle guarantee is literal-path-specific."""
-    if len(centroids) <= max_literal_cells:
-        return vectors.withColumn(out_col,
-                                  _argmin_cell(F.col(vec_col), centroids))
-    shipped = _ship_centroids(centroids, max_closure_cells)
+    The kernel rounds the expanded x²-2xc+c² form, the s04 SQL oracle
+    the fold-summed (a-b)²: a distance within ~1e-12 of a 6dp
+    rounding boundary could argmin differently. Cell-for-cell
+    equality with the oracle's literal-centroid form is asserted on
+    the harness corpus (tests/test_ann_recall.py)."""
+    shipped = _ship_centroids(centroids)
     return vectors.withColumn(out_col,
                               _assign_pandas_udf(shipped)(F.col(vec_col)))
 
 
 def ivf_probe_cells(queries: DataFrame, centroids: list, n_probe: int,
                     vec_col: str = "qe", out_col: str = "cid",
-                    max_literal_cells: int = 0,
-                    max_closure_cells: int = 4096,
                     shipped=None) -> DataFrame:
-    """Each query row → its ``n_probe`` nearest cells, exploded.
-    Narrow projection + explode, no window/shuffle; literal
-    (dist, cid)-struct array_sort up to ``max_literal_cells``, the
-    Arrow argsort kernel by default (see ``ivf_assign`` for the
-    strategy-switch rationale and why the Arrow kernel is now the
-    default). The two paths rank identically (parity-pinned in
-    tests).
+    """Each query row → its ``n_probe`` nearest cells, exploded, by
+    the Arrow argsort kernel (``_probe_pandas_udf``). Narrow
+    projection + explode, no window/shuffle.
 
     ``shipped``: an already-shipped centroid payload
     (``_ship_centroids`` result) for long-running serving loops — a
     new broadcast per call would otherwise leak executor memory over
     a stream's lifetime."""
-    if len(centroids) <= max_literal_cells:
-        probe_structs = F.array(*[
-            F.struct(_centroid_dist(F.col(vec_col), _lit_vec(v)).alias("dist"),
-                     F.lit(cid).cast("int").alias("cid"))
-            for cid, v in enumerate(centroids)])
-        picked = F.slice(F.array_sort(probe_structs), 1, n_probe)
-        return (queries.select("*", F.explode(picked).alias("_pc"))
-                .withColumn(out_col, F.col("_pc.cid")).drop("_pc"))
     if shipped is None:
-        shipped = _ship_centroids(centroids, max_closure_cells)
+        shipped = _ship_centroids(centroids)
     cells = _probe_pandas_udf(shipped, n_probe)(F.col(vec_col))
     return (queries.select("*", F.explode(cells).alias(out_col)))
 
@@ -492,9 +367,9 @@ def _train_ivf_centroids(e: DataFrame, n_cells: int, lloyd_iters: int,
         # have >= n_cells rows or the index has fewer cells than
         # requested. The values collected here (and after each
         # update) are the Spark-computed 6dp-rounded doubles —
-        # embedding them back as literals reproduces the former
-        # broadcast-join arithmetic bit for bit, so the SQL oracle is
-        # unchanged.
+        # shipping them back to the assignment kernel reproduces the
+        # former broadcast-join arithmetic bit for bit, so the SQL
+        # oracle is unchanged.
         wseed = Window.orderBy("nid")
         seed_rows = (train.orderBy("nid").limit(n_cells)
                      .select((F.row_number().over(wseed) - 1).cast("int").alias("cid"),
@@ -541,10 +416,10 @@ def ivf_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
 
     Plan shape (the 100 TB story): after each Lloyd update the tiny
     (n_cells × dim) centroid table is collected to the driver and
-    re-embedded as 6dp LITERALS, so every assignment — training
-    rounds, the corpus index build, and query probing — is a narrow
-    zero-shuffle projection (``ivf_assign``), exactly how
-    ``lsh_table_keys`` embeds its hyperplanes. The former
+    shipped back to the tasks as a 6dp matrix (``_ship_centroids``),
+    so every assignment — training rounds, the corpus index build,
+    and query probing — is a narrow zero-shuffle projection
+    (``ivf_assign``). The former
     crossJoin(broadcast(cents)) + row_number window fanned the corpus
     ×n_cells and hash-shuffled the fanned set once per round (~5×10^13
     shuffled rows at 10^12 vectors); now the only shuffles left are
@@ -567,9 +442,8 @@ def ivf_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
 
     q = _normalize(_cast(queries).select(F.col("vec_id").alias("qid"), F.col("emb"))) \
         .select("qid", F.col("emb").alias("qe"))
-    # n_probe nearest cells per query: lexicographic (dist, cid)
-    # struct sort == the former row_number over (order by dist, cid);
-    # still a narrow projection + explode, no window, no fan-out
+    # n_probe nearest cells per query, ranked (dist, cid): a narrow
+    # projection + explode, no window, no fan-out
     probes = ivf_probe_cells(q, cents, n_probe).select("qid", "qe", "cid")
 
     scored = (probes.join(index, "cid")
@@ -689,8 +563,7 @@ def _pq_encode_udf(shipped, packed: bool = False):
 def ivf_pq_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
                 n_cells: int = 16, lloyd_iters: int = 2, n_probe: int = 4,
                 m: int = 8, pq_ks: int = 16, rerank: int = 32,
-                train_stride: int = 1, train_cap: int = 100_000,
-                max_closure_cells: int = 4096) -> DataFrame:
+                train_stride: int = 1, train_cap: int = 100_000) -> DataFrame:
     """IVF + residual product quantization — the MEMORY-side scale
     path the plain ``ivf_topk`` lacks. At 10^12 × 64-d float32 the
     raw index is ~256 TB; with m=8 subspaces × 16 codewords the
@@ -701,12 +574,12 @@ def ivf_pq_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
 
     Stages (shuffle audit):
     1. coarse quantizer: ``_train_ivf_centroids`` — identical
-       training (and literals) to ``ivf_topk``.
+       training (and centroids) to ``ivf_topk``.
     2. PQ codebooks: per-subspace Lloyd over the residuals of a
        deterministic driver-side sample (``train_stride`` /
        ``train_cap`` bound it — constant-size state, standard PQ
        practice; codebooks are (m × ks × dim/m) doubles, shipped
-       with the centroids via closure or broadcast).
+       with the centroids via closure or broadcast, ``_ship_model``).
     3. encode: ONE narrow Arrow projection over the corpus →
        (nid, cid, codes). No shuffle.
     4. search: queries probe ``n_probe`` cells (narrow projection);
@@ -730,8 +603,7 @@ def ivf_pq_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
     surface, this wrapper is the contract-query convenience."""
     index, model = ivf_pq_build(
         embeddings, n_cells=n_cells, lloyd_iters=lloyd_iters, m=m,
-        pq_ks=pq_ks, train_stride=train_stride, train_cap=train_cap,
-        max_closure_cells=max_closure_cells)
+        pq_ks=pq_ks, train_stride=train_stride, train_cap=train_cap)
     return ivf_pq_search(index, embeddings, queries, model, k=k,
                          n_probe=n_probe, rerank=rerank)
 
@@ -739,7 +611,7 @@ def ivf_pq_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
 def ivf_pq_build(embeddings: DataFrame, n_cells: int = 16,
                  lloyd_iters: int = 2, m: int = 8, pq_ks: int = 16,
                  train_stride: int = 1, train_cap: int = 100_000,
-                 max_closure_cells: int = 4096, packed: bool = False):
+                 packed: bool = False):
     """Train the coarse quantizer + PQ codebooks and encode the
     corpus. Returns ``(index, model)``:
 
@@ -751,9 +623,8 @@ def ivf_pq_build(embeddings: DataFrame, n_cells: int = 16,
       query batches; a parquet roundtrip is search-equivalent
       (tests/test_ann_recall.py).
     - ``model``: dict with driver-side constants — 'cents' (the 6dp
-      centroid list, same literals ivf_topk trains), 'books' (the
-      (m, ks, dim/m) codebook array), 'max_closure_cells' (the
-      shipping-strategy threshold), 'packed' — pickle-serializable
+      centroid list, same values ivf_topk trains), 'books' (the
+      (m, ks, dim/m) codebook array), 'packed' — pickle-serializable
       alongside the persisted index.
 
     ``packed=True`` stores the codes as ONE bigint (8 bits per
@@ -798,8 +669,7 @@ def ivf_pq_build(embeddings: DataFrame, n_cells: int = 16,
     C = np.ascontiguousarray(cents, dtype=np.float64)
     R = X - C[_pq_assign_cells(X, C)]
     books = _pq_train_codebooks(R, m, pq_ks)
-    model = {"cents": cents, "books": books,
-             "max_closure_cells": max_closure_cells, "packed": packed}
+    model = {"cents": cents, "books": books, "packed": packed}
 
     enc = _pq_encode_udf(_ship_model(model), packed=packed)(F.col("emb"))
     index = e.select("nid", enc.alias("_e")) \
@@ -810,18 +680,13 @@ def ivf_pq_build(embeddings: DataFrame, n_cells: int = 16,
 
 def _ship_model(model):
     """(centroid matrix, codebooks) as the Arrow-kernel side input —
-    closure capture (pickled per task) up to max_closure_cells,
-    SparkContext.broadcast beyond, exactly the ``_ship_centroids``
-    tradeoff with the codebooks riding along."""
+    the ``_ship_centroids`` closure-or-broadcast rule, with the
+    codebooks riding along."""
     import numpy as np
 
-    payload = (np.ascontiguousarray(model["cents"], dtype=np.float64),
-               np.asarray(model["books"], dtype=np.float64))
-    if len(model["cents"]) <= model["max_closure_cells"]:
-        return payload
-    from pyspark.sql import SparkSession
-
-    return SparkSession.getActiveSession().sparkContext.broadcast(payload)
+    return _ship((np.ascontiguousarray(model["cents"], dtype=np.float64),
+                  np.asarray(model["books"], dtype=np.float64)),
+                 len(model["cents"]))
 
 
 def ivf_pq_search(index: DataFrame, vectors: DataFrame,
@@ -855,8 +720,7 @@ def ivf_pq_search(index: DataFrame, vectors: DataFrame,
                                          F.col("emb"))) \
         .select("qid", F.col("emb").alias("qe"))
     if probes is None:
-        probes = ivf_probe_cells(q, cents, n_probe,
-                                 max_closure_cells=model["max_closure_cells"])
+        probes = ivf_probe_cells(q, cents, n_probe)
     probes = probes.select("qid", "qe", "cid")
 
     def adc_fn(key, probes_pdf: pd.DataFrame, index_pdf: pd.DataFrame) \

@@ -15,9 +15,10 @@ expressible as dense tensor algebra across *all* gap pixels at once:
   × train) matmuls per group.
 
 Bit-identical to the per-pixel path (asserted in tests): pixels whose
-frames contain sentinels in the predictor block fall back to
-``frame.clean_frame`` + ``regressors.fit_predict`` per pixel; CV fold
-seeding depends only on (image seed, train length) in both paths
+frames contain sentinels in the predictor block fall back to a
+per-pixel ``frame.clean_frame``, then a direct-form kNN batched over
+frames of equal shape that reproduces ``regressors.fit_predict``; CV
+fold seeding depends only on (image seed, train length) in both paths
 (frame.cv_seed).
 
 ~20-60× faster than the loop; this is what the gapfill operator uses
@@ -110,12 +111,6 @@ def _knn_slow_group(Xp, yp, xt, k: int, weights: str, seed: int):
                                  k, weights)
         fold_scores[fi] = -np.abs(pr - yp[:, fold]).mean(-1)
     return pred, np.abs(fold_scores.mean(0))
-
-
-# slow-path batching switch: False restores the per-pixel
-# regressors.fit_predict loop (the parity reference the tests compare
-# against)
-SLOW_BATCH = True
 
 
 def _knn_fill_group(Xp, yp, xt, k: int, weights: str, seed: int):
@@ -417,35 +412,21 @@ def fill_gathered_knn(hist: np.ndarray, last: np.ndarray, k: int,
     # and running the direct-form group kernel — bit-identical to
     # regressors.fit_predict by construction (measured ~20% of the
     # whole fill kernel on high-gap images before batching)
-    slow_items: list = []
+    groups: dict = {}
     for s in np.flatnonzero(slow):
         res = FR.clean_frame(np.vstack([hist[:, s, :], last[s][None, :]]),
                              sv)
         if isinstance(res, str):
             skip_px[s] = True
             continue
-        if SLOW_BATCH:
-            slow_items.append((s, res))
-            continue
-        X_train, y_train, X_test = res
-        pr, sc = regressors.fit_predict(
-            "Knn", "Custom", {"n_neighbors": k, "weights": weights},
-            X_train, y_train, X_test, seed=FR.cv_seed(seed, len(y_train)),
-        )
-        preds[s] = float(np.ravel(pr)[0])
-        scores[s] = abs(float(np.ravel(sc).mean() if np.ndim(sc) else sc))
-
-    if slow_items:
-        groups: dict = {}
-        for s, (Xtr, ytr, Xte) in slow_items:
-            groups.setdefault(Xtr.shape, []).append((s, Xtr, ytr, Xte))
-        for (n, c), items in groups.items():
-            sel = np.array([it[0] for it in items], dtype=np.int64)
-            Xp = np.stack([it[1] for it in items])        # (p, n, c)
-            yp = np.stack([it[2] for it in items])        # (p, n)
-            xt = np.stack([it[3][0] for it in items])     # (p, c)
-            pr, sc = _knn_slow_group(Xp, yp, xt, k, weights, seed)
-            preds[sel] = pr
-            scores[sel] = sc
+        groups.setdefault(res[0].shape, []).append((s, *res))
+    for items in groups.values():
+        sel = np.array([it[0] for it in items], dtype=np.int64)
+        Xp = np.stack([it[1] for it in items])        # (p, n, c)
+        yp = np.stack([it[2] for it in items])        # (p, n)
+        xt = np.stack([it[3][0] for it in items])     # (p, c)
+        pr, sc = _knn_slow_group(Xp, yp, xt, k, weights, seed)
+        preds[sel] = pr
+        scores[sel] = sc
 
     return preds, scores, skip_px

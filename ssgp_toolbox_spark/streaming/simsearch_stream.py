@@ -12,12 +12,11 @@ per-group top-k) that have no incremental plan.
 Scale shape:
 - the per-batch cost is driven by the ARRIVING queries, not the
   stream's history: probes are a narrow projection over the batch,
-  and with ``prune_cells=True`` the index side is prefiltered to the
-  batch's probed cells (a driver-known, <= batch_rows x n_probe
-  literal set) BEFORE the by-cell cogroup — against a
-  cid-partitioned parquet index this is partition pruning, so a
-  10-query batch against a 10^12-row index reads ~n_probe x 10 cells
-  instead of the full corpus;
+  and the index side is prefiltered to the batch's probed cells (a
+  driver-known, <= batch_rows x n_probe literal set) BEFORE the
+  by-cell cogroup — against a cid-partitioned parquet index this is
+  partition pruning, so a 10-query batch against a 10^12-row index
+  reads ~n_probe x 10 cells instead of the full corpus;
 - results are append-only per batch (a query's top-k never depends
   on other batches — the index is static), so any downstream sink
   composes; batch boundaries cannot change results, which is exactly
@@ -36,30 +35,25 @@ def prepare_serving(model: dict) -> dict:
     """Ship the model payloads ONCE for a long-running serving loop.
 
     Without this, every micro-batch re-runs ``_ship_model`` /
-    ``_ship_centroids``: beyond ``max_closure_cells`` that is up to
-    three NEW SparkContext broadcasts per batch, none unpersisted —
+    ``_ship_centroids``: beyond ``simsearch.MAX_CLOSURE_CELLS`` that
+    is two NEW SparkContext broadcasts per batch, none unpersisted —
     driver and executor memory then grow for the stream's lifetime.
     Returns the handles ``search_batch`` threads through."""
-    cents = model["cents"]
-    shipped_cents = (
-        None if len(cents) <= 256
-        else simsearch._ship_centroids(cents, model["max_closure_cells"]))
     return {"shipped": simsearch._ship_model(model),
-            "shipped_cents": shipped_cents}
+            "shipped_cents": simsearch._ship_centroids(model["cents"])}
 
 
 def search_batch(queries: DataFrame, index: DataFrame, vectors: DataFrame,
                  model: dict, k: int = 5, n_probe: int = 4,
-                 rerank: int = 32, prune_cells: bool = True,
+                 rerank: int = 32,
                  prepared: dict | None = None) -> DataFrame:
     """Answer ONE (micro-)batch of queries against the static index —
-    ``simsearch.ivf_pq_search`` plus the serving-side cell prefilter.
-
-    ``prune_cells``: collect the batch's probed cell ids (bounded by
-    batch_rows x n_probe, driver-tiny) and prefilter the index with a
-    literal isin — on a parquet index partitioned by ``cid`` Spark
-    turns this into partition pruning, so the cogroup only ever scans
-    the probed cells' files.
+    ``simsearch.ivf_pq_search`` plus the serving-side cell prefilter:
+    the batch's probed cell ids (bounded by batch_rows x n_probe,
+    driver-tiny) are collected and prefilter the index with a literal
+    isin — on a parquet index partitioned by ``cid`` Spark turns this
+    into partition pruning, so the cogroup only ever scans the probed
+    cells' files.
 
     The batch's queries are normalized and probed ONCE: the probe
     frame feeds both the driver-side prefilter collect and the search
@@ -71,27 +65,24 @@ def search_batch(queries: DataFrame, index: DataFrame, vectors: DataFrame,
     q = simsearch._normalize(simsearch._cast(queries).select(
         F.col("vec_id").alias("qid"), F.col("emb"))) \
         .select("qid", F.col("emb").alias("qe"))
-    probes = simsearch.ivf_probe_cells(
-        q, model["cents"], n_probe,
-        max_closure_cells=model["max_closure_cells"],
-        shipped=prepared["shipped_cents"])
-    if prune_cells:
-        # dedup driver-side: the probe rows are bounded by
-        # batch_rows × n_probe, so a distinct() exchange before the
-        # collect is a wasted shuffle stage per micro-batch. The
-        # collected rows (qid, qe, cid — f64 round-trips the driver
-        # losslessly) are handed back as a single-partition local
-        # frame, so the search job cogroups against them directly
-        # instead of re-running the batch's normalize + probe UDF
-        # chain a second time inside the big job.
-        rows = [(int(r["qid"]), list(r["qe"]), int(r["cid"]))
-                for r in probes.select("qid", "qe", "cid").collect()]
-        cells = sorted({cid for _, _, cid in rows})
-        index = index.filter(F.col("cid").isin(cells))
-        spark = queries.sparkSession
-        probes = spark.createDataFrame(
-            spark.sparkContext.parallelize(rows, 1),
-            "qid long, qe array<double>, cid int")
+    probes = simsearch.ivf_probe_cells(q, model["cents"], n_probe,
+                                       shipped=prepared["shipped_cents"])
+    # dedup driver-side: the probe rows are bounded by
+    # batch_rows × n_probe, so a distinct() exchange before the
+    # collect is a wasted shuffle stage per micro-batch. The
+    # collected rows (qid, qe, cid — f64 round-trips the driver
+    # losslessly) are handed back as a single-partition local frame,
+    # so the search job cogroups against them directly instead of
+    # re-running the batch's normalize + probe UDF chain a second
+    # time inside the big job.
+    rows = [(int(r["qid"]), list(r["qe"]), int(r["cid"]))
+            for r in probes.select("qid", "qe", "cid").collect()]
+    cells = sorted({cid for _, _, cid in rows})
+    index = index.filter(F.col("cid").isin(cells))
+    spark = queries.sparkSession
+    probes = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 1),
+        "qid long, qe array<double>, cid int")
     return simsearch.ivf_pq_search(index, vectors, queries, model, k=k,
                                    n_probe=n_probe, rerank=rerank,
                                    probes=probes, qnorm=q,
@@ -100,8 +91,7 @@ def search_batch(queries: DataFrame, index: DataFrame, vectors: DataFrame,
 
 def streaming_ann_serve(query_stream: DataFrame, index: DataFrame,
                         vectors: DataFrame, model: dict, sink,
-                        k: int = 5, n_probe: int = 4, rerank: int = 32,
-                        prune_cells: bool = True):
+                        k: int = 5, n_probe: int = 4, rerank: int = 32):
     """writeStream handle serving ``query_stream`` against the static
     index: each micro-batch runs ``search_batch`` and hands the
     result DataFrame to ``sink(result_df, batch_id)`` (write to
@@ -120,7 +110,7 @@ def streaming_ann_serve(query_stream: DataFrame, index: DataFrame,
             return
         sink(search_batch(batch_df, index, vectors, model, k=k,
                           n_probe=n_probe, rerank=rerank,
-                          prune_cells=prune_cells, prepared=prepared),
+                          prepared=prepared),
              batch_id)
 
     return query_stream.writeStream.foreachBatch(_serve)

@@ -886,3 +886,93 @@ def ivf_pq_pairs_oracle(vec_ids, embeddings_f32, qids, k=5, n_cells=16,
         pairs.extend((int(qid), int(ids[cand[t]]), r + 1)
                      for r, t in enumerate(top))
     return pairs
+
+
+# ------------------------------------- Catalyst forms of the ANN kernels
+#
+# The engine computes cosine, LSH keys, normalization and IVF cell
+# selection with Arrow pandas-UDF kernels only. The pure-Catalyst
+# higher-order-function (zip_with/aggregate/transform) and
+# literal-centroid forms below are the arithmetic those kernels must
+# reproduce value for value: the same expressions the DuckDB oracle SQL
+# mirrors. Spark Column builders, imported lazily so the numpy oracles
+# above stay Spark-free.
+
+def _hof_sum(arr):
+    from pyspark.sql import functions as F
+
+    return F.aggregate(arr, F.lit(0.0), lambda acc, v: acc + v)
+
+
+def catalyst_cosine6(a, b):
+    """F.round(cosine(a, b), 6) as a left-to-right Catalyst fold."""
+    from pyspark.sql import functions as F
+
+    dot = _hof_sum(F.zip_with(a, b, lambda x, y: x * y))
+    na = F.sqrt(_hof_sum(F.transform(a, lambda x: x * x)))
+    nb = F.sqrt(_hof_sum(F.transform(b, lambda x: x * x)))
+    return F.round(dot / (na * nb), 6)
+
+
+def catalyst_lsh_keys(emb_col, planes, bits_per_table, n_tables):
+    """Per-table random-hyperplane bucket keys with the planes embedded
+    as plan literals: table t packs the sign bits of planes
+    [t*b, (t+1)*b). Returns an array<int> of ``n_tables`` keys."""
+    from pyspark.sql import functions as F
+
+    keys = []
+    for t in range(n_tables):
+        key = None
+        for j in range(bits_per_table):
+            h = planes[t * bits_per_table + j]
+            dot = _hof_sum(F.zip_with(
+                emb_col, F.array(*[F.lit(float(v)) for v in h]),
+                lambda x, y: x * y))
+            bit = F.when(dot > 0, F.lit(1)).otherwise(F.lit(0))
+            key = bit if key is None else key * 2 + bit
+        keys.append(key)
+    return F.array(*keys)
+
+
+def catalyst_normalize(df, vec_col="emb"):
+    """Unit-normalize ``vec_col`` with per-element F.round(x / norm, 6)."""
+    from pyspark.sql import functions as F
+
+    norm = F.sqrt(_hof_sum(F.transform(F.col(vec_col), lambda x: x * x)))
+    return df.withColumn(vec_col, F.transform(
+        F.col(vec_col), lambda x: F.round(x / norm, 6)))
+
+
+def _literal_cell_dists(emb_col, centroids):
+    """Rounded squared-L2 distances to centroid literals (index = cid)."""
+    from pyspark.sql import functions as F
+
+    return [F.round(_hof_sum(F.zip_with(
+                emb_col, F.array(*[F.lit(float(v)) for v in c]),
+                lambda a, b: (a - b) * (a - b))), 6)
+            for c in centroids]
+
+
+def literal_ivf_assign(vectors, centroids, vec_col="emb", out_col="cid"):
+    """argmin cell with (dist, cid) tie-break: ``array_position`` finds
+    the FIRST minimum, i.e. the lowest cid among equal 6dp distances."""
+    from pyspark.sql import functions as F
+
+    d = F.array(*_literal_cell_dists(F.col(vec_col), centroids))
+    return vectors.withColumn(
+        out_col, (F.array_position(d, F.array_min(d)) - 1).cast("int"))
+
+
+def literal_ivf_probe_cells(queries, centroids, n_probe, vec_col="qe",
+                            out_col="cid"):
+    """The ``n_probe`` nearest cells per query row, exploded, ranked by
+    a (dist, cid) struct array_sort."""
+    from pyspark.sql import functions as F
+
+    structs = F.array(*[
+        F.struct(d.alias("dist"), F.lit(cid).cast("int").alias("cid"))
+        for cid, d in enumerate(
+            _literal_cell_dists(F.col(vec_col), centroids))])
+    picked = F.slice(F.array_sort(structs), 1, n_probe)
+    return (queries.select("*", F.explode(picked).alias("_pc"))
+            .withColumn(out_col, F.col("_pc.cid")).drop("_pc"))

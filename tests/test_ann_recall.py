@@ -93,10 +93,12 @@ def test_lsh_recall_clustered(spark, clustered):
 
 
 def test_ivf_assign_pandas_matches_literal(spark):
-    """The large-n_cells Arrow assignment kernel must agree with the
-    literal-centroid path cell-for-cell (same HALF_UP 6dp rounding,
-    same lowest-cid tie-break) — it is the same logical map under a
-    different physical strategy."""
+    """The Arrow assignment kernel must agree with the literal-centroid
+    Catalyst form (oracles.literal_ivf_assign, the expression the s04
+    SQL oracle mirrors) cell-for-cell: same HALF_UP 6dp rounding, same
+    lowest-cid tie-break."""
+    import oracles
+
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     e = simsearch._normalize(simsearch._cast(emb).select(
         F.col("vec_id").alias("nid"), F.col("emb")))
@@ -104,14 +106,13 @@ def test_ivf_assign_pandas_matches_literal(spark):
     cents = [[float(v) for v in row]
              for row in (rng.standard_normal((48, 64)) / 8).round(6)]
     lit = {r["nid"]: r["cid"] for r in
-           simsearch.ivf_assign(e, cents, max_literal_cells=256).collect()}
-    arrow = {r["nid"]: r["cid"] for r in
-             simsearch.ivf_assign(e, cents, max_literal_cells=1).collect()}
+           oracles.literal_ivf_assign(e, cents).collect()}
+    arrow_df = simsearch.ivf_assign(e, cents)
+    arrow = {r["nid"]: r["cid"] for r in arrow_df.collect()}
     assert lit == arrow and len(lit) > 0
     # and the Arrow path stays a narrow plan too (ArrowEvalPython,
     # no Exchange/Window/Join)
-    plan = simsearch.ivf_assign(e, cents, max_literal_cells=1) \
-        ._jdf.queryExecution().toString()
+    plan = arrow_df._jdf.queryExecution().toString()
     for banned in ("Exchange", "Window", "Join", "CartesianProduct"):
         assert banned not in plan, banned
 
@@ -119,7 +120,9 @@ def test_ivf_assign_pandas_matches_literal(spark):
 def test_ivf_probe_pandas_matches_literal(spark):
     """Query-side probe selection: the Arrow argsort kernel must pick
     the same n_probe cells in the same order as the literal
-    (dist, cid) struct sort."""
+    (dist, cid) struct sort (oracles.literal_ivf_probe_cells)."""
+    import oracles
+
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     q = simsearch._normalize(simsearch._cast(emb).select(
         F.col("vec_id").alias("qid"), F.col("emb"))) \
@@ -132,17 +135,15 @@ def test_ivf_probe_pandas_matches_literal(spark):
         for r in df.collect():
             out.setdefault(r["qid"], []).append(r["cid"])
         return out
-    lit = cells(simsearch.ivf_probe_cells(q, cents, 4,
-                                          max_literal_cells=256))
-    arrow = cells(simsearch.ivf_probe_cells(q, cents, 4,
-                                            max_literal_cells=1))
+    lit = cells(oracles.literal_ivf_probe_cells(q, cents, 4))
+    arrow = cells(simsearch.ivf_probe_cells(q, cents, 4))
     assert lit == arrow and all(len(v) == 4 for v in lit.values())
 
 
 def test_ivf_topk_large_cells_end_to_end(spark, clustered):
-    """ivf_topk past the literal-cell threshold (300 cells → both the
-    Lloyd rounds and the search run on the Arrow kernels): still
-    returns k results per query with in-cluster recall."""
+    """ivf_topk at 300 cells (Lloyd rounds and search both on the
+    Arrow kernels): still returns k results per query with in-cluster
+    recall."""
     df, q = clustered
     exact = simsearch.cosine_topk(df, q, k=5)
     ann = simsearch.ivf_topk(df, q, k=5, n_cells=300, n_probe=30)
@@ -153,9 +154,9 @@ def test_ivf_topk_large_cells_end_to_end(spark, clustered):
     assert _recall_at_k(exact, ann) >= 0.9
 
 
-def test_ivf_broadcast_matrix_matches_closure(spark):
-    """The >max_closure_cells strategy — centroid matrix shipped via
-    SparkContext.broadcast instead of closure capture — must be
+def test_ivf_broadcast_matrix_matches_closure(spark, monkeypatch):
+    """Beyond simsearch.MAX_CLOSURE_CELLS the centroid matrix ships via
+    SparkContext.broadcast instead of closure capture — that must be
     bit-identical to the closure path at 2,000 cells (same Arrow
     kernel, same HALF_UP rounding, same tie-break), and the plan must
     stay Exchange/Window/Join-free: the shipping mode changes only
@@ -166,17 +167,6 @@ def test_ivf_broadcast_matrix_matches_closure(spark):
     rng = np.random.default_rng(41)
     cents = [[float(v) for v in row]
              for row in (rng.standard_normal((2000, 64)) / 8).round(6)]
-    closure = {r["nid"]: r["cid"] for r in
-               simsearch.ivf_assign(e, cents, max_literal_cells=1,
-                                    max_closure_cells=100000).collect()}
-    bcast_df = simsearch.ivf_assign(e, cents, max_literal_cells=1,
-                                    max_closure_cells=64)
-    bcast = {r["nid"]: r["cid"] for r in bcast_df.collect()}
-    assert closure == bcast and len(closure) > 0
-    plan = bcast_df._jdf.queryExecution().toString()
-    for banned in ("Exchange", "Window", "Join", "CartesianProduct"):
-        assert banned not in plan, banned
-
     q = e.select(F.col("nid").alias("qid"), F.col("emb").alias("qe")) \
         .filter(F.col("qid") < 20)
 
@@ -186,10 +176,24 @@ def test_ivf_broadcast_matrix_matches_closure(spark):
             out.setdefault(r["qid"], []).append(r["cid"])
         return out
 
-    pc = cells(simsearch.ivf_probe_cells(q, cents, 6, max_literal_cells=1,
-                                         max_closure_cells=100000))
-    pb = cells(simsearch.ivf_probe_cells(q, cents, 6, max_literal_cells=1,
-                                         max_closure_cells=64))
+    # the shipping mode is fixed when the plan is built
+    monkeypatch.setattr(simsearch, "MAX_CLOSURE_CELLS", 100000)
+    assert not hasattr(simsearch._ship_centroids(cents), "value")
+    closure_df = simsearch.ivf_assign(e, cents)
+    closure_probe = simsearch.ivf_probe_cells(q, cents, 6)
+    monkeypatch.setattr(simsearch, "MAX_CLOSURE_CELLS", 64)
+    assert hasattr(simsearch._ship_centroids(cents), "value")
+    bcast_df = simsearch.ivf_assign(e, cents)
+    bcast_probe = simsearch.ivf_probe_cells(q, cents, 6)
+
+    closure = {r["nid"]: r["cid"] for r in closure_df.collect()}
+    bcast = {r["nid"]: r["cid"] for r in bcast_df.collect()}
+    assert closure == bcast and len(closure) > 0
+    plan = bcast_df._jdf.queryExecution().toString()
+    for banned in ("Exchange", "Window", "Join", "CartesianProduct"):
+        assert banned not in plan, banned
+
+    pc, pb = cells(closure_probe), cells(bcast_probe)
     assert pc == pb and all(len(v) == 6 for v in pc.values())
 
 
@@ -346,42 +350,39 @@ def test_ivf_pq_packed_high_codeword_roundtrip():
 
 
 def test_arrow_sim_kernels_match_catalyst(spark):
-    """The ARROW_SIM kernels (_cos6_udf / _lsh_keys_udf / _norm_udf)
-    must be VALUE-identical to the Catalyst HOF forms they replace —
-    they claim fold-order arithmetic parity, not approximate parity.
-    Checked on the full harness corpus: every normalized component,
-    every pairwise rounded cosine of the first 40 vectors, and every
-    LSH table key."""
+    """The Arrow similarity kernels (_cosine6 / lsh_keys / _normalize)
+    must be VALUE-identical to the Catalyst HOF forms in
+    tests/oracles.py — they claim fold-order arithmetic parity, not
+    approximate parity. Checked on the full harness corpus: every
+    normalized component, every pairwise rounded cosine of the first
+    40 vectors, and every LSH table key."""
+    import oracles
     from ssgp_toolbox_spark.functions import simsearch as S
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
 
-    def run(flag):
-        old = S.ARROW_SIM
-        S.ARROW_SIM = flag
-        try:
-            norm = {r["nid"]: list(r["emb"]) for r in S._normalize(
-                S._cast(emb).select(F.col("vec_id").alias("nid"),
-                                    F.col("emb"))).collect()}
-            planes = S.hyperplanes(24, seed=7)
-            keys = {r["vec_id"]: list(r["k"]) for r in S._cast(emb).select(
-                "vec_id", S.lsh_keys(F.col("emb"), planes, 3, 8)
-                .alias("k")).collect()}
-            sub = S._cast(emb).filter(F.col("vec_id") < 40)
-            a = sub.select(F.col("vec_id").alias("qid"),
-                           F.col("emb").alias("qe"))
-            b = sub.select(F.col("vec_id").alias("nid"),
-                           F.col("emb").alias("ne"))
-            sims = {(r["qid"], r["nid"]): r["sim"] for r in a.crossJoin(b)
-                    .select("qid", "nid",
-                            S._cosine6(F.col("qe"), F.col("ne"))
-                            .alias("sim")).collect()}
-            return norm, keys, sims
-        finally:
-            S.ARROW_SIM = old
+    def run(normalize, lsh_keys, cosine6):
+        norm = {r["nid"]: list(r["emb"]) for r in normalize(
+            S._cast(emb).select(F.col("vec_id").alias("nid"),
+                                F.col("emb"))).collect()}
+        planes = S.hyperplanes(24, seed=7)
+        keys = {r["vec_id"]: list(r["k"]) for r in S._cast(emb).select(
+            "vec_id", lsh_keys(F.col("emb"), planes, 3, 8)
+            .alias("k")).collect()}
+        sub = S._cast(emb).filter(F.col("vec_id") < 40)
+        a = sub.select(F.col("vec_id").alias("qid"),
+                       F.col("emb").alias("qe"))
+        b = sub.select(F.col("vec_id").alias("nid"),
+                       F.col("emb").alias("ne"))
+        sims = {(r["qid"], r["nid"]): r["sim"] for r in a.crossJoin(b)
+                .select("qid", "nid",
+                        cosine6(F.col("qe"), F.col("ne"))
+                        .alias("sim")).collect()}
+        return norm, keys, sims
 
-    n_a, k_a, s_a = run(True)
-    n_c, k_c, s_c = run(False)
+    n_a, k_a, s_a = run(S._normalize, S.lsh_keys, S._cosine6)
+    n_c, k_c, s_c = run(oracles.catalyst_normalize,
+                        oracles.catalyst_lsh_keys, oracles.catalyst_cosine6)
     assert k_a == k_c
     assert s_a == s_c  # exact f64 equality, incl. the 6dp rounding
     assert n_a.keys() == n_c.keys()

@@ -7,6 +7,7 @@ import pytest
 from ssgp_toolbox_spark import generator
 from ssgp_toolbox_spark.kernels import batch as B
 from ssgp_toolbox_spark.kernels import frame as FR
+from ssgp_toolbox_spark.kernels import regressors
 from ssgp_toolbox_spark.sentinels import GAP
 
 
@@ -55,8 +56,21 @@ def test_batched_distance_weights(scene):
     assert np.allclose(slow_m, fast_m, equal_nan=True)
 
 
+def _slow_group_per_pixel(Xp, yp, xt, k, weights, seed):
+    """Per-pixel regressors.fit_predict loop with the call signature of
+    B._knn_slow_group: the reference the batched slow path replaced."""
+    preds, scores = np.empty(len(Xp)), np.empty(len(Xp))
+    for i in range(len(Xp)):
+        pr, sc = regressors.fit_predict(
+            "Knn", "Custom", {"n_neighbors": k, "weights": weights},
+            Xp[i], yp[i], xt[i][None, :], seed=FR.cv_seed(seed, yp.shape[1]))
+        preds[i] = float(np.ravel(pr)[0])
+        scores[i] = abs(float(np.ravel(sc).mean() if np.ndim(sc) else sc))
+    return preds, scores
+
+
 @pytest.mark.parametrize("weights", ["uniform", "distance"])
-def test_slow_path_batched_bit_equals_loop(weights):
+def test_slow_path_batched_bit_equals_loop(weights, monkeypatch):
     """The batched slow path (optimization round 6) must be
     bit-identical to the per-pixel regressors.fit_predict loop it
     replaced — exercised on a cascade-rich scene: predictor columns
@@ -89,18 +103,22 @@ def test_slow_path_batched_bit_equals_loop(weights):
     final[:, 9:] = np.where(gr < 0.35, SV.gap, SV.nodata)
     extra = generator.zone_raster("slowb", H, W).astype(float)
 
-    B.SLOW_BATCH = False
-    try:
-        ref_m, ref_s = B.fill_image_knn(
+    def fill():
+        return B.fill_image_knn(
             final, tensor, extra=extra, predictor_configuration="Biome",
             hyperparameters="Custom",
             params={"n_neighbors": 5, "weights": weights}, seed=99)
-    finally:
-        B.SLOW_BATCH = True
-    new_m, new_s = B.fill_image_knn(
-        final, tensor, extra=extra, predictor_configuration="Biome",
-        hyperparameters="Custom",
-        params={"n_neighbors": 5, "weights": weights}, seed=99)
+
+    new_m, new_s = fill()
+    groups = []
+
+    def per_pixel(Xp, *args):
+        groups.append(Xp.shape)
+        return _slow_group_per_pixel(Xp, *args)
+
+    monkeypatch.setattr(B, "_knn_slow_group", per_pixel)
+    ref_m, ref_s = fill()
+    assert len(groups) > 1  # the scene really exercises the slow path
     assert np.array_equal(ref_m, new_m, equal_nan=True)
     assert np.array_equal(np.asarray(ref_s), np.asarray(new_s))
 

@@ -394,7 +394,7 @@ def test_streaming_ann_serve_equals_batch(spark, tmp_path):
                    simsearch.ivf_pq_search(index, emb, q, model).collect())
 
     pruned = sorted(tuple(r) for r in simsearch_stream.search_batch(
-        q, index, emb, model, prune_cells=True).collect())
+        q, index, emb, model).collect())
     assert pruned == batch and len(batch) == 50
 
     src = tmp_path / "s06_src"
@@ -424,3 +424,49 @@ def test_streaming_ann_serve_equals_batch(spark, tmp_path):
     streamed = sorted(tuple(r) for r in spark.read.parquet(str(out))
                       .select("qid", "nid", "sim", "rank").collect())
     assert streamed == batch
+
+
+def test_ann_serving_broadcasts_only_in_prepare(spark, monkeypatch):
+    """A serving loop ships its model once: with the 16-cell model past
+    simsearch.MAX_CLOSURE_CELLS, prepare_serving makes the only
+    SparkContext.broadcast calls (model payload + centroid matrix) and
+    three search_batch(prepared=...) micro-batches add none, while
+    returning exactly the closure-shipped results."""
+    from pyspark import SparkContext
+    from test_ann_recall import SF_DIR
+
+    from ssgp_toolbox_spark.functions import simsearch
+    from ssgp_toolbox_spark.streaming import simsearch_stream
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    index, model = simsearch.ivf_pq_build(emb)
+    assert len(model["cents"]) == 16
+    batches = [emb.filter(F.col("vec_id").between(lo, lo + 3))
+               for lo in (0, 4, 8)]
+    calls = []
+    real_broadcast = SparkContext.broadcast
+
+    def counting_broadcast(self, value):
+        calls.append(type(value).__name__)
+        return real_broadcast(self, value)
+
+    monkeypatch.setattr(SparkContext, "broadcast", counting_broadcast)
+
+    def serve():
+        prepared = simsearch_stream.prepare_serving(model)
+        at_prepare = len(calls)
+        out = [sorted(tuple(r) for r in simsearch_stream.search_batch(
+                   b, index, emb, model, prepared=prepared).collect())
+               for b in batches]
+        return prepared, at_prepare, out
+
+    _, at_prepare, closure = serve()
+    assert at_prepare == 0 and calls == []
+    assert all(len(rows) == 20 for rows in closure)
+
+    monkeypatch.setattr(simsearch, "MAX_CLOSURE_CELLS", 8)
+    prepared, at_prepare, bcast = serve()
+    assert at_prepare == 2 and len(calls) == 2, calls
+    assert bcast == closure
+    for handle in prepared.values():
+        handle.destroy()
