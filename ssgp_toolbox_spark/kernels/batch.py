@@ -167,11 +167,12 @@ def _knn_coords_exact(cands: np.ndarray, blk: np.ndarray, k: int,
         local = cands[idx]
         # two-plane int64 distance: same exact integer values as the
         # stacked ((blk - local)**2).sum(-1), without the (p, n, 2)
-        # temporaries and the reduction pass
-        dr = blk[:, 0, None] - local[None, :, 0]
-        dc = blk[:, 1, None] - local[None, :, 1]
+        # temporaries and the reduction pass. Explicit int64: narrower
+        # coords would overflow d2 * n_c and scramble the tie order
+        dr = (blk[:, 0, None] - local[None, :, 0]).astype(np.int64, copy=False)
+        dc = (blk[:, 1, None] - local[None, :, 1]).astype(np.int64, copy=False)
         d2 = dr * dr + dc * dc
-        key = d2 * n_c + idx[None, :]
+        key = d2 * n_c + idx.astype(np.int64, copy=False)[None, :]
         kk = min(k, len(idx))
         if len(idx) > kk:
             part = np.argpartition(key, kk - 1, axis=1)[:, :kk]

@@ -250,8 +250,11 @@ def gapfill_deep(images: DataFrame, method: str = "Knn",
 
     # size the fill stage from the ACTUAL chunk count: coords is
     # persisted (consumed twice anyway), so counting it materializes
-    # work that was already due and makes ~3 chunks/task the target —
-    # same adaptive rule (and measured rationale) as gapfill_balanced
+    # work that was already due. ~3 chunks/task amortizes per-task
+    # dispatch + Arrow setup while round-robin still balances counts;
+    # the explicit count keeps AQE from coalescing this CPU-heavy,
+    # byte-light shuffle, and the [cores, cores*8] clamp keeps full
+    # width at small counts
     cores = spark.sparkContext.defaultParallelism
     n_parts = int(min(max(cores, -(-coords.count() // 3)), cores * 8))
     fill_in = coords.drop("site").join(

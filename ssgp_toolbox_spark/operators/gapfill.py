@@ -33,6 +33,7 @@ used by the reference's own Comparison benchmark
 
 from __future__ import annotations
 
+import heapq
 import zlib
 from collections.abc import Iterator
 
@@ -106,6 +107,22 @@ def _fill_kernel(final, tensor, extra, method, predictor_configuration,
     )
 
 
+def _append_filled(out, image_id, filled, fmt, w, h, caption, n_px, scores,
+                   sv: Sentinels):
+    """One finished GAPFILL_SCHEMA row (status 'filled')."""
+    out["image_id"].append(image_id)
+    out["bytes"].append(codecs.encode(filled, fmt))
+    out["w"].append(w)
+    out["h"].append(h)
+    out["fmt"].append(fmt)
+    out["caption"].append(caption)
+    out["phash"].append(codecs.phash64(filled, sv.gap, sv.skip, sv.nodata))
+    out["status"].append("filled")
+    out["filled_px"].append(n_px)
+    out["mean_cv_mae"].append(
+        float(np.mean(scores)) if len(scores) else float("nan"))
+
+
 def _fill_batches(method, predictor_configuration, hyperparameters, params,
                   sv: Sentinels = DEFAULT_SENTINELS):
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -128,19 +145,8 @@ def _fill_batches(method, predictor_configuration, hyperparameters, params,
                     hyperparameters, params, seed=_stable_seed(row.image_id),
                     sv=sv,
                 )
-                out["image_id"].append(row.image_id)
-                out["bytes"].append(codecs.encode(filled, row.fmt))
-                out["w"].append(row.w)
-                out["h"].append(row.h)
-                out["fmt"].append(row.fmt)
-                out["caption"].append(row.caption)
-                out["phash"].append(
-                    codecs.phash64(filled, sv.gap, sv.skip, sv.nodata))
-                out["status"].append("filled")
-                out["filled_px"].append(n_gaps)
-                out["mean_cv_mae"].append(
-                    float(np.mean(scores)) if scores else float("nan")
-                )
+                _append_filled(out, row.image_id, filled, row.fmt, row.w,
+                               row.h, row.caption, n_gaps, scores, sv)
             yield pd.DataFrame(out)
 
     return fn
@@ -206,6 +212,11 @@ CHUNK_SCHEMA = T.StructType([
     T.StructField("scores", T.BinaryType()),  # f64 LE per-pixel |CV-MAE|
 ])
 
+# balanced fill-stage rows: a finished image fills the GAPFILL_SCHEMA
+# columns (chunk columns null), a chunk of a split image fills
+# image_id + the CHUNK_SCHEMA columns (the rest null)
+_FILL_SCHEMA = T.StructType(GAPFILL_SCHEMA.fields + CHUNK_SCHEMA.fields[1:])
+
 
 # per-python-worker decode cache for broadcast history stacks: one
 # decode per (site, broadcast-id) per worker process, not per chunk
@@ -256,7 +267,7 @@ def _bc_image(bc, image_id):
     gen = bc.value["gen"]
     key = (gen, "img", image_id)
     if key not in _BC_CACHE:
-        payload, h, w, fmt = bc.value["inputs"][image_id]
+        payload, h, w, fmt = bc.value["inputs"][image_id][:4]
         img_keys = [k for k in _BC_CACHE if len(k) == 3 and k[1] == "img"]
         if len(img_keys) >= _IMG_CACHE_MAX:
             del _BC_CACHE[img_keys[0]]
@@ -264,67 +275,152 @@ def _bc_image(bc, image_id):
     return _BC_CACHE[key]
 
 
-def _chunk_fill_batches(bc, method, predictor_configuration,
-                        hyperparameters, params, chunk_px,
-                        sv: Sentinels = DEFAULT_SENTINELS):
+def plan_fill(gap_counts: dict, slots: int, chunk_px: int):
+    """Driver-side plan of the balanced fill wave, from the images'
+    ``gap_count`` alone.
+
+    Units: an image with at most ``share = ceil(total_gaps / slots)``
+    gap px is one unit; a larger image splits at ``chunk_px``
+    boundaries of its row-major gap scan (unit ``chunk_id`` c covers
+    gap px ``c*chunk_px`` up to ``(c+1)*chunk_px``). Packing: units
+    sorted by gap px (largest first, ties by image_id then chunk_id)
+    each go to the lightest bin (ties to the lowest bin), over at most
+    ``slots`` bins — so the heaviest bin holds at most share + its
+    last unit. An image whose chunks all landed in one bin becomes a
+    whole unit again.
+
+    Returns ``(bins, split)``: ``bins`` is a list of bins, each a list
+    of ``(image_id, chunk_id)`` units with ``chunk_id`` None for a
+    whole image; ``split`` is the set of images spread over several
+    bins."""
+    total = sum(gap_counts.values())
+    share = -(-total // slots)
+    units = []
+    for image_id, g in gap_counts.items():
+        if g <= share:
+            units.append((g, image_id, None))
+        else:
+            units.extend((min(chunk_px, g - lo), image_id, lo // chunk_px)
+                         for lo in range(0, g, chunk_px))
+    units.sort(key=lambda u: (-u[0], u[1], -1 if u[2] is None else u[2]))
+    loads = [(0, b) for b in range(min(slots, len(units)))]
+    placed = [[] for _ in loads]
+    homes: dict = {}
+    for px, image_id, chunk_id in units:
+        load, b = heapq.heappop(loads)
+        placed[b].append((image_id, chunk_id))
+        homes.setdefault(image_id, set()).add(b)
+        heapq.heappush(loads, (load + px, b))
+    split = {i for i, hs in homes.items() if len(hs) > 1}
+    bins = []
+    for units_b in placed:
+        whole = list(dict.fromkeys(i for i, _ in units_b if i not in split))
+        bins.append([(i, None) for i in whole]
+                    + [(i, c) for i, c in units_b if i in split])
+    return bins, split
+
+
+def _plan_fill_batches(bc, method, predictor_configuration,
+                       hyperparameters, params, chunk_px,
+                       sv: Sentinels = DEFAULT_SENTINELS):
+    """Fill the bins of ``plan_fill`` named by the ``id`` column (the
+    bins ride the broadcast). Each unit fills slice by slice, at most
+    ``chunk_px`` gap px per kernel call; a whole image leaves as a
+    finished row, a chunk of a split image as a delta row
+    (scan-ordered rows/cols/vals/scores). Each row leaves in its own
+    frame: a task's output is never held whole, and no integer column
+    mixes values and nulls (pandas would widen it to float64 and round
+    the 64-bit phash)."""
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out = {k: [] for k in CHUNK_SCHEMA.fieldNames()}
-            for row in pdf.itertuples(index=False):
-                check_payload_fmt(bc.value["inputs"][row.image_id][3], sv)
-                final = _bc_image(bc, row.image_id).copy()
-                tensor, extra = _bc_tensors(bc, row.site)
-                lo = int(row.chunk_id) * chunk_px
-                hi = lo + chunk_px
-                gaps = np.argwhere(final == sv.gap)[lo:hi]
-                filled, scores = _fill_kernel(
-                    final, tensor, extra, method, predictor_configuration,
-                    hyperparameters, params, seed=_stable_seed(row.image_id),
-                    gap_slice=(lo, hi), sv=sv,
-                )
-                changed = filled[gaps[:, 0], gaps[:, 1]]
-                out["image_id"].append(row.image_id)
-                out["chunk_id"].append(int(row.chunk_id))
-                out["rows"].append(gaps[:, 0].astype("<i4").tobytes())
-                out["cols"].append(gaps[:, 1].astype("<i4").tobytes())
-                out["vals"].append(np.ascontiguousarray(changed, "<f8").tobytes())
-                out["scores"].append(np.array(scores, "<f8").tobytes())
-            yield pd.DataFrame(out)
+            for b in pdf["id"]:
+                for image_id, chunk_id in bc.value["bins"][int(b)]:
+                    _payload, h, w, fmt, site, caption, planned = \
+                        bc.value["inputs"][image_id]
+                    check_payload_fmt(fmt, sv)
+                    final = _bc_image(bc, image_id)
+                    gaps = np.argwhere(final == sv.gap)
+                    if len(gaps) != planned:
+                        raise ValueError(
+                            f"image {image_id!r}: {len(gaps)} gap px under "
+                            f"gap={sv.gap}, but its gap_count column says "
+                            f"{planned}; compute the stats columns with "
+                            "stats.with_stats(key_values=...) using the "
+                            "key_values passed here")
+                    tensor, extra = _bc_tensors(bc, site)
+                    whole = chunk_id is None
+                    lo = 0 if whole else chunk_id * chunk_px
+                    hi = len(gaps) if whole else min(lo + chunk_px, len(gaps))
+                    filled = final.copy()
+                    scores = []
+                    for s in range(lo, hi, chunk_px):
+                        e = min(s + chunk_px, hi)
+                        part, sc = _fill_kernel(
+                            final, tensor, extra, method,
+                            predictor_configuration, hyperparameters, params,
+                            seed=_stable_seed(image_id), gap_slice=(s, e),
+                            sv=sv)
+                        sel = gaps[s:e]
+                        filled[sel[:, 0], sel[:, 1]] = part[sel[:, 0], sel[:, 1]]
+                        scores.extend(sc)
+                    if whole:
+                        row = {k: [] for k in GAPFILL_SCHEMA.fieldNames()}
+                        _append_filled(row, image_id, filled, fmt, w, h,
+                                       caption, len(gaps), scores, sv)
+                    else:
+                        sel = gaps[lo:hi]
+                        row = {
+                            "image_id": [image_id], "chunk_id": [chunk_id],
+                            "rows": [sel[:, 0].astype("<i4").tobytes()],
+                            "cols": [sel[:, 1].astype("<i4").tobytes()],
+                            "vals": [np.ascontiguousarray(
+                                filled[sel[:, 0], sel[:, 1]], "<f8").tobytes()],
+                            "scores": [np.array(scores, "<f8").tobytes()],
+                        }
+                    yield pd.DataFrame({k: row.get(k, [None])
+                                        for k in _FILL_SCHEMA.fieldNames()})
 
     return fn
 
 
-def _assemble_batches_fn(sv: Sentinels = DEFAULT_SENTINELS):
-  def _assemble_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = {k: [] for k in GAPFILL_SCHEMA.fieldNames()}
-        for row in pdf.itertuples(index=False):
-            final = codecs.decode(row.bytes, int(row.h), int(row.w), row.fmt)
-            filled = final.copy()
-            all_scores = []
-            n_px = 0
-            for ch in sorted(row.chunks, key=lambda c: c["chunk_id"]):
-                rs = np.frombuffer(ch["rows"], dtype="<i4")
-                cs = np.frombuffer(ch["cols"], dtype="<i4")
-                vs = np.frombuffer(ch["vals"], dtype="<f8")
-                filled[rs, cs] = vs
-                all_scores.append(np.frombuffer(ch["scores"], dtype="<f8"))
-                n_px += len(rs)
-            scores = np.concatenate(all_scores) if all_scores else np.array([])
-            out["image_id"].append(row.image_id)
-            out["bytes"].append(codecs.encode(filled, row.fmt))
-            out["w"].append(row.w)
-            out["h"].append(row.h)
-            out["fmt"].append(row.fmt)
-            out["caption"].append(row.caption)
-            out["phash"].append(
-                codecs.phash64(filled, sv.gap, sv.skip, sv.nodata))
-            out["status"].append("filled")
-            out["filled_px"].append(n_px)
-            out["mean_cv_mae"].append(float(scores.mean()) if len(scores) else float("nan"))
-        yield pd.DataFrame(out)
+def _assemble_batches_fn(sv: Sentinels = DEFAULT_SENTINELS, bc=None):
+    """Scatter each image's chunk deltas into its original raster and
+    finish the row. The original comes from the row's own
+    bytes/w/h/fmt/caption columns, or with ``bc`` from the balanced
+    fill's broadcast; there a row whose ``done`` list holds the image's
+    finished row (finished in its fill task) passes it through
+    unchanged."""
+    def _assemble_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = {k: [] for k in GAPFILL_SCHEMA.fieldNames()}
+            for row in pdf.itertuples(index=False):
+                if bc is None:
+                    fmt, w, h, caption = row.fmt, row.w, row.h, row.caption
+                    final = codecs.decode(row.bytes, int(h), int(w), fmt)
+                elif len(row.done):
+                    out["image_id"].append(row.image_id)
+                    for k, v in row.done[0].items():
+                        out[k].append(v)
+                    continue
+                else:
+                    _p, h, w, fmt, _site, caption, _g = \
+                        bc.value["inputs"][row.image_id]
+                    final = _bc_image(bc, row.image_id)
+                filled = final.copy()
+                all_scores = []
+                n_px = 0
+                for ch in sorted(row.chunks, key=lambda c: c["chunk_id"]):
+                    rs = np.frombuffer(ch["rows"], dtype="<i4")
+                    cs = np.frombuffer(ch["cols"], dtype="<i4")
+                    filled[rs, cs] = np.frombuffer(ch["vals"], dtype="<f8")
+                    all_scores.append(np.frombuffer(ch["scores"], dtype="<f8"))
+                    n_px += len(rs)
+                scores = np.concatenate(all_scores) if all_scores else np.array([])
+                _append_filled(out, row.image_id, filled, fmt, w, h, caption,
+                               n_px, scores, sv)
+            yield pd.DataFrame(out)
 
-  return _assemble_batches
+    return _assemble_batches
 
 
 def gapfill_balanced(images: DataFrame, predictor_configuration: str = "Biome",
@@ -332,17 +428,27 @@ def gapfill_balanced(images: DataFrame, predictor_configuration: str = "Biome",
                      chunk_px: int = 512, method: str = "Knn",
                      hyperparameters: str = "Custom",
                      key_values: dict | None = None) -> DataFrame:
-    """Skew-balanced gapfill: each viable image's gap
-    scan is split into ``chunk_px``-pixel chunks that fill as
-    independent tasks (the salting of the north_rule — a 96%-gap image
-    no longer serializes the stage), then chunks are reassembled per
-    image. Per-pixel seeding makes the result bit-identical to
+    """Skew-balanced gapfill in one wave of at most
+    ``defaultParallelism`` Python tasks. The driver plans the wave from
+    the ``gap_count`` column (``plan_fill``): images with at most a
+    task's share of the gap px stay whole, only hot images split into
+    ``chunk_px``-pixel chunks of their gap scan, and the units are
+    packed by gap px into at most one bin per core. Each task fills its
+    units at most ``chunk_px`` gap px per kernel call (which bounds the
+    kernel's temporaries) and finishes every image that lies wholly in
+    it. Per-pixel seeding makes the result bit-identical to
     ``gapfill``.
 
-    Plan: pack-history shuffle → chunk explode (declarative
-    sequence/explode on gap_count) → mapInPandas fill → ONE extra
-    shuffle of (row, col, value) deltas (tiny: 20 bytes/gap-pixel,
-    not image payloads) → assemble join."""
+    Plan: side-input collects → broadcast → driver-built bin table
+    (one row per task, no shuffle) → mapInPandas fill. Only when an
+    image splits across tasks: ONE shuffle of the fill rows by
+    image_id ((row, col, value) deltas of split images, ~20
+    bytes/gap-pixel, beside the finished rows) → mapInPandas assemble
+    of the split images.
+
+    The planner trusts ``gap_count``: a fill task raises ValueError
+    when an image's gap scan under ``key_values`` disagrees with it
+    (stats computed with another encoding)."""
     sv = resolve_key_values(key_values)
     inputs = images.filter(F.col("role") == "input")
     viable = inputs.filter((F.col("valid_px") > min_valid) & (F.col("gap_count") > 0))
@@ -353,14 +459,15 @@ def gapfill_balanced(images: DataFrame, predictor_configuration: str = "Biome",
     # side inputs ride a Spark *broadcast variable*: per-site history
     # stacks + extra layer reach each executor once and decode once per
     # Python worker (module-level cache) — joining them onto every
-    # chunk row would push multi-MB Arrow batches through the Python
-    # pipe per 512-pixel task (measured 2.4× throughput loss). With
-    # millions of sites this one-shot broadcast is replaced by the
-    # plain-join path of ``gapfill`` or a per-tile history table.
+    # task row would push multi-MB Arrow batches through the Python
+    # pipe per task (measured 2.4× throughput loss). With millions of
+    # sites this one-shot broadcast is replaced by the plain-join path
+    # of ``gapfill`` or a per-tile history table.
     import uuid
     from concurrent.futures import ThreadPoolExecutor
 
-    sc = images.sparkSession.sparkContext
+    spark = images.sparkSession
+    sc = spark.sparkContext
     # the three side-input collects are independent Spark jobs —
     # submit them concurrently so the driver waits for the slowest
     # one, not their sum (guide-standard driver-thread overlap)
@@ -373,8 +480,8 @@ def gapfill_balanced(images: DataFrame, predictor_configuration: str = "Biome",
                 images.filter(F.col("role") == "extra")).collect())
             if predictor_configuration == "Biome" else None)
         f_inputs = pool.submit(
-            lambda: viable.select("image_id", "bytes", "h", "w",
-                                  "fmt", "gap_count").collect())
+            lambda: viable.select("image_id", "bytes", "h", "w", "fmt",
+                                  "site", "caption", "gap_count").collect())
         hist_rows = f_hist.result()
         extra_rows = {}
         if f_extra is not None:
@@ -391,53 +498,19 @@ def gapfill_balanced(images: DataFrame, predictor_configuration: str = "Biome",
         layers = [(l["ts"], bytes(l["bytes"]), int(l["h"]), int(l["w"]), l["fmt"])
                   for l in r["hist_layers"]]
         site_map[r["site"]] = (layers, extra_rows.get(r["site"]))
-    # input payloads ride the broadcast too: chunk rows are then pure
-    # (image_id, chunk_id) keys, so the chunk shuffle and the Arrow
-    # pipes carry ~50 bytes/task instead of a duplicated raster per
-    # chunk (a measured 3× JVM tax at 32 workers). The collected set
-    # must fit the driver — beyond that, use
-    # gapfill_balanced_checkpointed(batch_rows=...), which bounds the
-    # collect to one batch per snapshot and unpersists each batch's
-    # broadcast after commit. Call release_broadcasts() after
-    # materializing this one-shot variant's output.
+    # input payloads and the plan ride the broadcast too: the fill table
+    # is then one bin id per task, so the Arrow pipes carry a few bytes
+    # instead of a duplicated raster per chunk (a measured 3× JVM tax
+    # at 32 workers). The collected set must fit the driver —
+    # beyond that, use gapfill_balanced_checkpointed(batch_rows=...),
+    # which bounds the collect to one batch per snapshot and unpersists
+    # each batch's broadcast after commit. Call release_broadcasts()
+    # after materializing this one-shot variant's output.
     input_map = {
-        r["image_id"]: (bytes(r["bytes"]), int(r["h"]), int(r["w"]), r["fmt"])
+        r["image_id"]: (bytes(r["bytes"]), int(r["h"]), int(r["w"]), r["fmt"],
+                        r["site"], r["caption"], int(r["gap_count"]))
         for r in input_rows
     }
-    bc = sc.broadcast({"gen": uuid.uuid4().hex, "sites": site_map,
-                       "inputs": input_map})
-    _LIVE_BROADCASTS.append(bc)
-
-    n_chunks = F.ceil(F.col("gap_count") / chunk_px).cast("int")
-    # explicit partition count: the chunk shuffle is tiny in BYTES but
-    # heavy in CPU per row — AQE's size-based coalescing would collapse
-    # it to a handful of tasks; a user-specified count is exempt.
-    # Sized from the ACTUAL chunk count (driver-known for free from
-    # the collected input rows): ~3 chunks/task amortizes per-task
-    # dispatch + Arrow setup while round-robin still balances counts;
-    # finer splitting measured SLOWER at the bench scale (64 parts
-    # 1.7 s vs 256 parts 2.0-3.7 s for the same 198 chunks), and the
-    # [cores, cores*8] clamp keeps full width at small counts and the
-    # former behavior at large ones.
-    total_chunks = sum(-(-int(r["gap_count"]) // chunk_px)
-                       for r in input_rows)
-    n_parts = int(min(max(sc.defaultParallelism, -(-total_chunks // 3)),
-                      sc.defaultParallelism * 8))
-    chunks = viable.withColumn(
-        "chunk_id", F.explode(F.sequence(F.lit(0), n_chunks - 1))
-    ).repartition(n_parts)  # round-robin: exact chunk-count balance
-    partials = chunks.select("image_id", "site", "chunk_id").mapInPandas(
-        _chunk_fill_batches(bc, method, predictor_configuration,
-                            hyperparameters, params, chunk_px, sv),
-        CHUNK_SCHEMA,
-    )
-    packed = partials.groupBy("image_id").agg(
-        F.collect_list(F.struct("chunk_id", "rows", "cols", "vals", "scores")).alias("chunks")
-    )
-    assembled = viable.select(
-        "image_id", "bytes", "w", "h", "fmt", "caption", "phash"
-    ).join(packed, "image_id").mapInPandas(_assemble_batches_fn(sv),
-                                           GAPFILL_SCHEMA)
 
     pass_df = passthrough.select(
         "image_id", "bytes", "w", "h", "fmt", "caption", "phash",
@@ -445,7 +518,33 @@ def gapfill_balanced(images: DataFrame, predictor_configuration: str = "Biome",
         F.lit(0).alias("filled_px"),
         F.lit(0.0).alias("mean_cv_mae"),
     )
-    return assembled.unionByName(pass_df)
+    if not input_map:
+        return pass_df
+
+    bins, split = plan_fill({i: m[6] for i, m in input_map.items()},
+                            sc.defaultParallelism, chunk_px)
+    bc = sc.broadcast({"gen": uuid.uuid4().hex, "sites": site_map,
+                       "inputs": input_map, "bins": bins})
+    _LIVE_BROADCASTS.append(bc)
+
+    # one row per bin, one partition per row: one fill task per bin,
+    # no exchange
+    filled = spark.range(0, len(bins), 1, len(bins)).mapInPandas(
+        _plan_fill_batches(bc, method, predictor_configuration,
+                           hyperparameters, params, chunk_px, sv),
+        _FILL_SCHEMA)
+    if split:
+        # finished rows ride inside an array: nested structs reach
+        # pandas as dicts of exact Python values, top-level nullable
+        # ints would arrive as float64
+        is_delta = F.col("chunk_id").isNotNull()
+        done = F.collect_list(F.when(~is_delta, F.struct(
+            *GAPFILL_SCHEMA.fieldNames()[1:]))).alias("done")
+        deltas = F.collect_list(F.when(is_delta, F.struct(
+            *CHUNK_SCHEMA.fieldNames()[1:]))).alias("chunks")
+        filled = filled.groupBy("image_id").agg(done, deltas) \
+            .mapInPandas(_assemble_batches_fn(sv, bc), GAPFILL_SCHEMA)
+    return filled.select(*GAPFILL_SCHEMA.fieldNames()).unionByName(pass_df)
 
 
 def gapfill_balanced_checkpointed(images: DataFrame, table_path: str,

@@ -184,3 +184,61 @@ def test_balanced_lasso_bit_equals_plain(spark):
         images, predictor_configuration="Biome", params={"alpha": 1.0},
         method="Lasso", chunk_px=150).collect()}
     assert plain == bal
+
+
+def test_balanced_split_and_whole_bit_equal_plain(spark):
+    """One balanced call that splits a hot image across tasks (delta →
+    shuffle → assemble) and finishes the light ones whole in their
+    fill tasks equals plain gapfill on every column the fill computes."""
+    from ssgp_toolbox_spark import codecs
+    from ssgp_toolbox_spark.io import images as img_io
+    from ssgp_toolbox_spark.operators import gapfill, stats
+
+    rows = [generator.image_row(
+        "mx", "input", f"20190916T{hh:02d}0000",
+        generator.make_layer("mx", 60, 50, 40 + hh, "input", frac),
+        codecs.FMT_F64, int(frac * 100))
+        for hh, frac in enumerate([0.80, 0.01, 0.05, 0.15])
+    ] + generator.site_rows("mx", n_history=4, n_inputs=0, shape=(60, 50))
+    images = stats.with_stats(img_io.with_id_parts(
+        spark.createDataFrame(rows, schema=generator.IMAGE_COLUMNS))).cache()
+    chunk_px = 150
+    counts = {r["image_id"]: r["gap_count"] for r in images.filter(
+        "role = 'input' AND gap_count > 0").collect()}
+    bins, split = gapfill.plan_fill(
+        counts, spark.sparkContext.defaultParallelism, chunk_px)
+    assert split == {"mx/input/20190916T000000"}
+    assert len(counts) - len(split) >= 3  # whole images ride along
+
+    def cols(df):
+        return {r["image_id"]: (bytes(r["bytes"]), r["filled_px"], r["phash"],
+                                float(r["mean_cv_mae"]).hex())
+                for r in df.collect()}
+
+    plain = cols(gapfill.gapfill(
+        images, method="Knn", predictor_configuration="Biome",
+        hyperparameters="Custom", params={"n_neighbors": 5}))
+    bal = cols(gapfill.gapfill_balanced(
+        images, predictor_configuration="Biome", params={"n_neighbors": 5},
+        chunk_px=chunk_px))
+    gapfill.release_broadcasts()
+    assert set(plain) == set(counts)
+    assert plain == bal
+
+
+def test_knn_coords_exact_int32_equals_int64():
+    """The (d², index) tie key is built in int64 whatever the coord
+    dtype: on a sparse 100000×100000 frame d² · n_c overflows int32."""
+    rng = np.random.default_rng(3)
+    shape = (100_000, 100_000)
+    cands = rng.integers(0, 100_000, size=(1000, 2))
+    blk = rng.integers(40_000, 41_000, size=(64, 2))
+    want = B._knn_coords_exact(cands, blk, 5, shape)
+    got = B._knn_coords_exact(cands.astype(np.int32), blk.astype(np.int32),
+                              5, shape)
+    assert np.array_equal(want, got)
+    # and both are the exact first-index k nearest
+    d2 = ((blk[:, None, :] - cands[None, :, :]) ** 2).sum(-1)
+    ref = np.lexsort((np.broadcast_to(np.arange(len(cands)), d2.shape), d2),
+                     axis=1)[:, :5]
+    assert np.array_equal(want, cands[ref])

@@ -122,6 +122,22 @@ def test_gapfill_key_values_equivalence(spark):
         np.testing.assert_array_equal(_unmap(gm), bm)
 
 
+def test_balanced_gapfill_rejects_stats_of_another_encoding(spark):
+    """gapfill_balanced plans its tasks from the gap_count column; stats
+    computed with the default encoding do not count the gaps seen under
+    key_values=KV, and the fill task must say so instead of leaving the
+    gaps unfilled."""
+    imgs = stats.with_stats(img_io.with_id_parts(generator.images_df(
+        spark, sites=("mini",), shape=(30, 20), n_history=4, n_inputs=1)))
+    assert imgs.filter("role = 'input' AND gap_count > 0").count() >= 1
+    with pytest.raises(Exception,
+                       match=r"ValueError.*stats\.with_stats\(key_values"):
+        gapfill.gapfill_balanced(imgs, predictor_configuration="Biome",
+                                 params={"n_neighbors": 5},
+                                 key_values=KV).collect()
+    gapfill.release_broadcasts()
+
+
 def test_discretize_key_values_blank_and_fill(spark):
     from ssgp_toolbox_spark.operators import discretize as disc
 

@@ -15,10 +15,8 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_hot_image_fans_out(spark):
-    """A 100×-denser gap image must split into proportionally many
-    chunk tasks (the salting guarantee): no task holds more than
-    chunk_px pixels of any image."""
+def _skewed_images(spark):
+    """One 80%-gap image next to a 1%-gap one on a 60×50 site."""
     small = generator.make_layer("sk", 60, 50, 30, "input", 0.01)
     # 80% gaps: heavily skewed but still viable (valid_px > 101 — the
     # reference's own EP1 threshold; below it the image is excluded)
@@ -27,28 +25,38 @@ def test_hot_image_fans_out(spark):
         generator.image_row("sk", "input", "20190916T000000", small, codecs.FMT_F64, 1),
         generator.image_row("sk", "input", "20190916T120000", hot, codecs.FMT_F64, 80),
     ] + generator.site_rows("sk", n_history=3, n_inputs=0, shape=(60, 50))
-    df = stats.with_stats(img_io.with_id_parts(
+    return stats.with_stats(img_io.with_id_parts(
         spark.createDataFrame(rows, schema=generator.IMAGE_COLUMNS)
     ))
+
+
+def _gap_counts(df):
+    return {r["image_id"]: r["gap_count"] for r in df.filter(
+        (F.col("role") == "input") & (F.col("gap_count") > 0)).collect()}
+
+
+def test_hot_image_fans_out(spark):
+    """A 100×-denser gap image must split into proportionally many
+    chunks spread over several tasks, while the light image stays one
+    whole unit: asserted on the operator's own planner, fed what the
+    operator feeds it."""
+    df = _skewed_images(spark)
     chunk_px = 200
-    viable = df.filter((F.col("role") == "input") & (F.col("gap_count") > 0))
-    n_chunks = viable.select(
-        "image_id", F.ceil(F.col("gap_count") / chunk_px).cast("int").alias("nc"),
-        "gap_count",
-    ).collect()
-    by_id = {r["image_id"]: r for r in n_chunks}
-    hot_r = by_id["sk/input/20190916T120000"]
-    small_r = by_id["sk/input/20190916T000000"]
-    # hot image fans out into ceil(gap_count/chunk) tasks; no task ever
-    # holds more than chunk_px pixels regardless of image density
-    assert hot_r["nc"] == -(-hot_r["gap_count"] // chunk_px)
-    assert small_r["nc"] == -(-small_r["gap_count"] // chunk_px)
-    assert hot_r["nc"] >= 10
-    assert hot_r["gap_count"] > 4 * small_r["gap_count"]
+    counts = _gap_counts(df)
+    hot_id, small_id = "sk/input/20190916T120000", "sk/input/20190916T000000"
+    assert counts[hot_id] > 4 * counts[small_id]
+    bins, split = gapfill.plan_fill(
+        counts, spark.sparkContext.defaultParallelism, chunk_px)
+    assert split == {hot_id}
+    hot_chunks = sorted(c for b in bins for i, c in b if i == hot_id)
+    assert hot_chunks == list(range(-(-counts[hot_id] // chunk_px)))
+    assert len(hot_chunks) >= 10
+    assert [c for b in bins for i, c in b if i == small_id] == [None]
     # end-to-end: balanced fill still completes and fills everything
     out = gapfill.gapfill_balanced(df, predictor_configuration="Biome",
                                    params={"n_neighbors": 5},
                                    min_valid=101, chunk_px=chunk_px).collect()
+    assert sorted(r["image_id"] for r in out) == sorted(counts)
     for r in out:
         m = codecs.decode(bytes(r["bytes"]), r["h"], r["w"], r["fmt"])
         assert (m == GAP).sum() == 0
@@ -58,16 +66,24 @@ def test_balanced_plan_ships_no_history_rows(spark):
     """History stacks travel as a Spark broadcast *variable*, not as
     join rows: the fill branch of the plan must contain no
     hist_layers column (per-chunk Arrow transfer of multi-MB stacks
-    was a measured 2.4× throughput loss)."""
+    was a measured 2.4× throughput loss). The fill is one pandas
+    stage over a driver-built table; the assemble stage and its
+    shuffle appear only when an image splits across tasks."""
     images = stats.with_stats(img_io.with_id_parts(
         generator.images_df(spark, sites=("stp",), n_history=2, n_inputs=1)
     ))
     plan = _plan(gapfill.gapfill_balanced(images, predictor_configuration="Biome",
                                           params={"n_neighbors": 5}))
-    # two pandas stages: chunk fill + assemble (names get truncated in
-    # the plan string, so count the operators)
-    assert plan.count("MapInPandas") >= 2
+    # names get truncated in the plan string, so count the operators
+    assert plan.count("MapInPandas") == 1
+    assert "Exchange" not in plan
     assert "hist_layers" not in plan
+    hot = _plan(gapfill.gapfill_balanced(_skewed_images(spark),
+                                         predictor_configuration="Biome",
+                                         params={"n_neighbors": 5},
+                                         chunk_px=200))
+    assert hot.count("MapInPandas") == 2  # fill + assemble
+    assert "hist_layers" not in hot
     # the plain-join path (for site counts too large to broadcast)
     # keeps the packed-history join
     plain = _plan(gapfill.gapfill(images, method="Knn",
@@ -75,6 +91,65 @@ def test_balanced_plan_ships_no_history_rows(spark):
                                   hyperparameters="Custom",
                                   params={"n_neighbors": 5}))
     assert "hist_layers" in plain
+
+
+def _unit_ranges(bins, counts, chunk_px):
+    """(image_id, lo, hi) gap-scan range of every planned unit."""
+    for b in bins:
+        for i, c in b:
+            lo = 0 if c is None else c * chunk_px
+            hi = counts[i] if c is None else min(lo + chunk_px, counts[i])
+            yield i, lo, hi
+
+
+def _check_plan(counts, slots, chunk_px):
+    bins, split = gapfill.plan_fill(counts, slots, chunk_px)
+    share = -(-sum(counts.values()) // slots)
+    assert 1 <= len(bins) <= slots
+    # every gap px of every image is covered exactly once
+    cover = {i: np.zeros(g, dtype=int) for i, g in counts.items()}
+    for i, lo, hi in _unit_ranges(bins, counts, chunk_px):
+        cover[i][lo:hi] += 1
+    assert all((c == 1).all() for c in cover.values())
+    for i, g in counts.items():
+        units = [c for b in bins for j, c in b if j == i]
+        if g <= share:  # at or below the share: one whole unit
+            assert units == [None] and i not in split
+        elif i in split:  # above it: chunk_px boundaries of its scan
+            assert sorted(units) == list(range(-(-g // chunk_px)))
+        else:  # all chunks landed in one bin: finished whole there
+            assert units == [None]
+    loads = [sum(hi - lo for _i, lo, hi in _unit_ranges([b], counts, chunk_px))
+             for b in bins]
+    largest = max(min(g, chunk_px) if g > share else g for g in counts.values())
+    assert max(loads) <= share + largest
+    # same input (in any order) → same plan
+    assert gapfill.plan_fill(dict(reversed(list(counts.items()))),
+                             slots, chunk_px) == (bins, split)
+    return bins, split, share, loads
+
+
+def test_plan_fill_hot_image_splits_light_ones_stay_whole():
+    """No Spark: the hot image splits over every slot, the light ones
+    stay whole, and with every whole image <= chunk_px the heaviest
+    bin is within share + chunk_px."""
+    counts = {f"s/input/{k:02d}": g
+              for k, g in enumerate([4915, 205, 768, 90, 512, 333, 1, 60])}
+    bins, split, share, loads = _check_plan(counts, 4, 512)
+    assert split == {"s/input/00"}
+    assert all(any(i == "s/input/00" for i, _ in b) for b in bins)
+    assert max(loads) <= share + 512
+
+
+@pytest.mark.parametrize("slots", [1, 3, 4, 12])
+@pytest.mark.parametrize("chunk_px", [100, 1024])
+@pytest.mark.parametrize("seed", [0, 1, 2])
+def test_plan_fill_properties(slots, chunk_px, seed):
+    rng = np.random.default_rng(seed)
+    counts = {f"r/input/{k:03d}": int(g)
+              for k, g in enumerate(rng.integers(1, 3000, size=20))}
+    counts["r/input/hot"] = 40_000
+    _check_plan(counts, slots, chunk_px)
 
 
 def test_parquet_scan_pushdown(spark, tmp_path):
