@@ -46,7 +46,7 @@ from pyspark.sql import types as T
 from ssgp_toolbox_spark import codecs
 from ssgp_toolbox_spark.kernels import frame as frame_kernel
 from ssgp_toolbox_spark.sentinels import (DEFAULT_SENTINELS, Sentinels,
-                                          check_payload_fmt,
+                                          check_gap_count, check_payload_fmt,
                                           resolve_key_values)
 
 GAPFILL_SCHEMA = T.StructType([
@@ -340,13 +340,7 @@ def _plan_fill_batches(bc, method, predictor_configuration,
                     check_payload_fmt(fmt, sv)
                     final = _bc_image(bc, image_id)
                     gaps = np.argwhere(final == sv.gap)
-                    if len(gaps) != planned:
-                        raise ValueError(
-                            f"image {image_id!r}: {len(gaps)} gap px under "
-                            f"gap={sv.gap}, but its gap_count column says "
-                            f"{planned}; compute the stats columns with "
-                            "stats.with_stats(key_values=...) using the "
-                            "key_values passed here")
+                    check_gap_count(image_id, len(gaps), planned, sv)
                     tensor, extra = _bc_tensors(bc, site)
                     whole = chunk_id is None
                     lo = 0 if whole else chunk_id * chunk_px

@@ -28,7 +28,7 @@ from pyspark.sql import types as T
 from ssgp_toolbox_spark import codecs
 from ssgp_toolbox_spark.kernels import nn
 from ssgp_toolbox_spark.sentinels import (DEFAULT_SENTINELS, Sentinels,
-                                          check_payload_fmt,
+                                          check_gap_count, check_payload_fmt,
                                           resolve_key_values)
 
 NN_FILL_SCHEMA = T.StructType([
@@ -110,6 +110,8 @@ def _nn_chunk_batches(chunk_px: int, sv: Sentinels = DEFAULT_SENTINELS):
                 # only true gaps change in the final image (skip/NoData
                 # are restored by nn_interpolate, gapfiller.py:960-962)
                 targets = np.argwhere(m == sv.gap)
+                check_gap_count(row.image_id, len(targets),
+                                int(row.gap_count), sv)
                 lo = int(row.chunk_id) * chunk_px
                 sel = targets[lo : lo + chunk_px]
                 filled = nn.nn_lookup_grid(work, work != sv.gap, sel)
@@ -163,7 +165,9 @@ def nn_fill_balanced(images: DataFrame, chunk_px: int = 4096,
     been computed with the SAME encoding
     (``stats.with_stats(key_values=...)``): default-encoded stats on a
     custom-encoded corpus would report gap_count=0 and silently route
-    every image to the passthrough branch. Non-viable (valid_px <= 10)
+    every image to the passthrough branch, and any other gap_count that
+    disagrees with the payload raises ValueError in the chunk task.
+    Non-viable (valid_px <= 10)
     and no-gap images follow the reference branches
     (gapfiller.py:920-936)."""
     from pyspark.sql import functions as F
@@ -184,7 +188,8 @@ def nn_fill_balanced(images: DataFrame, chunk_px: int = 4096,
     chunks = viable.withColumn(
         "chunk_id", F.explode(F.sequence(F.lit(0), n_chunks - 1))
     ).repartition(n_parts)  # round-robin: exact chunk-count balance
-    partials = chunks.select("image_id", "chunk_id", "bytes", "w", "h", "fmt") \
+    partials = chunks.select("image_id", "chunk_id", "gap_count", "bytes", "w",
+                             "h", "fmt") \
         .mapInPandas(_nn_chunk_batches(chunk_px, sv), _NN_CHUNK_SCHEMA)
     packed = partials.groupBy("image_id").agg(
         F.collect_list(F.struct("chunk_id", "rows", "cols", "vals")).alias("chunks")

@@ -149,3 +149,17 @@ def check_payload_fmt(fmt: str, sv: "Sentinels") -> None:
             f"key_values overrides require fmt='npy-f64' payloads; "
             f"got {fmt!r} — the {fmt!r} codec reserves sentinel codes "
             "for the default encoding only")
+
+
+def check_gap_count(image_id: str, found: int, planned: int,
+                    sv: "Sentinels") -> None:
+    """The balanced fill operators plan their tasks from the stats
+    ``gap_count`` column; stats computed under another encoding count
+    other pixels, and a task that trusted them would leave gaps
+    unfilled yet report status='filled'. Raise instead."""
+    if found != planned:
+        raise ValueError(
+            f"image {image_id!r}: {found} gap px under gap={sv.gap}, but "
+            f"its gap_count column says {planned}; compute the stats "
+            "columns with stats.with_stats(key_values=...) using the "
+            "key_values passed here")

@@ -130,25 +130,77 @@ def test_neighbor_schedule_property(n, seed, k):
         known.add(g)
 
 
-@settings(max_examples=10, deadline=None)
-@given(st.integers(0, 2**31 - 1))
-def test_grid_nn_property(seed):
-    """nn_lookup_grid == brute force on random masks (tie rule incl.)."""
+def _assert_grid_nn_equals_brute(m, valid):
     from ssgp_toolbox_spark.kernels import nn
 
-    rng = np.random.default_rng(seed)
-    h, w = rng.integers(4, 25), rng.integers(4, 25)
-    m = rng.normal(0, 1, (h, w))
-    valid = rng.random((h, w)) > 0.5
-    if not valid.any():
-        valid[0, 0] = True
     targets = np.argwhere(~valid)
-    if len(targets) == 0:
-        return
     got = nn.nn_lookup_grid(m, valid, targets)
     pts = np.argwhere(valid)
     exp = nn.nn_fill_values(pts, m[pts[:, 0], pts[:, 1]], targets)
     assert np.array_equal(got, exp)
+
+
+@settings(max_examples=10, deadline=None)
+@given(st.integers(0, 2**31 - 1))
+def test_grid_nn_property(seed):
+    """nn_lookup_grid == brute force on random masks (tie rule incl.),
+    up to 120×90 so the targets span several 1024-target chunks, with
+    one column that holds no valid pixel."""
+    rng = np.random.default_rng(seed)
+    h, w = rng.integers(4, 121), rng.integers(4, 91)
+    m = rng.normal(0, 1, (h, w))
+    valid = rng.random((h, w)) < rng.uniform(0.02, 0.9)
+    empty = rng.integers(w)
+    valid[:, empty] = False
+    if not valid.any():
+        valid[rng.integers(h), (empty + 1) % w] = True
+    _assert_grid_nn_equals_brute(m, valid)
+
+
+def test_grid_nn_single_valid_pixel():
+    """One valid pixel: all 10,799 targets of a 120×90 grid take its
+    value, across every chunk boundary."""
+    m = np.random.default_rng(3).normal(0, 1, (120, 90))
+    valid = np.zeros(m.shape, bool)
+    valid[77, 13] = True
+    _assert_grid_nn_equals_brute(m, valid)
+
+
+def test_grid_nn_generator_sites_equal_brute_force():
+    """nn_interpolate on generator images (109×62, gap ladder up to
+    96 %) equals a brute-force fill of their gap pixels from their
+    valid ones."""
+    from ssgp_toolbox_spark.kernels import nn
+
+    for site in ("nn0", "nn7", "nn19"):
+        for r in generator.site_rows(site, n_history=0, n_inputs=4):
+            if "/input/" not in r[0]:
+                continue
+            m = codecs.decode(r[1], r[3], r[2], r[4])
+            assert m.shape == (109, 62)
+            got, status = nn.nn_interpolate(m)
+            assert status == "filled"
+            flagged = (m == GAP) | (m == SKIP) | (m == NODATA)
+            pts, targets = np.argwhere(~flagged), np.argwhere(m == GAP)
+            exp = m.copy()
+            exp[m == GAP] = nn.nn_fill_values(
+                pts, m[pts[:, 0], pts[:, 1]], targets)
+            assert np.array_equal(got, exp)
+
+
+def test_grid_nn_rejects_key_overflow_and_no_valid_pixel():
+    """The int64 (d², row, col) key has 2^62 of headroom: a 50k×50k
+    raster overflows it and must raise before anything is allocated
+    (the zero-stride inputs below hold one element each)."""
+    from ssgp_toolbox_spark.kernels import nn
+
+    m = np.broadcast_to(np.zeros(1), (50_000, 50_000))
+    valid = np.broadcast_to(np.ones(1, bool), m.shape)
+    with pytest.raises(ValueError, match="50000x50000"):
+        nn.nn_lookup_grid(m, valid, np.zeros((1, 2), np.int64))
+    with pytest.raises(ValueError, match="no valid pixel"):
+        nn.nn_lookup_grid(np.zeros((4, 3)), np.zeros((4, 3), bool),
+                          np.zeros((1, 2), np.int64))
 
 
 def test_flip_vertical_matches_numpy_and_is_involution(spark):
