@@ -55,8 +55,7 @@ def run_gap():
 
 def run_nn():
     t0 = time.time()
-    nn = nn_fill.nn_fill_balanced(imgs.filter(F.col("role") == "input"),
-                                  chunk_px=2048)
+    nn = nn_fill.nn_fill(imgs.filter(F.col("role") == "input"))
     p = nn.agg(F.sum("filled_px")).collect()[0][0]
     return p, time.time() - t0
 

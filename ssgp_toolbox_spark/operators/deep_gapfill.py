@@ -54,7 +54,7 @@ from ssgp_toolbox_spark.kernels import batch
 from ssgp_toolbox_spark.kernels import frame as frame_kernel
 from ssgp_toolbox_spark.operators import gapfill as G
 from ssgp_toolbox_spark.sentinels import (DEFAULT_SENTINELS, Sentinels,
-                                          check_payload_fmt,
+                                          check_gap_count, check_payload_fmt,
                                           resolve_key_values)
 
 COORDS_SCHEMA = T.StructType([
@@ -99,13 +99,11 @@ def _coords_batches(predictor_configuration: str, chunk_px: int,
                     e = row.extra_layer
                     extra = codecs.decode(e["bytes"], int(e["h"]), int(e["w"]), e["fmt"])
                 gaps = np.argwhere(final == sv.gap)
-                if not len(gaps):
-                    continue
+                check_gap_count(row.image_id, len(gaps), int(row.gap_count),
+                                sv)
                 grp = int(getattr(row, "grp", 0))
                 g_lo = grp * group_chunks * chunk_px
                 g_hi = min(g_lo + group_chunks * chunk_px, len(gaps))
-                if g_lo >= len(gaps):
-                    continue
                 sub_gaps = gaps[g_lo:g_hi]
                 coords = batch.select_coords(
                     final, extra, sub_gaps, predictor_configuration,
@@ -209,7 +207,7 @@ def gapfill_deep(images: DataFrame, method: str = "Knn",
     passthrough = inputs.filter(
         (F.col("valid_px") > min_valid) & (F.col("gap_count") == 0))
 
-    sel_cols = ["image_id", "site", "bytes", "h", "w", "fmt"]
+    sel_cols = ["image_id", "site", "bytes", "h", "w", "fmt", "gap_count"]
     # the coords pass is chunk-GROUPED (optimization round 6): one
     # task per image serialized the stage on high-gap images (a
     # 96%-gap 200×160 input alone measured 2.6-3.2 s of whole-image

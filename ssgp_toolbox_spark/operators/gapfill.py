@@ -553,17 +553,18 @@ def gapfill_balanced_checkpointed(images: DataFrame, table_path: str,
     processed in bounded batches of ``batch_rows`` images — only one
     batch of input payloads is ever collected to the driver for the
     side-input broadcast, each batch commits as one resumable snapshot
-    (io/images manifest), and the batch's broadcast is unpersisted as
-    soon as its snapshot lands. ``gapfill_balanced`` itself keeps the
-    one-shot shape for corpora that fit the driver; this wrapper is
-    what a 10^12-row run uses (and what resumes after a crash: already
-    committed image_ids are anti-joined away).
+    (io/images manifest), and the batch's broadcast is unpersisted
+    once its snapshot lands, before the next batch is built
+    (``checkpoint.run_checkpointed`` runs the loop).
+    ``gapfill_balanced`` itself keeps the one-shot shape for corpora
+    that fit the driver; this wrapper is what a 10^12-row run uses (and
+    what resumes after a crash: already committed image_ids are
+    anti-joined away).
 
     Returns the committed snapshot ids; read the result with
     ``io.images.load(spark, table_path)``."""
     from ssgp_toolbox_spark.operators import checkpoint
 
-    spark = images.sparkSession
     inputs = images.filter(F.col("role") == "input")
     side = images.filter(F.col("role") != "input")
     # targets = inputs the operator will actually emit (viable or
@@ -572,26 +573,20 @@ def gapfill_balanced_checkpointed(images: DataFrame, table_path: str,
     targets = inputs.filter(F.col("valid_px") > min_valid).select("image_id")
 
     def compute(todo: DataFrame) -> DataFrame:
+        release_broadcasts()  # previous batch's snapshot is committed
         batch_inputs = inputs.join(todo.select("image_id"), "image_id")
-        out = gapfill_balanced(
+        return gapfill_balanced(
             side.unionByName(batch_inputs),
             predictor_configuration=predictor_configuration, params=params,
             min_valid=min_valid, chunk_px=chunk_px, method=method,
             hyperparameters=hyperparameters, key_values=key_values)
-        return out
 
-    sids = []
-    while True:
-        todo = checkpoint.remaining(targets, spark, table_path).limit(batch_rows)
-        if todo.count() == 0:
-            break
-        from ssgp_toolbox_spark.io import images as img_io
-
-        out = checkpoint.with_lineage(compute(todo), {
-            "op": "gapfill_balanced", "method": method,
-            "hyperparameters": hyperparameters, "chunk_px": chunk_px})
-        sids.append(img_io.append_snapshot(out, table_path))
-        release_broadcasts()  # snapshot committed → side inputs free
+    sids = checkpoint.run_checkpointed(
+        targets, compute, images.sparkSession, table_path,
+        {"op": "gapfill_balanced", "method": method,
+         "hyperparameters": hyperparameters, "chunk_px": chunk_px},
+        batch_rows)
+    release_broadcasts()
     return sids
 
 

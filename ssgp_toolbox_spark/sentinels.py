@@ -153,10 +153,11 @@ def check_payload_fmt(fmt: str, sv: "Sentinels") -> None:
 
 def check_gap_count(image_id: str, found: int, planned: int,
                     sv: "Sentinels") -> None:
-    """The balanced fill operators plan their tasks from the stats
-    ``gap_count`` column; stats computed under another encoding count
-    other pixels, and a task that trusted them would leave gaps
-    unfilled yet report status='filled'. Raise instead."""
+    """``gapfill_balanced`` and ``gapfill_deep`` plan their tasks from
+    the stats ``gap_count`` column; stats computed under another
+    encoding count other pixels, and a task that trusted them would
+    leave gaps unfilled or drop the image from the output. Raise
+    instead."""
     if found != planned:
         raise ValueError(
             f"image {image_id!r}: {found} gap px under gap={sv.gap}, but "

@@ -77,7 +77,7 @@ def test_deep_stack_bounded_rows(spark):
         F.broadcast(gapfill.pack_extra(images.filter(F.col("role") == "extra"))),
         "site")
     coord_rows = sel.select("image_id", "site", "bytes", "h", "w", "fmt",
-                            "extra_layer").mapInPandas(
+                            "gap_count", "extra_layer").mapInPandas(
         coords, deep_gapfill.COORDS_SCHEMA).collect()
     assert coord_rows
     for r in coord_rows:

@@ -138,18 +138,21 @@ def test_balanced_gapfill_rejects_stats_of_another_encoding(spark):
     gapfill.release_broadcasts()
 
 
-def test_nn_balanced_rejects_stats_of_another_encoding(spark):
-    """nn_fill_balanced slices each image's gaps by the gap_count
-    column; stats computed with the default encoding do not count the
-    gaps seen under key_values=KV, and the chunk task must say so
-    instead of emitting status='filled' with the gaps left unfilled."""
+def test_deep_rejects_stats_of_another_encoding(spark):
+    """gapfill_deep sizes its coords pass from the gap_count column;
+    stats computed with the default encoding do not count the gaps seen
+    under key_values=KV, and the coords task must say so instead of
+    dropping the image from the output."""
+    from ssgp_toolbox_spark.operators import deep_gapfill
+
     imgs = stats.with_stats(img_io.with_id_parts(generator.images_df(
-        spark, sites=("mini",), shape=(30, 20), n_history=0, n_inputs=2)))
-    inputs = imgs.filter(F.col("role") == "input")
-    assert inputs.filter("gap_count > 0").count() >= 1
+        spark, sites=("mini",), shape=(30, 20), n_history=4, n_inputs=1)))
+    assert imgs.filter("role = 'input' AND gap_count > 0").count() >= 1
     with pytest.raises(Exception,
                        match=r"ValueError.*stats\.with_stats\(key_values"):
-        nn_fill.nn_fill_balanced(inputs, key_values=KV).collect()
+        deep_gapfill.gapfill_deep(imgs, predictor_configuration="Biome",
+                                  params={"n_neighbors": 5},
+                                  key_values=KV).collect()
 
 
 def test_discretize_key_values_blank_and_fill(spark):
