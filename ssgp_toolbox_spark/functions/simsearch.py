@@ -224,34 +224,21 @@ def _normalize(df: DataFrame, vec_col: str = "emb") -> DataFrame:
         vec_col, F.pandas_udf(kernel, "array<double>")(F.col(vec_col)))
 
 
-# Centroid tables up to this many cells ride along as a closure
-# capture (pickled into every task); larger ones ship as one
-# SparkContext.broadcast per executor.
-MAX_CLOSURE_CELLS = 4096
-
-
-def _ship(payload, n_cells: int):
-    if n_cells <= MAX_CLOSURE_CELLS:
-        return payload
-    from pyspark.sql import SparkSession
-
-    return SparkSession.getActiveSession().sparkContext.broadcast(payload)
-
-
 def _ship_centroids(centroids):
-    """Centroid matrix as the task-side input for the Arrow kernels:
-    a plain closure capture up to ``MAX_CLOSURE_CELLS``, a
-    ``SparkContext.broadcast`` beyond — shipped to each executor once
-    over the torrent-style broadcast channel instead of once per
-    task. At the ~10^5-10^6 cells real IVF wants at 10^12 rows, the
-    (cells × dim) float64 matrix is hundreds of MB: closure capture
-    would re-ship it with every one of ~10^5 tasks. Same kernel, same
-    arithmetic either way (parity pinned in
+    """Centroid matrix as the task-side input for the Arrow kernels,
+    captured by the UDF closure. PySpark ships a UDF command over
+    ``spark.broadcast.UDFCompressionThreshold`` (1 MiB by default,
+    ~2,000 cells at 64-d) as a broadcast that lives as long as the
+    plan, so a large table reaches each executor over the broadcast
+    channel and is released with the plan. Its value is unpickled once
+    per task, not once per worker; a serving loop that runs many plans
+    against one model broadcasts it once instead
+    (``streaming.simsearch_stream.prepare_serving``). The kernels take
+    either form, with the same arithmetic (parity pinned in
     tests/test_ann_recall.py)."""
     import numpy as np
 
-    return _ship(np.ascontiguousarray(centroids, dtype=np.float64),
-                 len(centroids))
+    return np.ascontiguousarray(centroids, dtype=np.float64)
 
 
 def _resolve_centroids(shipped):
@@ -261,8 +248,8 @@ def _resolve_centroids(shipped):
 def _assign_pandas_udf(shipped):
     """Arrow-vectorized argmin-cell kernel: one (batch × cells)
     distance matmul per Arrow batch against the closure-captured or
-    broadcast centroid matrix (``_ship_centroids``). Rounds to 6dp
-    with HALF_UP on the non-negative distances
+    explicitly broadcast centroid matrix (``_ship_centroids``). Rounds
+    to 6dp with HALF_UP on the non-negative distances
     (np.floor(d*1e6+0.5)/1e6) to match Spark's ``F.round`` semantics,
     and breaks ties toward the lowest cid (np.argmin first index) —
     the (dist, cid) order of the s04 SQL oracle; parity with the
@@ -314,10 +301,9 @@ def ivf_assign(vectors: DataFrame, centroids: list, vec_col: str = "emb",
     The map is a vectorized Arrow kernel (``_assign_pandas_udf``):
     one (batch × cells) matmul per batch, HALF_UP-rounded to match
     F.round, first-index tie-break. The centroid matrix reaches the
-    tasks via ``_ship_centroids`` — a closure capture for small
-    tables, a ``SparkContext.broadcast`` for the ~10^5-10^6 cells
-    real IVF wants at 10^12 rows, where re-pickling a hundreds-of-MB
-    matrix into every task would dominate task launch.
+    tasks in the UDF closure (``_ship_centroids``); at the
+    ~10^5-10^6 cells real IVF wants at 10^12 rows PySpark ships that
+    command as a broadcast, released with the plan.
 
     The kernel rounds the expanded x²-2xc+c² form, the s04 SQL oracle
     the fold-summed (a-b)²: a distance within ~1e-12 of a 6dp
@@ -336,10 +322,10 @@ def ivf_probe_cells(queries: DataFrame, centroids: list, n_probe: int,
     the Arrow argsort kernel (``_probe_pandas_udf``). Narrow
     projection + explode, no window/shuffle.
 
-    ``shipped``: an already-shipped centroid payload
-    (``_ship_centroids`` result) for long-running serving loops — a
-    new broadcast per call would otherwise leak executor memory over
-    a stream's lifetime."""
+    ``shipped``: the centroid matrix as a ``_ship_centroids`` array
+    or a broadcast of it — a serving loop broadcasts it once
+    (``prepare_serving``) instead of re-shipping it with every
+    micro-batch plan."""
     if shipped is None:
         shipped = _ship_centroids(centroids)
     cells = _probe_pandas_udf(shipped, n_probe)(F.col(vec_col))
@@ -530,7 +516,7 @@ def _pq_unpack_codes(packed, m):
 def _pq_encode_udf(shipped, packed: bool = False):
     """Arrow kernel: vector → (cid, m PQ codes of its residual) in one
     narrow projection. ``shipped``: (centroid matrix, codebooks),
-    closure-captured or broadcast (``_ship_centroids`` semantics).
+    closure-captured or broadcast (``_ship_model``).
     ``packed`` stores the codes as ONE int64 (8 bits/subspace)
     instead of array<int> — the true 8-byte scan representation."""
     import numpy as np
@@ -579,7 +565,7 @@ def ivf_pq_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
        deterministic driver-side sample (``train_stride`` /
        ``train_cap`` bound it — constant-size state, standard PQ
        practice; codebooks are (m × ks × dim/m) doubles, shipped
-       with the centroids via closure or broadcast, ``_ship_model``).
+       with the centroids in the task closure, ``_ship_model``).
     3. encode: ONE narrow Arrow projection over the corpus →
        (nid, cid, codes). No shuffle.
     4. search: queries probe ``n_probe`` cells (narrow projection);
@@ -679,14 +665,12 @@ def ivf_pq_build(embeddings: DataFrame, n_cells: int = 16,
 
 
 def _ship_model(model):
-    """(centroid matrix, codebooks) as the Arrow-kernel side input —
-    the ``_ship_centroids`` closure-or-broadcast rule, with the
-    codebooks riding along."""
+    """(centroid matrix, codebooks) as the Arrow-kernel side input,
+    captured by the UDF closure like ``_ship_centroids``."""
     import numpy as np
 
-    return _ship((np.ascontiguousarray(model["cents"], dtype=np.float64),
-                  np.asarray(model["books"], dtype=np.float64)),
-                 len(model["cents"]))
+    return (_ship_centroids(model["cents"]),
+            np.asarray(model["books"], dtype=np.float64))
 
 
 def ivf_pq_search(index: DataFrame, vectors: DataFrame,
@@ -704,12 +688,14 @@ def ivf_pq_search(index: DataFrame, vectors: DataFrame,
     Serving-loop hooks (``search_batch`` uses all three so a
     micro-batch never normalizes/probes twice or re-ships the model):
     ``probes`` — precomputed (qid, qe, cid) probe frame; ``qnorm`` —
-    precomputed normalized (qid, qe) queries; ``shipped`` — an
-    already-shipped ``_ship_model`` payload."""
+    precomputed normalized (qid, qe) queries; ``shipped`` — the
+    ``_ship_model`` payload or a broadcast of it."""
     import numpy as np
     import pandas as pd
 
-    cents = model["cents"]
+    # adc_fn reads the model through ``shipped`` only: capturing
+    # ``model`` itself would re-ship it with every plan's closure
+    cents, packed = model["cents"], model.get("packed")
     if shipped is None:
         shipped = _ship_model(model)
     e = _normalize(_cast(vectors).select(
@@ -732,7 +718,7 @@ def ivf_pq_search(index: DataFrame, vectors: DataFrame,
         cid = int(key[0])
         idx = index_pdf.sort_values("nid")
         nids = idx["nid"].to_numpy()
-        if model.get("packed"):
+        if packed:
             codes = _pq_unpack_codes(idx["codes"].to_numpy(), mm)
         else:
             codes = np.stack([np.asarray(c) for c in idx["codes"]])

@@ -218,61 +218,12 @@ CHUNK_SCHEMA = T.StructType([
 _FILL_SCHEMA = T.StructType(GAPFILL_SCHEMA.fields + CHUNK_SCHEMA.fields[1:])
 
 
-# per-python-worker decode cache for broadcast history stacks: one
-# decode per (site, broadcast-id) per worker process, not per chunk
-_BC_CACHE: dict = {}
-
-_SITE_CACHE_MAX = 8  # decoded site tensors kept per worker (FIFO evict)
-
-# driver-side registry of live broadcast variables created by
-# gapfill_balanced — drained by release_broadcasts() (and by the
-# checkpointed loop after each snapshot commit) so repeated calls in
-# one session don't accumulate executor memory
-_LIVE_BROADCASTS: list = []
-
-
 def release_broadcasts() -> int:
-    """Unpersist every broadcast created by prior gapfill_balanced
-    calls. Call AFTER materializing the returned DataFrame (the
-    broadcast must stay alive until then). Returns the count."""
-    n = 0
-    while _LIVE_BROADCASTS:
-        _LIVE_BROADCASTS.pop().unpersist()
-        n += 1
-    return n
-
-
-def _bc_tensors(bc, site):
-    gen = bc.value["gen"]
-    key = (gen, site)
-    if key not in _BC_CACHE:
-        for stale in [k for k in _BC_CACHE if k[0] != gen]:
-            del _BC_CACHE[stale]
-        site_keys = [k for k in _BC_CACHE if len(k) == 2]
-        if len(site_keys) >= _SITE_CACHE_MAX:
-            del _BC_CACHE[site_keys[0]]
-        hist_layers, extra_layer = bc.value["sites"][site]
-        tensor = np.stack([
-            codecs.decode(b, h, w, f) for (_ts, b, h, w, f) in hist_layers
-        ]) if hist_layers else None
-        extra = codecs.decode(*extra_layer) if extra_layer else None
-        _BC_CACHE[key] = (tensor, extra)
-    return _BC_CACHE[key]
-
-
-_IMG_CACHE_MAX = 16  # decoded inputs kept per worker (FIFO evict)
-
-
-def _bc_image(bc, image_id):
-    gen = bc.value["gen"]
-    key = (gen, "img", image_id)
-    if key not in _BC_CACHE:
-        payload, h, w, fmt = bc.value["inputs"][image_id][:4]
-        img_keys = [k for k in _BC_CACHE if len(k) == 3 and k[1] == "img"]
-        if len(img_keys) >= _IMG_CACHE_MAX:
-            del _BC_CACHE[img_keys[0]]
-        _BC_CACHE[key] = codecs.decode(payload, h, w, fmt)
-    return _BC_CACHE[key]
+    """Kept for callers of the former broadcast registry: the balanced
+    fill ships its inputs in the task closures, whose broadcast (if
+    PySpark makes one) lives only as long as the plan. Releases
+    nothing and returns 0."""
+    return 0
 
 
 def plan_fill(gap_counts: dict, slots: int, chunk_px: int):
@@ -320,28 +271,49 @@ def plan_fill(gap_counts: dict, slots: int, chunk_px: int):
     return bins, split
 
 
-def _plan_fill_batches(bc, method, predictor_configuration,
+def _plan_fill_batches(plan, method, predictor_configuration,
                        hyperparameters, params, chunk_px,
                        sv: Sentinels = DEFAULT_SENTINELS):
-    """Fill the bins of ``plan_fill`` named by the ``id`` column (the
-    bins ride the broadcast). Each unit fills slice by slice, at most
-    ``chunk_px`` gap px per kernel call; a whole image leaves as a
-    finished row, a chunk of a split image as a delta row
-    (scan-ordered rows/cols/vals/scores). Each row leaves in its own
-    frame: a task's output is never held whole, and no integer column
-    mixes values and nulls (pandas would widen it to float64 and round
-    the 64-bit phash)."""
+    """Fill the bins of ``plan_fill`` named by the ``id`` column; the
+    bins, input payloads and site stacks ride in ``plan``, captured by
+    the task closure. A task fills its units sorted by (site, image_id,
+    chunk_id) and decodes a site's stack or an input only when it
+    changes, so one of each is live at a time. Each unit fills slice
+    by slice, at most ``chunk_px`` gap px per kernel call; a whole
+    image leaves as a finished row, a chunk of a split image as a
+    delta row (scan-ordered rows/cols/vals/scores). Each row leaves in
+    its own frame: a task's output is never held whole, and no integer
+    column mixes values and nulls (pandas would widen it to float64
+    and round the 64-bit phash)."""
+    inputs, sites = plan["inputs"], plan["sites"]
+
+    def unit_key(unit):
+        image_id, chunk_id = unit
+        return (inputs[image_id][4], image_id,
+                -1 if chunk_id is None else chunk_id)
+
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        cur_site = cur_image = None
         for pdf in batches:
             for b in pdf["id"]:
-                for image_id, chunk_id in bc.value["bins"][int(b)]:
-                    _payload, h, w, fmt, site, caption, planned = \
-                        bc.value["inputs"][image_id]
-                    check_payload_fmt(fmt, sv)
-                    final = _bc_image(bc, image_id)
-                    gaps = np.argwhere(final == sv.gap)
-                    check_gap_count(image_id, len(gaps), planned, sv)
-                    tensor, extra = _bc_tensors(bc, site)
+                for image_id, chunk_id in sorted(plan["bins"][int(b)],
+                                                 key=unit_key):
+                    payload, h, w, fmt, site, caption, planned = \
+                        inputs[image_id]
+                    if image_id != cur_image:
+                        check_payload_fmt(fmt, sv)
+                        final = codecs.decode(payload, h, w, fmt)
+                        gaps = np.argwhere(final == sv.gap)
+                        check_gap_count(image_id, len(gaps), planned, sv)
+                        cur_image = image_id
+                    if site != cur_site:
+                        hist_layers, extra_layer = sites[site]
+                        tensor = np.stack([codecs.decode(*l)
+                                           for l in hist_layers]) \
+                            if hist_layers else None
+                        extra = codecs.decode(*extra_layer) \
+                            if extra_layer else None
+                        cur_site = site
                     whole = chunk_id is None
                     lo = 0 if whole else chunk_id * chunk_px
                     hi = len(gaps) if whole else min(lo + chunk_px, len(gaps))
@@ -377,18 +349,19 @@ def _plan_fill_batches(bc, method, predictor_configuration,
     return fn
 
 
-def _assemble_batches_fn(sv: Sentinels = DEFAULT_SENTINELS, bc=None):
+def _assemble_batches_fn(sv: Sentinels = DEFAULT_SENTINELS, originals=None):
     """Scatter each image's chunk deltas into its original raster and
     finish the row. The original comes from the row's own
-    bytes/w/h/fmt/caption columns, or with ``bc`` from the balanced
-    fill's broadcast; there a row whose ``done`` list holds the image's
-    finished row (finished in its fill task) passes it through
+    bytes/w/h/fmt/caption columns, or with ``originals`` (image_id →
+    (payload, h, w, fmt, caption) of the balanced fill's split images)
+    from the task closure; there a row whose ``done`` list holds the
+    image's finished row (finished in its fill task) passes it through
     unchanged."""
     def _assemble_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = {k: [] for k in GAPFILL_SCHEMA.fieldNames()}
             for row in pdf.itertuples(index=False):
-                if bc is None:
+                if originals is None:
                     fmt, w, h, caption = row.fmt, row.w, row.h, row.caption
                     final = codecs.decode(row.bytes, int(h), int(w), fmt)
                 elif len(row.done):
@@ -397,9 +370,8 @@ def _assemble_batches_fn(sv: Sentinels = DEFAULT_SENTINELS, bc=None):
                         out[k].append(v)
                     continue
                 else:
-                    _p, h, w, fmt, _site, caption, _g = \
-                        bc.value["inputs"][row.image_id]
-                    final = _bc_image(bc, row.image_id)
+                    payload, h, w, fmt, caption = originals[row.image_id]
+                    final = codecs.decode(payload, h, w, fmt)
                 filled = final.copy()
                 all_scores = []
                 n_px = 0
@@ -433,12 +405,19 @@ def gapfill_balanced(images: DataFrame, predictor_configuration: str = "Biome",
     it. Per-pixel seeding makes the result bit-identical to
     ``gapfill``.
 
-    Plan: side-input collects → broadcast → driver-built bin table
-    (one row per task, no shuffle) → mapInPandas fill. Only when an
-    image splits across tasks: ONE shuffle of the fill rows by
-    image_id ((row, col, value) deltas of split images, ~20
-    bytes/gap-pixel, beside the finished rows) → mapInPandas assemble
-    of the split images.
+    Plan: side-input collects → driver-built bin table (one row per
+    task, no shuffle) → mapInPandas fill. Only when an image splits
+    across tasks: ONE shuffle of the fill rows by image_id ((row, col,
+    value) deltas of split images, ~20 bytes/gap-pixel, beside the
+    finished rows) → mapInPandas assemble of the split images.
+
+    The collected site stacks, input payloads and bins ride in the fill
+    task closure, the split images' originals in the assemble closure.
+    PySpark ships a UDF command over
+    ``spark.broadcast.UDFCompressionThreshold`` (1 MiB by default) as a
+    broadcast that lives as long as the plan, so nothing is left to
+    release. The collected set must fit the driver; beyond that, use
+    ``gapfill_balanced_checkpointed(batch_rows=...)``.
 
     The planner trusts ``gap_count``: a fill task raises ValueError
     when an image's gap scan under ``key_values`` disagrees with it
@@ -450,18 +429,17 @@ def gapfill_balanced(images: DataFrame, predictor_configuration: str = "Biome",
         (F.col("valid_px") > min_valid) & (F.col("gap_count") == 0)
     )
 
-    # side inputs ride a Spark *broadcast variable*: per-site history
-    # stacks + extra layer reach each executor once and decode once per
-    # Python worker (module-level cache) — joining them onto every
-    # task row would push multi-MB Arrow batches through the Python
-    # pipe per task (measured 2.4× throughput loss). With millions of
-    # sites this one-shot broadcast is replaced by the plain-join path
-    # of ``gapfill`` or a per-tile history table.
-    import uuid
+    # side inputs ride in the task closure, not as join columns:
+    # joining the stacks onto every task row would push multi-MB Arrow
+    # batches through the Python pipe per task (measured 2.4×
+    # throughput loss), and with the payloads in the closure the fill
+    # table is one bin id per task (a duplicated raster per chunk was a
+    # measured 3× JVM tax at 32 workers). With millions of sites the
+    # plain-join path of ``gapfill`` or a per-tile history table
+    # replaces this one-shot collect.
     from concurrent.futures import ThreadPoolExecutor
 
     spark = images.sparkSession
-    sc = spark.sparkContext
     # the three side-input collects are independent Spark jobs —
     # submit them concurrently so the driver waits for the slowest
     # one, not their sum (guide-standard driver-thread overlap)
@@ -489,17 +467,9 @@ def gapfill_balanced(images: DataFrame, predictor_configuration: str = "Biome",
         input_rows = f_inputs.result()
     site_map = {}
     for r in hist_rows:
-        layers = [(l["ts"], bytes(l["bytes"]), int(l["h"]), int(l["w"]), l["fmt"])
+        layers = [(bytes(l["bytes"]), int(l["h"]), int(l["w"]), l["fmt"])
                   for l in r["hist_layers"]]
         site_map[r["site"]] = (layers, extra_rows.get(r["site"]))
-    # input payloads and the plan ride the broadcast too: the fill table
-    # is then one bin id per task, so the Arrow pipes carry a few bytes
-    # instead of a duplicated raster per chunk (a measured 3× JVM tax
-    # at 32 workers). The collected set must fit the driver —
-    # beyond that, use gapfill_balanced_checkpointed(batch_rows=...),
-    # which bounds the collect to one batch per snapshot and unpersists
-    # each batch's broadcast after commit. Call release_broadcasts()
-    # after materializing this one-shot variant's output.
     input_map = {
         r["image_id"]: (bytes(r["bytes"]), int(r["h"]), int(r["w"]), r["fmt"],
                         r["site"], r["caption"], int(r["gap_count"]))
@@ -516,15 +486,13 @@ def gapfill_balanced(images: DataFrame, predictor_configuration: str = "Biome",
         return pass_df
 
     bins, split = plan_fill({i: m[6] for i, m in input_map.items()},
-                            sc.defaultParallelism, chunk_px)
-    bc = sc.broadcast({"gen": uuid.uuid4().hex, "sites": site_map,
-                       "inputs": input_map, "bins": bins})
-    _LIVE_BROADCASTS.append(bc)
+                            spark.sparkContext.defaultParallelism, chunk_px)
+    plan = {"sites": site_map, "inputs": input_map, "bins": bins}
 
     # one row per bin, one partition per row: one fill task per bin,
     # no exchange
     filled = spark.range(0, len(bins), 1, len(bins)).mapInPandas(
-        _plan_fill_batches(bc, method, predictor_configuration,
+        _plan_fill_batches(plan, method, predictor_configuration,
                            hyperparameters, params, chunk_px, sv),
         _FILL_SCHEMA)
     if split:
@@ -536,8 +504,9 @@ def gapfill_balanced(images: DataFrame, predictor_configuration: str = "Biome",
             *GAPFILL_SCHEMA.fieldNames()[1:]))).alias("done")
         deltas = F.collect_list(F.when(is_delta, F.struct(
             *CHUNK_SCHEMA.fieldNames()[1:]))).alias("chunks")
+        originals = {i: input_map[i][:4] + (input_map[i][5],) for i in split}
         filled = filled.groupBy("image_id").agg(done, deltas) \
-            .mapInPandas(_assemble_batches_fn(sv, bc), GAPFILL_SCHEMA)
+            .mapInPandas(_assemble_batches_fn(sv, originals), GAPFILL_SCHEMA)
     return filled.select(*GAPFILL_SCHEMA.fieldNames()).unionByName(pass_df)
 
 
@@ -551,10 +520,9 @@ def gapfill_balanced_checkpointed(images: DataFrame, table_path: str,
                                   key_values: dict | None = None) -> list[str]:
     """THE 100 TB entry point for the balanced path: viable inputs are
     processed in bounded batches of ``batch_rows`` images — only one
-    batch of input payloads is ever collected to the driver for the
-    side-input broadcast, each batch commits as one resumable snapshot
-    (io/images manifest), and the batch's broadcast is unpersisted
-    once its snapshot lands, before the next batch is built
+    batch of input payloads, and the stacks of that batch's sites
+    only, is ever collected to the driver for the task closures, and
+    each batch commits as one resumable snapshot (io/images manifest)
     (``checkpoint.run_checkpointed`` runs the loop).
     ``gapfill_balanced`` itself keeps the one-shot shape for corpora
     that fit the driver; this wrapper is what a 10^12-row run uses (and
@@ -573,21 +541,20 @@ def gapfill_balanced_checkpointed(images: DataFrame, table_path: str,
     targets = inputs.filter(F.col("valid_px") > min_valid).select("image_id")
 
     def compute(todo: DataFrame) -> DataFrame:
-        release_broadcasts()  # previous batch's snapshot is committed
         batch_inputs = inputs.join(todo.select("image_id"), "image_id")
+        batch_side = side.join(batch_inputs.select("site").distinct(),
+                               "site", "left_semi")
         return gapfill_balanced(
-            side.unionByName(batch_inputs),
+            batch_side.unionByName(batch_inputs),
             predictor_configuration=predictor_configuration, params=params,
             min_valid=min_valid, chunk_px=chunk_px, method=method,
             hyperparameters=hyperparameters, key_values=key_values)
 
-    sids = checkpoint.run_checkpointed(
+    return checkpoint.run_checkpointed(
         targets, compute, images.sparkSession, table_path,
         {"op": "gapfill_balanced", "method": method,
          "hyperparameters": hyperparameters, "chunk_px": chunk_px},
         batch_rows)
-    release_broadcasts()
-    return sids
 
 
 def gapfill_sequential(images: DataFrame, method: str = "Lasso",
@@ -601,9 +568,8 @@ def gapfill_sequential(images: DataFrame, method: str = "Lasso",
     hard sequential dependency, so this is a **driver loop of one
     Spark job per input timestamp** (SURVEY.md §3 EP1 note: "Spark
     runs one job per input timestamp in that mode"), exactly like the
-    reference's per-file loop. Each iteration is itself fully
-    parallel across that timestamp's gap pixels via the balanced path
-    when applicable.
+    reference's per-file loop. Each iteration is one plain ``gapfill``
+    call, parallel across that timestamp's inputs.
 
     Returns the union of the per-timestamp fill results (ts order).
     """

@@ -12,12 +12,11 @@ temporal stack.
 Semantics vs the whole-image reference path:
 - Biome kNN predictors are selected within the window. The fill for a
   pixel is **exactly** the whole-image result whenever its 40th
-  same-biome neighbor lies inside the window (checked per pixel with
-  the distance-to-window-edge bound — same safety test as the box
-  prefilter); pixels that fail the bound are still filled from window
-  candidates and counted in ``approx_px``. With halo ≥ the biome
-  40-NN radius (≈ 2·sqrt(40/πρ) pixels) approx_px is 0 and the
-  operator is bit-identical to ``gapfill``.
+  same-biome neighbor lies inside the window; a pixel whose 40th
+  neighbor lies beyond the window edge is filled from the window's
+  candidates instead. With halo ≥ the biome 40-NN radius
+  (≈ 2·sqrt(40/πρ) pixels) every pixel is exact and the operator is
+  bit-identical to ``gapfill``.
 - 'Random'/'All' configurations are inherently whole-image and are
   not offered here (use gapfill/gapfill_balanced).
 
@@ -90,7 +89,6 @@ _FILL_TILE_SCHEMA = T.StructType([
     T.StructField("ph", T.IntegerType()), T.StructField("pw", T.IntegerType()),
     T.StructField("tile_bytes", T.BinaryType()),
     T.StructField("scores", T.BinaryType()),
-    T.StructField("approx_px", T.IntegerType()),
 ])
 
 
@@ -117,22 +115,16 @@ def _fill_tile_group(params, sv: Sentinels = DEFAULT_SENTINELS):
             core_mask[ri : ri + inp.core_h, ci : ci + inp.core_w] = True
             gaps_all = np.argwhere(win == sv.gap)
             in_core = core_mask[gaps_all[:, 0], gaps_all[:, 1]]
-            # fill the whole window's gap list but only where in core:
-            # fill_image_knn's gap_slice is positional, so we call with
-            # explicit subset via a mask trick — set non-core gaps aside
             filled = win.copy()
             scores = []
-            approx = 0
             if in_core.any():
-                # window-local fill; per-pixel seeds keyed by ABSOLUTE
-                # pixel coords (coord_offset) so tiling does not change
-                # the seed
+                # window-local fill of the core gaps only (halo gaps
+                # belong to the neighboring tiles' cores); per-pixel
+                # seeds keyed by ABSOLUTE pixel coords (coord_offset)
+                # so tiling does not change the seed
                 sub = gaps_all[in_core]
-                work = win.copy()
-                # fill only the core gaps (halo gaps belong to the
-                # neighboring tiles' cores)
-                f, sc = batch_kernel.fill_image_knn(
-                    work, tensor, extra=extra,
+                f, scores = batch_kernel.fill_image_knn(
+                    win, tensor, extra=extra,
                     predictor_configuration="Biome",
                     hyperparameters="Custom",
                     params={"n_neighbors": k, "weights": weights},
@@ -142,39 +134,12 @@ def _fill_tile_group(params, sv: Sentinels = DEFAULT_SENTINELS):
                     sv=sv,
                 )
                 filled[sub[:, 0], sub[:, 1]] = f[sub[:, 0], sub[:, 1]]
-                scores = sc
-                # approximation audit. Exact iff either (a) the biome
-                # is window-locally large and its 40th neighbor fits
-                # inside the unclipped window, or (b) the random
-                # fallback ran over a window covering the WHOLE raster
-                # (then the window-local valid set == image-wide one).
-                full_window = (inp.prow0 == 0 and inp.pcol0 == 0
-                               and inp.ph == inp.h and inp.pw == inp.w)
-                masked = np.where(work == sv.gap, sv.gap, extra)
-                for (r, c) in sub:
-                    code = extra[r, c]
-                    cands = np.argwhere(masked == code)
-                    if len(cands) > 41:
-                        d2 = ((cands - [r, c]) ** 2).sum(1)
-                        d40 = np.partition(d2, 39)[39]
-                        edge = min(r, c, inp.ph - 1 - r, inp.pw - 1 - c)
-                        # window edges at raster borders are exact
-                        gr, gc = r + inp.prow0, c + inp.pcol0
-                        if (0 < r + inp.prow0 and 0 < c + inp.pcol0
-                                and gr < inp.h - 1 and gc < inp.w - 1
-                                and d40 > edge * edge):
-                            approx += 1
-                    elif not full_window:
-                        # random-fallback pixel sampled from the
-                        # window-local valid set — approximate
-                        approx += 1
             row = {f: getattr(inp, f) for f in
                    ("image_id", "site", "w", "h", "fmt", "caption", "phash",
                     "tx", "ty", "row0", "col0", "core_h", "core_w", "halo",
                     "prow0", "pcol0", "ph", "pw")}
             row["tile_bytes"] = np.ascontiguousarray(filled, "<f8").tobytes()
             row["scores"] = np.array(scores, "<f8").tobytes()
-            row["approx_px"] = approx
             out_rows.append(row)
         return pd.DataFrame(out_rows, columns=_FILL_TILE_SCHEMA.fieldNames())
 
@@ -209,8 +174,7 @@ def tiled_gapfill(images: DataFrame, tile: int = 64, halo: int = 32,
                   key_values: dict | None = None) -> DataFrame:
     """Biome-mode kNN gapfill over cell co-partitioned tile windows.
     ``images`` must carry id parts; history/extra roles are exploded
-    alongside inputs. Returns GAPFILL_SCHEMA (+ approx audit via
-    ``tiled_gapfill_tiles`` if needed)."""
+    alongside inputs. Returns GAPFILL_SCHEMA."""
     sv = resolve_key_values(key_values)
     cols = ["image_id", "site", "role", "ts", "bytes", "w", "h", "fmt",
             "caption", "phash"]

@@ -25,6 +25,7 @@ Scale shape:
 
 from __future__ import annotations
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -32,15 +33,15 @@ from ssgp_toolbox_spark.functions import simsearch
 
 
 def prepare_serving(model: dict) -> dict:
-    """Ship the model payloads ONCE for a long-running serving loop.
-
-    Without this, every micro-batch re-runs ``_ship_model`` /
-    ``_ship_centroids``: beyond ``simsearch.MAX_CLOSURE_CELLS`` that
-    is two NEW SparkContext broadcasts per batch, none unpersisted —
-    driver and executor memory then grow for the stream's lifetime.
-    Returns the handles ``search_batch`` threads through."""
-    return {"shipped": simsearch._ship_model(model),
-            "shipped_cents": simsearch._ship_centroids(model["cents"])}
+    """Broadcast the model payloads ONCE for a long-running serving
+    loop: one model serves many micro-batch plans, so it is shipped to
+    each executor once instead of in every batch's task closures.
+    Returns the broadcast handles ``search_batch`` threads through;
+    the caller owns them (``destroy()`` when the loop ends)."""
+    sc = SparkContext.getOrCreate()
+    return {"shipped": sc.broadcast(simsearch._ship_model(model)),
+            "shipped_cents": sc.broadcast(
+                simsearch._ship_centroids(model["cents"]))}
 
 
 def search_batch(queries: DataFrame, index: DataFrame, vectors: DataFrame,
@@ -59,9 +60,12 @@ def search_batch(queries: DataFrame, index: DataFrame, vectors: DataFrame,
     frame feeds both the driver-side prefilter collect and the search
     itself (``ivf_pq_search(probes=..., qnorm=...)``), instead of one
     extra full Spark job per micro-batch. ``prepared``
-    (``prepare_serving``) reuses the shipped model payloads across
-    batches."""
-    prepared = prepared or prepare_serving(model)
+    (``prepare_serving``) reuses the broadcast model payloads across
+    batches; without it the model rides in this batch's task
+    closures."""
+    prepared = prepared or {
+        "shipped": simsearch._ship_model(model),
+        "shipped_cents": simsearch._ship_centroids(model["cents"])}
     q = simsearch._normalize(simsearch._cast(queries).select(
         F.col("vec_id").alias("qid"), F.col("emb"))) \
         .select("qid", F.col("emb").alias("qe"))

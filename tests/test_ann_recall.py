@@ -154,19 +154,20 @@ def test_ivf_topk_large_cells_end_to_end(spark, clustered):
     assert _recall_at_k(exact, ann) >= 0.9
 
 
-def test_ivf_broadcast_matrix_matches_closure(spark, monkeypatch):
-    """Beyond simsearch.MAX_CLOSURE_CELLS the centroid matrix ships via
-    SparkContext.broadcast instead of closure capture — that must be
-    bit-identical to the closure path at 2,000 cells (same Arrow
-    kernel, same HALF_UP rounding, same tie-break), and the plan must
-    stay Exchange/Window/Join-free: the shipping mode changes only
-    WHERE the matrix bytes travel, never the arithmetic."""
+def test_ivf_broadcast_matrix_matches_closure(spark):
+    """The centroid matrix captured by the UDF closure (the batch form;
+    at 2,500 × 64-d the command passes PySpark's 1 MiB threshold and
+    travels as PySpark's own broadcast) and an explicit broadcast of it
+    (``shipped=``, the serving form) give bit-identical cells: same
+    Arrow kernel, same HALF_UP rounding, same tie-break. The plan stays
+    Exchange/Window/Join-free either way: the shipping form changes
+    only WHERE the matrix bytes travel, never the arithmetic."""
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     e = simsearch._normalize(simsearch._cast(emb).select(
         F.col("vec_id").alias("nid"), F.col("emb")))
     rng = np.random.default_rng(41)
     cents = [[float(v) for v in row]
-             for row in (rng.standard_normal((2000, 64)) / 8).round(6)]
+             for row in (rng.standard_normal((2500, 64)) / 8).round(6)]
     q = e.select(F.col("nid").alias("qid"), F.col("emb").alias("qe")) \
         .filter(F.col("qid") < 20)
 
@@ -176,25 +177,26 @@ def test_ivf_broadcast_matrix_matches_closure(spark, monkeypatch):
             out.setdefault(r["qid"], []).append(r["cid"])
         return out
 
-    # the shipping mode is fixed when the plan is built
-    monkeypatch.setattr(simsearch, "MAX_CLOSURE_CELLS", 100000)
-    assert not hasattr(simsearch._ship_centroids(cents), "value")
     closure_df = simsearch.ivf_assign(e, cents)
     closure_probe = simsearch.ivf_probe_cells(q, cents, 6)
-    monkeypatch.setattr(simsearch, "MAX_CLOSURE_CELLS", 64)
-    assert hasattr(simsearch._ship_centroids(cents), "value")
-    bcast_df = simsearch.ivf_assign(e, cents)
-    bcast_probe = simsearch.ivf_probe_cells(q, cents, 6)
+    bc = spark.sparkContext.broadcast(simsearch._ship_centroids(cents))
+    try:
+        bcast_df = e.withColumn(
+            "cid", simsearch._assign_pandas_udf(bc)(F.col("emb")))
+        bcast_probe = simsearch.ivf_probe_cells(q, cents, 6, shipped=bc)
 
-    closure = {r["nid"]: r["cid"] for r in closure_df.collect()}
-    bcast = {r["nid"]: r["cid"] for r in bcast_df.collect()}
-    assert closure == bcast and len(closure) > 0
-    plan = bcast_df._jdf.queryExecution().toString()
-    for banned in ("Exchange", "Window", "Join", "CartesianProduct"):
-        assert banned not in plan, banned
+        closure = {r["nid"]: r["cid"] for r in closure_df.collect()}
+        bcast = {r["nid"]: r["cid"] for r in bcast_df.collect()}
+        assert closure == bcast and len(closure) > 0
+        for df in (closure_df, bcast_df):
+            plan = df._jdf.queryExecution().toString()
+            for banned in ("Exchange", "Window", "Join", "CartesianProduct"):
+                assert banned not in plan, banned
 
-    pc, pb = cells(closure_probe), cells(bcast_probe)
-    assert pc == pb and all(len(v) == 6 for v in pc.values())
+        pc, pb = cells(closure_probe), cells(bcast_probe)
+        assert pc == pb and all(len(v) == 6 for v in pc.values())
+    finally:
+        bc.destroy()
 
 
 def test_ivf_pq_full_rerank_equals_ivf(spark):

@@ -221,7 +221,6 @@ def test_balanced_split_and_whole_bit_equal_plain(spark):
     bal = cols(gapfill.gapfill_balanced(
         images, predictor_configuration="Biome", params={"n_neighbors": 5},
         chunk_px=chunk_px))
-    gapfill.release_broadcasts()
     assert set(plain) == set(counts)
     assert plain == bal
 

@@ -64,8 +64,7 @@ def test_uncommitted_data_invisible(spark, inputs, tmp_path):
 
 def test_gapfill_balanced_checkpointed_bounded(spark, tmp_path):
     """De-drivered balanced path: batches of 1 input per snapshot,
-    bit-identical to the one-shot variant, broadcasts released after
-    each commit, resume is a no-op."""
+    bit-identical to the one-shot variant, resume is a no-op."""
     from ssgp_toolbox_spark.operators import gapfill, stats
 
     df = generator.images_df(spark, sites=("stp",), n_history=4, n_inputs=2)
@@ -74,13 +73,11 @@ def test_gapfill_balanced_checkpointed_bounded(spark, tmp_path):
                for r in gapfill.gapfill_balanced(
                    imgs, predictor_configuration="Biome",
                    params={"n_neighbors": 5}).collect()}
-    assert gapfill.release_broadcasts() >= 1
 
     table = str(tmp_path / "gf_ckpt")
     sids = gapfill.gapfill_balanced_checkpointed(
         imgs, table, batch_rows=1, params={"n_neighbors": 5})
     assert len(sids) == 2  # one snapshot per viable input
-    assert gapfill._LIVE_BROADCASTS == []  # nothing leaked
 
     rows = img_io.load(spark, table).collect()
     assert len(rows) == 2
@@ -93,3 +90,39 @@ def test_gapfill_balanced_checkpointed_bounded(spark, tmp_path):
     # resume after completion: nothing remaining, no new snapshots
     assert gapfill.gapfill_balanced_checkpointed(
         imgs, table, batch_rows=1, params={"n_neighbors": 5}) == []
+
+
+def test_gapfill_balanced_checkpointed_ships_batch_sites_only(
+        spark, tmp_path, monkeypatch):
+    """Each batch collects the history stacks of its own inputs' sites
+    only, not of every site in the table; the output stays
+    bit-identical to the one-shot variant."""
+    from ssgp_toolbox_spark.operators import gapfill, stats
+
+    df = generator.images_df(spark, sites=("vlad", "stp"), n_history=4,
+                             n_inputs=1)
+    imgs = stats.with_stats(img_io.with_id_parts(df)).cache()
+    oneshot = {r["image_id"]: (bytes(r["bytes"]), r["filled_px"])
+               for r in gapfill.gapfill_balanced(
+                   imgs, predictor_configuration="Biome",
+                   params={"n_neighbors": 5}).collect()}
+    assert len(oneshot) == 2
+
+    seen = []
+    real_pack = gapfill.pack_history
+
+    def spy(history):
+        seen.append(sorted(r["site"] for r in
+                           history.select("site").distinct().collect()))
+        return real_pack(history)
+
+    monkeypatch.setattr(gapfill, "pack_history", spy)
+    table = str(tmp_path / "gf_sites")
+    sids = gapfill.gapfill_balanced_checkpointed(
+        imgs, table, batch_rows=1, params={"n_neighbors": 5})
+    assert len(sids) == 2
+    assert sorted(seen) == [["stp"], ["vlad"]], seen
+
+    rows = img_io.load(spark, table).collect()
+    assert {r["image_id"]: (bytes(r["bytes"]), r["filled_px"])
+            for r in rows} == oneshot

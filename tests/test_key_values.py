@@ -135,7 +135,6 @@ def test_balanced_gapfill_rejects_stats_of_another_encoding(spark):
         gapfill.gapfill_balanced(imgs, predictor_configuration="Biome",
                                  params={"n_neighbors": 5},
                                  key_values=KV).collect()
-    gapfill.release_broadcasts()
 
 
 def test_deep_rejects_stats_of_another_encoding(spark):

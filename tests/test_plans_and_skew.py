@@ -63,12 +63,12 @@ def test_hot_image_fans_out(spark):
 
 
 def test_balanced_plan_ships_no_history_rows(spark):
-    """History stacks travel as a Spark broadcast *variable*, not as
-    join rows: the fill branch of the plan must contain no
-    hist_layers column (per-chunk Arrow transfer of multi-MB stacks
-    was a measured 2.4× throughput loss). The fill is one pandas
-    stage over a driver-built table; the assemble stage and its
-    shuffle appear only when an image splits across tasks."""
+    """History stacks travel in the fill task's closure, not as join
+    rows: the fill branch of the plan must contain no hist_layers
+    column (per-chunk Arrow transfer of multi-MB stacks was a measured
+    2.4× throughput loss). The fill is one pandas stage over a
+    driver-built table; the assemble stage and its shuffle appear only
+    when an image splits across tasks."""
     images = stats.with_stats(img_io.with_id_parts(
         generator.images_df(spark, sites=("stp",), n_history=2, n_inputs=1)
     ))
@@ -84,7 +84,7 @@ def test_balanced_plan_ships_no_history_rows(spark):
                                          chunk_px=200))
     assert hot.count("MapInPandas") == 2  # fill + assemble
     assert "hist_layers" not in hot
-    # the plain-join path (for site counts too large to broadcast)
+    # the plain-join path (for site counts too large to collect)
     # keeps the packed-history join
     plain = _plan(gapfill.gapfill(images, method="Knn",
                                   predictor_configuration="Biome",

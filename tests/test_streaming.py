@@ -427,11 +427,12 @@ def test_streaming_ann_serve_equals_batch(spark, tmp_path):
 
 
 def test_ann_serving_broadcasts_only_in_prepare(spark, monkeypatch):
-    """A serving loop ships its model once: with the 16-cell model past
-    simsearch.MAX_CLOSURE_CELLS, prepare_serving makes the only
-    SparkContext.broadcast calls (model payload + centroid matrix) and
-    three search_batch(prepared=...) micro-batches add none, while
-    returning exactly the closure-shipped results."""
+    """A serving loop ships its model once: prepare_serving makes the
+    only SparkContext.broadcast calls (model payload + centroid matrix)
+    and three search_batch(prepared=...) micro-batches add none, while
+    returning exactly the results of search_batch without ``prepared``,
+    which ships the model in the batch's task closures and broadcasts
+    nothing."""
     from pyspark import SparkContext
     from test_ann_recall import SF_DIR
 
@@ -452,21 +453,20 @@ def test_ann_serving_broadcasts_only_in_prepare(spark, monkeypatch):
 
     monkeypatch.setattr(SparkContext, "broadcast", counting_broadcast)
 
-    def serve():
-        prepared = simsearch_stream.prepare_serving(model)
-        at_prepare = len(calls)
-        out = [sorted(tuple(r) for r in simsearch_stream.search_batch(
-                   b, index, emb, model, prepared=prepared).collect())
-               for b in batches]
-        return prepared, at_prepare, out
+    def serve(prepared):
+        return [sorted(tuple(r) for r in simsearch_stream.search_batch(
+                    b, index, emb, model, prepared=prepared).collect())
+                for b in batches]
 
-    _, at_prepare, closure = serve()
-    assert at_prepare == 0 and calls == []
+    closure = serve(None)
+    assert calls == []
     assert all(len(rows) == 20 for rows in closure)
 
-    monkeypatch.setattr(simsearch, "MAX_CLOSURE_CELLS", 8)
-    prepared, at_prepare, bcast = serve()
-    assert at_prepare == 2 and len(calls) == 2, calls
-    assert bcast == closure
-    for handle in prepared.values():
-        handle.destroy()
+    prepared = simsearch_stream.prepare_serving(model)
+    assert len(calls) == 2, calls
+    try:
+        assert serve(prepared) == closure
+        assert len(calls) == 2, calls
+    finally:
+        for handle in prepared.values():
+            handle.destroy()
