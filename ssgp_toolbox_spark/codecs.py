@@ -170,12 +170,12 @@ def _block_mean_resize(a: np.ndarray, n: int = 32) -> np.ndarray:
     h, w = a.shape
     ri = np.minimum((np.arange(h) * n) // max(h, 1), n - 1)
     ci = np.minimum((np.arange(w) * n) // max(w, 1), n - 1)
-    out = np.zeros((n, n))
-    cnt = np.zeros((n, n))
-    np.add.at(out, (ri[:, None].repeat(w, 1), ci[None, :].repeat(h, 0)), a)
-    np.add.at(cnt, (ri[:, None].repeat(w, 1), ci[None, :].repeat(h, 0)), 1.0)
+    # bincount sums each bin in element order, as np.add.at did
+    idx = (ri[:, None] * n + ci[None, :]).ravel()
+    out = np.bincount(idx, weights=a.ravel(), minlength=n * n)
+    cnt = np.bincount(idx, minlength=n * n).astype(np.float64)
     cnt[cnt == 0] = 1.0
-    return out / cnt
+    return (out / cnt).reshape(n, n)
 
 
 def phash64(matrix: np.ndarray, gap: float | None = None,
@@ -203,8 +203,5 @@ def phash64(matrix: np.ndarray, gap: float | None = None,
     coef = d @ small @ d.T
     block = coef[:8, :8].ravel()
     med = np.median(block[1:])  # skip DC term for the median, classic pHash
-    bits = (block > med).astype(np.uint64)
-    val = np.uint64(0)
-    for b in bits:
-        val = (val << np.uint64(1)) | b
-    return int(val.astype(np.int64))
+    # first coefficient is the most significant bit
+    return int(np.packbits(block > med).view(">u8")[0].astype(np.int64))

@@ -5,6 +5,20 @@ skew-join + partition coalescing), Arrow transfer on for the pandas
 UDF kernels with a batch size bounded so one batch of decoded rasters
 fits executor memory, shuffle partitions sized for the local[32]
 sandbox (override on a real cluster via spark-submit --conf).
+
+Python workers fork from ``worker_daemon`` (``spark.python.daemon.module``)
+instead of ``pyspark.daemon``. PySpark calls ``importlib.invalidate_caches()``
+at the start of every task, and under CPython 3.11 that makes each
+``zipimport.zipimporter`` in ``sys.path_importer_cache`` re-read its
+archive's whole directory (``Lib/zipimport.py``,
+``zipimporter.invalidate_caches``). A worker caches 16 of them (12 on
+``pyspark.zip``, 2 on the Spark core jar, 2 on py4j), which cost every
+task 0.17-0.24 s (median, 4-core VM) before it did any work. The daemon
+drops them before it forks and after each task, so the call is ~free
+(an identity ``mapInPandas`` over 12 tasks at local[4]: median
+1.00-1.06 s before, 0.43-0.46 s after). The daemon starts before any
+``--py-files`` or ``addPyFile`` path is set up, so the workers also get
+this package's root on their ``PYTHONPATH``.
 """
 
 from __future__ import annotations
@@ -13,6 +27,8 @@ import os
 from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 DEFAULT_CONFS = {
     "spark.sql.session.timeZone": "UTC",
@@ -26,6 +42,11 @@ DEFAULT_CONFS = {
     "spark.sql.files.maxPartitionBytes": "134217728",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
     "spark.ui.enabled": "false",
+    # PySpark's daemon, minus the cached zip finders that make the
+    # importlib.invalidate_caches() at the start of every Python task
+    # re-read pyspark.zip, the Spark jar and py4j (0.17-0.24 s a task
+    # under CPython 3.11; module docstring)
+    "spark.python.daemon.module": "ssgp_toolbox_spark.worker_daemon",
 }
 
 
@@ -73,6 +94,10 @@ def get_spark(app_name: str = "ssgp-toolbox-spark", master: str | None = None,
     confs = {**DEFAULT_CONFS, **(extra_confs or {})}
     for var in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
         confs.setdefault(f"spark.executorEnv.{var}", "1")
+    # the worker daemon is imported before any --py-files/addPyFile
+    # path is set up, so workers find this package where the driver did
+    key = "spark.executorEnv.PYTHONPATH"
+    confs[key] = os.pathsep.join(p for p in (_PACKAGE_ROOT, confs.get(key)) if p)
     for k, v in confs.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

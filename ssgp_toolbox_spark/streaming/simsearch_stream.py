@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark import SparkContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQueryListener
 
 from ssgp_toolbox_spark.functions import simsearch
 
@@ -56,10 +57,10 @@ def search_batch(queries: DataFrame, index: DataFrame, vectors: DataFrame,
     into partition pruning, so the cogroup only ever scans the probed
     cells' files.
 
-    The batch's queries are normalized and probed ONCE: the probe
-    frame feeds both the driver-side prefilter collect and the search
-    itself (``ivf_pq_search(probes=..., qnorm=...)``), instead of one
-    extra full Spark job per micro-batch. ``prepared``
+    The batch's queries are normalized and probed ONCE: the collected
+    probe rows feed both the prefilter and the search itself
+    (``ivf_pq_search(probes=..., qnorm=...)``), instead of one extra
+    full Spark job per micro-batch. ``prepared``
     (``prepare_serving``) reuses the broadcast model payloads across
     batches; without it the model rides in this batch's task
     closures."""
@@ -69,28 +70,49 @@ def search_batch(queries: DataFrame, index: DataFrame, vectors: DataFrame,
     q = simsearch._normalize(simsearch._cast(queries).select(
         F.col("vec_id").alias("qid"), F.col("emb"))) \
         .select("qid", F.col("emb").alias("qe"))
-    probes = simsearch.ivf_probe_cells(q, model["cents"], n_probe,
-                                       shipped=prepared["shipped_cents"])
-    # dedup driver-side: the probe rows are bounded by
-    # batch_rows × n_probe, so a distinct() exchange before the
-    # collect is a wasted shuffle stage per micro-batch. The
-    # collected rows (qid, qe, cid — f64 round-trips the driver
-    # losslessly) are handed back as a single-partition local frame,
-    # so the search job cogroups against them directly instead of
-    # re-running the batch's normalize + probe UDF chain a second
-    # time inside the big job.
-    rows = [(int(r["qid"]), list(r["qe"]), int(r["cid"]))
-            for r in probes.select("qid", "qe", "cid").collect()]
-    cells = sorted({cid for _, _, cid in rows})
+    probed = simsearch._probe_pandas_udf(prepared["shipped_cents"], n_probe)(
+        F.col("qe"))
+    # the probed cells are bounded by batch_rows × n_probe, so they are
+    # collected (one row per query: qid, qe once, its cids; f64
+    # round-trips the driver losslessly) rather than deduplicated by a
+    # distinct() exchange, and handed back as a single-partition local
+    # frame: the search job cogroups against them directly instead of
+    # re-running the batch's normalize + probe UDF chain a second time
+    # inside the big job.
+    rows = [(int(r["qid"]), list(r["qe"]), [int(c) for c in r["cids"]])
+            for r in q.select("qid", "qe", probed.alias("cids")).collect()]
+    cells = sorted({cid for _, _, cids in rows for cid in cids})
     index = index.filter(F.col("cid").isin(cells))
     spark = queries.sparkSession
     probes = spark.createDataFrame(
         spark.sparkContext.parallelize(rows, 1),
-        "qid long, qe array<double>, cid int")
+        "qid long, qe array<double>, cids array<int>") \
+        .select("qid", "qe", F.explode("cids").alias("cid"))
     return simsearch.ivf_pq_search(index, vectors, queries, model, k=k,
                                    n_probe=n_probe, rerank=rerank,
                                    probes=probes, qnorm=q,
                                    shipped=prepared["shipped"])
+
+
+class _ReleaseOnTermination(StreamingQueryListener):
+    """Destroys one query's ``prepare_serving`` handles when it stops,
+    then unregisters itself."""
+
+    def __init__(self, spark, query_id: str, prepared: dict):
+        self.spark, self.query_id, self.prepared = spark, query_id, prepared
+
+    def onQueryStarted(self, event):
+        pass
+
+    def onQueryProgress(self, event):
+        pass
+
+    def onQueryTerminated(self, event):
+        if str(event.id) != self.query_id:
+            return
+        for handle in self.prepared.pop(self.query_id).values():
+            handle.destroy()
+        self.spark.streams.removeListener(self)
 
 
 def streaming_ann_serve(query_stream: DataFrame, index: DataFrame,
@@ -102,19 +124,27 @@ def streaming_ann_serve(query_stream: DataFrame, index: DataFrame,
     parquet/kafka/memory — caller's choice). Start with
     ``.trigger(...)`` / ``.start()`` as usual.
 
-    The model payloads are shipped ONCE here (``prepare_serving``)
-    and reused by every micro-batch — no per-batch broadcast leak.
+    The first non-empty batch of a query ships the model payloads
+    (``prepare_serving``); every later batch of that query reuses
+    them, and a listener destroys them when the query terminates.
 
     The query stream must carry (vec_id, embedding) like the
     embeddings table. Empty batches are skipped."""
-    prepared = prepare_serving(model)
+    # listeners on the session that starts the query see its events
+    spark = query_stream.sparkSession
+    prepared = {}  # streaming query id -> prepare_serving handles
 
     def _serve(batch_df: DataFrame, batch_id: int):
         if batch_df.isEmpty():
             return
+        query_id = spark.sparkContext.getLocalProperty("sql.streaming.queryId")
+        if query_id not in prepared:
+            prepared[query_id] = prepare_serving(model)
+            spark.streams.addListener(
+                _ReleaseOnTermination(spark, query_id, prepared))
         sink(search_batch(batch_df, index, vectors, model, k=k,
                           n_probe=n_probe, rerank=rerank,
-                          prepared=prepared),
+                          prepared=prepared[query_id]),
              batch_id)
 
     return query_stream.writeStream.foreachBatch(_serve)

@@ -417,6 +417,37 @@ def phash64_oracle(matrix, gap=GAP, skip=SKIP, nodata=NODATA):
     return int(val.astype(np.int64))
 
 
+def phash64_add_at(matrix, gap=GAP, skip=SKIP, nodata=NODATA):
+    """The engine's phash64 before it was vectorized, kept as the
+    bit-parity reference: ``np.add.at`` block sums and a 64-step bit
+    loop. ``gap``/``skip``/``nodata`` mirror the key_values override."""
+    m = np.asarray(matrix, dtype=np.float64)
+    inv = (m == gap) | (m == skip) | (m == nodata)
+    fill = 0.0 if inv.all() else float(np.median(m[~inv]))
+    m = np.where(inv, fill, m)
+    h, w = m.shape
+    n = 32
+    ri = np.minimum((np.arange(h) * n) // max(h, 1), n - 1)
+    ci = np.minimum((np.arange(w) * n) // max(w, 1), n - 1)
+    out = np.zeros((n, n))
+    cnt = np.zeros((n, n))
+    np.add.at(out, (ri[:, None].repeat(w, 1), ci[None, :].repeat(h, 0)), m)
+    np.add.at(cnt, (ri[:, None].repeat(w, 1), ci[None, :].repeat(h, 0)), 1.0)
+    cnt[cnt == 0] = 1.0
+    small = out / cnt
+    kk = np.arange(n)[:, None]
+    ii = np.arange(n)[None, :]
+    d = np.cos(np.pi / n * (ii + 0.5) * kk) * np.sqrt(2.0 / n)
+    d[0] /= np.sqrt(2.0)
+    coef = d @ small @ d.T
+    block = coef[:8, :8].ravel()
+    med = np.median(block[1:])
+    val = np.uint64(0)
+    for bit in (block > med).astype(np.uint64):
+        val = (val << np.uint64(1)) | bit
+    return int(val.astype(np.int64))
+
+
 def nn_fill_fast_oracle(m):
     """Same semantics as nn_fill_oracle (gapfiller.py:920-962) but the
     per-target search vectorized (argmin over the row-major valid

@@ -3,7 +3,9 @@
 import numpy as np
 import pytest
 
+import oracles
 from ssgp_toolbox_spark import codecs, generator, sentinels
+from ssgp_toolbox_spark.kernels import nn
 
 
 @pytest.fixture(scope="module")
@@ -52,6 +54,47 @@ def test_phash_stable_and_locality():
     ham = lambda x, y: bin((x ^ y) & (2**64 - 1)).count("1")
     assert ham(codecs.phash64(a), codecs.phash64(near)) <= 4
     assert ham(codecs.phash64(a), codecs.phash64(far)) > 10
+
+
+def _phash_corpus():
+    """nn_snapshot's 360 inputs (nn0-nn29 x 12 at 109x62) and their NN
+    fills, fill_wide's vlad layers at 80x64, and 200 random shapes up
+    to 300x300 (below 32 px a side some bins stay empty) with
+    sentinels."""
+    ladder = generator.GAP_LADDER
+    for i in range(30):
+        for k in range(12):
+            m = generator.make_layer(f"nn{i}", 109, 62, k, "input",
+                                     ladder[k % len(ladder)])
+            yield m
+            yield nn.nn_interpolate(m)[0]
+    for t in range(20):
+        role, frac = ("history", 0.02) if t < 12 else ("input", ladder[t % len(ladder)])
+        yield generator.make_layer("vlad", 80, 64, t, role, frac)
+    rng = np.random.default_rng(8)
+    for _ in range(200):
+        h, w = rng.integers(1, 301, size=2)
+        m = rng.normal(280.0, 15.0, (h, w))
+        m[rng.random((h, w)) < rng.uniform(0.0, 0.6)] = sentinels.GAP
+        m[rng.random((h, w)) < 0.05] = sentinels.SKIP
+        m[rng.random((h, w)) < 0.05] = sentinels.NODATA
+        yield m
+
+
+def test_phash_bit_equals_add_at_reference():
+    """The bincount/packbits phash64 equals the np.add.at + bit-loop
+    form it replaced, on default and on key_values-style sentinels."""
+    kv = {"gap": -9999.0, "skip": -8888.0, "nodata": -7777.0}
+    n = 0
+    for m in _phash_corpus():
+        want = oracles.phash64_add_at(m)
+        assert codecs.phash64(m) == want
+        moved = m.copy()
+        for name, value in kv.items():
+            moved[m == getattr(sentinels, name.upper())] = value
+        assert codecs.phash64(moved, **kv) == oracles.phash64_add_at(moved, **kv) == want
+        n += 1
+    assert n == 940
 
 
 def test_zone_vector_raster_parity():

@@ -470,3 +470,54 @@ def test_ann_serving_broadcasts_only_in_prepare(spark, monkeypatch):
     finally:
         for handle in prepared.values():
             handle.destroy()
+
+
+def test_streaming_ann_serve_destroys_broadcasts_on_stop(spark, tmp_path,
+                                                         monkeypatch):
+    """streaming_ann_serve ships the model on the query's first
+    non-empty batch and, once the query is stopped, destroys both
+    prepare_serving handles and unregisters its listener."""
+    import time
+
+    from test_ann_recall import SF_DIR
+
+    from ssgp_toolbox_spark.functions import simsearch
+    from ssgp_toolbox_spark.streaming import simsearch_stream
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    index, model = simsearch.ivf_pq_build(emb)
+    made = []
+    real_prepare = simsearch_stream.prepare_serving
+
+    def spy_prepare(m):
+        made.append(real_prepare(m))
+        return made[-1]
+
+    monkeypatch.setattr(simsearch_stream, "prepare_serving", spy_prepare)
+    src = tmp_path / "src"
+    emb.filter("vec_id < 4").coalesce(1).write.parquet(str(src / "b1"))
+    stream = (spark.readStream.schema(emb.schema)
+              .option("recursiveFileLookup", "true").parquet(str(src)))
+    jstreams = spark._jsparkSession.streams()
+    n_listeners = len(jstreams.listListeners())
+    served = []
+    qh = simsearch_stream.streaming_ann_serve(
+        stream, index, emb, model,
+        lambda res, batch_id: served.extend(res.collect())).start()
+    try:
+        qh.processAllAvailable()
+        assert len(made) == 1
+        assert all(h._jbroadcast.isValid() for h in made[0].values())
+        assert len(jstreams.listListeners()) == n_listeners + 1
+    finally:
+        qh.stop()
+    deadline = time.monotonic() + 60
+    while (any(h._jbroadcast.isValid() for h in made[0].values())
+           and time.monotonic() < deadline):
+        time.sleep(0.1)
+    assert [h._jbroadcast.isValid() for h in made[0].values()] == [False, False]
+    while (len(jstreams.listListeners()) > n_listeners
+           and time.monotonic() < deadline):
+        time.sleep(0.1)
+    assert len(jstreams.listListeners()) == n_listeners
+    assert len(served) == 20
