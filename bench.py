@@ -191,24 +191,25 @@ def raster_measurables(spark, values: dict):
                             shape=(200, 160))
     )).cache()
     imgs.count()
-    # warm-up (worker startup + broadcast) so the timing is steady-state
+    # warm-up (worker startup) so the timing is steady-state
     warm = imgs.filter(F.col("role") != "input").unionByName(
         imgs.filter(F.col("role") == "input").limit(2))
-    gapfill.gapfill_balanced(warm, predictor_configuration="Biome",
-                             params={"n_neighbors": 5}, chunk_px=1024) \
-        .agg(F.sum("filled_px")).collect()
+    gapfill.gapfill(warm, method="Knn", predictor_configuration="Biome",
+                    hyperparameters="Custom", params={"n_neighbors": 5},
+                    chunk_px=1024).agg(F.sum("filled_px")).collect()
 
     def run_gapfill():
-        out = gapfill.gapfill_balanced(imgs, predictor_configuration="Biome",
-                                       params={"n_neighbors": 5},
-                                       chunk_px=1024)
+        out = gapfill.gapfill(imgs, method="Knn",
+                              predictor_configuration="Biome",
+                              hyperparameters="Custom",
+                              params={"n_neighbors": 5}, chunk_px=1024)
         values["gapfill_px"] = out.agg(F.sum("filled_px")).collect()[0][0] or 0
 
     def run_deep():
         # deep-history path: same fill, but no stacked history anywhere
         # — the bounded-memory plan (operators/deep_gapfill.py),
         # reported so the depth-robust path's throughput cost vs the
-        # broadcast path stays a measured number
+        # collected-stack plan of gapfill stays a measured number
         dout = deep_gapfill.gapfill_deep(imgs, method="Knn",
                                          predictor_configuration="Biome",
                                          hyperparameters="Custom",

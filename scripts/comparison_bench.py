@@ -112,7 +112,7 @@ def run_site(spark, site: str, pcts: list[int] | None = None,
     imgs = stats.with_stats(img_io.with_id_parts(
         spark.createDataFrame(rows, schema)))
     t0 = time.time()
-    out = gapfill.gapfill_balanced(
+    out = gapfill.gapfill(
         imgs, predictor_configuration="Biome", method="SVR",
         hyperparameters="RandomGridSearch", params={"max_iter": max_iter},
         chunk_px=256).collect()

@@ -51,9 +51,9 @@ imgs = stats.with_stats(img_io.with_id_parts(
     generator.images_df(spark, sites=("stp", "madrid"), n_history=12,
                         n_inputs=8, num_partitions=64, shape=(200, 160))))
 OPS = {
-    "gapfill_knn_biome": gapfill.gapfill_balanced(
-        imgs, predictor_configuration="Biome", params={"n_neighbors": 5},
-        chunk_px=1024),
+    "gapfill_knn_biome": gapfill.gapfill(
+        imgs, method="Knn", predictor_configuration="Biome",
+        hyperparameters="Custom", params={"n_neighbors": 5}, chunk_px=1024),
     "gapfill_deep": deep_gapfill.gapfill_deep(
         imgs, method="Knn", predictor_configuration="Biome",
         hyperparameters="Custom", params={"n_neighbors": 5}, chunk_px=1024),

@@ -48,8 +48,9 @@ imgs.count()
 # cluster job amortizes to nothing (measured 1.5x first-run penalty)
 def run_gap():
     t0 = time.time()
-    out = gapfill.gapfill_balanced(imgs, predictor_configuration="Biome",
-                                   params={"n_neighbors": 5}, chunk_px=2048)
+    out = gapfill.gapfill(imgs, method="Knn", predictor_configuration="Biome",
+                          hyperparameters="Custom", params={"n_neighbors": 5},
+                          chunk_px=2048)
     p = out.agg(F.sum("filled_px")).collect()[0][0]
     return p, time.time() - t0
 

@@ -1,7 +1,7 @@
 """Deep-history gapfill: bounded memory at ANY history depth.
 
-``gapfill``/``gapfill_balanced`` stack a site's whole temporal history
-into one Arrow row / one broadcast entry (L × h × w × 8 bytes) — fine
+``gapfill`` collects a site's whole temporal history to the driver
+and ships it in its fill task closure (L × h × w × 8 bytes) — fine
 at the reference's depths (250-350 layers, SURVEY.md §1), unbounded at
 100× depth. This operator re-plans the fill so **no full history
 raster is ever grouped, collected, or broadcast**:
@@ -23,8 +23,8 @@ raster is ever grouped, collected, or broadcast**:
    K ≤ chunk_px × (C+1)) — and run the post-gather kernel cores
    (``batch.fill_gathered_knn`` / ``frame.fill_gathered``). Tasks need
    NO raster at all: the target values ride the coords row.
-4. Reassemble per image (same tiny delta shuffle + join as
-   ``gapfill_balanced``), union the passthrough leg.
+4. Reassemble per image (the delta shuffle + assemble that
+   ``gapfill`` runs for split images), union the passthrough leg.
 
 Memory bound per task: max(decoded layer, L × chunk_px × (C+1) × 8).
 With C=41 (Biome 40-nearest + target, frame.N_NEAREST) and
@@ -231,7 +231,10 @@ def gapfill_deep(images: DataFrame, method: str = "Knn",
     coords = sel.repartition(cores * 2).mapInPandas(
         _coords_batches(predictor_configuration, chunk_px, sv,
                         group_chunks=group_chunks), COORDS_SCHEMA,
-    ).persist()  # consumed twice: key lists for extraction + fill join
+    # consumed twice (key lists for extraction + fill join): evaluated
+    # once by the first job and released with the plan, where a
+    # persist() would stay in the cache manager after the call
+    ).localCheckpoint(eager=False)
 
     # key lists per site, broadcast to every history-layer task; size =
     # deduped predictor coords only (~42 int64/gap px), never rasters
@@ -246,15 +249,16 @@ def gapfill_deep(images: DataFrame, method: str = "Knn",
     packed_layers = extracted.groupBy("image_id", "chunk_id").agg(
         F.sort_array(F.collect_list(F.struct("ts", "vals"))).alias("layers"))
 
-    # size the fill stage from the ACTUAL chunk count: coords is
-    # persisted (consumed twice anyway), so counting it materializes
-    # work that was already due. ~3 chunks/task amortizes per-task
+    # size the fill stage from the chunk count, which the gap_count
+    # column gives without running the coords pass (one coords row per
+    # chunk_px gap px of an image). ~3 chunks/task amortizes per-task
     # dispatch + Arrow setup while round-robin still balances counts;
     # the explicit count keeps AQE from coalescing this CPU-heavy,
     # byte-light shuffle, and the [cores, cores*8] clamp keeps full
     # width at small counts
-    cores = spark.sparkContext.defaultParallelism
-    n_parts = int(min(max(cores, -(-coords.count() // 3)), cores * 8))
+    n_chunks = viable.agg(F.sum(F.ceil(F.col("gap_count") / chunk_px))) \
+        .first()[0] or 0
+    n_parts = int(min(max(cores, -(-n_chunks // 3)), cores * 8))
     fill_in = coords.drop("site").join(
         packed_layers, ["image_id", "chunk_id"]).repartition(n_parts)
     partials = fill_in.mapInPandas(

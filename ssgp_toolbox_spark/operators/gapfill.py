@@ -3,25 +3,29 @@
 ``SimpleSpatialGapfiller.fill_gaps`` (gapfiller.py:801-899) re-planned
 for Spark:
 
-reference (eager, per input file)          this engine (one lazy plan)
+reference (eager, per input file)          this engine (one planned wave)
 -----------------------------------       ---------------------------------
 re-scan History/ per input (S1)           scan history once, groupBy(site)
                                           → pack sorted temporal stack
 load Extra.npy (S3)                       extra layer packed the same way
 for file in Inputs/: viability F2/F3      Catalyst filters on stats columns
-thread pool over gap pixels               join packed stack to each input
-                                          row → **mapInPandas** fill kernel
+thread pool over gap pixels               driver packs gap px into <= one
+                                          task per core → **mapInPandas**
 np.save + Metadata.json (S4/S5)           snapshot append + metrics columns
 
-Shuffle analysis (the 100 TB story): exactly ONE shuffle — the
-``groupBy(site)`` that packs each site's history into a single row.
-Inputs then stream through a join against that packed side (AQE
-auto-broadcasts it when small; with millions of sites it degrades
-gracefully to a co-partitioned shuffle join) and the fill itself is a
-shuffle-free mapInPandas. Fill cost dominates (CV grid search per gap
-pixel), so parallelism scales with input rows, and skew = images with
-many gap pixels — handled by the tile path (operators/tiled_fill.py)
-which splits hot images into cell-keyed tiles.
+Plan of ``gapfill``: collect the packed stacks, extra layers and
+viable input payloads; ``plan_fill`` bins the images by ``gap_count``
+on the driver; one fill ``mapInPandas`` wave of at most
+``defaultParallelism`` tasks runs the bins. Skew = images with many
+gap px: only a hot image splits across tasks, and only then does a
+shuffle of its deltas feed an assemble stage. A Python UDF plan costs
+mostly what its task count and Arrow traffic cost, so the plan counts
+tasks, not join shapes.
+
+Past what the driver can collect: ``gapfill_balanced_checkpointed``
+(bounded batches) or ``operators/deep_gapfill.py`` (no stack at all).
+The one join-shaped fill left is the stream-static join of
+``streaming/gapfill_stream.py`` (``_fill_batches``).
 
 Sequential parity mode (``add_outputs=True``, gapfiller.py:788-790 —
 layer i's output feeds layer i+1's training set) is a driver loop of
@@ -62,8 +66,6 @@ GAPFILL_SCHEMA = T.StructType([
     T.StructField("mean_cv_mae", T.DoubleType()),
 ])
 
-_LAYER_STRUCT = "array<struct<ts:timestamp,bytes:binary,h:int,w:int,fmt:string>>"
-
 
 def _stable_seed(image_id: str) -> int:
     return zlib.crc32(image_id.encode()) & 0x7FFFFFFF
@@ -71,8 +73,8 @@ def _stable_seed(image_id: str) -> int:
 
 def pack_history(history: DataFrame) -> DataFrame:
     """One row per site: chronologically sorted temporal stack
-    (reference O1 sort, gapfiller.py:91 + tensor build 846-848).
-    This groupBy is the plan's single shuffle."""
+    (reference O1 sort, gapfiller.py:91 + tensor build 846-848), one
+    groupBy(site) shuffle."""
     layer = F.struct("ts", "bytes", "h", "w", "fmt")
     return history.groupBy("site").agg(
         F.sort_array(F.collect_list(layer)).alias("hist_layers")
@@ -125,6 +127,8 @@ def _append_filled(out, image_id, filled, fmt, w, h, caption, n_px, scores,
 
 def _fill_batches(method, predictor_configuration, hyperparameters, params,
                   sv: Sentinels = DEFAULT_SENTINELS):
+    """Whole-image fill of rows joined with their site's packed stack
+    (streaming/gapfill_stream.py)."""
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = {k: [] for k in GAPFILL_SCHEMA.fieldNames()}
@@ -152,57 +156,6 @@ def _fill_batches(method, predictor_configuration, hyperparameters, params,
     return fn
 
 
-def gapfill(images: DataFrame, method: str = "Lasso",
-            predictor_configuration: str = "Random",
-            hyperparameters: str = "RandomGridSearch",
-            params: dict | None = None, min_valid: int = 101,
-            key_values: dict | None = None) -> DataFrame:
-    """Fill all ``role='input'`` images of every site. ``images`` must
-    carry (site, role, ts) id parts and the stats columns
-    (operators.stats.with_stats).
-
-    Output: GAPFILL_SCHEMA; passthrough images (no gaps) come through
-    with status='passthrough' and metric 0.0 (gapfiller.py:862-873);
-    non-viable images (valid_px <= 101) are *excluded*, like the
-    reference's ``continue`` (gapfiller.py:856-861).
-
-    ``key_values``: optional sentinel-encoding override, the
-    reference's ``fill_gaps(..., key_values=...)`` parameter
-    (gapfiller.py:826-828) — a dict with any of 'gap', 'skip',
-    'NoData'. The stats columns must have been computed with the SAME
-    encoding (stats.with_stats(key_values=...)).
-    """
-    sv = resolve_key_values(key_values)
-    inputs = images.filter(F.col("role") == "input")
-    viable = inputs.filter((F.col("valid_px") > min_valid) & (F.col("gap_count") > 0))
-    passthrough = inputs.filter(
-        (F.col("valid_px") > min_valid) & (F.col("gap_count") == 0)
-    )
-
-    hist = pack_history(images.filter(F.col("role") == "history"))
-    joined = viable.join(hist, "site")
-    if predictor_configuration == "Biome":
-        extra = pack_extra(images.filter(F.col("role") == "extra"))
-        joined = joined.join(extra, "site")
-
-    keep = ["image_id", "bytes", "w", "h", "fmt", "caption", "phash", "hist_layers"]
-    if predictor_configuration == "Biome":
-        keep.append("extra_layer")
-    filled = joined.select(*keep).mapInPandas(
-        _fill_batches(method, predictor_configuration, hyperparameters, params,
-                      sv),
-        GAPFILL_SCHEMA,
-    )
-
-    pass_df = passthrough.select(
-        "image_id", "bytes", "w", "h", "fmt", "caption", "phash",
-        F.lit("passthrough").alias("status"),
-        F.lit(0).alias("filled_px"),
-        F.lit(0.0).alias("mean_cv_mae"),
-    )
-    return filled.unionByName(pass_df)
-
-
 CHUNK_SCHEMA = T.StructType([
     T.StructField("image_id", T.StringType()),
     T.StructField("chunk_id", T.IntegerType()),
@@ -212,22 +165,22 @@ CHUNK_SCHEMA = T.StructType([
     T.StructField("scores", T.BinaryType()),  # f64 LE per-pixel |CV-MAE|
 ])
 
-# balanced fill-stage rows: a finished image fills the GAPFILL_SCHEMA
+# fill-stage rows: a finished image fills the GAPFILL_SCHEMA
 # columns (chunk columns null), a chunk of a split image fills
 # image_id + the CHUNK_SCHEMA columns (the rest null)
 _FILL_SCHEMA = T.StructType(GAPFILL_SCHEMA.fields + CHUNK_SCHEMA.fields[1:])
 
 
 def release_broadcasts() -> int:
-    """Kept for callers of the former broadcast registry: the balanced
-    fill ships its inputs in the task closures, whose broadcast (if
+    """Kept for callers of the former broadcast registry: ``gapfill``
+    ships its inputs in the task closures, whose broadcast (if
     PySpark makes one) lives only as long as the plan. Releases
     nothing and returns 0."""
     return 0
 
 
 def plan_fill(gap_counts: dict, slots: int, chunk_px: int):
-    """Driver-side plan of the balanced fill wave, from the images'
+    """Driver-side plan of the ``gapfill`` wave, from the images'
     ``gap_count`` alone.
 
     Units: an image with at most ``share = ceil(total_gaps / slots)``
@@ -353,7 +306,7 @@ def _assemble_batches_fn(sv: Sentinels = DEFAULT_SENTINELS, originals=None):
     """Scatter each image's chunk deltas into its original raster and
     finish the row. The original comes from the row's own
     bytes/w/h/fmt/caption columns, or with ``originals`` (image_id →
-    (payload, h, w, fmt, caption) of the balanced fill's split images)
+    (payload, h, w, fmt, caption) of ``gapfill``'s split images)
     from the task closure; there a row whose ``done`` list holds the
     image's finished row (finished in its fill task) passes it through
     unchanged."""
@@ -389,39 +342,47 @@ def _assemble_batches_fn(sv: Sentinels = DEFAULT_SENTINELS, originals=None):
     return _assemble_batches
 
 
-def gapfill_balanced(images: DataFrame, predictor_configuration: str = "Biome",
-                     params: dict | None = None, min_valid: int = 101,
-                     chunk_px: int = 512, method: str = "Knn",
-                     hyperparameters: str = "Custom",
-                     key_values: dict | None = None) -> DataFrame:
-    """Skew-balanced gapfill in one wave of at most
-    ``defaultParallelism`` Python tasks. The driver plans the wave from
-    the ``gap_count`` column (``plan_fill``): images with at most a
-    task's share of the gap px stay whole, only hot images split into
-    ``chunk_px``-pixel chunks of their gap scan, and the units are
-    packed by gap px into at most one bin per core. Each task fills its
-    units at most ``chunk_px`` gap px per kernel call (which bounds the
-    kernel's temporaries) and finishes every image that lies wholly in
-    it. Per-pixel seeding makes the result bit-identical to
-    ``gapfill``.
+def gapfill(images: DataFrame, method: str = "Lasso",
+            predictor_configuration: str = "Random",
+            hyperparameters: str = "RandomGridSearch",
+            params: dict | None = None, min_valid: int = 101,
+            key_values: dict | None = None,
+            chunk_px: int = 512) -> DataFrame:
+    """Fill all ``role='input'`` images of every site. ``images`` must
+    carry (site, role, ts) id parts and the stats columns
+    (operators.stats.with_stats).
 
-    Plan: side-input collects → driver-built bin table (one row per
-    task, no shuffle) → mapInPandas fill. Only when an image splits
-    across tasks: ONE shuffle of the fill rows by image_id ((row, col,
-    value) deltas of split images, ~20 bytes/gap-pixel, beside the
-    finished rows) → mapInPandas assemble of the split images.
+    Output: GAPFILL_SCHEMA; passthrough images (no gaps) come through
+    with status='passthrough' and metric 0.0 (gapfiller.py:862-873);
+    non-viable images (valid_px <= ``min_valid``) are *excluded*, like
+    the reference's ``continue`` (gapfiller.py:856-861), and so is an
+    image with gaps whose site has no history rows (or, under Biome,
+    no extra layer): there is nothing to train on.
 
-    The collected site stacks, input payloads and bins ride in the fill
-    task closure, the split images' originals in the assemble closure.
-    PySpark ships a UDF command over
-    ``spark.broadcast.UDFCompressionThreshold`` (1 MiB by default) as a
-    broadcast that lives as long as the plan, so nothing is left to
-    release. The collected set must fit the driver; beyond that, use
-    ``gapfill_balanced_checkpointed(batch_rows=...)``.
+    ``key_values``: optional sentinel-encoding override, the
+    reference's ``fill_gaps(..., key_values=...)`` parameter
+    (gapfiller.py:826-828) — a dict with any of 'gap', 'skip',
+    'NoData'. The stats columns must have been computed with the SAME
+    encoding: the planner trusts ``gap_count``, and a fill task raises
+    ValueError when an image's gap scan disagrees with it.
 
-    The planner trusts ``gap_count``: a fill task raises ValueError
-    when an image's gap scan under ``key_values`` disagrees with it
-    (stats computed with another encoding)."""
+    Plan: side-input collects → ``plan_fill`` bins (at most
+    ``defaultParallelism``; images with at most a task's share of the
+    gap px stay whole, hot images split into ``chunk_px`` chunks of
+    their gap scan) → one mapInPandas fill wave, no exchange. Only when
+    an image splits: ONE shuffle of its (row, col, value) deltas,
+    ~20 bytes/gap px, beside the finished rows → mapInPandas assemble.
+    A kernel call fills at most ``chunk_px`` gap px, which bounds its
+    temporaries; per-pixel seeding makes the result bit-identical to a
+    whole-image fill.
+
+    Stacks, payloads and bins ride in the fill task closure, the split
+    images' originals in the assemble closure; PySpark broadcasts a
+    UDF command over ``spark.broadcast.UDFCompressionThreshold`` (1 MiB)
+    for the life of the plan, so nothing is left to release. The
+    collected set must fit the driver; beyond that, use
+    ``gapfill_balanced_checkpointed(batch_rows=...)`` or
+    ``deep_gapfill.gapfill_deep``."""
     sv = resolve_key_values(key_values)
     inputs = images.filter(F.col("role") == "input")
     viable = inputs.filter((F.col("valid_px") > min_valid) & (F.col("gap_count") > 0))
@@ -434,12 +395,11 @@ def gapfill_balanced(images: DataFrame, predictor_configuration: str = "Biome",
     # batches through the Python pipe per task (measured 2.4×
     # throughput loss), and with the payloads in the closure the fill
     # table is one bin id per task (a duplicated raster per chunk was a
-    # measured 3× JVM tax at 32 workers). With millions of sites the
-    # plain-join path of ``gapfill`` or a per-tile history table
-    # replaces this one-shot collect.
+    # measured 3× JVM tax at 32 workers)
     from concurrent.futures import ThreadPoolExecutor
 
     spark = images.sparkSession
+    biome = predictor_configuration == "Biome"
     # the three side-input collects are independent Spark jobs —
     # submit them concurrently so the driver waits for the slowest
     # one, not their sum (guide-standard driver-thread overlap)
@@ -450,7 +410,7 @@ def gapfill_balanced(images: DataFrame, predictor_configuration: str = "Biome",
         f_extra = (pool.submit(
             lambda: pack_extra(
                 images.filter(F.col("role") == "extra")).collect())
-            if predictor_configuration == "Biome" else None)
+            if biome else None)
         f_inputs = pool.submit(
             lambda: viable.select("image_id", "bytes", "h", "w", "fmt",
                                   "site", "caption", "gap_count").collect())
@@ -467,13 +427,17 @@ def gapfill_balanced(images: DataFrame, predictor_configuration: str = "Biome",
         input_rows = f_inputs.result()
     site_map = {}
     for r in hist_rows:
+        if biome and r["site"] not in extra_rows:
+            continue
         layers = [(bytes(l["bytes"]), int(l["h"]), int(l["w"]), l["fmt"])
                   for l in r["hist_layers"]]
         site_map[r["site"]] = (layers, extra_rows.get(r["site"]))
+    # inputs of sites without a stack (or without an extra layer under
+    # Biome) are dropped here, on the driver
     input_map = {
         r["image_id"]: (bytes(r["bytes"]), int(r["h"]), int(r["w"]), r["fmt"],
                         r["site"], r["caption"], int(r["gap_count"]))
-        for r in input_rows
+        for r in input_rows if r["site"] in site_map
     }
 
     pass_df = passthrough.select(
@@ -510,6 +474,17 @@ def gapfill_balanced(images: DataFrame, predictor_configuration: str = "Biome",
     return filled.select(*GAPFILL_SCHEMA.fieldNames()).unionByName(pass_df)
 
 
+def gapfill_balanced(images: DataFrame, predictor_configuration: str = "Biome",
+                     params: dict | None = None, min_valid: int = 101,
+                     chunk_px: int = 512, method: str = "Knn",
+                     hyperparameters: str = "Custom",
+                     key_values: dict | None = None) -> DataFrame:
+    """``gapfill`` with Knn / Biome / Custom defaults (the name of the
+    former second plan, kept for its callers)."""
+    return gapfill(images, method, predictor_configuration, hyperparameters,
+                   params, min_valid, key_values, chunk_px)
+
+
 def gapfill_balanced_checkpointed(images: DataFrame, table_path: str,
                                   batch_rows: int = 64,
                                   predictor_configuration: str = "Biome",
@@ -518,16 +493,16 @@ def gapfill_balanced_checkpointed(images: DataFrame, table_path: str,
                                   chunk_px: int = 512, method: str = "Knn",
                                   hyperparameters: str = "Custom",
                                   key_values: dict | None = None) -> list[str]:
-    """THE 100 TB entry point for the balanced path: viable inputs are
+    """``gapfill`` for corpora too large to collect: inputs are
     processed in bounded batches of ``batch_rows`` images — only one
     batch of input payloads, and the stacks of that batch's sites
     only, is ever collected to the driver for the task closures, and
     each batch commits as one resumable snapshot (io/images manifest)
-    (``checkpoint.run_checkpointed`` runs the loop).
-    ``gapfill_balanced`` itself keeps the one-shot shape for corpora
-    that fit the driver; this wrapper is what a 10^12-row run uses (and
-    what resumes after a crash: already committed image_ids are
-    anti-joined away).
+    (``checkpoint.run_checkpointed`` runs the loop). This wrapper is
+    what a 10^12-row run uses (and what resumes after a crash: already
+    committed image_ids are anti-joined away); ``gapfill`` itself
+    collects the whole corpus in one shot. Defaults are Knn / Biome /
+    Custom, as for ``gapfill_balanced``.
 
     Returns the committed snapshot ids; read the result with
     ``io.images.load(spark, table_path)``."""
@@ -535,20 +510,27 @@ def gapfill_balanced_checkpointed(images: DataFrame, table_path: str,
 
     inputs = images.filter(F.col("role") == "input")
     side = images.filter(F.col("role") != "input")
-    # targets = inputs the operator will actually emit (viable or
-    # passthrough); non-viable ones are excluded by the operator and
-    # must not count as "remaining" forever
-    targets = inputs.filter(F.col("valid_px") > min_valid).select("image_id")
+    # targets = inputs ``gapfill`` will emit (passthrough, or viable
+    # with a stack, and an extra layer under Biome); the rest must not
+    # count as "remaining" forever
+    stacked = side.filter(F.col("role") == "history").select("site")
+    if predictor_configuration == "Biome":
+        stacked = stacked.join(side.filter(F.col("role") == "extra"),
+                               "site", "left_semi")
+    emitted = inputs.filter(F.col("valid_px") > min_valid)
+    targets = emitted.filter(F.col("gap_count") == 0).unionByName(
+        emitted.join(stacked, "site", "left_semi")
+        .filter(F.col("gap_count") > 0)).select("image_id")
 
     def compute(todo: DataFrame) -> DataFrame:
         batch_inputs = inputs.join(todo.select("image_id"), "image_id")
         batch_side = side.join(batch_inputs.select("site").distinct(),
                                "site", "left_semi")
-        return gapfill_balanced(
-            batch_side.unionByName(batch_inputs),
-            predictor_configuration=predictor_configuration, params=params,
-            min_valid=min_valid, chunk_px=chunk_px, method=method,
-            hyperparameters=hyperparameters, key_values=key_values)
+        return gapfill(
+            batch_side.unionByName(batch_inputs), method=method,
+            predictor_configuration=predictor_configuration,
+            hyperparameters=hyperparameters, params=params,
+            min_valid=min_valid, key_values=key_values, chunk_px=chunk_px)
 
     return checkpoint.run_checkpointed(
         targets, compute, images.sparkSession, table_path,
@@ -568,8 +550,8 @@ def gapfill_sequential(images: DataFrame, method: str = "Lasso",
     hard sequential dependency, so this is a **driver loop of one
     Spark job per input timestamp** (SURVEY.md §3 EP1 note: "Spark
     runs one job per input timestamp in that mode"), exactly like the
-    reference's per-file loop. Each iteration is one plain ``gapfill``
-    call, parallel across that timestamp's inputs.
+    reference's per-file loop. Each iteration is one ``gapfill`` call,
+    parallel across that timestamp's inputs.
 
     Returns the union of the per-timestamp fill results (ts order).
     """

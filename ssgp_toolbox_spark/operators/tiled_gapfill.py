@@ -1,6 +1,6 @@
 """Tiled ML gapfill — the 10^12-scale path (SURVEY.md J3/M2).
 
-``gapfill_balanced`` still ships whole images + whole history stacks
+``gapfill`` still ships whole images + whole history stacks
 to each task; beyond ~10^4×10^4 px that cannot fit a task. This
 operator implements the north-star structure instead: every layer
 (input, history, extra) is exploded into **halo'd tile windows**, all
@@ -18,7 +18,7 @@ Semantics vs the whole-image reference path:
   (≈ 2·sqrt(40/πρ) pixels) every pixel is exact and the operator is
   bit-identical to ``gapfill``.
 - 'Random'/'All' configurations are inherently whole-image and are
-  not offered here (use gapfill/gapfill_balanced).
+  not offered here (use gapfill).
 
 Memory per task: (tile+2·halo)² × (layers+2) float64 — bounded by
 construction, independent of raster size.

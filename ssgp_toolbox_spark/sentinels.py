@@ -153,7 +153,7 @@ def check_payload_fmt(fmt: str, sv: "Sentinels") -> None:
 
 def check_gap_count(image_id: str, found: int, planned: int,
                     sv: "Sentinels") -> None:
-    """``gapfill_balanced`` and ``gapfill_deep`` plan their tasks from
+    """``gapfill`` and ``gapfill_deep`` plan their tasks from
     the stats ``gap_count`` column; stats computed under another
     encoding count other pixels, and a task that trusted them would
     leave gaps unfilled or drop the image from the output. Raise

@@ -9,10 +9,11 @@ the packed history to refresh). The plan is a stream-static join:
                          ├── join(site) ── mapInPandas fill ── sink
     pack_history(static) ┘
 
-Identical fill semantics to ``operators.gapfill.gapfill`` — the SAME
-``_fill_batches`` kernel closure runs on the joined stream, and
-per-image seeding keeps the output bit-identical to the batch run on
-the same rows (asserted in tests/test_streaming.py). Stateless per
+Identical fill semantics to ``operators.gapfill.gapfill``: the same
+kernels fill each joined row whole, and per-image seeding keeps the
+output bit-identical to the batch run on the same rows (asserted in
+tests/test_streaming.py). The batch operator plans one wave from its
+collected inputs instead, which an unbounded stream cannot do. Stateless per
 image → no watermark needed; at scale the static side is a broadcast
 (small per-site packs) and each microbatch is a narrow map.
 """

@@ -9,3 +9,24 @@ def spark():
                   extra_confs={"spark.sql.shuffle.partitions": "8"})
     yield s
     s.stop()
+
+
+@pytest.fixture()
+def mixed_stack_images(spark):
+    """Three sites with stats columns: stp has history and an extra
+    layer; mini has an input and an extra layer but no history; nox
+    has history and an input but no extra layer."""
+    from ssgp_toolbox_spark import generator
+    from ssgp_toolbox_spark.io import images as img_io
+    from ssgp_toolbox_spark.operators import stats
+
+    rows = (generator.site_rows("stp", n_history=4, n_inputs=2)
+            + generator.site_rows("mini", n_history=0, n_inputs=1,
+                                  shape=(30, 20))
+            + [r for r in generator.site_rows("nox", n_history=3,
+                                              n_inputs=1, shape=(30, 20))
+               if "/extra/" not in r[0]])
+    images = stats.with_stats(img_io.with_id_parts(spark.createDataFrame(
+        rows, schema=generator.IMAGE_COLUMNS))).cache()
+    yield images
+    images.unpersist()

@@ -322,6 +322,51 @@ def sequential_gapfill_oracle(inputs, tensor, seed_fn, k=5):
     return results
 
 
+def whole_image_fills(rows, method, predictor_configuration,
+                      hyperparameters, params, min_valid=101):
+    """No-Spark reference of ``gapfill``'s output: every viable input
+    with gaps is filled by ONE whole-image kernel call (no gap slices,
+    no tasks) against its site's ts-sorted history stack, and encoded
+    as the operator encodes it. ``rows``: collected image rows with
+    the stats columns. An input whose site has no history rows (or,
+    under Biome, no extra layer) is left out, as the operator leaves
+    it out. Returns image_id -> (filled, scores, (bytes, filled_px,
+    phash, mean_cv_mae hex))."""
+    from ssgp_toolbox_spark import codecs
+    from ssgp_toolbox_spark.kernels import batch, frame
+
+    def dec(r):
+        return codecs.decode(bytes(r["bytes"]), r["h"], r["w"], r["fmt"])
+
+    out = {}
+    for r in rows:
+        if (r["role"] != "input" or r["valid_px"] <= min_valid
+                or r["gap_count"] == 0):
+            continue
+        hist = sorted((h for h in rows if h["role"] == "history"
+                       and h["site"] == r["site"]), key=lambda h: h["ts"])
+        extras = [e for e in rows
+                  if e["role"] == "extra" and e["site"] == r["site"]]
+        if not hist or (predictor_configuration == "Biome" and not extras):
+            continue
+        final = dec(r)
+        kw = dict(extra=dec(extras[0]) if extras else None,
+                  predictor_configuration=predictor_configuration,
+                  hyperparameters=hyperparameters, params=params,
+                  seed=stable_seed(r["image_id"]))
+        tensor = np.stack([dec(h) for h in hist])
+        if method == "Knn" and hyperparameters == "Custom":
+            filled, scores = batch.fill_image_knn(final, tensor, **kw)
+        else:
+            filled, scores = frame.fill_image(final, tensor, method=method,
+                                              **kw)
+        mean = float(np.mean(scores)) if len(scores) else float("nan")
+        out[r["image_id"]] = (filled, scores, (
+            codecs.encode(filled, r["fmt"]), int((final == GAP).sum()),
+            codecs.phash64(filled), mean.hex()))
+    return out
+
+
 def cellular_expand_oracle(matrix, biome, iters, seed, gap=GAP):
     """Naive transcription of the cloud-expansion automaton
     (common_functions.py:34-193) with the engine's seeding spec: one

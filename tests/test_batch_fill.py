@@ -1,7 +1,8 @@
-"""Batched kNN fill (kernels/batch.py) and the skew-balanced operator
-must be bit-identical to the per-pixel reference-parity path."""
+"""Batched kNN fill (kernels/batch.py) and the planned ``gapfill``
+wave must be bit-identical to the per-pixel, whole-image path."""
 
 import numpy as np
+import oracles
 import pytest
 
 from ssgp_toolbox_spark import generator
@@ -148,48 +149,84 @@ def test_gap_slice_union_equals_whole(scene):
     assert np.allclose(parts, scores, equal_nan=True)
 
 
-def test_balanced_operator_bit_equals_plain(spark):
-    from pyspark.sql import functions as F
+def _filled_cols(df):
+    """The columns ``gapfill`` computes, per filled image."""
+    return {r["image_id"]: (bytes(r["bytes"]), r["filled_px"], r["phash"],
+                            float(r["mean_cv_mae"]).hex())
+            for r in df.collect() if r["status"] == "filled"}
 
+
+def _whole_image_cols(images, *mode):
+    """The same columns from one whole-image kernel call per image."""
+    return {i: v[2] for i, v in
+            oracles.whole_image_fills(images.collect(), *mode).items()}
+
+
+def _fill_images(spark, site, n_history, n_inputs, shape=None):
     from ssgp_toolbox_spark.io import images as img_io
-    from ssgp_toolbox_spark.operators import gapfill, stats
+    from ssgp_toolbox_spark.operators import stats
 
-    images = stats.with_stats(img_io.with_id_parts(
-        generator.images_df(spark, sites=("stp",), n_history=5, n_inputs=2)
-    )).cache()
-    plain = {r["image_id"]: bytes(r["bytes"]) for r in gapfill.gapfill(
-        images, method="Knn", predictor_configuration="Biome",
-        hyperparameters="Custom", params={"n_neighbors": 5}).collect()}
-    bal = {r["image_id"]: bytes(r["bytes"]) for r in gapfill.gapfill_balanced(
-        images, predictor_configuration="Biome",
-        params={"n_neighbors": 5}, chunk_px=300).collect()}
-    assert plain == bal
+    return stats.with_stats(img_io.with_id_parts(generator.images_df(
+        spark, sites=(site,), n_history=n_history, n_inputs=n_inputs,
+        shape=shape))).cache()
+
+
+def test_balanced_operator_bit_equals_plain(spark):
+    """Knn/Custom filled in ``chunk_px`` slices by the planned wave ==
+    the whole-image kernel."""
+    from ssgp_toolbox_spark.operators import gapfill
+
+    images = _fill_images(spark, "stp", 5, 2)
+    mode = ("Knn", "Biome", "Custom", {"n_neighbors": 5})
+    want = _whole_image_cols(images, *mode)
+    assert len(want) == 2
+    assert _filled_cols(gapfill.gapfill(images, *mode, chunk_px=300)) == want
 
 
 def test_balanced_lasso_bit_equals_plain(spark):
-    """The chunked path now covers all kernels: Lasso/Custom chunked
-    == whole-image (per-pixel seeds + shared CV fold rule)."""
-    from pyspark.sql import functions as F
+    """The chunked path covers all kernels: Lasso/Custom chunked ==
+    whole-image (per-pixel seeds + shared CV fold rule)."""
+    from ssgp_toolbox_spark.operators import gapfill
 
+    images = _fill_images(spark, "stp", 4, 1)
+    mode = ("Lasso", "Biome", "Custom", {"alpha": 1.0})
+    want = _whole_image_cols(images, *mode)
+    assert len(want) == 1
+    assert _filled_cols(gapfill.gapfill(images, *mode, chunk_px=150)) == want
+
+
+def test_gridsearch_chunked_bit_equals_whole(spark):
+    """``gapfill``'s default mode (Lasso / Random / RandomGridSearch)
+    samples its grid candidates per pixel, so an image split across
+    every task in 2-px slices equals the whole-image kernel."""
+    from ssgp_toolbox_spark import codecs
     from ssgp_toolbox_spark.io import images as img_io
     from ssgp_toolbox_spark.operators import gapfill, stats
+    from ssgp_toolbox_spark.sentinels import is_valid
 
-    images = stats.with_stats(img_io.with_id_parts(
-        generator.images_df(spark, sites=("stp",), n_history=4, n_inputs=1)
-    )).cache()
-    plain = {r["image_id"]: bytes(r["bytes"]) for r in gapfill.gapfill(
-        images, method="Lasso", predictor_configuration="Biome",
-        hyperparameters="Custom", params={"alpha": 1.0}).collect()}
-    bal = {r["image_id"]: bytes(r["bytes"]) for r in gapfill.gapfill_balanced(
-        images, predictor_configuration="Biome", params={"alpha": 1.0},
-        method="Lasso", chunk_px=150).collect()}
-    assert plain == bal
+    # 12 scattered gap px keep the per-pixel grid search affordable
+    m = generator.make_layer("gs", 20, 16, 9, "input", 0.0)
+    m[tuple(np.argwhere(is_valid(m))[::17][:12].T)] = GAP
+    rows = [generator.image_row("gs", "input", "20190910T000000", m,
+                                codecs.FMT_F64, 4)]
+    rows += generator.site_rows("gs", n_history=4, n_inputs=0, shape=(20, 16))
+    images = stats.with_stats(img_io.with_id_parts(spark.createDataFrame(
+        rows, schema=generator.IMAGE_COLUMNS))).cache()
+    counts = {r["image_id"]: r["gap_count"] for r in images.filter(
+        "role = 'input'").collect()}
+    _bins, split = gapfill.plan_fill(
+        counts, spark.sparkContext.defaultParallelism, 2)
+    assert split == set(counts) and list(counts.values()) == [12]
+    want = _whole_image_cols(images, "Lasso", "Random", "RandomGridSearch",
+                             None)
+    assert set(want) == set(counts)
+    assert _filled_cols(gapfill.gapfill(images, chunk_px=2)) == want
 
 
 def test_balanced_split_and_whole_bit_equal_plain(spark):
-    """One balanced call that splits a hot image across tasks (delta →
-    shuffle → assemble) and finishes the light ones whole in their
-    fill tasks equals plain gapfill on every column the fill computes."""
+    """One call that splits a hot image across tasks (delta → shuffle →
+    assemble) and finishes the light ones whole in their fill tasks
+    equals the whole-image kernel on every column the fill computes."""
     from ssgp_toolbox_spark import codecs
     from ssgp_toolbox_spark.io import images as img_io
     from ssgp_toolbox_spark.operators import gapfill, stats
@@ -210,19 +247,11 @@ def test_balanced_split_and_whole_bit_equal_plain(spark):
     assert split == {"mx/input/20190916T000000"}
     assert len(counts) - len(split) >= 3  # whole images ride along
 
-    def cols(df):
-        return {r["image_id"]: (bytes(r["bytes"]), r["filled_px"], r["phash"],
-                                float(r["mean_cv_mae"]).hex())
-                for r in df.collect()}
-
-    plain = cols(gapfill.gapfill(
-        images, method="Knn", predictor_configuration="Biome",
-        hyperparameters="Custom", params={"n_neighbors": 5}))
-    bal = cols(gapfill.gapfill_balanced(
-        images, predictor_configuration="Biome", params={"n_neighbors": 5},
-        chunk_px=chunk_px))
-    assert set(plain) == set(counts)
-    assert plain == bal
+    mode = ("Knn", "Biome", "Custom", {"n_neighbors": 5})
+    want = _whole_image_cols(images, *mode)
+    assert set(want) == set(counts)
+    assert _filled_cols(gapfill.gapfill(images, *mode,
+                                        chunk_px=chunk_px)) == want
 
 
 def test_knn_coords_exact_int32_equals_int64():

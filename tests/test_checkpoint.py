@@ -63,15 +63,16 @@ def test_uncommitted_data_invisible(spark, inputs, tmp_path):
 
 
 def test_gapfill_balanced_checkpointed_bounded(spark, tmp_path):
-    """De-drivered balanced path: batches of 1 input per snapshot,
-    bit-identical to the one-shot variant, resume is a no-op."""
+    """Bounded batches: 1 input per snapshot, bit-identical to one
+    ``gapfill`` call, resume is a no-op."""
     from ssgp_toolbox_spark.operators import gapfill, stats
 
     df = generator.images_df(spark, sites=("stp",), n_history=4, n_inputs=2)
     imgs = stats.with_stats(img_io.with_id_parts(df)).cache()
     oneshot = {r["image_id"]: (bytes(r["bytes"]), r["filled_px"])
-               for r in gapfill.gapfill_balanced(
-                   imgs, predictor_configuration="Biome",
+               for r in gapfill.gapfill(
+                   imgs, method="Knn", predictor_configuration="Biome",
+                   hyperparameters="Custom",
                    params={"n_neighbors": 5}).collect()}
 
     table = str(tmp_path / "gf_ckpt")
@@ -96,15 +97,16 @@ def test_gapfill_balanced_checkpointed_ships_batch_sites_only(
         spark, tmp_path, monkeypatch):
     """Each batch collects the history stacks of its own inputs' sites
     only, not of every site in the table; the output stays
-    bit-identical to the one-shot variant."""
+    bit-identical to one ``gapfill`` call."""
     from ssgp_toolbox_spark.operators import gapfill, stats
 
     df = generator.images_df(spark, sites=("vlad", "stp"), n_history=4,
                              n_inputs=1)
     imgs = stats.with_stats(img_io.with_id_parts(df)).cache()
     oneshot = {r["image_id"]: (bytes(r["bytes"]), r["filled_px"])
-               for r in gapfill.gapfill_balanced(
-                   imgs, predictor_configuration="Biome",
+               for r in gapfill.gapfill(
+                   imgs, method="Knn", predictor_configuration="Biome",
+                   hyperparameters="Custom",
                    params={"n_neighbors": 5}).collect()}
     assert len(oneshot) == 2
 
@@ -126,3 +128,36 @@ def test_gapfill_balanced_checkpointed_ships_batch_sites_only(
     rows = img_io.load(spark, table).collect()
     assert {r["image_id"]: (bytes(r["bytes"]), r["filled_px"])
             for r in rows} == oneshot
+
+
+def test_gapfill_balanced_checkpointed_skips_inputs_without_stack(
+        spark, mixed_stack_images, tmp_path, monkeypatch):
+    """An input that ``gapfill`` leaves out (its site has no history
+    rows, or no extra layer under Biome) is not a target: the batch
+    loop ends after the fillable inputs instead of committing empty
+    snapshots for it forever."""
+    from ssgp_toolbox_spark.operators import gapfill
+
+    imgs = mixed_stack_images
+    oneshot = {r["image_id"]: (bytes(r["bytes"]), r["filled_px"])
+               for r in gapfill.gapfill(
+                   imgs, method="Knn", predictor_configuration="Biome",
+                   hyperparameters="Custom",
+                   params={"n_neighbors": 5}).collect()}
+    assert sorted(i.split("/")[0] for i in oneshot) == ["stp", "stp"]
+
+    commits = []
+    real_append = img_io.append_snapshot
+
+    def bounded_append(df, table_path, snapshot_id=None):
+        commits.append(snapshot_id)
+        assert len(commits) <= len(oneshot), "the batch loop did not end"
+        return real_append(df, table_path, snapshot_id)
+
+    monkeypatch.setattr(img_io, "append_snapshot", bounded_append)
+    table = str(tmp_path / "gf_nostack")
+    sids = gapfill.gapfill_balanced_checkpointed(
+        imgs, table, batch_rows=1, params={"n_neighbors": 5})
+    assert len(sids) == 2
+    assert {r["image_id"]: (bytes(r["bytes"]), r["filled_px"])
+            for r in img_io.load(spark, table).collect()} == oneshot

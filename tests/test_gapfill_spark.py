@@ -3,12 +3,12 @@ local kernel run with the same per-image seed (determinism/resume
 guarantee), branches per reference viability rules."""
 
 import numpy as np
+import oracles
 import pytest
 from pyspark.sql import functions as F
 
 from ssgp_toolbox_spark import codecs, generator
 from ssgp_toolbox_spark.io import images as img_io
-from ssgp_toolbox_spark.kernels import frame as frame_kernel
 from ssgp_toolbox_spark.operators import gapfill, stats
 from ssgp_toolbox_spark.sentinels import GAP
 
@@ -19,40 +19,17 @@ def images(spark):
     return stats.with_stats(img_io.with_id_parts(df)).cache()
 
 
-def _local_oracle(images_rows, method, config, hp, params):
-    hist = sorted(
-        (r for r in images_rows if r["role"] == "history"), key=lambda r: r["ts"]
-    )
-    tensor = np.stack([
-        codecs.decode(bytes(r["bytes"]), r["h"], r["w"], r["fmt"]) for r in hist
-    ])
-    extra_rows = [r for r in images_rows if r["role"] == "extra"]
-    extra = codecs.decode(bytes(extra_rows[0]["bytes"]), extra_rows[0]["h"],
-                          extra_rows[0]["w"], extra_rows[0]["fmt"]) if extra_rows else None
-    out = {}
-    for r in images_rows:
-        if r["role"] != "input":
-            continue
-        final = codecs.decode(bytes(r["bytes"]), r["h"], r["w"], r["fmt"])
-        filled, scores = frame_kernel.fill_image(
-            final, tensor, extra=extra, method=method,
-            predictor_configuration=config, hyperparameters=hp, params=params,
-            seed=gapfill._stable_seed(r["image_id"]),
-        )
-        out[r["image_id"]] = (filled, scores)
-    return out
-
-
 @pytest.mark.parametrize("config", ["Random", "Biome"])
 def test_spark_fill_equals_local_kernel(spark, images, config):
     rows = images.collect()
-    expected = _local_oracle(rows, "Knn", config, "Custom", {"n_neighbors": 5})
+    expected = oracles.whole_image_fills(rows, "Knn", config, "Custom",
+                                         {"n_neighbors": 5})
     got = gapfill.gapfill(images, method="Knn", predictor_configuration=config,
                           hyperparameters="Custom", params={"n_neighbors": 5}).collect()
     filled_rows = [r for r in got if r["status"] == "filled"]
     assert len(filled_rows) == len(expected)
     for r in filled_rows:
-        exp_m, exp_scores = expected[r["image_id"]]
+        exp_m, exp_scores, _ = expected[r["image_id"]]
         m = codecs.decode(bytes(r["bytes"]), r["h"], r["w"], r["fmt"])
         assert np.array_equal(m, exp_m), r["image_id"]
         assert (m == GAP).sum() == 0
@@ -102,14 +79,15 @@ def test_lasso_kernel_on_spark(spark):
     df = generator.images_df(spark, sites=("stp",), n_history=5, n_inputs=1)
     images = stats.with_stats(img_io.with_id_parts(df)).cache()
     rows = images.collect()
-    expected = _local_oracle(rows, "Lasso", "Random", "Custom", {"alpha": 1.0})
+    expected = oracles.whole_image_fills(rows, "Lasso", "Random", "Custom",
+                                         {"alpha": 1.0})
     got = gapfill.gapfill(images, method="Lasso",
                           predictor_configuration="Random",
                           hyperparameters="Custom", params={"alpha": 1.0}).collect()
     for r in got:
         if r["status"] != "filled":
             continue
-        exp_m, _ = expected[r["image_id"]]
+        exp_m, _, _ = expected[r["image_id"]]
         m = codecs.decode(bytes(r["bytes"]), r["h"], r["w"], r["fmt"])
         assert np.allclose(m, exp_m, equal_nan=True)
 
@@ -134,3 +112,34 @@ def test_gridsearch_mode_smoke(spark):
     assert (m == -100.0).sum() == 0
     # values within the physical range of the synthetic field
     assert 250 < np.median(m[m > -50]) < 330
+
+
+@pytest.mark.parametrize("config", ["Biome", "Random"])
+def test_input_without_stack_is_excluded(mixed_stack_images, config):
+    """An input whose site has no history rows (or, under Biome, no
+    extra layer) has nothing to train on and is left out; the other
+    inputs equal the whole-image kernel."""
+    images = mixed_stack_images
+    mode = ("Knn", config, "Custom", {"n_neighbors": 5})
+    want = oracles.whole_image_fills(images.collect(), *mode)
+    got = {r["image_id"]: (bytes(r["bytes"]), r["filled_px"], r["phash"],
+                           float(r["mean_cv_mae"]).hex())
+           for r in gapfill.gapfill(images, *mode).collect()}
+    filled_sites = {"stp", "nox"} if config == "Random" else {"stp"}
+    assert set(got) == {r["image_id"] for r in images.filter(
+        "role = 'input'").collect() if r["site"] in filled_sites}
+    assert got == {i: v[2] for i, v in want.items()}
+
+
+def test_gapfill_balanced_forwards_knn_biome_custom(monkeypatch):
+    """``gapfill_balanced`` is ``gapfill`` with Knn / Biome / Custom
+    defaults and nothing else."""
+    calls = []
+    monkeypatch.setattr(gapfill, "gapfill", lambda *a: calls.append(a))
+    gapfill.gapfill_balanced("imgs")
+    gapfill.gapfill_balanced("imgs", "Random", {"n_neighbors": 3}, 50, 64,
+                             "Lasso", "RandomGridSearch", {"gap": -1.0})
+    assert calls == [
+        ("imgs", "Knn", "Biome", "Custom", None, 101, None, 512),
+        ("imgs", "Lasso", "Random", "RandomGridSearch", {"n_neighbors": 3},
+         50, {"gap": -1.0}, 64)]

@@ -123,7 +123,7 @@ def test_gapfill_key_values_equivalence(spark):
 
 
 def test_balanced_gapfill_rejects_stats_of_another_encoding(spark):
-    """gapfill_balanced plans its tasks from the gap_count column; stats
+    """gapfill plans its tasks from the gap_count column; stats
     computed with the default encoding do not count the gaps seen under
     key_values=KV, and the fill task must say so instead of leaving the
     gaps unfilled."""
@@ -132,9 +132,9 @@ def test_balanced_gapfill_rejects_stats_of_another_encoding(spark):
     assert imgs.filter("role = 'input' AND gap_count > 0").count() >= 1
     with pytest.raises(Exception,
                        match=r"ValueError.*stats\.with_stats\(key_values"):
-        gapfill.gapfill_balanced(imgs, predictor_configuration="Biome",
-                                 params={"n_neighbors": 5},
-                                 key_values=KV).collect()
+        gapfill.gapfill(imgs, method="Knn", predictor_configuration="Biome",
+                        hyperparameters="Custom", params={"n_neighbors": 5},
+                        key_values=KV).collect()
 
 
 def test_deep_rejects_stats_of_another_encoding(spark):

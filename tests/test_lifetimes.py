@@ -1,5 +1,6 @@
 """Resource lifetimes: an operator call leaves nothing pinned in the
-driver's storage memory once its result is collected and dropped.
+driver's storage memory, and no persisted RDD, once its result is
+collected and dropped.
 
 Task-side inputs ride in the UDF closures; PySpark ships a command over
 ``spark.broadcast.UDFCompressionThreshold`` (1 MiB by default) as a
@@ -7,6 +8,8 @@ broadcast that lives as long as the plan. Each case below builds a
 command past that threshold, so a broadcast the operator kept alive
 (a module registry, an un-released ``SparkContext.broadcast``) would
 hold the driver's free storage memory below its starting value.
+``gapfill_deep`` evaluates its coords frame once for two consumers; a
+``persist()`` there would stay registered in the cache manager.
 """
 
 import gc
@@ -59,6 +62,15 @@ def _balanced_fill(spark):
         chunk_px=1024)
 
 
+def _deep_fill(spark):
+    from ssgp_toolbox_spark.operators import deep_gapfill
+
+    images = stats.with_stats(img_io.with_id_parts(generator.images_df(
+        spark, sites=("stp",), n_history=4, n_inputs=2))).cache()
+    return images, lambda: deep_gapfill.gapfill_deep(
+        images, params={"n_neighbors": 5}, chunk_px=256)
+
+
 def _ivf_assign(spark):
     rng = np.random.default_rng(5)
     cents = [[float(v) for v in row]
@@ -70,14 +82,20 @@ def _ivf_assign(spark):
     return vectors, lambda: simsearch.ivf_assign(vectors, cents)
 
 
-@pytest.mark.parametrize("make_op", [_balanced_fill, _ivf_assign],
-                         ids=["gapfill_balanced", "ivf_assign"])
+def _persisted(sc) -> int:
+    return sc._jsc.getPersistentRDDs().size()
+
+
+@pytest.mark.parametrize("make_op", [_balanced_fill, _deep_fill, _ivf_assign],
+                         ids=["gapfill_balanced", "gapfill_deep",
+                              "ivf_assign"])
 def test_call_releases_storage_memory(spark, make_op):
     sc = spark.sparkContext
     inputs, op = make_op(spark)
     try:
         inputs.count()
         start = _settled_free(sc)
+        start_rdds = _persisted(sc)
 
         df = op()
         assert df.collect()
@@ -86,12 +104,14 @@ def test_call_releases_storage_memory(spark, make_op):
         del df
 
         deadline = time.monotonic() + 30
-        free = _free_storage(sc)
-        while free < start and time.monotonic() < deadline:
+        free, rdds = _free_storage(sc), _persisted(sc)
+        while ((free < start or rdds > start_rdds)
+               and time.monotonic() < deadline):
             _collect_garbage(sc)
-            free = _free_storage(sc)
+            free, rdds = _free_storage(sc), _persisted(sc)
         assert free >= start, (
             f"{(start - free) / 2**20:.2f} MiB of storage still held "
             f"({(start - held) / 2**20:.2f} MiB while the result was live)")
+        assert rdds == start_rdds, f"{rdds - start_rdds} persisted RDDs left"
     finally:
         inputs.unpersist()

@@ -52,10 +52,10 @@ def test_hot_image_fans_out(spark):
     assert hot_chunks == list(range(-(-counts[hot_id] // chunk_px)))
     assert len(hot_chunks) >= 10
     assert [c for b in bins for i, c in b if i == small_id] == [None]
-    # end-to-end: balanced fill still completes and fills everything
-    out = gapfill.gapfill_balanced(df, predictor_configuration="Biome",
-                                   params={"n_neighbors": 5},
-                                   min_valid=101, chunk_px=chunk_px).collect()
+    # end-to-end: the fill still completes and fills everything
+    out = gapfill.gapfill(df, method="Knn", predictor_configuration="Biome",
+                          hyperparameters="Custom", params={"n_neighbors": 5},
+                          min_valid=101, chunk_px=chunk_px).collect()
     assert sorted(r["image_id"] for r in out) == sorted(counts)
     for r in out:
         m = codecs.decode(bytes(r["bytes"]), r["h"], r["w"], r["fmt"])
@@ -64,33 +64,24 @@ def test_hot_image_fans_out(spark):
 
 def test_balanced_plan_ships_no_history_rows(spark):
     """History stacks travel in the fill task's closure, not as join
-    rows: the fill branch of the plan must contain no hist_layers
-    column (per-chunk Arrow transfer of multi-MB stacks was a measured
-    2.4× throughput loss). The fill is one pandas stage over a
-    driver-built table; the assemble stage and its shuffle appear only
-    when an image splits across tasks."""
+    rows: ``gapfill``'s plan must contain no hist_layers column
+    (per-chunk Arrow transfer of multi-MB stacks was a measured 2.4×
+    throughput loss). The fill is one pandas stage over a driver-built
+    table with no Exchange; the assemble stage and its shuffle appear
+    only when an image splits across tasks."""
     images = stats.with_stats(img_io.with_id_parts(
         generator.images_df(spark, sites=("stp",), n_history=2, n_inputs=1)
     ))
-    plan = _plan(gapfill.gapfill_balanced(images, predictor_configuration="Biome",
-                                          params={"n_neighbors": 5}))
+    mode = dict(method="Knn", predictor_configuration="Biome",
+                hyperparameters="Custom", params={"n_neighbors": 5})
+    plan = _plan(gapfill.gapfill(images, **mode))
     # names get truncated in the plan string, so count the operators
     assert plan.count("MapInPandas") == 1
     assert "Exchange" not in plan
     assert "hist_layers" not in plan
-    hot = _plan(gapfill.gapfill_balanced(_skewed_images(spark),
-                                         predictor_configuration="Biome",
-                                         params={"n_neighbors": 5},
-                                         chunk_px=200))
+    hot = _plan(gapfill.gapfill(_skewed_images(spark), chunk_px=200, **mode))
     assert hot.count("MapInPandas") == 2  # fill + assemble
     assert "hist_layers" not in hot
-    # the plain-join path (for site counts too large to collect)
-    # keeps the packed-history join
-    plain = _plan(gapfill.gapfill(images, method="Knn",
-                                  predictor_configuration="Biome",
-                                  hyperparameters="Custom",
-                                  params={"n_neighbors": 5}))
-    assert "hist_layers" in plain
 
 
 def _unit_ranges(bins, counts, chunk_px):
