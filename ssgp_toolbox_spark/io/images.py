@@ -85,8 +85,11 @@ def load(spark: SparkSession, table_path: str,
         if not any(s["snapshot_id"] == as_of for s in snaps):
             raise ValueError(f"unknown snapshot {as_of!r}")
         snaps = keep
+    # a snapshot that committed no rows has no parquet file to take a
+    # schema from; it adds nothing to the union
+    snaps = [s for s in snaps if _has_data(s["data_dir"])]
     if not snaps:
-        raise FileNotFoundError(f"no committed snapshots under {table_path}")
+        raise FileNotFoundError(f"no committed rows under {table_path}")
     # each snapshot dir is partition-discovered independently, then
     # unioned — Catalyst still prunes (site, role) per subtree
     out = None
@@ -94,6 +97,13 @@ def load(spark: SparkSession, table_path: str,
         df = spark.read.parquet(s["data_dir"])
         out = df if out is None else out.unionByName(df)
     return out
+
+
+def _has_data(data_dir: str) -> bool:
+    """Whether a snapshot dir holds a data file (Spark skips names
+    starting with '_' or '.', like ``_SUCCESS``)."""
+    return any(not f.startswith(("_", ".")) for _, _, files in os.walk(data_dir)
+               for f in files)
 
 
 def committed_ids(spark: SparkSession, table_path: str) -> DataFrame:

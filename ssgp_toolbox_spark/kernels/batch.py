@@ -7,7 +7,9 @@ expressible as dense tensor algebra across *all* gap pixels at once:
 - predictor selection: biome candidate sets are indexed once per
   image (the reference re-runs argwhere over the full raster per
   pixel, gapfiller.py:511); 40-nearest per pixel is one stable
-  argsort over a (pixels × candidates) distance matrix;
+  argsort over a (pixels × candidates) distance matrix; the
+  small-biome fallback keeps only its seeded 101-of-valid draws per
+  pixel and runs the gather, distances and argsort over blocks;
 - frame assembly: one fancy-index gather
   ``tensor[:, coords]`` → (layers, pixels, predictors);
 - fill + 3-fold CV: pixels grouped by their target-validity pattern
@@ -217,9 +219,7 @@ def _biome_coords_batched(final, extra, gaps, seed, coord_offset=(0, 0),
     # only ever touches ~a dozen codes)
     w = final.shape[1]
     flat = masked.ravel()
-    # the small-biome fallback's valid set is pixel-independent —
-    # hoisted out of the per-pixel loop (select_random docstring)
-    valid = None
+    small = []  # gap indices whose biome takes the random fallback
     for code in np.unique(codes):
         sel = np.flatnonzero(codes == code)
         cidx = np.flatnonzero(flat == code)
@@ -231,17 +231,41 @@ def _biome_coords_batched(final, extra, gaps, seed, coord_offset=(0, 0),
                 out[sel[lo : lo + 128], :-1] = _knn_coords_exact(
                     cands, blk, FR.N_NEAREST, final.shape)
         else:
-            if valid is None:
-                valid = np.argwhere((final != sv.gap) & (final != sv.skip)
-                                    & (final != sv.nodata))
-            for s in sel:
-                r, c = (int(v) for v in gaps[s])
-                rng = FR._pixel_rng(seed, r + dr, c + dc)
-                rand = FR.select_random(final, (r, c), rng, sv,
-                                        valid=valid)[:-1]
-                out[s, :-1] = FR._k_nearest(rand, (r, c), FR.N_NEAREST)
+            small.append(sel)
+    if small:
+        _random_nearest_batched(final, gaps, np.concatenate(small), out,
+                                seed, (dr, dc), sv)
     out[:, -1] = gaps
     return out
+
+
+def _random_nearest_batched(final, gaps, sel, out, seed, offset,
+                            sv: Sentinels):
+    """The small-biome fallback of ``FR.select_biome`` for gap pixels
+    ``gaps[sel]``, written into ``out[sel, :-1]``: 101 random valid
+    coords per pixel, then their 40 nearest. Only the draws stay per
+    pixel (each pixel's own seeded permutation, unchanged); the gather,
+    the f64 distances and the stable argsort run over blocks of 1024
+    pixels (~1.6 MB of gathered coords), with ``FR._k_nearest``'s
+    (distance, index) tie order."""
+    # the valid set is pixel-independent: one scan per call; the
+    # permutations are per-pixel RNG state and stay per pixel
+    valid = np.argwhere((final != sv.gap) & (final != sv.skip)
+                        & (final != sv.nodata))
+    FR.check_random_pool(len(valid))
+    dr, dc = offset
+    for lo in range(0, len(sel), 1024):
+        blk = sel[lo : lo + 1024]
+        pts = gaps[blk]  # (s, 2)
+        picks = np.stack([
+            FR._pixel_rng(seed, r + dr, c + dc).permutation(len(valid))[
+                :FR.N_RANDOM]
+            for r, c in pts.tolist()])
+        rand = valid[picks]  # (s, 101, 2)
+        d = np.sqrt(((rand - pts[:, None, :]) ** 2).sum(-1)
+                    .astype(np.float64))
+        order = np.argsort(d, axis=1, kind="stable")[:, :FR.N_NEAREST]
+        out[blk, :-1] = np.take_along_axis(rand, order[..., None], axis=1)
 
 
 def select_coords(final: np.ndarray, extra: np.ndarray | None,

@@ -67,8 +67,7 @@ def select_all(final: np.ndarray, coord: tuple[int, int],
 
 def select_random(final: np.ndarray, coord: tuple[int, int],
                   rng: np.random.Generator,
-                  sv: Sentinels = DEFAULT_SENTINELS,
-                  valid: np.ndarray | None = None) -> np.ndarray:
+                  sv: Sentinels = DEFAULT_SENTINELS) -> np.ndarray:
     """'Random' strategy: 101 distinct valid coords, target appended
     last (gapfiller.py:457-486). The reference rejection-samples with
     unseeded ``random.randint`` — which silently never terminates when
@@ -76,22 +75,22 @@ def select_random(final: np.ndarray, coord: tuple[int, int],
     (that is why its viability threshold is 101, gapfiller.py:860).
     Ours draws a seeded permutation of the valid set: same contract
     (101 distinct valid, uniform), deterministic per pixel, O(valid),
-    and raises instead of hanging on infeasible images.
-
-    ``valid``: optional precomputed ``argwhere`` of the image's valid
-    mask — it is pixel-independent, so batched callers hoist it out
-    of their per-pixel loop (the RNG permutation itself is per-pixel
-    state and cannot be hoisted without changing draws)."""
-    if valid is None:
-        valid = np.argwhere((final != sv.gap) & (final != sv.skip)
-                            & (final != sv.nodata))
-    if len(valid) < N_RANDOM:
-        raise ValueError(
-            f"Random predictor selection needs {N_RANDOM} valid pixels, "
-            f"image has {len(valid)} (reference would loop forever here)"
-        )
+    and raises instead of hanging on infeasible images."""
+    valid = np.argwhere((final != sv.gap) & (final != sv.skip)
+                        & (final != sv.nodata))
+    check_random_pool(len(valid))
     chosen = valid[rng.permutation(len(valid))[:N_RANDOM]]
     return np.vstack([chosen, [coord]])
+
+
+def check_random_pool(n_valid: int) -> None:
+    """Raise when an image has fewer than ``N_RANDOM`` valid pixels to
+    draw from (``select_random``)."""
+    if n_valid < N_RANDOM:
+        raise ValueError(
+            f"Random predictor selection needs {N_RANDOM} valid pixels, "
+            f"image has {n_valid} (reference would loop forever here)"
+        )
 
 
 def _k_nearest(coords: np.ndarray, coord: tuple[int, int], k: int) -> np.ndarray:

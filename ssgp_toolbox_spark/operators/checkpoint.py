@@ -40,17 +40,27 @@ def run_checkpointed(targets: DataFrame, compute, spark: SparkSession,
     """Fill-and-commit loop: compute(remaining) → snapshot append,
     optionally in bounded batches (one snapshot per batch = one
     checkpoint). Returns committed snapshot ids. Safe to re-run after
-    a crash: completed snapshots are skipped via the anti-join."""
+    a crash: completed snapshots are skipped via the anti-join.
+
+    Each batch must commit at least one target: a batch whose
+    ``compute`` emits none of its ids would come back as the next
+    batch unchanged, so the loop raises RuntimeError naming them
+    instead of committing an empty snapshot per iteration forever."""
     sids = []
-    while True:
+    left = remaining(targets, spark, table_path).count()
+    while left:
         todo = remaining(targets, spark, table_path)
         if batch_rows is not None:
             todo = todo.limit(batch_rows)
-        n = todo.count()
-        if n == 0:
-            break
         out = with_lineage(compute(todo), config)
         sids.append(img_io.append_snapshot(out, table_path))
         if batch_rows is None:
             break
+        before, left = left, remaining(targets, spark, table_path).count()
+        if left == before:
+            stuck = sorted(r["image_id"] for r in
+                           todo.select("image_id").collect())
+            raise RuntimeError(
+                f"checkpointed batch committed none of its targets {stuck}: "
+                "compute emitted no row for them")
     return sids

@@ -5,17 +5,19 @@ for Spark:
 
 reference (eager, per input file)          this engine (one planned wave)
 -----------------------------------       ---------------------------------
-re-scan History/ per input (S1)           scan history once, groupBy(site)
-                                          → pack sorted temporal stack
-load Extra.npy (S3)                       extra layer packed the same way
-for file in Inputs/: viability F2/F3      Catalyst filters on stats columns
+re-scan History/ per input (S1)           one scan of history, extra and
+load Extra.npy (S3)                       viable input rows → driver
+for file in Inputs/: viability F2/F3      builds sorted per-site stacks
+                                          (viability = Catalyst filters
+                                          on the stats columns)
 thread pool over gap pixels               driver packs gap px into <= one
                                           task per core → **mapInPandas**
 np.save + Metadata.json (S4/S5)           snapshot append + metrics columns
 
-Plan of ``gapfill``: collect the packed stacks, extra layers and
-viable input payloads; ``plan_fill`` bins the images by ``gap_count``
-on the driver; one fill ``mapInPandas`` wave of at most
+Plan of ``gapfill``: one collect of the history, extra (Biome only)
+and viable input rows — one job, no exchange — from which the driver
+builds each site's time-sorted stack; ``plan_fill`` bins the images by
+``gap_count`` on the driver; one fill ``mapInPandas`` wave of at most
 ``defaultParallelism`` tasks runs the bins. Skew = images with many
 gap px: only a hot image splits across tasks, and only then does a
 shuffle of its deltas feed an assemble stage. A Python UDF plan costs
@@ -74,7 +76,9 @@ def _stable_seed(image_id: str) -> int:
 def pack_history(history: DataFrame) -> DataFrame:
     """One row per site: chronologically sorted temporal stack
     (reference O1 sort, gapfiller.py:91 + tensor build 846-848), one
-    groupBy(site) shuffle."""
+    groupBy(site) shuffle — the static side of the stream-static join
+    (streaming/gapfill_stream.py). ``gapfill`` builds the same stacks
+    on the driver from one scan (``_collect_side_inputs``)."""
     layer = F.struct("ts", "bytes", "h", "w", "fmt")
     return history.groupBy("site").agg(
         F.sort_array(F.collect_list(layer)).alias("hist_layers")
@@ -342,6 +346,63 @@ def _assemble_batches_fn(sv: Sentinels = DEFAULT_SENTINELS, originals=None):
     return _assemble_batches
 
 
+def _nulls_first(values) -> tuple:
+    """Sort key of ``sort_array`` ascending over a struct: field by
+    field, nulls first."""
+    return tuple((v is not None, v) for v in values)
+
+
+def _collect_side_inputs(images: DataFrame, viable, biome: bool):
+    """Everything the fill wave needs on the driver, from ONE collect of
+    ``images`` filtered to history rows, extra rows (Biome only) and
+    the rows matched by the ``viable`` input condition: one job, no
+    exchange.
+
+    Returns ``(sites, inputs)``: ``sites`` maps a site to
+    ``(history layers, extra layer)`` with each layer a
+    ``(payload, h, w, fmt)`` tuple and the history in
+    ``sort_array(struct(ts, bytes, h, w, fmt))`` order (``pack_history``'s:
+    ts ascending, nulls first, ties by payload, h, w, fmt); ``inputs``
+    maps an image_id to ``(payload, h, w, fmt, site, caption,
+    gap_count)``. A site enters only with history rows, and under Biome
+    only with its extra layer; the inputs of other sites are dropped —
+    there is nothing to train on. A site with more than one extra row
+    raises ValueError: the reference loads exactly one
+    ``Extra/Extra.npy`` (gapfiller.py:830-835)."""
+    side = F.col("role") == "history"
+    if biome:
+        side = side | (F.col("role") == "extra")
+    rows = images.filter(side | viable).select(
+        "role", "site", "image_id", F.unix_micros("ts").alias("ts"),
+        "bytes", "h", "w", "fmt", "caption", "gap_count").collect()
+    history: dict = {}
+    extras: dict = {}
+    for r in rows:
+        if r["role"] == "history":
+            history.setdefault(r["site"], []).append(
+                (r["ts"], bytes(r["bytes"]), r["h"], r["w"], r["fmt"]))
+        elif r["role"] == "extra":
+            if r["site"] in extras:
+                raise ValueError(
+                    f"site {r['site']!r} has more than one role='extra' "
+                    "row; Biome needs exactly one extra layer per site")
+            extras[r["site"]] = (bytes(r["bytes"]), int(r["h"]),
+                                 int(r["w"]), r["fmt"])
+    sites = {}
+    for site, layers in history.items():
+        if biome and site not in extras:
+            continue
+        layers.sort(key=_nulls_first)
+        sites[site] = ([(p, int(h), int(w), fmt) for _, p, h, w, fmt in layers],
+                       extras.get(site))
+    inputs = {
+        r["image_id"]: (bytes(r["bytes"]), int(r["h"]), int(r["w"]), r["fmt"],
+                        r["site"], r["caption"], int(r["gap_count"]))
+        for r in rows if r["role"] == "input" and r["site"] in sites
+    }
+    return sites, inputs
+
+
 def gapfill(images: DataFrame, method: str = "Lasso",
             predictor_configuration: str = "Random",
             hyperparameters: str = "RandomGridSearch",
@@ -366,7 +427,8 @@ def gapfill(images: DataFrame, method: str = "Lasso",
     encoding: the planner trusts ``gap_count``, and a fill task raises
     ValueError when an image's gap scan disagrees with it.
 
-    Plan: side-input collects → ``plan_fill`` bins (at most
+    Plan: one side-input collect (history, extra and viable input
+    rows in one job, no exchange) → ``plan_fill`` bins (at most
     ``defaultParallelism``; images with at most a task's share of the
     gap px stay whole, hot images split into ``chunk_px`` chunks of
     their gap scan) → one mapInPandas fill wave, no exchange. Only when
@@ -384,63 +446,18 @@ def gapfill(images: DataFrame, method: str = "Lasso",
     ``gapfill_balanced_checkpointed(batch_rows=...)`` or
     ``deep_gapfill.gapfill_deep``."""
     sv = resolve_key_values(key_values)
-    inputs = images.filter(F.col("role") == "input")
-    viable = inputs.filter((F.col("valid_px") > min_valid) & (F.col("gap_count") > 0))
-    passthrough = inputs.filter(
-        (F.col("valid_px") > min_valid) & (F.col("gap_count") == 0)
-    )
-
+    kept = (F.col("role") == "input") & (F.col("valid_px") > min_valid)
     # side inputs ride in the task closure, not as join columns:
     # joining the stacks onto every task row would push multi-MB Arrow
     # batches through the Python pipe per task (measured 2.4×
     # throughput loss), and with the payloads in the closure the fill
     # table is one bin id per task (a duplicated raster per chunk was a
     # measured 3× JVM tax at 32 workers)
-    from concurrent.futures import ThreadPoolExecutor
+    site_map, input_map = _collect_side_inputs(
+        images, kept & (F.col("gap_count") > 0),
+        predictor_configuration == "Biome")
 
-    spark = images.sparkSession
-    biome = predictor_configuration == "Biome"
-    # the three side-input collects are independent Spark jobs —
-    # submit them concurrently so the driver waits for the slowest
-    # one, not their sum (guide-standard driver-thread overlap)
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_hist = pool.submit(
-            lambda: pack_history(
-                images.filter(F.col("role") == "history")).collect())
-        f_extra = (pool.submit(
-            lambda: pack_extra(
-                images.filter(F.col("role") == "extra")).collect())
-            if biome else None)
-        f_inputs = pool.submit(
-            lambda: viable.select("image_id", "bytes", "h", "w", "fmt",
-                                  "site", "caption", "gap_count").collect())
-        hist_rows = f_hist.result()
-        extra_rows = {}
-        if f_extra is not None:
-            extra_rows = {
-                r["site"]: (bytes(r["extra_layer"]["bytes"]),
-                            int(r["extra_layer"]["h"]),
-                            int(r["extra_layer"]["w"]),
-                            r["extra_layer"]["fmt"])
-                for r in f_extra.result()
-            }
-        input_rows = f_inputs.result()
-    site_map = {}
-    for r in hist_rows:
-        if biome and r["site"] not in extra_rows:
-            continue
-        layers = [(bytes(l["bytes"]), int(l["h"]), int(l["w"]), l["fmt"])
-                  for l in r["hist_layers"]]
-        site_map[r["site"]] = (layers, extra_rows.get(r["site"]))
-    # inputs of sites without a stack (or without an extra layer under
-    # Biome) are dropped here, on the driver
-    input_map = {
-        r["image_id"]: (bytes(r["bytes"]), int(r["h"]), int(r["w"]), r["fmt"],
-                        r["site"], r["caption"], int(r["gap_count"]))
-        for r in input_rows if r["site"] in site_map
-    }
-
-    pass_df = passthrough.select(
+    pass_df = images.filter(kept & (F.col("gap_count") == 0)).select(
         "image_id", "bytes", "w", "h", "fmt", "caption", "phash",
         F.lit("passthrough").alias("status"),
         F.lit(0).alias("filled_px"),
@@ -449,6 +466,7 @@ def gapfill(images: DataFrame, method: str = "Lasso",
     if not input_map:
         return pass_df
 
+    spark = images.sparkSession
     bins, split = plan_fill({i: m[6] for i, m in input_map.items()},
                             spark.sparkContext.defaultParallelism, chunk_px)
     plan = {"sites": site_map, "inputs": input_map, "bins": bins}

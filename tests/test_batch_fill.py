@@ -270,3 +270,68 @@ def test_knn_coords_exact_int32_equals_int64():
     ref = np.lexsort((np.broadcast_to(np.arange(len(cands)), d2.shape), d2),
                      axis=1)[:, :5]
     assert np.array_equal(want, cands[ref])
+
+
+def _high_gap_scene(n_valid):
+    """36×30 scene whose final image keeps only ``n_valid`` ungapped
+    px (104 → 90.4% gaps): almost every biome has 41 or fewer
+    candidates left, so almost every gap px takes the 101-random
+    fallback."""
+    rng = np.random.default_rng(11)
+    h, w = 36, 30
+    tensor = rng.uniform(270, 300, size=(6, h, w)).round(2)
+    tensor[rng.random(tensor.shape) < 0.05] = GAP
+    final = rng.uniform(270, 300, size=(h, w)).round(2)
+    final.ravel()[rng.permutation(h * w)[n_valid:]] = GAP
+    extra = generator.zone_raster("hg", h, w).astype(float)
+    return final, tensor, extra
+
+
+def test_small_biome_fallback_bit_equals_oracle(monkeypatch):
+    """The batched small-biome fallback (one gather, one distance, one
+    stable argsort per block) fills and scores every pixel exactly as
+    the per-pixel oracle, whole, in a gap slice and at a non-zero
+    coord_offset."""
+    final, tensor, extra = _high_gap_scene(104)
+    gaps = np.argwhere(final == GAP)
+    assert len(gaps) >= 0.9 * final.size
+    fallback = []
+    real = B._random_nearest_batched
+
+    def spy(final, gaps, sel, *args, **kwargs):
+        fallback.append(len(sel))
+        return real(final, gaps, sel, *args, **kwargs)
+
+    monkeypatch.setattr(B, "_random_nearest_batched", spy)
+    kw = dict(extra=extra, predictor_configuration="Biome",
+              hyperparameters="Custom", params={"n_neighbors": 5}, seed=13)
+    for offset in [(0, 0), (37, 5)]:
+        want_m, want_s = oracles.gapfill_image_oracle(
+            final, tensor, extra, 13, coord_offset=offset)
+        fallback.clear()
+        got_m, got_s = B.fill_image_knn(final, tensor, coord_offset=offset,
+                                        **kw)
+        assert sum(fallback) > 0.8 * len(gaps)
+        assert np.array_equal(got_m, want_m, equal_nan=True)
+        assert len(got_s) == len(gaps)
+        assert np.array_equal(np.asarray(got_s), np.asarray(want_s))
+        lo, hi = 200, 600
+        part_m, part_s = B.fill_image_knn(final, tensor, coord_offset=offset,
+                                          gap_slice=(lo, hi), **kw)
+        sel = gaps[lo:hi]
+        assert np.array_equal(part_m[sel[:, 0], sel[:, 1]],
+                              want_m[sel[:, 0], sel[:, 1]], equal_nan=True)
+        # no skip px in the scene: one score per gap px, in scan order
+        assert np.array_equal(np.asarray(part_s), np.asarray(want_s[lo:hi]))
+
+
+def test_small_biome_fallback_needs_101_valid_px():
+    """An image with fewer than 101 valid px cannot draw the fallback's
+    101 random predictors: ``select_random``'s ValueError still stops
+    it."""
+    final, tensor, extra = _high_gap_scene(100)
+    with pytest.raises(ValueError, match="needs 101 valid pixels"):
+        B.fill_image_knn(final, tensor, extra=extra,
+                         predictor_configuration="Biome",
+                         hyperparameters="Custom",
+                         params={"n_neighbors": 5}, seed=13)

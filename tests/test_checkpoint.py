@@ -95,9 +95,9 @@ def test_gapfill_balanced_checkpointed_bounded(spark, tmp_path):
 
 def test_gapfill_balanced_checkpointed_ships_batch_sites_only(
         spark, tmp_path, monkeypatch):
-    """Each batch collects the history stacks of its own inputs' sites
-    only, not of every site in the table; the output stays
-    bit-identical to one ``gapfill`` call."""
+    """Each batch's ``gapfill`` call receives the history rows of its
+    own inputs' sites only, not of every site in the table; the output
+    stays bit-identical to one ``gapfill`` call."""
     from ssgp_toolbox_spark.operators import gapfill, stats
 
     df = generator.images_df(spark, sites=("vlad", "stp"), n_history=4,
@@ -111,14 +111,14 @@ def test_gapfill_balanced_checkpointed_ships_batch_sites_only(
     assert len(oneshot) == 2
 
     seen = []
-    real_pack = gapfill.pack_history
+    real_gapfill = gapfill.gapfill
 
-    def spy(history):
-        seen.append(sorted(r["site"] for r in
-                           history.select("site").distinct().collect()))
-        return real_pack(history)
+    def spy(images, *args, **kwargs):
+        seen.append(sorted(r["site"] for r in images.filter(
+            "role = 'history'").select("site").distinct().collect()))
+        return real_gapfill(images, *args, **kwargs)
 
-    monkeypatch.setattr(gapfill, "pack_history", spy)
+    monkeypatch.setattr(gapfill, "gapfill", spy)
     table = str(tmp_path / "gf_sites")
     sids = gapfill.gapfill_balanced_checkpointed(
         imgs, table, batch_rows=1, params={"n_neighbors": 5})
@@ -161,3 +161,29 @@ def test_gapfill_balanced_checkpointed_skips_inputs_without_stack(
     assert len(sids) == 2
     assert {r["image_id"]: (bytes(r["bytes"]), r["filled_px"])
             for r in img_io.load(spark, table).collect()} == oneshot
+
+
+def test_batch_that_commits_nothing_raises(spark, inputs, tmp_path,
+                                           monkeypatch):
+    """A ``compute`` that emits none of its batch's targets would get
+    the same batch back forever; the loop raises after that batch's
+    commit, naming its ids."""
+    commits = []
+    real_append = img_io.append_snapshot
+
+    def bounded_append(df, table_path, snapshot_id=None):
+        commits.append(snapshot_id)
+        assert len(commits) <= 3, "the batch loop did not end"
+        return real_append(df, table_path, snapshot_id)
+
+    monkeypatch.setattr(img_io, "append_snapshot", bounded_append)
+    ids = sorted(r["image_id"] for r in inputs.collect())
+    table = str(tmp_path / "stuck")
+    with pytest.raises(RuntimeError) as err:
+        checkpoint.run_checkpointed(
+            inputs, lambda df: nn_fill.nn_fill(df).limit(0), spark, table,
+            batch_rows=1)
+    assert len(commits) == 1
+    assert sum(i in str(err.value) for i in ids) == 1, err.value
+    # the empty snapshot leaves the table readable
+    assert img_io.committed_ids(spark, table).count() == 0

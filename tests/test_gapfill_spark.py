@@ -143,3 +143,94 @@ def test_gapfill_balanced_forwards_knn_biome_custom(monkeypatch):
         ("imgs", "Knn", "Biome", "Custom", None, 101, None, 512),
         ("imgs", "Lasso", "Random", "RandomGridSearch", {"n_neighbors": 3},
          50, {"gap": -1.0}, 64)]
+
+
+def _new_jobs(spark, seen):
+    """(stage count, shuffle bytes written) of each Spark job finished
+    since the ids in ``seen``, which is updated; read from the
+    application's status store once the listener bus has drained."""
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store = jsc.statusStore()
+    jobs = store.jobsList(None)
+    out = []
+    for job in sorted((jobs.apply(i) for i in range(jobs.size())),
+                      key=lambda j: j.jobId()):
+        if job.jobId() in seen:
+            continue
+        seen.add(job.jobId())
+        ids = job.stageIds()
+        written = 0
+        for s in (ids.apply(i) for i in range(ids.size())):
+            attempts = store.stageData(s, False, None, False, None)
+            written += sum(attempts.apply(a).shuffleWriteBytes()
+                           for a in range(attempts.size()))
+        out.append((ids.size(), written))
+    return out
+
+
+def test_unsplit_call_runs_one_side_input_job_and_one_fill_job(spark):
+    """Without a split image, ``gapfill`` reads its side inputs (history,
+    extra layers, viable inputs) in one job and fills in one more, and
+    neither job exchanges data."""
+    df = generator.images_df(spark, sites=("stp", "vlad"), n_history=3,
+                             n_inputs=2, shape=(30, 24))
+    images = stats.with_stats(img_io.with_id_parts(df)).cache()
+    counts = {r["image_id"]: r["gap_count"] for r in images.filter(
+        "role = 'input' AND gap_count > 0").collect()}
+    chunk_px = max(counts.values())
+    assert gapfill.plan_fill(counts, spark.sparkContext.defaultParallelism,
+                             chunk_px)[1] == set()
+    seen = set()
+    _new_jobs(spark, seen)
+
+    out = gapfill.gapfill(images, "Knn", "Biome", "Custom",
+                          {"n_neighbors": 5}, chunk_px=chunk_px)
+    side = _new_jobs(spark, seen)
+    rows = out.collect()
+    fill = _new_jobs(spark, seen)
+    assert side == [(1, 0)]
+    assert fill == [(1, 0)]
+    assert {r["image_id"] for r in rows if r["status"] == "filled"} \
+        == set(counts)
+
+
+def test_side_input_stacks_follow_pack_history_order(spark):
+    """The driver-built stacks keep ``pack_history``'s
+    ``sort_array(struct(ts, bytes, h, w, fmt))`` order: ts ascending,
+    nulls first, ties broken by the payload bytes."""
+    df = generator.images_df(spark, sites=("stp",), n_history=5,
+                             n_inputs=1, shape=(20, 16))
+    images = stats.with_stats(img_io.with_id_parts(df))
+    hist = images.filter("role = 'history'").orderBy("image_id").collect()
+    # two layers share the third layer's ts, one has no ts
+    tie_ts, null_id = hist[2]["ts"], hist[4]["image_id"]
+    images = images.withColumn(
+        "ts", F.when(F.col("image_id") == hist[0]["image_id"], F.lit(tie_ts))
+        .when(F.col("image_id") == null_id, F.lit(None))
+        .otherwise(F.col("ts"))).cache()
+    want = [(bytes(l["bytes"]), l["h"], l["w"], l["fmt"])
+            for l in gapfill.pack_history(images.filter(
+                "role = 'history'")).collect()[0]["hist_layers"]]
+    sites, _inputs = gapfill._collect_side_inputs(
+        images, F.lit(False), biome=False)
+    assert sites["stp"][0] == want
+    assert want[0][0] == bytes(hist[4]["bytes"])  # the null ts leads
+
+
+def test_two_extra_layers_for_one_site_raise(spark):
+    """The reference loads exactly one Extra/Extra.npy per run
+    (gapfiller.py:830-835); a site with two extra rows is an error,
+    not an arbitrary pick."""
+    rows = generator.site_rows("stp", n_history=3, n_inputs=1,
+                               shape=(30, 24))
+    extra = next(r for r in rows if "/extra/" in r[0])
+    second = (extra[0].replace("T000000", "T120000"),) + extra[1:]
+    images = stats.with_stats(img_io.with_id_parts(spark.createDataFrame(
+        rows + [second], schema=generator.IMAGE_COLUMNS)))
+    with pytest.raises(ValueError, match="'stp'"):
+        gapfill.gapfill(images, "Knn", "Biome", "Custom",
+                        {"n_neighbors": 5})
+    # the extra layer is not read outside Biome
+    assert gapfill.gapfill(images, "Knn", "Random", "Custom",
+                           {"n_neighbors": 5}).count() == 1
