@@ -11,10 +11,17 @@ manifest gives the two Iceberg properties the engine relies on:
   is atomically renamed into ``_snapshots/``; readers union the
   manifests. This is the resumable-checkpoint primitive (north_rule):
   restart = read manifest list, anti-join already-committed image_ids.
-- **partition pruning** — data is laid out by ``(site, role)``
-  (directory-level) so Catalyst prunes partitions for predicates on
-  those columns; per-file min/max stats on ``ts`` come free from
-  parquet footers.
+- **pruning** — ``role`` is the one directory-level partition column,
+  so Catalyst prunes directories for predicates on it. ``site`` is a
+  data column: each write task sorts its rows by ``(role, site)``, so
+  a file's row groups hold narrow ``site`` ranges and parquet's min/max
+  statistics skip the row groups a ``site`` predicate excludes
+  (clustering instead of high-cardinality directories, as in Raptor,
+  VLDB 2019). A commit writes at most one file per (write task, role),
+  not one per (task, site, role): on ``nn_snapshot``'s 30 sites over 4
+  tasks, 4 files instead of 32. Tables committed in the older
+  ``(site, role)`` directory layout stay readable, because ``load``
+  unions snapshots by column name.
 
 On a real cluster with Iceberg available, ``writeTo(...).append()``
 replaces this module 1:1 — the operator layer only uses
@@ -49,9 +56,11 @@ def append_snapshot(df: DataFrame, table_path: str, snapshot_id: str | None = No
     publish a manifest. Returns the snapshot id."""
     sid = snapshot_id or f"snap-{int(time.time() * 1000)}-{uuid.uuid4().hex[:8]}"
     data_dir = os.path.join(table_path, "data", sid)
-    (with_id_parts(df) if "site" not in df.columns else df).write.mode(
-        "errorifexists"
-    ).partitionBy("site", "role").parquet(data_dir)
+    # the (role, site) sort satisfies the writer's own sort by the
+    # partition column, so it adds no second sort
+    (with_id_parts(df) if "site" not in df.columns else df) \
+        .sortWithinPartitions("role", "site") \
+        .write.mode("errorifexists").partitionBy("role").parquet(data_dir)
     os.makedirs(os.path.join(table_path, SNAPDIR), exist_ok=True)
     manifest = {"snapshot_id": sid, "data_dir": data_dir, "ts": time.time()}
     tmp = os.path.join(table_path, SNAPDIR, f".{sid}.tmp")
@@ -91,7 +100,9 @@ def load(spark: SparkSession, table_path: str,
     if not snaps:
         raise FileNotFoundError(f"no committed rows under {table_path}")
     # each snapshot dir is partition-discovered independently, then
-    # unioned — Catalyst still prunes (site, role) per subtree
+    # unioned by name: Catalyst prunes role directories per subtree and
+    # pushes site predicates to the parquet scan (min/max stats); an
+    # older snapshot whose site is a directory column unions alike
     out = None
     for s in snaps:
         df = spark.read.parquet(s["data_dir"])

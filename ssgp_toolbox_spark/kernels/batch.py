@@ -8,8 +8,9 @@ expressible as dense tensor algebra across *all* gap pixels at once:
   image (the reference re-runs argwhere over the full raster per
   pixel, gapfiller.py:511); 40-nearest per pixel is one stable
   argsort over a (pixels × candidates) distance matrix; the
-  small-biome fallback keeps only its seeded 101-of-valid draws per
-  pixel and runs the gather, distances and argsort over blocks;
+  small-biome fallback draws each pixel's seeded 101-of-valid sample
+  from one reused generator (``frame.pixel_draws``) and runs the
+  gather, distances and argsort over blocks;
 - frame assembly: one fancy-index gather
   ``tensor[:, coords]`` → (layers, pixels, predictors);
 - fill + 3-fold CV: pixels grouped by their target-validity pattern
@@ -243,24 +244,17 @@ def _random_nearest_batched(final, gaps, sel, out, seed, offset,
                             sv: Sentinels):
     """The small-biome fallback of ``FR.select_biome`` for gap pixels
     ``gaps[sel]``, written into ``out[sel, :-1]``: 101 random valid
-    coords per pixel, then their 40 nearest. Only the draws stay per
-    pixel (each pixel's own seeded permutation, unchanged); the gather,
-    the f64 distances and the stable argsort run over blocks of 1024
-    pixels (~1.6 MB of gathered coords), with ``FR._k_nearest``'s
-    (distance, index) tie order."""
-    # the valid set is pixel-independent: one scan per call; the
-    # permutations are per-pixel RNG state and stay per pixel
-    valid = np.argwhere((final != sv.gap) & (final != sv.skip)
-                        & (final != sv.nodata))
-    FR.check_random_pool(len(valid))
-    dr, dc = offset
+    coords per pixel, then their 40 nearest. The draws are each pixel's
+    own seeded permutation (``FR.pixel_draws``, bit-identical to
+    ``FR._pixel_rng``); the gather, the f64 distances and the stable
+    argsort run over blocks of 1024 pixels (~1.6 MB of gathered
+    coords), with ``FR._k_nearest``'s (distance, index) tie order."""
+    # the valid set is pixel-independent: one scan per call
+    valid = FR.random_pool(final, sv)
     for lo in range(0, len(sel), 1024):
         blk = sel[lo : lo + 1024]
         pts = gaps[blk]  # (s, 2)
-        picks = np.stack([
-            FR._pixel_rng(seed, r + dr, c + dc).permutation(len(valid))[
-                :FR.N_RANDOM]
-            for r, c in pts.tolist()])
+        picks = FR.pixel_draws(seed, pts + np.asarray(offset), len(valid))
         rand = valid[picks]  # (s, 101, 2)
         d = np.sqrt(((rand - pts[:, None, :]) ** 2).sum(-1)
                     .astype(np.float64))
@@ -284,11 +278,12 @@ def select_coords(final: np.ndarray, extra: np.ndarray | None,
         return _biome_coords_batched(final, extra, gaps, seed, coord_offset,
                                      sv)
     if predictor_configuration == "Random":
-        return np.stack([
-            FR.select_random(final, (int(r), int(c)),
-                             FR._pixel_rng(seed, int(r), int(c)), sv)
-            for r, c in gaps
-        ])
+        # FR.select_random per pixel, with one scan of the valid set
+        valid = FR.random_pool(final, sv)
+        coords = np.empty((P, FR.N_RANDOM + 1, 2), dtype=np.int64)
+        coords[:, :-1] = valid[FR.pixel_draws(seed, gaps, len(valid))]
+        coords[:, -1] = gaps
+        return coords
     if predictor_configuration == "All":
         base = np.argwhere(final != sv.gap)
         coords = np.empty((P, len(base) + 1, 2), dtype=np.int64)

@@ -41,12 +41,93 @@ N_NEAREST = 40
 BIOME_MIN = 41
 
 
+def _pixel_seed(seed: int, coord_row: int, coord_col: int) -> int:
+    """The per-(image, pixel) seed, in [0, 2**63 - 1) (Python ints, so
+    no intermediate wraps)."""
+    return (seed * 1_000_003 + coord_row * 8191 + coord_col) % (2**63 - 1)
+
+
 def _pixel_rng(seed: int, coord_row: int, coord_col: int) -> np.random.Generator:
     """Deterministic per-(image, pixel) generator so task retries and
     resume are bit-stable (C10; reference uses unseeded ``random``)."""
-    return np.random.default_rng(
-        (seed * 1_000_003 + coord_row * 8191 + coord_col) % (2**63 - 1)
-    )
+    return np.random.default_rng(_pixel_seed(seed, coord_row, coord_col))
+
+
+# numpy's SeedSequence hash constants (numpy/random/bit_generator.pyx)
+# and the PCG64 LCG multiplier (numpy/random/src/pcg64/pcg64.h)
+_SS_INIT_A, _SS_MULT_A = 0x43B0D7E5, 0x931E8875
+_SS_INIT_B, _SS_MULT_B = 0x8B51F9DD, 0x58F38DED
+_SS_MIX_L, _SS_MIX_R = 0xCA01F9DD, 0x4973F715
+_PCG_MULT = (2549297995355413924 << 64) | 4865540595714422341
+_M32, _M128 = 0xFFFFFFFF, (1 << 128) - 1
+
+
+def _seed_words(seeds: np.ndarray) -> np.ndarray:
+    """``SeedSequence(s).generate_state(4, np.uint64)`` for every ``s``
+    of the uint64 array ``seeds`` in one vectorized uint32 pass:
+    (P, 4) uint64. The hash constants step the same way for every
+    seed, so each lane runs numpy's exact sequence. A seed below 2**32
+    has one entropy word where this uses two, but the pool pads
+    missing words with zeros, so a zero high word hashes the same."""
+    words = [(seeds & np.uint64(_M32)).astype(np.uint32),
+             (seeds >> np.uint64(32)).astype(np.uint32)]
+    words += [np.zeros_like(words[0])] * 2  # pool size 4
+    const = _SS_INIT_A
+
+    def hashmix(v):
+        nonlocal const
+        v = v ^ np.uint32(const)
+        const = (const * _SS_MULT_A) & _M32
+        v = v * np.uint32(const)
+        return v ^ (v >> np.uint32(16))
+
+    with np.errstate(over="ignore"):
+        pool = [hashmix(v) for v in words]
+        for i_src in range(4):
+            for i_dst in range(4):
+                if i_src != i_dst:
+                    m = (np.uint32(_SS_MIX_L) * pool[i_dst]
+                         - np.uint32(_SS_MIX_R) * hashmix(pool[i_src]))
+                    pool[i_dst] = m ^ (m >> np.uint32(16))
+        state, const = [], _SS_INIT_B
+        for i in range(8):
+            v = pool[i % 4] ^ np.uint32(const)
+            const = (const * _SS_MULT_B) & _M32
+            v = v * np.uint32(const)
+            state.append((v ^ (v >> np.uint32(16))).astype(np.uint64))
+    # little-endian pairs of uint32 words make each uint64
+    return np.stack([state[2 * j] | (state[2 * j + 1] << np.uint64(32))
+                     for j in range(4)], axis=1)
+
+
+def pixel_draws(seed: int, coords: np.ndarray, n: int,
+                k: int = N_RANDOM) -> np.ndarray:
+    """``_pixel_rng(seed, r, c).permutation(n)[:k]`` for every (r, c)
+    of ``coords`` (P, 2): (P, min(k, n)) int64, bit-identical."""
+    return seeded_draws([_pixel_seed(seed, r, c) for r, c in coords.tolist()],
+                        n, k)
+
+
+def seeded_draws(seeds, n: int, k: int = N_RANDOM) -> np.ndarray:
+    """``np.random.default_rng(s).permutation(n)[:k]`` for every seed
+    ``s`` in [0, 2**64): (len(seeds), min(k, n)) int64, bit-identical.
+    Instead of a new generator per seed (~20 µs of SeedSequence hashing
+    and PCG64 set-up), the seed words of all seeds are hashed at once,
+    each PCG64 state is derived as ``pcg64_set_seed`` does (128-bit
+    Python ints) and set on one reused generator before its draw."""
+    gen = np.random.Generator(np.random.PCG64(0))
+    bitgen = gen.bit_generator
+    out = np.empty((len(seeds), min(k, n)), dtype=np.int64)
+    words = _seed_words(np.array(seeds, dtype=np.uint64).reshape(-1))
+    for i, (s_hi, s_lo, i_hi, i_lo) in enumerate(words.tolist()):
+        inc = ((((i_hi << 64) | i_lo) << 1) | 1) & _M128
+        # srandom: state = 0; step; state += seed; step
+        state = ((inc + ((s_hi << 64) | s_lo)) * _PCG_MULT + inc) & _M128
+        bitgen.state = {"bit_generator": "PCG64",
+                        "state": {"state": state, "inc": inc},
+                        "has_uint32": 0, "uinteger": 0}
+        out[i] = gen.permutation(n)[:k]
+    return out
 
 
 def cv_seed(seed: int, n_train: int) -> int:
@@ -76,21 +157,23 @@ def select_random(final: np.ndarray, coord: tuple[int, int],
     Ours draws a seeded permutation of the valid set: same contract
     (101 distinct valid, uniform), deterministic per pixel, O(valid),
     and raises instead of hanging on infeasible images."""
-    valid = np.argwhere((final != sv.gap) & (final != sv.skip)
-                        & (final != sv.nodata))
-    check_random_pool(len(valid))
+    valid = random_pool(final, sv)
     chosen = valid[rng.permutation(len(valid))[:N_RANDOM]]
     return np.vstack([chosen, [coord]])
 
 
-def check_random_pool(n_valid: int) -> None:
-    """Raise when an image has fewer than ``N_RANDOM`` valid pixels to
-    draw from (``select_random``)."""
-    if n_valid < N_RANDOM:
+def random_pool(final: np.ndarray,
+                sv: Sentinels = DEFAULT_SENTINELS) -> np.ndarray:
+    """The valid coords ``select_random`` draws from, in row-major
+    order; raises when there are fewer than ``N_RANDOM`` of them."""
+    valid = np.argwhere((final != sv.gap) & (final != sv.skip)
+                        & (final != sv.nodata))
+    if len(valid) < N_RANDOM:
         raise ValueError(
             f"Random predictor selection needs {N_RANDOM} valid pixels, "
-            f"image has {n_valid} (reference would loop forever here)"
+            f"image has {len(valid)} (reference would loop forever here)"
         )
+    return valid
 
 
 def _k_nearest(coords: np.ndarray, coord: tuple[int, int], k: int) -> np.ndarray:

@@ -73,6 +73,10 @@ def _stable_seed(image_id: str) -> int:
     return zlib.crc32(image_id.encode()) & 0x7FFFFFFF
 
 
+_MANY_EXTRAS = ("site '%s' has more than one role='extra' row; a site "
+                "needs exactly one extra (biome) layer")
+
+
 def pack_history(history: DataFrame) -> DataFrame:
     """One row per site: chronologically sorted temporal stack
     (reference O1 sort, gapfiller.py:91 + tensor build 846-848), one
@@ -86,8 +90,16 @@ def pack_history(history: DataFrame) -> DataFrame:
 
 
 def pack_extra(extras: DataFrame) -> DataFrame:
+    """One row per site: its one ``role='extra'`` layer. A site with
+    more than one extra row fails the query, naming the site, as
+    ``_collect_side_inputs`` raises for ``gapfill``: the reference
+    loads exactly one ``Extra/Extra.npy`` (gapfiller.py:830-835)."""
     layer = F.struct("bytes", "h", "w", "fmt")
-    return extras.groupBy("site").agg(F.first(layer).alias("extra_layer"))
+    packed = extras.groupBy("site").agg(
+        F.count(F.lit(1)).alias("n_extra"), F.first(layer).alias("extra_layer"))
+    one = F.when(F.col("n_extra") > 1, F.raise_error(F.format_string(
+        _MANY_EXTRAS, F.col("site")))).otherwise(F.col("extra_layer"))
+    return packed.select("site", one.alias("extra_layer"))
 
 
 def _fill_kernel(final, tensor, extra, method, predictor_configuration,
@@ -383,9 +395,7 @@ def _collect_side_inputs(images: DataFrame, viable, biome: bool):
                 (r["ts"], bytes(r["bytes"]), r["h"], r["w"], r["fmt"]))
         elif r["role"] == "extra":
             if r["site"] in extras:
-                raise ValueError(
-                    f"site {r['site']!r} has more than one role='extra' "
-                    "row; Biome needs exactly one extra layer per site")
+                raise ValueError(_MANY_EXTRAS % r["site"])
             extras[r["site"]] = (bytes(r["bytes"]), int(r["h"]),
                                  int(r["w"]), r["fmt"])
     sites = {}

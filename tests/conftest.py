@@ -30,3 +30,21 @@ def mixed_stack_images(spark):
         rows, schema=generator.IMAGE_COLUMNS))).cache()
     yield images
     images.unpersist()
+
+
+@pytest.fixture()
+def two_extra_images(spark):
+    """Site stp (30x24, 3 history layers, 1 input) with two
+    ``role='extra'`` rows; the reference loads exactly one
+    Extra/Extra.npy per run (gapfiller.py:830-835)."""
+    from ssgp_toolbox_spark import generator
+    from ssgp_toolbox_spark.io import images as img_io
+    from ssgp_toolbox_spark.operators import stats
+
+    rows = generator.site_rows("stp", n_history=3, n_inputs=1,
+                               shape=(30, 24))
+    extra = next(r for r in rows if "/extra/" in r[0])
+    second = (extra[0].replace("T000000", "T120000"),) + extra[1:]
+    assert second[0] != extra[0]
+    return stats.with_stats(img_io.with_id_parts(spark.createDataFrame(
+        rows + [second], schema=generator.IMAGE_COLUMNS)))

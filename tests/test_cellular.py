@@ -130,3 +130,10 @@ def test_cloud_expand_spark(spark):
 
     exp = ca.cellular_expand(m_in, biome, iters=2, seed=_stable_seed(r["image_id"]))
     assert np.array_equal(m, exp)
+
+
+def test_cloud_expand_rejects_two_extra_layers(two_extra_images):
+    """A site with two ``role='extra'`` rows fails the query, naming the
+    site, instead of expanding with an arbitrary one of them."""
+    with pytest.raises(Exception, match="site 'stp' has more than one"):
+        ca_op.cloud_expand(two_extra_images, iters=1).collect()

@@ -56,9 +56,11 @@ def test_uncommitted_data_invisible(spark, inputs, tmp_path):
     table = str(tmp_path / "out_atomic")
     filled = nn_fill.nn_fill(inputs)
     img_io.append_snapshot(filled.limit(1), table)
-    # fake a torn write: data dir exists, no manifest
-    orphan = os.path.join(table, "data", "snap-orphan")
-    img_io.with_id_parts(filled.limit(2)).write.partitionBy("site", "role").parquet(orphan)
+    # fake a torn write: the data dir is written in the table's own
+    # layout, then its manifest is taken back
+    img_io.append_snapshot(filled.limit(2), table, snapshot_id="snap-orphan")
+    os.remove(os.path.join(table, img_io.SNAPDIR, "snap-orphan.json"))
+    assert os.path.isdir(os.path.join(table, "data", "snap-orphan"))
     assert img_io.load(spark, table).count() == 1
 
 

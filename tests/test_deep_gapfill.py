@@ -112,3 +112,15 @@ def test_deep_plan_has_no_history_stacking(spark, images):
     for line in plan.splitlines():
         if "collect_list" in line:
             assert "bytes" not in line, line
+
+
+def test_deep_rejects_two_extra_layers(two_extra_images):
+    """Under Biome a site with two ``role='extra'`` rows fails the
+    query, naming the site, as ``gapfill`` does; other modes do not
+    read the extra layer."""
+    with pytest.raises(Exception, match="site 'stp' has more than one"):
+        deep_gapfill.gapfill_deep(two_extra_images, "Knn", "Biome", "Custom",
+                                  {"n_neighbors": 5}).collect()
+    assert deep_gapfill.gapfill_deep(two_extra_images, "Knn", "Random",
+                                     "Custom",
+                                     {"n_neighbors": 5}).count() == 1

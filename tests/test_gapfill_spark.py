@@ -218,16 +218,11 @@ def test_side_input_stacks_follow_pack_history_order(spark):
     assert want[0][0] == bytes(hist[4]["bytes"])  # the null ts leads
 
 
-def test_two_extra_layers_for_one_site_raise(spark):
+def test_two_extra_layers_for_one_site_raise(two_extra_images):
     """The reference loads exactly one Extra/Extra.npy per run
     (gapfiller.py:830-835); a site with two extra rows is an error,
     not an arbitrary pick."""
-    rows = generator.site_rows("stp", n_history=3, n_inputs=1,
-                               shape=(30, 24))
-    extra = next(r for r in rows if "/extra/" in r[0])
-    second = (extra[0].replace("T000000", "T120000"),) + extra[1:]
-    images = stats.with_stats(img_io.with_id_parts(spark.createDataFrame(
-        rows + [second], schema=generator.IMAGE_COLUMNS)))
+    images = two_extra_images
     with pytest.raises(ValueError, match="'stp'"):
         gapfill.gapfill(images, "Knn", "Biome", "Custom",
                         {"n_neighbors": 5})

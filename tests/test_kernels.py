@@ -102,6 +102,29 @@ def test_random_sample_count_and_determinism():
     assert len({tuple(x) for x in c1[:-1]}) == 101
 
 
+@pytest.mark.parametrize("n", [101, 150, 1000, 4156])
+def test_seeded_draws_equal_default_rng(n):
+    """One reused generator with a hand-derived PCG64 state draws
+    exactly what a fresh ``default_rng(s)`` draws, at the edges of the
+    one- and two-word seed forms and at random seeds."""
+    seeds = [0, 1, 2**32 - 1, 2**32, 2**63 - 2] + [
+        int(s) for s in np.random.default_rng(n).integers(0, 2**63 - 1, 40)]
+    want = np.stack([np.random.default_rng(s).permutation(n)[:101]
+                     for s in seeds])
+    got = FR.seeded_draws(seeds, n)
+    assert got.dtype == np.int64 and np.array_equal(got, want)
+
+
+def test_pixel_draws_equal_pixel_rng():
+    """``pixel_draws`` keys each pixel exactly as ``_pixel_rng`` does,
+    including image seeds whose ``seed * 1_000_003`` leaves int64."""
+    coords = np.array([[0, 0], [3, 4], [108, 61], [1500, 1499]])
+    for seed in (0, 7, 2**62 + 11, 2**63 - 2):
+        want = np.stack([FR._pixel_rng(seed, int(r), int(c)).permutation(300)[:101]
+                         for r, c in coords])
+        assert np.array_equal(FR.pixel_draws(seed, coords, 300), want)
+
+
 def test_biome_selection_branches(small_scene):
     tensor, final = small_scene
     extra = generator.zone_raster("k", 24, 18, n_zones=4).astype(float)

@@ -145,7 +145,8 @@ def test_plan_fill_properties(slots, chunk_px, seed):
 
 def test_parquet_scan_pushdown(spark, tmp_path):
     """Viability predicates must reach the parquet scan (PushedFilters)
-    and partition values must prune (site/role partition columns)."""
+    and role values must prune directories (``role`` is the partition
+    column; ``site`` is a data column, tests/test_table_layout.py)."""
     table = str(tmp_path / "imgs")
     df = stats.with_stats(img_io.with_id_parts(
         generator.images_df(spark, sites=("stp", "vlad"), n_history=2, n_inputs=1)
