@@ -37,6 +37,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 SNAPDIR = "_snapshots"
 
@@ -105,9 +106,25 @@ def load(spark: SparkSession, table_path: str,
     # older snapshot whose site is a directory column unions alike
     out = None
     for s in snaps:
-        df = spark.read.parquet(s["data_dir"])
+        df = _read_snapshot(spark, s["data_dir"])
         out = df if out is None else out.unionByName(df)
     return out
+
+
+def _read_snapshot(spark: SparkSession, data_dir: str) -> DataFrame:
+    """One snapshot dir, partition-discovered. Discovery infers a
+    directory value made of digits (``site=0042`` in the older layout)
+    as a number, and the union would then coerce every snapshot's
+    ``site`` to it; such a snapshot is read again with ``site`` and
+    ``role`` typed as text, which keeps each value as written. A
+    snapshot in the current layout reads once."""
+    df = spark.read.parquet(data_dir)
+    text = T.StructType([
+        T.StructField(f.name, T.StringType(), f.nullable)
+        if f.name in ("site", "role") else f for f in df.schema.fields])
+    if text == df.schema:
+        return df
+    return spark.read.schema(text).parquet(data_dir)
 
 
 def _has_data(data_dir: str) -> bool:
@@ -123,8 +140,6 @@ def committed_ids(spark: SparkSession, table_path: str) -> DataFrame:
     try:
         return load(spark, table_path).select("image_id").distinct()
     except FileNotFoundError:
-        from pyspark.sql import types as T
-
         return spark.createDataFrame(
             [], T.StructType([T.StructField("image_id", T.StringType())])
         )

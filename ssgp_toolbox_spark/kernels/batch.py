@@ -303,22 +303,21 @@ def fill_image_knn(final: np.ndarray, tensor: np.ndarray,
                    coord_offset: tuple[int, int] = (0, 0),
                    sv: Sentinels = DEFAULT_SENTINELS):
     """Batched equivalent of frame.fill_image(method='Knn', ...).
-    Custom mode only (the grid-search modes go through the generic
-    path). Returns (filled, scores) with scores in gap scan order.
+    Custom mode only: any other ``hyperparameters`` raises ValueError
+    (the grid-search modes go through ``frame.fill_image``). Returns
+    (filled, scores) with scores in gap scan order.
 
     ``gap_slice=(lo, hi)`` fills only gap pixels lo..hi-1 of the
     row-major gap scan while keeping the *full image* as selection
     context — per-pixel seeding makes chunked fills bit-identical to
     the whole-image fill, which is what lets the balanced gapfill
     operator split skewed images across tasks (north_rule salting)."""
+    if hyperparameters != "Custom":
+        raise ValueError(f"fill_image_knn runs Custom hyperparameters only, "
+                         f"not {hyperparameters!r}: use frame.fill_image")
     params = dict(params or {})
     k = int(params.get("n_neighbors", 5))
     weights = params.get("weights", "uniform")
-    if hyperparameters != "Custom":
-        return FR.fill_image(final, tensor, extra=extra, method="Knn",
-                             predictor_configuration=predictor_configuration,
-                             hyperparameters=hyperparameters, params=params,
-                             seed=seed, sv=sv)
     gaps = np.argwhere(final == sv.gap)
     if gap_slice is not None:
         gaps = gaps[gap_slice[0] : gap_slice[1]]

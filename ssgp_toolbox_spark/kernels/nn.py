@@ -8,15 +8,12 @@ the fill set and restores them from the pristine copy afterwards
 (gapfiller.py:938-962), so only true gaps take a value here.
 
 scipy.interpolate.griddata(method='nearest') is a cKDTree 1-NN query.
-Two exact numpy forms replace it:
-
-- ``nn_fill_values``, brute force over a point cloud, O(targets ×
-  points): halo windows of the tiled fill, and the reference the tests
-  compare the grid form against;
-- ``nn_lookup_grid``, for whole rasters: a per-row key table built once
-  per call in O(H·W + W²) (nearest valid row per column, packed with
-  the row distance into an int64 key), then one gather, add and argmin
-  over W per target, in cache-sized chunks of targets.
+One exact numpy form replaces it, ``nn_lookup_grid``: a per-row key
+table built once per call in O(H·W + W²) (nearest valid row per column,
+packed with the row distance into an int64 key), then one gather, add
+and argmin over W per target, in cache-sized chunks of targets. The
+brute-force point-cloud search it is tested against lives in
+``tests/oracles.py``.
 """
 
 from __future__ import annotations
@@ -26,28 +23,6 @@ import numpy as np
 from ssgp_toolbox_spark.sentinels import DEFAULT_SENTINELS, Sentinels
 
 MIN_VALID = 10  # reference viability threshold for EP2 (gapfiller.py:924-929)
-
-
-def nn_fill_values(points: np.ndarray, values: np.ndarray,
-                   targets: np.ndarray, chunk: int = 1024,
-                   return_d2: bool = False):
-    """1-NN lookup over an arbitrary point cloud: nearest of
-    ``points`` for each of ``targets``, ties broken by first index
-    (stable argmin). O(targets × points) — used for halo-window point
-    clouds (tiled_fill) and as the small-scale oracle-compatible path;
-    dense rasters use ``nn_lookup_grid`` below. ``return_d2`` also
-    returns each target's nearest squared distance (the tiled path's
-    exactness bound needs it)."""
-    out = np.empty(len(targets), dtype=values.dtype)
-    d2min = np.empty(len(targets), dtype=np.float64)
-    pts = points.astype(np.float64)
-    for s in range(0, len(targets), chunk):
-        t = targets[s : s + chunk].astype(np.float64)
-        d2 = ((t[:, None, :] - pts[None, :, :]) ** 2).sum(axis=2)
-        best = np.argmin(d2, axis=1)
-        out[s : s + chunk] = values[best]
-        d2min[s : s + chunk] = d2[np.arange(len(t)), best]
-    return (out, d2min) if return_d2 else out
 
 
 def _column_nearest(valid: np.ndarray):
@@ -62,9 +37,9 @@ def _column_nearest(valid: np.ndarray):
 
 def nn_lookup_grid(matrix: np.ndarray, valid: np.ndarray,
                    targets: np.ndarray, chunk: int = 1024) -> np.ndarray:
-    """Exact grid 1-NN with the same (distance, row-major index)
-    tie-break as the brute-force path, in O(W) per target instead of
-    O(valid).
+    """Exact grid 1-NN with the (distance, row-major index) tie-break
+    of a brute-force search over the valid pixels, in O(W) per target
+    instead of O(valid).
 
     The nearest valid pixel in column ``c`` for a target in row ``r``
     lies in ``rbest[r, c]``, the nearer of the closest valid rows above

@@ -1,4 +1,4 @@
-"""H3/S2-style hierarchical tile index + tile explode + ring halo.
+"""H3/S2-style hierarchical tile index + tile explode with halos.
 
 The h3 library is not available in this sandbox, so the engine ships
 its own deterministic cell index (same role as H3: fixed discrete
@@ -12,11 +12,9 @@ global grid, parent/child hierarchy, k-ring neighborhoods):
   (lon wraps, lat clamps) — the ring-neighbor halo join key set
   (SURVEY.md J3: kNN candidates restricted to same cell + ring-1).
 - **Pixel tiles**: per-image fixed blocks ``tile = (tx, ty)`` of size
-  ``T`` with an optional halo. ``tile_explode`` fans an image row out
-  into tile rows (the shuffle unit for the scale path), and
-  ``halo_keys`` emits the (tile, owner) pairs that co-locate each
-  tile with its 8 neighbors for halo exchange — implemented as a
-  plain DataFrame explode + equi-join, so Catalyst plans it.
+  ``T`` with an optional halo. ``explode_tiles_pdf`` fans an image
+  out into tile rows (the shuffle unit of the tiled operators) and
+  ``assemble_from_tiles`` stitches their cores back.
 
 UTM-zone arithmetic (reference C3, S3_L2_LST.py:66-88 duplicated in
 both MODIS preparators) is reproduced as a pure column expression.
@@ -178,25 +176,6 @@ def assemble_from_tiles(tiles: pd.DataFrame, h: int, w: int) -> np.ndarray:
             ri : ri + r.core_h, ci : ci + r.core_w
         ]
     return out
-
-
-def tile_neighbors_df(tiles_df: DataFrame) -> DataFrame:
-    """(image_id, tx, ty) → owner tile key rows for ring-1 halo
-    exchange, as a pure DataFrame explode + self-join key set. Each
-    tile row is duplicated to the 9 (owner_tx, owner_ty) keys of its
-    Moore neighborhood; grouping by the owner key then gives every
-    tile together with its 8 neighbors."""
-    offsets = F.array(*[
-        F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-        for dx in (-1, 0, 1) for dy in (-1, 0, 1)
-    ])
-    e = tiles_df.withColumn("_o", F.explode(offsets))
-    return (
-        e.withColumn("owner_tx", F.col("tx") + F.col("_o.dx"))
-        .withColumn("owner_ty", F.col("ty") + F.col("_o.dy"))
-        .drop("_o")
-        .filter((F.col("owner_tx") >= 0) & (F.col("owner_ty") >= 0))
-    )
 
 
 # ------------------------------------------------- histogram salting

@@ -496,6 +496,20 @@ def phash64_add_at(matrix, gap=GAP, skip=SKIP, nodata=NODATA):
     return int(val.astype(np.int64))
 
 
+def nn_fill_values(points, values, targets, chunk=1024):
+    """Brute-force 1-NN over a point cloud: the value of the nearest of
+    ``points`` for each of ``targets``, ties broken by first index
+    (stable argmin), O(targets × points). The reference the grid form
+    ``kernels/nn.nn_lookup_grid`` is compared against."""
+    out = np.empty(len(targets), dtype=values.dtype)
+    pts = points.astype(np.float64)
+    for s in range(0, len(targets), chunk):
+        t = targets[s : s + chunk].astype(np.float64)
+        d2 = ((t[:, None, :] - pts[None, :, :]) ** 2).sum(axis=2)
+        out[s : s + chunk] = values[np.argmin(d2, axis=1)]
+    return out
+
+
 def nn_fill_fast_oracle(m):
     """Same semantics as nn_fill_oracle (gapfiller.py:920-962) but the
     per-target search vectorized (argmin over the row-major valid

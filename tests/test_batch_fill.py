@@ -335,3 +335,12 @@ def test_small_biome_fallback_needs_101_valid_px():
                          predictor_configuration="Biome",
                          hyperparameters="Custom",
                          params={"n_neighbors": 5}, seed=13)
+
+
+def test_fill_image_knn_rejects_grid_search_modes(scene):
+    """Only Custom hyperparameters have a batched kernel; another mode
+    is an error, not a silent switch to the per-pixel path."""
+    final, tensor, extra = scene
+    with pytest.raises(ValueError, match="'RandomGridSearch'"):
+        B.fill_image_knn(final, tensor, extra=extra,
+                         hyperparameters="RandomGridSearch")

@@ -268,9 +268,9 @@ def test_key_values_rejects_lossy_fmt_tiled_and_stats(spark):
     png16 would otherwise count the DEFAULT codes (gap_count=0 →
     all images routed to passthrough, bypassing the fill operators'
     own guard, which only runs inside the viable-row mapInPandas);
-    tiled_gapfill/tiled_nn_fill would silently find zero gaps yet
-    report status='filled'."""
-    from ssgp_toolbox_spark.operators import tiled_fill, tiled_gapfill
+    tiled_gapfill would silently find zero gaps yet report
+    status='filled'."""
+    from ssgp_toolbox_spark.operators import tiled_gapfill
 
     imgs = img_io.with_id_parts(generator.images_df(
         spark, sites=("mini",), shape=(30, 20), n_history=2, n_inputs=1,
@@ -281,10 +281,5 @@ def test_key_values_rejects_lossy_fmt_tiled_and_stats(spark):
         tiled_gapfill.tiled_gapfill(imgs, tile=16, halo=8,
                                     params={"n_neighbors": 5},
                                     key_values=KV).collect()
-    with pytest.raises(Exception, match="npy-f64"):
-        tiled_fill.tiled_nn_fill(imgs.filter(F.col("role") == "input"),
-                                 tile=16, key_values=KV).collect()
-    # default encoding still passes through all three surfaces
+    # the default encoding still passes with_stats
     assert stats.with_stats(imgs).count() == imgs.count()
-    assert tiled_fill.tiled_nn_fill(
-        imgs.filter(F.col("role") == "input"), tile=16).count() == 1

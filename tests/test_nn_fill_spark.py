@@ -63,3 +63,25 @@ def test_snapshot_sink_and_resume(spark, images, tmp_path):
     assert out.count() == inputs.count()
     # no duplicate fills after resume (north_rule tier-3 check)
     assert out.select("image_id").distinct().count() == inputs.count()
+
+
+def test_nn_fill_reaches_far_gaps(spark):
+    """Gaps far from every valid pixel still take the nearest value: a
+    128×128 all-gap raster with one 4×3 block of valid px (above
+    ``nn.MIN_VALID``) in a corner fills completely, as the oracle
+    does."""
+    from ssgp_toolbox_spark.kernels import nn
+    from ssgp_toolbox_spark.sentinels import GAP
+
+    m = np.full((128, 128), GAP)
+    m[:4, :3] = 290.0 + np.arange(12).reshape(4, 3)
+    assert (m != GAP).sum() > nn.MIN_VALID
+    row = generator.image_row("x", "input", "20190901T000000", m,
+                              codecs.FMT_F64, 99)
+    out = nn_fill.nn_fill(
+        spark.createDataFrame([row], generator.IMAGE_COLUMNS)).collect()[0]
+    assert out["status"] == "filled"
+    back = codecs.decode(bytes(out["bytes"]), 128, 128, codecs.FMT_F64)
+    assert not (back == GAP).any()
+    exp, exp_status = oracles.nn_fill_fast_oracle(m)
+    assert exp_status == "filled" and np.array_equal(back, exp)

@@ -27,6 +27,17 @@ def _parquet_files(table):
             for f in fs if f.endswith(".parquet")]
 
 
+def _publish_old_layout(df, table):
+    """Commit ``df`` by hand as one snapshot in the older ``(site,
+    role)`` directory layout."""
+    sid = "snap-0-old"
+    data_dir = os.path.join(table, "data", sid)
+    df.write.partitionBy("site", "role").parquet(data_dir)
+    os.makedirs(os.path.join(table, img_io.SNAPDIR))
+    with open(os.path.join(table, img_io.SNAPDIR, f"{sid}.json"), "w") as f:
+        json.dump({"snapshot_id": sid, "data_dir": data_dir, "ts": 0.0}, f)
+
+
 def test_site_predicate_reaches_parquet_scan(spark, tmp_path):
     """``site`` is pushed to the parquet reader (min/max stats prune
     it); ``role`` prunes directories; the filter returns exactly the
@@ -76,13 +87,7 @@ def test_old_site_role_snapshot_loads_with_new_one(spark, tmp_path):
     table = str(tmp_path / "t")
     old = _images(spark, sites=("stp",))
     new = _images(spark, sites=("vlad",))
-
-    sid = "snap-0-old"
-    data_dir = os.path.join(table, "data", sid)
-    old.write.partitionBy("site", "role").parquet(data_dir)
-    os.makedirs(os.path.join(table, img_io.SNAPDIR))
-    with open(os.path.join(table, img_io.SNAPDIR, f"{sid}.json"), "w") as f:
-        json.dump({"snapshot_id": sid, "data_dir": data_dir, "ts": 0.0}, f)
+    _publish_old_layout(old, table)
     img_io.append_snapshot(new, table)
 
     rows = img_io.load(spark, table).select("image_id", "site", "role") \
@@ -106,3 +111,24 @@ def test_site_of_digits_keeps_its_text(spark, tmp_path):
     img_io.append_snapshot(df, table)
     rows = img_io.load(spark, table).select("site").collect()
     assert [r["site"] for r in rows] == ["0042"]
+
+
+def test_old_layout_site_of_digits_keeps_its_text(spark, tmp_path):
+    """An older-layout snapshot whose ``site`` directory is made of
+    digits (``site=0042``) infers that column as a number; next to a
+    current-layout snapshot, both snapshots' ``site`` still read back as
+    the text ``"0042"``, not the integer 42."""
+    table = str(tmp_path / "t")
+    _publish_old_layout(img_io.with_id_parts(spark.createDataFrame(
+        [("0042/input/20190901T000000", b"x")],
+        "image_id string, bytes binary")), table)
+    img_io.append_snapshot(spark.createDataFrame(
+        [("0042/input/20190907T000000", b"y")],
+        "image_id string, bytes binary"), table)
+
+    loaded = img_io.load(spark, table)
+    assert dict(loaded.dtypes)["site"] == "string"
+    rows = loaded.select("image_id", "site", "role").collect()
+    assert sorted((r["image_id"], r["site"], r["role"]) for r in rows) == [
+        ("0042/input/20190901T000000", "0042", "input"),
+        ("0042/input/20190907T000000", "0042", "input")]

@@ -4,7 +4,6 @@ north_rule check)."""
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
 
 from ssgp_toolbox_spark import generator, tiling
 
@@ -74,22 +73,6 @@ def test_tile_halo_content():
     # payload covers rows/cols 3..9 (core 5..9 plus halo 2, clipped)
     assert t.prow0 == 3 and t.pcol0 == 3 and t.ph == 7 and t.pw == 7
     assert np.array_equal(block, m[3:10, 3:10])
-
-
-def test_tile_neighbors_df(spark):
-    pdf = pd.DataFrame({
-        "image_id": ["a"] * 4,
-        "tx": [0, 1, 0, 1],
-        "ty": [0, 0, 1, 1],
-    })
-    df = spark.createDataFrame(pdf)
-    owners = tiling.tile_neighbors_df(df)
-    grp = (owners.groupBy("owner_tx", "owner_ty")
-           .agg(F.count("*").alias("n"))
-           .filter((F.col("owner_tx") == 0) & (F.col("owner_ty") == 0))
-           .collect())
-    # owner (0,0) receives itself + (1,0) + (0,1) + (1,1) = 4 tiles
-    assert grp[0]["n"] == 4
 
 
 def test_salted_repartition_bounds_hot_cells(spark):
