@@ -11,8 +11,16 @@ expressible as dense tensor algebra across *all* gap pixels at once:
   small-biome fallback draws each pixel's seeded 101-of-valid sample
   from one reused generator (``frame.pixel_draws``) and runs the
   gather, distances and argsort over blocks;
-- frame assembly: one fancy-index gather
-  ``tensor[:, coords]`` → (layers, pixels, predictors);
+- frame assembly, keyed: the distinct predictor pixels of a call
+  form one value table (layers + final row, distinct pixels) and each
+  gap pixel's frame is a column list into it (``keyed_table``). Frame
+  cleaning (F5b/F6/F8 masks, median, A2 imputation) depends on the
+  pixel alone, so it runs once per distinct pixel and is then
+  gathered to (layers, pixels, predictors) — on ``fill_wide``'s
+  scenes ~24× fewer cleaned columns than one per (gap px, predictor)
+  pair. The deep-history operator's per-chunk key-list extract is the
+  same table, so both fill operators share one core
+  (``fill_keyed_knn``);
 - fill + 3-fold CV: pixels grouped by their target-validity pattern
   share train-row structure, so kNN predict/CV run as (pixels × test
   × train) matmuls per group.
@@ -329,61 +337,82 @@ def fill_image_knn(final: np.ndarray, tensor: np.ndarray,
         return filled, []
     coords = select_coords(final, extra, gaps, predictor_configuration,
                            seed, coord_offset, sv)
-
-    hist = tensor[:, coords[..., 0], coords[..., 1]]        # (L, P, C)
-    last = final[coords[..., 0], coords[..., 1]]            # (P, C)
-    preds, scores, skip_px = fill_gathered_knn(hist, last, k, weights, seed,
-                                               sv)
+    table, idx = keyed_table(final, tensor, coords)
+    preds, scores, skip_px = fill_keyed_knn(table, idx, k, weights, seed, sv)
     filled[gaps[skip_px, 0], gaps[skip_px, 1]] = sv.skip
     done = ~skip_px
     filled[gaps[done, 0], gaps[done, 1]] = preds[done]
     return filled, [float(s) for s in scores[done]]
 
 
-def fill_gathered_knn(hist: np.ndarray, last: np.ndarray, k: int,
-                      weights: str, seed: int,
-                      sv: Sentinels = DEFAULT_SENTINELS):
-    """The post-gather core of ``fill_image_knn``: operates on the
-    pre-gathered frame blocks only — ``hist`` (L, P, C) history values
-    at each pixel's predictor coords (target coord last), ``last``
-    (P, C) final-image values at the same coords. Needs NO raster:
-    this is what lets the deep-history operator
-    (operators/deep_gapfill.py) ship per-chunk extracts instead of
-    whole layers. Returns (preds (P,), |CV-MAE| scores (P,),
-    skip mask (P,)); preds/scores are NaN where skip."""
-    P = last.shape[0]
-    target_hist = hist[:, :, -1]                            # (L, P)
+def keyed_table(final: np.ndarray, tensor: np.ndarray, coords: np.ndarray):
+    """The keyed form of the frames at ``coords`` (P, C, 2): ``table``
+    (L+1, K) holds one column per distinct predictor pixel in
+    row-major order (history rows, then the final row) and ``idx``
+    (P, C) points each frame column into it, so ``table[:, idx[s]]``
+    is pixel ``s``'s ``frame.build_frame``. The key map is one dense
+    lookup over the raster (the size of ``final``), not a sort of the
+    P·C flat coords."""
+    w = final.shape[1]
+    flat = coords[..., 0] * w + coords[..., 1]               # (P, C)
+    seen = np.zeros(final.size, dtype=bool)
+    seen[flat] = True
+    keys = np.flatnonzero(seen)                              # sorted, unique
+    pos = np.empty(final.size, dtype=np.intp)
+    pos[keys] = np.arange(len(keys))
+    kr, kc = np.divmod(keys, w)
+    table = np.vstack([tensor[:, kr, kc], final[kr, kc][None, :]])
+    return table, pos[flat]
+
+
+def fill_keyed_knn(table: np.ndarray, idx: np.ndarray, k: int,
+                   weights: str, seed: int,
+                   sv: Sentinels = DEFAULT_SENTINELS):
+    """The post-gather core of ``fill_image_knn`` on the keyed frame
+    form (``keyed_table``): ``table`` (L+1, K) values per distinct
+    predictor pixel (L history rows, then the final row), ``idx``
+    (P, C) columns of each gap pixel's frame, target last. Needs NO
+    raster: the deep-history operator (operators/deep_gapfill.py)
+    passes its per-chunk key-list extract straight in. Returns
+    (preds (P,), |CV-MAE| scores (P,), skip mask (P,)); preds/scores
+    are NaN where skip. A pixel with no valid target history (empty
+    training set) is a skip, as in ``frame.clean_frame``."""
+    P = idx.shape[0]
+    L = table.shape[0] - 1
+    target_hist = table[:L, idx[:, -1]]                     # (L, P)
 
     # F5: any skip in the target column → output skip
     skip_px = (target_hist == sv.skip).any(axis=0)
 
-    # ---- batched frame cleaning (F5b/F6/F7/F8/A2 re-expressed) -----
-    # Column *drops* become zero-masking: kNN uses only pairwise
-    # distances, and a column zeroed in every row (train and test)
-    # contributes 0 — identical to dropping it. Median imputation is a
-    # batched nanmedian. F7's all-NaN row drop is subsumed by the F9
-    # target-validity row mask (an all-NaN row has a NaN target), and
-    # its effect on medians is nil because its values are all NaN.
-    # (perf, measured: np.nanmedian routes (L+1, P, C) inputs through
-    # numpy's masked-array median — ~30% of the whole fill kernel —
-    # and the old where/copy chain allocated three full-size
-    # temporaries; the sort-based median below is bit-identical —
-    # NaNs sort last, the two middle valid values average with the
-    # same (a+b)/2 arithmetic — and the imputation mutates in place.)
-    vals = np.concatenate([hist[:, :, :-1], last[None, :, :-1]])  # (L+1, P, C-1)
-    col_keep = ~(vals == sv.skip).any(axis=0)               # F5b  (P, C-1)
-    vals[(vals == sv.gap) | (vals == sv.nodata)] = np.nan   # F6
-    col_keep &= ~np.isnan(vals[-1])                         # F8 (NaN at target row)
-    tmp = np.where(col_keep, vals, np.nan)
+    # ---- frame cleaning (F5b/F6/F7/F8/A2), once per table column -----
+    # A cleaned predictor column depends only on its pixel, so masks,
+    # medians and imputation run over the K distinct pixels and are
+    # then gathered per (gap px, predictor) — the values are those of
+    # cleaning each frame. Column *drops* become zero-masking: kNN uses
+    # only pairwise distances, and a column zeroed in every row (train
+    # and test) contributes 0 — identical to dropping it. F7's all-NaN
+    # row drop is subsumed by the F9 target-validity row mask (an
+    # all-NaN row has a NaN target), and its effect on medians is nil
+    # because its values are all NaN. The median is sort-based (NaNs
+    # sort last; the two middle valid values average with np.median's
+    # (a+b)/2 arithmetic), which is bit-identical to np.nanmedian.
+    vt = table.astype(np.float64)                           # (L+1, K)
+    keep_t = ~(vt == sv.skip).any(axis=0)                   # F5b  (K,)
+    vt[(vt == sv.gap) | (vt == sv.nodata)] = np.nan         # F6
+    keep_t &= ~np.isnan(vt[-1])                             # F8 (NaN at target row)
+    tmp = np.where(keep_t, vt, np.nan)
     tmp.sort(axis=0, kind="stable")                          # NaNs sort last
     cnt = (~np.isnan(tmp)).sum(axis=0)                       # valid per column
-    lo = np.maximum((cnt - 1) // 2, 0)[None, :, :]
-    hi = (cnt // 2)[None, :, :]
-    med = (np.take_along_axis(tmp, lo, axis=0)[0]
-           + np.take_along_axis(tmp, hi, axis=0)[0]) / 2.0   # (P, C-1)
-    med[cnt == 0] = np.nan                                   # all-NaN column
-    np.copyto(vals, np.broadcast_to(med, vals.shape), where=np.isnan(vals))  # A2
-    np.copyto(vals, 0.0, where=~col_keep[None, :, :])       # drop → zero-mask
+    lo = np.maximum((cnt - 1) // 2, 0)[None, :]
+    hi = (cnt // 2)[None, :]
+    med_t = (np.take_along_axis(tmp, lo, axis=0)[0]
+             + np.take_along_axis(tmp, hi, axis=0)[0]) / 2.0  # (K,)
+    med_t[cnt == 0] = np.nan                                 # all-NaN column
+    np.copyto(vt, np.broadcast_to(med_t, vt.shape), where=np.isnan(vt))  # A2
+    vt[:, ~keep_t] = 0.0                                     # drop → zero-mask
+    pidx = idx[:, :-1]
+    vals = vt[:, pidx]                                       # (L+1, P, C-1)
+    col_keep = keep_t[pidx]                                  # (P, C-1)
     # punt conditions → per-pixel slow path:
     # (1) safety net: kept column with empty median (shouldn't happen);
     # (2) every column dropped — then the reference's F7 drops the
@@ -395,7 +424,8 @@ def fill_gathered_knn(hist: np.ndarray, last: np.ndarray, k: int,
     #     shortcut was prototyped this round and found wrong exactly
     #     here: on the harness corpus every such pixel's columns are
     #     final-NODATA drops that survive the shifted F8).
-    bad = (col_keep & np.isnan(med)).any(axis=1)
+    bad_t = keep_t & np.isnan(med_t)
+    bad = bad_t[pidx].any(axis=1)
     bad |= ~col_keep.any(axis=1)
     fast = ~bad & ~skip_px
     slow = bad & ~skip_px
@@ -415,7 +445,8 @@ def fill_gathered_knn(hist: np.ndarray, last: np.ndarray, k: int,
             grp = fidx[sel]
             rows = np.flatnonzero(valid_t[:, sel[0]])
             if len(rows) == 0:
-                continue  # empty train — leave NaN (reference would crash)
+                skip_px[grp] = True  # empty train → skip (clean_frame)
+                continue
             Xp = vals[np.ix_(rows, grp)].transpose(1, 0, 2)             # (p, n, c)
             yp = target_hist[np.ix_(rows, grp)].T                       # (p, n)
             xt = vals[-1][grp]                                          # (p, c)
@@ -433,8 +464,7 @@ def fill_gathered_knn(hist: np.ndarray, last: np.ndarray, k: int,
     # whole fill kernel on high-gap images before batching)
     groups: dict = {}
     for s in np.flatnonzero(slow):
-        res = FR.clean_frame(np.vstack([hist[:, s, :], last[s][None, :]]),
-                             sv)
+        res = FR.clean_frame(table[:, idx[s]], sv)
         if isinstance(res, str):
             skip_px[s] = True
             continue

@@ -24,9 +24,16 @@ Known reference quirks kept for parity (SURVEY.md §7):
   with the target.
 - Biome 40-nearest uses np.argmin first-index tie-break
   (gapfiller.py:519-530).
+
+Divergences from the reference, flagged here:
 - The reference would raise NameError on the skip-target branch
   (``score`` unbound at gapfiller.py:773); we output skip and record
-  no score — the only divergence, flagged here.
+  no score.
+- A pixel whose training set is empty after F9 (every history value
+  of its target is gap/NoData) cannot be fit; the reference's
+  estimators would raise on the empty sample. We output skip and
+  record no score, as for F5, so no NaN reaches the raster or the
+  image's mean CV-MAE.
 """
 
 from __future__ import annotations
@@ -214,7 +221,8 @@ def build_frame(tensor: np.ndarray, final: np.ndarray, coords: np.ndarray) -> np
 
 def clean_frame(frame: np.ndarray, sv: Sentinels = DEFAULT_SENTINELS):
     """F5-F9 + A2. Returns (X_train, y_train, X_test) or the string
-    'skip' when the target column contains a skip value."""
+    'skip' when the target column contains a skip value or no
+    training row is left."""
     target_col = frame[:, -1]
     if (target_col == sv.skip).any():
         return "skip"
@@ -238,29 +246,31 @@ def clean_frame(frame: np.ndarray, sv: Sentinels = DEFAULT_SENTINELS):
     train = f[:-1]
     test = f[-1:]
     train = train[~np.isnan(train).any(axis=1)]  # F9 (only target NaNs remain)
+    if len(train) == 0:
+        return "skip"
     return train[:, :-1], train[:, -1], test[:, :-1]
 
 
-def fill_gathered(hist: np.ndarray, last: np.ndarray, gaps: np.ndarray,
-                  method: str = "Lasso", hyperparameters: str = "Custom",
-                  params: dict | None = None, seed: int = 0,
-                  sv: Sentinels = DEFAULT_SENTINELS):
-    """Per-pixel fill over PRE-GATHERED frame blocks — the generic-
-    method counterpart of ``batch.fill_gathered_knn``. ``hist``
-    (L, P, C) history values at each gap pixel's predictor coords
-    (target coord last), ``last`` (P, C) final-image values at the
-    same coords, ``gaps`` (P, 2) absolute pixel coords (used only for
-    the grid-search per-pixel seed salt). Per pixel this builds the
-    exact frame ``build_frame`` would ((L+1, C): history rows + final
-    row) and runs the same clean + fit pipeline as ``fill_image``, so
-    results are bit-identical — the deep-history operator relies on
+def fill_keyed(table: np.ndarray, idx: np.ndarray, gaps: np.ndarray,
+               method: str = "Lasso", hyperparameters: str = "Custom",
+               params: dict | None = None, seed: int = 0,
+               sv: Sentinels = DEFAULT_SENTINELS):
+    """Per-pixel fill over the keyed frame form — the generic-method
+    counterpart of ``batch.fill_keyed_knn``. ``table`` (L+1, K) values
+    per distinct predictor pixel (history rows, then the final row),
+    ``idx`` (P, C) each gap pixel's frame columns (target last),
+    ``gaps`` (P, 2) absolute pixel coords (used only for the
+    grid-search per-pixel seed salt). Pixel ``i``'s frame is
+    ``table[:, idx[i]]`` — the exact frame ``build_frame`` would build
+    — and runs the same clean + fit pipeline as ``fill_image``, so
+    results are bit-identical; the deep-history operator relies on
     that. Returns (preds (P,), |CV-MAE| scores (P,), skip mask (P,))."""
-    P = last.shape[0]
+    P = idx.shape[0]
     preds = np.full(P, np.nan)
     scores = np.full(P, np.nan)
     skip_px = np.zeros(P, dtype=bool)
     for i in range(P):
-        res = clean_frame(np.vstack([hist[:, i, :], last[i][None, :]]), sv)
+        res = clean_frame(table[:, idx[i]], sv)
         if isinstance(res, str):  # 'skip'
             skip_px[i] = True
             continue
@@ -309,7 +319,7 @@ def fill_image(final: np.ndarray, tensor: np.ndarray,
         else:
             raise ValueError(f"unknown predictor_configuration {predictor_configuration!r}")
         res = clean_frame(build_frame(tensor, final, coords), sv)
-        if isinstance(res, str):  # 'skip': any skip in the target column
+        if isinstance(res, str):  # 'skip': skip target or empty train
             filled[r, c] = sv.skip
             continue
         X_train, y_train, X_test = res

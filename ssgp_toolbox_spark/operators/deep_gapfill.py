@@ -20,9 +20,12 @@ raster is ever grouped, collected, or broadcast**:
    The layer raster itself never crosses a shuffle.
 3. **Fill pass**: group the per-layer extracts by (image, chunk) —
    the collected group is the compact matrix (L × K floats,
-   K ≤ chunk_px × (C+1)) — and run the post-gather kernel cores
-   (``batch.fill_gathered_knn`` / ``frame.fill_gathered``). Tasks need
-   NO raster at all: the target values ride the coords row.
+   K ≤ chunk_px × (C+1)). Stacked over the coords row's final-image
+   values it is the keyed frame table the kernel cores take, so it
+   feeds them directly with the coords row's ``idx`` and no
+   (L, P, C) gather (``batch.fill_keyed_knn`` / ``frame.fill_keyed``,
+   which clean each distinct pixel once). Tasks need NO raster at
+   all: the target values ride the coords row.
 4. Reassemble per image (the delta shuffle + assemble that
    ``gapfill`` runs for split images), union the passthrough leg.
 
@@ -160,21 +163,21 @@ def _deep_fill_batches(method: str, hyperparameters: str, params: dict | None,
             out = {kk: [] for kk in G.CHUNK_SCHEMA.fieldNames()}
             for row in pdf.itertuples(index=False):
                 P, C = int(row.n_px), int(row.n_pred)
-                hist_mat = np.stack([
-                    np.frombuffer(l["vals"], dtype="<f8")
-                    for l in row.layers  # already ts-ascending (sort_array)
-                ])
+                # the keyed extract IS the kernels' frame table: one
+                # column per key, history rows (already ts-ascending,
+                # sort_array) then the final row
+                table = np.stack([
+                    *(np.frombuffer(l["vals"], dtype="<f8") for l in row.layers),
+                    np.frombuffer(row.last_vals, dtype="<f8")])
                 idx = np.frombuffer(row.idx, dtype="<i4").reshape(P, C)
-                hist = hist_mat[:, idx]                       # (L, P, C)
-                last = np.frombuffer(row.last_vals, "<f8")[idx]   # (P, C)
                 gaps = np.frombuffer(row.gaps, dtype="<i4").reshape(P, 2)
                 seed = G._stable_seed(row.image_id)
                 if method == "Knn" and hyperparameters == "Custom":
-                    preds, scores, skip = batch.fill_gathered_knn(
-                        hist, last, k, weights, seed, sv)
+                    preds, scores, skip = batch.fill_keyed_knn(
+                        table, idx, k, weights, seed, sv)
                 else:
-                    preds, scores, skip = frame_kernel.fill_gathered(
-                        hist, last, gaps, method=method,
+                    preds, scores, skip = frame_kernel.fill_keyed(
+                        table, idx, gaps, method=method,
                         hyperparameters=hyperparameters, params=params,
                         seed=seed, sv=sv)
                 vals = np.where(skip, sv.skip, preds)

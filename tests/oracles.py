@@ -1069,3 +1069,118 @@ def literal_ivf_probe_cells(queries, centroids, n_probe, vec_col="qe",
     picked = F.slice(F.array_sort(structs), 1, n_probe)
     return (queries.select("*", F.explode(picked).alias("_pc"))
             .withColumn(out_col, F.col("_pc.cid")).drop("_pc"))
+
+
+def fill_gathered_knn(hist, last, k, weights, seed, sv=None):
+    """The pairwise kNN fill core that the keyed core
+    (``batch.fill_keyed_knn``) replaced, kept verbatim as its frozen
+    reference: frame cleaning (F5b/F6/F8 masks, the sort-based median,
+    A2 imputation) runs on every (gap px, predictor) pair of the
+    pre-gathered blocks ``hist`` (L, P, C) and ``last`` (P, C), target
+    coord last. Returns (preds (P,), |CV-MAE| scores (P,), skip mask
+    (P,)). A fast-path pixel with an empty training set is left NaN,
+    not skip, here; slow-path pixels go through ``frame.clean_frame``."""
+    from ssgp_toolbox_spark.kernels import frame as FR
+    from ssgp_toolbox_spark.kernels.batch import (_knn_fill_group,
+                                                  _knn_slow_group)
+    from ssgp_toolbox_spark.sentinels import DEFAULT_SENTINELS
+
+    sv = sv or DEFAULT_SENTINELS
+    P = last.shape[0]
+    target_hist = hist[:, :, -1]                            # (L, P)
+
+    # F5: any skip in the target column → output skip
+    skip_px = (target_hist == sv.skip).any(axis=0)
+
+    # ---- batched frame cleaning (F5b/F6/F7/F8/A2 re-expressed) -----
+    # Column *drops* become zero-masking: kNN uses only pairwise
+    # distances, and a column zeroed in every row (train and test)
+    # contributes 0 — identical to dropping it. Median imputation is a
+    # batched nanmedian. F7's all-NaN row drop is subsumed by the F9
+    # target-validity row mask (an all-NaN row has a NaN target), and
+    # its effect on medians is nil because its values are all NaN.
+    # (perf, measured: np.nanmedian routes (L+1, P, C) inputs through
+    # numpy's masked-array median — ~30% of the whole fill kernel —
+    # and the old where/copy chain allocated three full-size
+    # temporaries; the sort-based median below is bit-identical —
+    # NaNs sort last, the two middle valid values average with the
+    # same (a+b)/2 arithmetic — and the imputation mutates in place.)
+    vals = np.concatenate([hist[:, :, :-1], last[None, :, :-1]])  # (L+1, P, C-1)
+    col_keep = ~(vals == sv.skip).any(axis=0)               # F5b  (P, C-1)
+    vals[(vals == sv.gap) | (vals == sv.nodata)] = np.nan   # F6
+    col_keep &= ~np.isnan(vals[-1])                         # F8 (NaN at target row)
+    tmp = np.where(col_keep, vals, np.nan)
+    tmp.sort(axis=0, kind="stable")                          # NaNs sort last
+    cnt = (~np.isnan(tmp)).sum(axis=0)                       # valid per column
+    lo = np.maximum((cnt - 1) // 2, 0)[None, :, :]
+    hi = (cnt // 2)[None, :, :]
+    med = (np.take_along_axis(tmp, lo, axis=0)[0]
+           + np.take_along_axis(tmp, hi, axis=0)[0]) / 2.0   # (P, C-1)
+    med[cnt == 0] = np.nan                                   # all-NaN column
+    np.copyto(vals, np.broadcast_to(med, vals.shape), where=np.isnan(vals))  # A2
+    np.copyto(vals, 0.0, where=~col_keep[None, :, :])       # drop → zero-mask
+    # punt conditions → per-pixel slow path:
+    # (1) safety net: kept column with empty median (shouldn't happen);
+    # (2) every column dropped — then the reference's F7 drops the
+    #     all-NaN *test row* itself and the frame's last row becomes a
+    #     history layer (test-row shift quirk, gapfiller.py:653-659),
+    #     AFTER which F8 re-evaluates column validity at the SHIFTED
+    #     row and can re-admit predictors — only the sequential
+    #     cleaner reproduces that cascade (a batched zero-feature
+    #     shortcut was prototyped this round and found wrong exactly
+    #     here: on the harness corpus every such pixel's columns are
+    #     final-NODATA drops that survive the shifted F8).
+    bad = (col_keep & np.isnan(med)).any(axis=1)
+    bad |= ~col_keep.any(axis=1)
+    fast = ~bad & ~skip_px
+    slow = bad & ~skip_px
+
+    preds = np.full(P, np.nan)
+    scores = np.full(P, np.nan)
+
+    if fast.any():
+        fidx = np.flatnonzero(fast)
+        valid_t = ~((target_hist[:, fidx] == sv.gap)
+                    | (target_hist[:, fidx] == sv.nodata)
+                    | (target_hist[:, fidx] == sv.skip))    # (L, f)
+        patterns = np.packbits(valid_t, axis=0).T
+        uniq, inv = np.unique(patterns, axis=0, return_inverse=True)
+        for u in range(len(uniq)):
+            sel = np.flatnonzero(inv == u)
+            grp = fidx[sel]
+            rows = np.flatnonzero(valid_t[:, sel[0]])
+            if len(rows) == 0:
+                continue  # empty train — leave NaN (reference would crash)
+            Xp = vals[np.ix_(rows, grp)].transpose(1, 0, 2)             # (p, n, c)
+            yp = target_hist[np.ix_(rows, grp)].T                       # (p, n)
+            xt = vals[-1][grp]                                          # (p, c)
+            pr, sc = _knn_fill_group(Xp, yp, xt, k, weights, seed)
+            preds[grp] = pr
+            scores[grp] = sc
+
+    # slow path: the per-pixel clean_frame cascade (the reference's F7
+    # test-row-shift quirk) stays sequential — it is cheap; the
+    # EXPENSIVE part, the per-pixel kNN fit + 3-fold CV after it, is
+    # batched by grouping the cleaned frames on their exact (n, c)
+    # shape (same n → same cv_seed → same folds, the per-pixel rule)
+    # and running the direct-form group kernel — bit-identical to
+    # regressors.fit_predict by construction (measured ~20% of the
+    # whole fill kernel on high-gap images before batching)
+    groups: dict = {}
+    for s in np.flatnonzero(slow):
+        res = FR.clean_frame(np.vstack([hist[:, s, :], last[s][None, :]]),
+                             sv)
+        if isinstance(res, str):
+            skip_px[s] = True
+            continue
+        groups.setdefault(res[0].shape, []).append((s, *res))
+    for items in groups.values():
+        sel = np.array([it[0] for it in items], dtype=np.int64)
+        Xp = np.stack([it[1] for it in items])        # (p, n, c)
+        yp = np.stack([it[2] for it in items])        # (p, n)
+        xt = np.stack([it[3][0] for it in items])     # (p, c)
+        pr, sc = _knn_slow_group(Xp, yp, xt, k, weights, seed)
+        preds[sel] = pr
+        scores[sel] = sc
+
+    return preds, scores, skip_px

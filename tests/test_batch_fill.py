@@ -9,7 +9,7 @@ from ssgp_toolbox_spark import generator
 from ssgp_toolbox_spark.kernels import batch as B
 from ssgp_toolbox_spark.kernels import frame as FR
 from ssgp_toolbox_spark.kernels import regressors
-from ssgp_toolbox_spark.sentinels import GAP
+from ssgp_toolbox_spark.sentinels import GAP, NODATA, SKIP
 
 
 @pytest.fixture(scope="module")
@@ -55,6 +55,36 @@ def test_batched_distance_weights(scene):
     # as a²+b²−2ab (matmul) vs the direct (a−b)² sum — last-ulp float
     # differences in 1/d are expected, so allclose not array_equal
     assert np.allclose(slow_m, fast_m, equal_nan=True)
+
+
+def test_empty_training_set_fills_skip(scene):
+    """A gap px whose whole target history is gap/NoData has no
+    training row. It becomes skip with no score, as a skip target
+    does, in the batched and the per-pixel Knn paths and a per-pixel
+    non-Knn method: no NaN reaches the raster or ``mean_cv_mae``."""
+    final, tensor, extra = scene
+    tensor = tensor.copy()
+    gaps = np.argwhere(final == GAP)
+    dead = gaps[[3, 40, 41]]
+    tensor[:, dead[:, 0], dead[:, 1]] = GAP
+    tensor[::2, dead[0, 0], dead[0, 1]] = NODATA
+    kw = dict(extra=extra, predictor_configuration="Biome",
+              hyperparameters="Custom", seed=21)
+    knn = {"n_neighbors": 5}
+    runs = [
+        (B.fill_image_knn(final, tensor, params=knn, **kw), gaps),
+        (FR.fill_image(final, tensor, method="Knn", params=knn, **kw), gaps),
+        (FR.fill_image(final, tensor, method="Lasso", params={"alpha": 1.0},
+                       gap_slice=(38, 44), **kw), gaps[38:44]),
+    ]
+    for (filled, scores), done in runs:
+        assert not np.isnan(filled).any()
+        vals = filled[done[:, 0], done[:, 1]]
+        assert len(scores) == (vals != SKIP).sum() > 0
+        assert np.isfinite(np.mean(scores))
+        for r, c in dead:
+            if ((done[:, 0] == r) & (done[:, 1] == c)).any():
+                assert filled[r, c] == SKIP
 
 
 def _slow_group_per_pixel(Xp, yp, xt, k, weights, seed):

@@ -49,7 +49,7 @@ def test_deep_equals_gapfill(spark, images, method, config, hp, params):
 
 
 def test_deep_gridsearch_parity(spark, images):
-    """Grid-search modes route through frame.fill_gathered with the
+    """Grid-search modes route through frame.fill_keyed with the
     per-pixel seed salt — must match gapfill exactly."""
     kw = dict(method="Lasso", predictor_configuration="Biome",
               hyperparameters="RandomGridSearch", params=None)
