@@ -1,39 +1,41 @@
-"""Batched kNN gap fill — the throughput path for the north metric.
+"""The gap fill kernel: one image entry (``fill_image``) and one keyed
+entry (``fill_keyed``) for every method.
 
-``frame.fill_image`` is a faithful per-pixel loop (reference
-gapfiller.py:611-781 shape). For the Knn kernel the whole fill is
-expressible as dense tensor algebra across *all* gap pixels at once:
+A gap pixel's fill is the reference's ``pixel_model``
+(gapfiller.py:611-781): select predictors, build the frame, clean
+it, fit. ``fill_image`` runs the first two over all the gap pixels of
+a call at once, and ``fill_keyed`` is the one place a fill core is
+chosen:
 
-- predictor selection: biome candidate sets are indexed once per
-  image (the reference re-runs argwhere over the full raster per
-  pixel, gapfiller.py:511); 40-nearest per pixel is one stable
-  argsort over a (pixels × candidates) distance matrix; the
-  small-biome fallback draws each pixel's seeded 101-of-valid sample
-  from one reused generator (``frame.pixel_draws``) and runs the
-  gather, distances and argsort over blocks;
+- predictor selection (``select_coords``): biome candidate sets are
+  indexed once per image (the reference re-runs argwhere over the
+  full raster per pixel, gapfiller.py:511); 40-nearest per pixel is
+  one stable argsort over a (pixels × candidates) distance matrix;
+  the Random draws and the small-biome fallback draw each pixel's
+  seeded 101-of-valid sample from one reused generator
+  (``frame.pixel_draws``);
 - frame assembly, keyed: the distinct predictor pixels of a call
   form one value table (layers + final row, distinct pixels) and each
-  gap pixel's frame is a column list into it (``keyed_table``). Frame
-  cleaning (F5b/F6/F8 masks, median, A2 imputation) depends on the
-  pixel alone, so it runs once per distinct pixel and is then
-  gathered to (layers, pixels, predictors) — on ``fill_wide``'s
-  scenes ~24× fewer cleaned columns than one per (gap px, predictor)
-  pair. The deep-history operator's per-chunk key-list extract is the
-  same table, so both fill operators share one core
-  (``fill_keyed_knn``);
-- fill + 3-fold CV: pixels grouped by their target-validity pattern
-  share train-row structure, so kNN predict/CV run as (pixels × test
-  × train) matmuls per group.
+  gap pixel's frame is a column list into it (``keyed_table``). The
+  deep-history operator's per-chunk key-list extract is the same
+  table and enters at ``fill_keyed``;
+- the kNN core (``fill_keyed_knn``, Knn/Custom): frame cleaning
+  (F5b/F6/F8 masks, median, A2 imputation) depends on the pixel
+  alone, so it runs once per distinct pixel and is then gathered to
+  (layers, pixels, predictors) — on ``fill_wide``'s scenes ~24× fewer
+  cleaned columns than one per (gap px, predictor) pair. Pixels
+  grouped by their target-validity pattern share train-row structure,
+  so kNN predict/CV run as (pixels × test × train) matmuls per group.
+  Pixels whose frames contain sentinels in the predictor block fall
+  back to a per-pixel ``frame.clean_frame``, then a direct-form kNN
+  batched over frames of equal shape that reproduces
+  ``regressors.fit_predict``;
+- every other method and mode fits pixel by pixel
+  (``frame.fill_keyed``).
 
-Bit-identical to the per-pixel path (asserted in tests): pixels whose
-frames contain sentinels in the predictor block fall back to a
-per-pixel ``frame.clean_frame``, then a direct-form kNN batched over
-frames of equal shape that reproduces ``regressors.fit_predict``; CV
-fold seeding depends only on (image seed, train length) in both paths
-(frame.cv_seed).
-
-~20-60× faster than the loop; this is what the gapfill operator uses
-for method='Knn'.
+Bit-identical to the per-pixel reference loop (``tests/oracles.py``,
+``fill_image_per_pixel``; asserted in tests): CV fold seeding depends
+only on (image seed, train length) in both (frame.cv_seed).
 """
 
 from __future__ import annotations
@@ -250,13 +252,12 @@ def _biome_coords_batched(final, extra, gaps, seed, coord_offset=(0, 0),
 
 def _random_nearest_batched(final, gaps, sel, out, seed, offset,
                             sv: Sentinels):
-    """The small-biome fallback of ``FR.select_biome`` for gap pixels
-    ``gaps[sel]``, written into ``out[sel, :-1]``: 101 random valid
-    coords per pixel, then their 40 nearest. The draws are each pixel's
-    own seeded permutation (``FR.pixel_draws``, bit-identical to
-    ``FR._pixel_rng``); the gather, the f64 distances and the stable
-    argsort run over blocks of 1024 pixels (~1.6 MB of gathered
-    coords), with ``FR._k_nearest``'s (distance, index) tie order."""
+    """The small-biome fallback for gap pixels ``gaps[sel]``, written
+    into ``out[sel, :-1]``: 101 random valid coords per pixel, then
+    their 40 nearest. The draws are each pixel's own seeded
+    permutation (``FR.pixel_draws``); the gather, the f64 distances
+    and the stable argsort run over blocks of 1024 pixels (~1.6 MB of
+    gathered coords), with (distance, index) tie order."""
     # the valid set is pixel-independent: one scan per call
     valid = FR.random_pool(final, sv)
     for lo in range(0, len(sel), 1024):
@@ -275,8 +276,8 @@ def select_coords(final: np.ndarray, extra: np.ndarray | None,
                   seed: int, coord_offset: tuple[int, int] = (0, 0),
                   sv: Sentinels = DEFAULT_SENTINELS) -> np.ndarray:
     """Predictor coords (P, C, 2) for the given gap pixels, target
-    coord appended last — the selection block shared by the batched
-    kNN fill and the deep-history operator's coords pass. Per-pixel
+    coord appended last — the selection block shared by ``fill_image``
+    and the deep-history operator's coords pass. Per-pixel
     deterministic (seeded RNG keyed on absolute coords), so any
     gap-subset slicing yields identical coords per pixel."""
     P = len(gaps)
@@ -286,7 +287,7 @@ def select_coords(final: np.ndarray, extra: np.ndarray | None,
         return _biome_coords_batched(final, extra, gaps, seed, coord_offset,
                                      sv)
     if predictor_configuration == "Random":
-        # FR.select_random per pixel, with one scan of the valid set
+        # each pixel's seeded draw, with one scan of the valid set
         valid = FR.random_pool(final, sv)
         coords = np.empty((P, FR.N_RANDOM + 1, 2), dtype=np.int64)
         coords[:, :-1] = valid[FR.pixel_draws(seed, gaps, len(valid))]
@@ -301,48 +302,66 @@ def select_coords(final: np.ndarray, extra: np.ndarray | None,
     raise ValueError(f"unknown predictor_configuration {predictor_configuration!r}")
 
 
-def fill_image_knn(final: np.ndarray, tensor: np.ndarray,
-                   extra: np.ndarray | None = None,
-                   predictor_configuration: str = "Biome",
-                   hyperparameters: str = "Custom",
-                   params: dict | None = None, seed: int = 0,
-                   gap_slice: tuple[int, int] | None = None,
-                   gap_subset: np.ndarray | None = None,
-                   coord_offset: tuple[int, int] = (0, 0),
-                   sv: Sentinels = DEFAULT_SENTINELS):
-    """Batched equivalent of frame.fill_image(method='Knn', ...).
-    Custom mode only: any other ``hyperparameters`` raises ValueError
-    (the grid-search modes go through ``frame.fill_image``). Returns
-    (filled, scores) with scores in gap scan order.
+def fill_image(final: np.ndarray, tensor: np.ndarray,
+               extra: np.ndarray | None = None, method: str = "Knn",
+               predictor_configuration: str = "Biome",
+               hyperparameters: str = "Custom", params: dict | None = None,
+               seed: int = 0, gaps: np.ndarray | None = None,
+               coord_offset: tuple[int, int] = (0, 0),
+               sv: Sentinels = DEFAULT_SENTINELS):
+    """Fill the gap pixels ``gaps`` (P, 2) of ``final`` from the
+    temporal stack ``tensor`` — every gap pixel, in row-major scan
+    order, when None. The reference's per-image loop
+    (gapfiller.py:600-781) minus the IO: ``select_coords`` →
+    ``keyed_table`` → ``fill_keyed``. Returns (filled, scores): a copy
+    of ``final`` with the targets filled (skip where a pixel cannot be
+    fit) and the |CV-MAE| of each filled pixel in ``gaps`` order.
 
-    ``gap_slice=(lo, hi)`` fills only gap pixels lo..hi-1 of the
-    row-major gap scan while keeping the *full image* as selection
-    context — per-pixel seeding makes chunked fills bit-identical to
-    the whole-image fill, which is what lets the balanced gapfill
-    operator split skewed images across tasks (north_rule salting)."""
-    if hyperparameters != "Custom":
-        raise ValueError(f"fill_image_knn runs Custom hyperparameters only, "
-                         f"not {hyperparameters!r}: use frame.fill_image")
-    params = dict(params or {})
-    k = int(params.get("n_neighbors", 5))
-    weights = params.get("weights", "uniform")
-    gaps = np.argwhere(final == sv.gap)
-    if gap_slice is not None:
-        gaps = gaps[gap_slice[0] : gap_slice[1]]
-    if gap_subset is not None:  # explicit (r, c) targets (tiled path)
-        gaps = np.asarray(gap_subset, dtype=np.int64)
+    The whole image stays the selection context whatever ``gaps``
+    holds, and every seed keys on the pixel, so filling the gap scan
+    slice by slice is bit-identical to one whole-image call — what
+    lets the ``gapfill`` wave split a hot image across tasks.
+    ``coord_offset`` is the raster's origin in a larger one (the tiled
+    operator's windows): seeds key on absolute coords."""
+    if gaps is None:
+        gaps = np.argwhere(final == sv.gap)
     filled = final.copy()
-    P = len(gaps)
-    if P == 0:
+    if len(gaps) == 0:
         return filled, []
-    coords = select_coords(final, extra, gaps, predictor_configuration,
-                           seed, coord_offset, sv)
-    table, idx = keyed_table(final, tensor, coords)
-    preds, scores, skip_px = fill_keyed_knn(table, idx, k, weights, seed, sv)
+    # the (P, C, 2) coords die here: under 'All' C is every valid px
+    table, idx = keyed_table(final, tensor, select_coords(
+        final, extra, gaps, predictor_configuration, seed, coord_offset, sv))
+    preds, scores, skip_px = fill_keyed(
+        table, idx, gaps + np.asarray(coord_offset), method,
+        hyperparameters, params, seed, sv)
     filled[gaps[skip_px, 0], gaps[skip_px, 1]] = sv.skip
     done = ~skip_px
     filled[gaps[done, 0], gaps[done, 1]] = preds[done]
     return filled, [float(s) for s in scores[done]]
+
+
+def fill_image_knn(final: np.ndarray, tensor: np.ndarray,
+                   extra: np.ndarray | None = None, **kw):
+    """``fill_image(method='Knn', ...)``, under the name
+    ``perfbench`` calls."""
+    return fill_image(final, tensor, extra, method="Knn", **kw)
+
+
+def fill_keyed(table: np.ndarray, idx: np.ndarray, gaps: np.ndarray,
+               method: str = "Knn", hyperparameters: str = "Custom",
+               params: dict | None = None, seed: int = 0,
+               sv: Sentinels = DEFAULT_SENTINELS):
+    """The fill core for ``method``/``hyperparameters`` on the keyed
+    frame form (``keyed_table``): the batched ``fill_keyed_knn`` for
+    Knn/Custom, the per-pixel ``frame.fill_keyed`` for every other
+    method and mode. ``gaps`` (P, 2) absolute coords of the targets.
+    Returns (preds (P,), |CV-MAE| scores (P,), skip mask (P,))."""
+    if method == "Knn" and hyperparameters == "Custom":
+        params = params or {}
+        return fill_keyed_knn(table, idx, int(params.get("n_neighbors", 5)),
+                              params.get("weights", "uniform"), seed, sv)
+    return FR.fill_keyed(table, idx, gaps, method, hyperparameters, params,
+                         seed, sv)
 
 
 def keyed_table(final: np.ndarray, tensor: np.ndarray, coords: np.ndarray):
@@ -350,7 +369,7 @@ def keyed_table(final: np.ndarray, tensor: np.ndarray, coords: np.ndarray):
     (L+1, K) holds one column per distinct predictor pixel in
     row-major order (history rows, then the final row) and ``idx``
     (P, C) points each frame column into it, so ``table[:, idx[s]]``
-    is pixel ``s``'s ``frame.build_frame``. The key map is one dense
+    is pixel ``s``'s frame. The key map is one dense
     lookup over the raster (the size of ``final``), not a sort of the
     P·C flat coords."""
     w = final.shape[1]
@@ -368,12 +387,12 @@ def keyed_table(final: np.ndarray, tensor: np.ndarray, coords: np.ndarray):
 def fill_keyed_knn(table: np.ndarray, idx: np.ndarray, k: int,
                    weights: str, seed: int,
                    sv: Sentinels = DEFAULT_SENTINELS):
-    """The post-gather core of ``fill_image_knn`` on the keyed frame
-    form (``keyed_table``): ``table`` (L+1, K) values per distinct
-    predictor pixel (L history rows, then the final row), ``idx``
-    (P, C) columns of each gap pixel's frame, target last. Needs NO
-    raster: the deep-history operator (operators/deep_gapfill.py)
-    passes its per-chunk key-list extract straight in. Returns
+    """The Knn/Custom core on the keyed frame form (``keyed_table``):
+    ``table`` (L+1, K) values per distinct predictor pixel (L history
+    rows, then the final row), ``idx`` (P, C) columns of each gap
+    pixel's frame, target last. Needs NO raster: the deep-history
+    operator (operators/deep_gapfill.py) passes its per-chunk key-list
+    extract in through ``fill_keyed``. Returns
     (preds (P,), |CV-MAE| scores (P,), skip mask (P,)); preds/scores
     are NaN where skip. A pixel with no valid target history (empty
     training set) is a skip, as in ``frame.clean_frame``."""

@@ -1,9 +1,15 @@
-"""Predictor selection + frame cleaning + per-image gap fill.
+"""Per-pixel pieces of the gap fill: seeds and draws, the Random
+pool, frame cleaning, and the per-pixel fill core.
 
 The per-pixel dataflow of the reference's ``pixel_model``
-(gapfiller.py:611-773), re-expressed as numpy-only kernels that run
-*per tile group* inside ``applyInPandas`` — Python is entered once
-per Arrow batch, not per row.
+(gapfiller.py:611-773) is select → frame → clean → fit. Selection and
+frame assembly run batched over a call's gap pixels in
+``kernels/batch.py`` (``select_coords``, ``keyed_table``); this module
+holds what they key on (``pixel_draws``, ``cv_seed``,
+``random_pool``), the cleaning chain (``clean_frame``) and the core
+that fits one pixel at a time for every method but Knn/Custom
+(``fill_keyed``). ``batch.fill_keyed`` picks between that core and the
+batched kNN core.
 
 Frame layout (gapfiller.py:446-454): rows = history layers + the
 target layer (last row); columns = predictor pixels + the target
@@ -50,14 +56,10 @@ BIOME_MIN = 41
 
 def _pixel_seed(seed: int, coord_row: int, coord_col: int) -> int:
     """The per-(image, pixel) seed, in [0, 2**63 - 1) (Python ints, so
-    no intermediate wraps)."""
-    return (seed * 1_000_003 + coord_row * 8191 + coord_col) % (2**63 - 1)
-
-
-def _pixel_rng(seed: int, coord_row: int, coord_col: int) -> np.random.Generator:
-    """Deterministic per-(image, pixel) generator so task retries and
+    no intermediate wraps): each pixel's draws are those of
+    ``default_rng(_pixel_seed(seed, r, c))``, so task retries and
     resume are bit-stable (C10; reference uses unseeded ``random``)."""
-    return np.random.default_rng(_pixel_seed(seed, coord_row, coord_col))
+    return (seed * 1_000_003 + coord_row * 8191 + coord_col) % (2**63 - 1)
 
 
 # numpy's SeedSequence hash constants (numpy/random/bit_generator.pyx)
@@ -109,7 +111,7 @@ def _seed_words(seeds: np.ndarray) -> np.ndarray:
 
 def pixel_draws(seed: int, coords: np.ndarray, n: int,
                 k: int = N_RANDOM) -> np.ndarray:
-    """``_pixel_rng(seed, r, c).permutation(n)[:k]`` for every (r, c)
+    """``default_rng(_pixel_seed(seed, r, c)).permutation(n)[:k]`` for every (r, c)
     of ``coords`` (P, 2): (P, min(k, n)) int64, bit-identical."""
     return seeded_draws([_pixel_seed(seed, r, c) for r, c in coords.tolist()],
                         n, k)
@@ -145,34 +147,17 @@ def cv_seed(seed: int, n_train: int) -> int:
     return (seed * 2_654_435_761 + n_train * 97) % (2**63 - 1)
 
 
-def select_all(final: np.ndarray, coord: tuple[int, int],
-               sv: Sentinels = DEFAULT_SENTINELS) -> np.ndarray:
-    """'All' strategy: every non-gap pixel (incl. skip/NoData — they
-    are cleaned later), target appended last (gapfiller.py:438-443)."""
-    coords = np.argwhere(final != sv.gap)
-    return np.vstack([coords, [coord]])
-
-
-def select_random(final: np.ndarray, coord: tuple[int, int],
-                  rng: np.random.Generator,
-                  sv: Sentinels = DEFAULT_SENTINELS) -> np.ndarray:
-    """'Random' strategy: 101 distinct valid coords, target appended
-    last (gapfiller.py:457-486). The reference rejection-samples with
-    unseeded ``random.randint`` — which silently never terminates when
-    fewer than 101 valid pixels exist and degenerates near that bound
-    (that is why its viability threshold is 101, gapfiller.py:860).
-    Ours draws a seeded permutation of the valid set: same contract
-    (101 distinct valid, uniform), deterministic per pixel, O(valid),
-    and raises instead of hanging on infeasible images."""
-    valid = random_pool(final, sv)
-    chosen = valid[rng.permutation(len(valid))[:N_RANDOM]]
-    return np.vstack([chosen, [coord]])
-
-
 def random_pool(final: np.ndarray,
                 sv: Sentinels = DEFAULT_SENTINELS) -> np.ndarray:
-    """The valid coords ``select_random`` draws from, in row-major
-    order; raises when there are fewer than ``N_RANDOM`` of them."""
+    """The valid coords a 'Random' selection (and the small-biome
+    fallback) draws its 101 predictors from, in row-major order
+    (gapfiller.py:457-486). The reference rejection-samples with
+    unseeded ``random.randint``, which never terminates when fewer
+    than 101 valid pixels exist (hence its viability threshold of 101,
+    gapfiller.py:860). Ours takes each pixel's seeded permutation of
+    this pool (``pixel_draws``): same contract (101 distinct valid,
+    uniform), deterministic per pixel, and it raises here instead of
+    hanging when there are fewer than ``N_RANDOM``."""
     valid = np.argwhere((final != sv.gap) & (final != sv.skip)
                         & (final != sv.nodata))
     if len(valid) < N_RANDOM:
@@ -181,42 +166,6 @@ def random_pool(final: np.ndarray,
             f"image has {len(valid)} (reference would loop forever here)"
         )
     return valid
-
-
-def _k_nearest(coords: np.ndarray, coord: tuple[int, int], k: int) -> np.ndarray:
-    """k smallest Euclidean pixel distances with np.argmin first-index
-    tie-break parity (gapfiller.py:519-530): sort by (distance, index)."""
-    d = np.sqrt(((coords - np.array(coord)) ** 2).sum(axis=1).astype(np.float64))
-    # stable argsort == lexsort((arange(n), d)): equal distances keep
-    # ascending original-index order — same np.argmin first-index
-    # parity, ~2x faster than the two-key lexsort
-    order = np.argsort(d, kind="stable")[:k]
-    return coords[order]
-
-
-def select_biome(final: np.ndarray, coord: tuple[int, int], extra: np.ndarray,
-                 rng: np.random.Generator,
-                 sv: Sentinels = DEFAULT_SENTINELS) -> np.ndarray:
-    """'Biome' strategy (gapfiller.py:500-586): same-biome candidates
-    not currently gapped; >41 → 40 nearest; else 101 random valid →
-    40 nearest of those. Target appended last."""
-    code = extra[coord[0], coord[1]]
-    masked = np.where(final == sv.gap, sv.gap, extra)
-    coords = np.argwhere(masked == code)
-    if len(coords) > BIOME_MIN:
-        sel = _k_nearest(coords, coord, N_NEAREST)
-    else:
-        rand = select_random(final, coord, rng, sv)[:-1]  # drop appended target
-        sel = _k_nearest(rand, coord, N_NEAREST)
-    return np.vstack([sel, [coord]])
-
-
-def build_frame(tensor: np.ndarray, final: np.ndarray, coords: np.ndarray) -> np.ndarray:
-    """(layers+1, n_coords) frame: history series per coord + final-
-    matrix value as the last row (gapfiller.py:446-454)."""
-    hist = tensor[:, coords[:, 0], coords[:, 1]]
-    last = final[coords[:, 0], coords[:, 1]]
-    return np.vstack([hist, last[None, :]])
 
 
 def clean_frame(frame: np.ndarray, sv: Sentinels = DEFAULT_SENTINELS):
@@ -261,10 +210,9 @@ def fill_keyed(table: np.ndarray, idx: np.ndarray, gaps: np.ndarray,
     ``idx`` (P, C) each gap pixel's frame columns (target last),
     ``gaps`` (P, 2) absolute pixel coords (used only for the
     grid-search per-pixel seed salt). Pixel ``i``'s frame is
-    ``table[:, idx[i]]`` — the exact frame ``build_frame`` would build
-    — and runs the same clean + fit pipeline as ``fill_image``, so
-    results are bit-identical; the deep-history operator relies on
-    that. Returns (preds (P,), |CV-MAE| scores (P,), skip mask (P,))."""
+    ``table[:, idx[i]]``; it is cleaned (``clean_frame``) and fit
+    (``regressors.fit_predict``) on its own. Returns (preds (P,),
+    |CV-MAE| scores (P,), skip mask (P,))."""
     P = idx.shape[0]
     preds = np.full(P, np.nan)
     scores = np.full(P, np.nan)
@@ -277,6 +225,13 @@ def fill_keyed(table: np.ndarray, idx: np.ndarray, gaps: np.ndarray,
         X_train, y_train, X_test = res
         s = cv_seed(seed, len(y_train))
         if hyperparameters in ("RandomGridSearch", "GridSearch"):
+            # grid modes sample candidates per PIXEL (the reference's
+            # unseeded RandomizedSearchCV draws fresh per call;
+            # sharing one candidate subset across an image would bias
+            # a whole fill on one unlucky draw). Custom mode keeps the
+            # (image, n_train) seed — the batched kernel's fold-share
+            # contract (kernels/batch.py). Python ints: the forests
+            # scale the seed again, and an int64 would wrap there
             r, c = (int(v) for v in gaps[i])
             s = (s * 69069 + r * 8191 + c * 131) % (2**63 - 1)
         pred, score = regressors.fit_predict(
@@ -286,56 +241,3 @@ def fill_keyed(table: np.ndarray, idx: np.ndarray, gaps: np.ndarray,
         preds[i] = float(np.ravel(pred)[0])
         scores[i] = abs(float(np.ravel(score).mean() if np.ndim(score) else score))
     return preds, scores, skip_px
-
-
-def fill_image(final: np.ndarray, tensor: np.ndarray,
-               extra: np.ndarray | None = None, method: str = "Knn",
-               predictor_configuration: str = "Random",
-               hyperparameters: str = "Custom", params: dict | None = None,
-               seed: int = 0, gap_slice: tuple[int, int] | None = None,
-               sv: Sentinels = DEFAULT_SENTINELS):
-    """Fill every gap pixel of ``final`` using the temporal stack
-    ``tensor``; returns (filled matrix, list of |CV-MAE| scores).
-    Equivalent of the reference's per-image ``__learning_and_fill``
-    loop (gapfiller.py:600-781) minus the IO. ``gap_slice=(lo, hi)``
-    fills only that positional range of the row-major gap scan
-    (chunked operators) — per-pixel seeding keeps results identical
-    to the whole-image fill."""
-    gaps = np.argwhere(final == sv.gap)
-    if gap_slice is not None:
-        gaps = gaps[gap_slice[0] : gap_slice[1]]
-    filled = final.copy()
-    scores: list[float] = []
-    for r, c in gaps:
-        rng = _pixel_rng(seed, int(r), int(c))
-        if predictor_configuration == "Biome":
-            if extra is None:
-                raise ValueError("Biome mode requires the extra (zone) matrix")
-            coords = select_biome(final, (r, c), extra, rng, sv)
-        elif predictor_configuration == "All":
-            coords = select_all(final, (r, c), sv)
-        elif predictor_configuration == "Random":
-            coords = select_random(final, (r, c), rng, sv)
-        else:
-            raise ValueError(f"unknown predictor_configuration {predictor_configuration!r}")
-        res = clean_frame(build_frame(tensor, final, coords), sv)
-        if isinstance(res, str):  # 'skip': skip target or empty train
-            filled[r, c] = sv.skip
-            continue
-        X_train, y_train, X_test = res
-        s = cv_seed(seed, len(y_train))
-        if hyperparameters in ("RandomGridSearch", "GridSearch"):
-            # grid modes sample candidates per PIXEL (the reference's
-            # unseeded RandomizedSearchCV draws fresh per call;
-            # sharing one candidate subset across an image would bias
-            # a whole fill on one unlucky draw). Custom mode keeps the
-            # (image, n_train) seed — the batched kernel's fold-share
-            # contract (kernels/batch.py).
-            s = (s * 69069 + r * 8191 + c * 131) % (2**63 - 1)
-        pred, score = regressors.fit_predict(
-            method, hyperparameters, params, X_train, y_train, X_test,
-            seed=s,
-        )
-        filled[r, c] = float(np.ravel(pred)[0])
-        scores.append(abs(float(np.ravel(score).mean() if np.ndim(score) else score)))
-    return filled, scores

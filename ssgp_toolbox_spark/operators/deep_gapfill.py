@@ -21,11 +21,11 @@ raster is ever grouped, collected, or broadcast**:
 3. **Fill pass**: group the per-layer extracts by (image, chunk) —
    the collected group is the compact matrix (L × K floats,
    K ≤ chunk_px × (C+1)). Stacked over the coords row's final-image
-   values it is the keyed frame table the kernel cores take, so it
-   feeds them directly with the coords row's ``idx`` and no
-   (L, P, C) gather (``batch.fill_keyed_knn`` / ``frame.fill_keyed``,
-   which clean each distinct pixel once). Tasks need NO raster at
-   all: the target values ride the coords row.
+   values it is the keyed frame table ``gapfill``'s kernel builds, so
+   it enters the same keyed entry (``batch.fill_keyed``, which picks
+   the method's core) with the coords row's ``idx`` and no (L, P, C)
+   gather. Tasks need NO raster at all: the target values ride the
+   coords row.
 4. Reassemble per image (the delta shuffle + assemble that
    ``gapfill`` runs for split images), union the passthrough leg.
 
@@ -37,8 +37,8 @@ IS the raster) — correct, but use the plain operators there.
 
 Bit-identical to ``gapfill`` (asserted in tests/test_deep_gapfill.py):
 selection is recomputed nowhere — coords are chosen once, and the
-gathered frames equal ``build_frame``'s output value-for-value
-(lossless f64 through the parquet/Arrow hops).
+keyed table equals ``batch.keyed_table``'s value-for-value (lossless
+f64 through the parquet/Arrow hops).
 
 Reference parity: same per-image dataflow as gapfiller.py:600-781;
 chronological layer order via sort-by-ts (gapfiller.py:91).
@@ -54,7 +54,6 @@ from pyspark.sql import DataFrame, functions as F, types as T
 
 from ssgp_toolbox_spark import codecs
 from ssgp_toolbox_spark.kernels import batch
-from ssgp_toolbox_spark.kernels import frame as frame_kernel
 from ssgp_toolbox_spark.operators import gapfill as G
 from ssgp_toolbox_spark.sentinels import (DEFAULT_SENTINELS, Sentinels,
                                           check_gap_count, check_payload_fmt,
@@ -85,7 +84,7 @@ def _coords_batches(predictor_configuration: str, chunk_px: int,
                     group_chunks: int = 1):
     """Per-row coords extraction. A row is (image, grp): the gap scan
     slice [grp·G·chunk_px, (grp+1)·G·chunk_px) with G=``group_chunks``
-    — per-pixel determinism (the fill kernels' ``gap_slice`` contract)
+    — per-pixel determinism (the fill kernel's gap-slice contract)
     makes a slice's coords identical to the same pixels' slice of the
     whole-image result, and chunk ids stay GLOBAL (grp·G + local), so
     the output rows are byte-identical to the former one-task-per-
@@ -154,10 +153,6 @@ def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 def _deep_fill_batches(method: str, hyperparameters: str, params: dict | None,
                        sv: Sentinels = DEFAULT_SENTINELS):
-    params = dict(params or {})
-    k = int(params.get("n_neighbors", 5))
-    weights = params.get("weights", "uniform")
-
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = {kk: [] for kk in G.CHUNK_SCHEMA.fieldNames()}
@@ -171,15 +166,9 @@ def _deep_fill_batches(method: str, hyperparameters: str, params: dict | None,
                     np.frombuffer(row.last_vals, dtype="<f8")])
                 idx = np.frombuffer(row.idx, dtype="<i4").reshape(P, C)
                 gaps = np.frombuffer(row.gaps, dtype="<i4").reshape(P, 2)
-                seed = G._stable_seed(row.image_id)
-                if method == "Knn" and hyperparameters == "Custom":
-                    preds, scores, skip = batch.fill_keyed_knn(
-                        table, idx, k, weights, seed, sv)
-                else:
-                    preds, scores, skip = frame_kernel.fill_keyed(
-                        table, idx, gaps, method=method,
-                        hyperparameters=hyperparameters, params=params,
-                        seed=seed, sv=sv)
+                preds, scores, skip = batch.fill_keyed(
+                    table, idx, gaps, method, hyperparameters, params,
+                    G._stable_seed(row.image_id), sv)
                 vals = np.where(skip, sv.skip, preds)
                 out["image_id"].append(row.image_id)
                 out["chunk_id"].append(int(row.chunk_id))
@@ -216,7 +205,7 @@ def gapfill_deep(images: DataFrame, method: str = "Knn",
     # 96%-gap 200×160 input alone measured 2.6-3.2 s of whole-image
     # select_coords in a single task). Groups of ``group_chunks``
     # chunks split that scan across tasks — per-pixel determinism
-    # (the gap_slice contract) keeps every output row byte-identical,
+    # (the gap-slice contract) keeps every output row byte-identical,
     # at the price of re-shipping the input raster once per group
     # (×ceil(gaps / (G·chunk_px)) duplication through one round-robin
     # exchange — input payloads only, never history layers, so the

@@ -50,7 +50,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ssgp_toolbox_spark import codecs
-from ssgp_toolbox_spark.kernels import frame as frame_kernel
+from ssgp_toolbox_spark.kernels import batch
 from ssgp_toolbox_spark.sentinels import (DEFAULT_SENTINELS, Sentinels,
                                           check_gap_count, check_payload_fmt,
                                           resolve_key_values)
@@ -102,29 +102,6 @@ def pack_extra(extras: DataFrame) -> DataFrame:
     return packed.select("site", one.alias("extra_layer"))
 
 
-def _fill_kernel(final, tensor, extra, method, predictor_configuration,
-                 hyperparameters, params, seed, gap_slice=None,
-                 sv: Sentinels = DEFAULT_SENTINELS):
-    """Dispatch: batched tensor-algebra path for Knn/Custom (20-60×
-    faster, bit-identical — kernels/batch.py), generic per-pixel path
-    otherwise."""
-    if method == "Knn" and hyperparameters == "Custom":
-        from ssgp_toolbox_spark.kernels import batch
-
-        return batch.fill_image_knn(
-            final, tensor, extra=extra,
-            predictor_configuration=predictor_configuration,
-            hyperparameters=hyperparameters, params=params, seed=seed,
-            gap_slice=gap_slice, sv=sv,
-        )
-    return frame_kernel.fill_image(
-        final, tensor, extra=extra, method=method,
-        predictor_configuration=predictor_configuration,
-        hyperparameters=hyperparameters, params=params, seed=seed,
-        gap_slice=gap_slice, sv=sv,
-    )
-
-
 def _append_filled(out, image_id, filled, fmt, w, h, caption, n_px, scores,
                    sv: Sentinels):
     """One finished GAPFILL_SCHEMA row (status 'filled')."""
@@ -159,14 +136,14 @@ def _fill_batches(method, predictor_configuration, hyperparameters, params,
                 if predictor_configuration == "Biome":
                     e = row.extra_layer
                     extra = codecs.decode(e["bytes"], int(e["h"]), int(e["w"]), e["fmt"])
-                n_gaps = int((final == sv.gap).sum())
-                filled, scores = _fill_kernel(
+                gaps = np.argwhere(final == sv.gap)
+                filled, scores = batch.fill_image(
                     final, tensor, extra, method, predictor_configuration,
                     hyperparameters, params, seed=_stable_seed(row.image_id),
-                    sv=sv,
+                    gaps=gaps, sv=sv,
                 )
                 _append_filled(out, row.image_id, filled, row.fmt, row.w,
-                               row.h, row.caption, n_gaps, scores, sv)
+                               row.h, row.caption, len(gaps), scores, sv)
             yield pd.DataFrame(out)
 
     return fn
@@ -289,13 +266,11 @@ def _plan_fill_batches(plan, method, predictor_configuration,
                     filled = final.copy()
                     scores = []
                     for s in range(lo, hi, chunk_px):
-                        e = min(s + chunk_px, hi)
-                        part, sc = _fill_kernel(
+                        sel = gaps[s:min(s + chunk_px, hi)]
+                        part, sc = batch.fill_image(
                             final, tensor, extra, method,
                             predictor_configuration, hyperparameters, params,
-                            seed=_stable_seed(image_id), gap_slice=(s, e),
-                            sv=sv)
-                        sel = gaps[s:e]
+                            seed=_stable_seed(image_id), gaps=sel, sv=sv)
                         filled[sel[:, 0], sel[:, 1]] = part[sel[:, 0], sel[:, 1]]
                         scores.extend(sc)
                     if whole:
@@ -444,7 +419,9 @@ def gapfill(images: DataFrame, method: str = "Lasso",
     their gap scan) → one mapInPandas fill wave, no exchange. Only when
     an image splits: ONE shuffle of its (row, col, value) deltas,
     ~20 bytes/gap px, beside the finished rows → mapInPandas assemble.
-    A kernel call fills at most ``chunk_px`` gap px, which bounds its
+    A kernel call (``batch.fill_image``, the one entry for every
+    method: batched predictor selection, the keyed frame, then the
+    method's core) fills at most ``chunk_px`` gap px, which bounds its
     temporaries; per-pixel seeding makes the result bit-identical to a
     whole-image fill.
 

@@ -123,13 +123,13 @@ def _fill_tile_group(params, sv: Sentinels = DEFAULT_SENTINELS):
                 # seeds keyed by ABSOLUTE pixel coords (coord_offset)
                 # so tiling does not change the seed
                 sub = gaps_all[in_core]
-                f, scores = batch_kernel.fill_image_knn(
-                    win, tensor, extra=extra,
+                f, scores = batch_kernel.fill_image(
+                    win, tensor, extra=extra, method="Knn",
                     predictor_configuration="Biome",
                     hyperparameters="Custom",
                     params={"n_neighbors": k, "weights": weights},
                     seed=_stable_seed(inp.image_id),
-                    gap_subset=sub,
+                    gaps=sub,
                     coord_offset=(int(inp.prow0), int(inp.pcol0)),
                     sv=sv,
                 )

@@ -182,14 +182,14 @@ def discretize_oracle(matrices_dict, timestep_hours=12, averaging="None",
 
 
 def pixel_rng(seed, r, c):
-    """Determinism spec: per-(image, pixel) RNG (kernels/frame.py:44)."""
+    """Determinism spec: per-(image, pixel) RNG (``frame._pixel_seed``)."""
     return np.random.default_rng(
         (seed * 1_000_003 + r * 8191 + c) % (2**63 - 1)
     )
 
 
 def cv_seed(seed, n_train):
-    """Determinism spec: CV fold seed (kernels/frame.py:52)."""
+    """Determinism spec: CV fold seed (``frame.cv_seed``)."""
     return (seed * 2_654_435_761 + n_train * 97) % (2**63 - 1)
 
 
@@ -330,13 +330,15 @@ def whole_image_fills(rows, method, predictor_configuration,
     """No-Spark reference of ``gapfill``'s output: every viable input
     with gaps is filled by ONE whole-image kernel call (no gap slices,
     no tasks) against its site's ts-sorted history stack, and encoded
-    as the operator encodes it. ``rows``: collected image rows with
-    the stats columns. An input whose site has no history rows (or,
-    under Biome, no extra layer) is left out, as the operator leaves
-    it out. Returns image_id -> (filled, scores, (bytes, filled_px,
+    as the operator encodes it. Knn/Custom runs the product kernel
+    (``batch.fill_image``, checked against ``fill_image_per_pixel`` in
+    tests/test_batch_fill.py); every other method runs the per-pixel
+    reference. ``rows``: collected image rows with the stats columns.
+    An input whose site has no history rows (or, under Biome, no extra
+    layer) is left out, as the operator leaves it out. Returns image_id -> (filled, scores, (bytes, filled_px,
     phash, mean_cv_mae hex))."""
     from ssgp_toolbox_spark import codecs
-    from ssgp_toolbox_spark.kernels import batch, frame
+    from ssgp_toolbox_spark.kernels import batch
 
     def dec(r):
         return codecs.decode(bytes(r["bytes"]), r["h"], r["w"], r["fmt"])
@@ -359,10 +361,11 @@ def whole_image_fills(rows, method, predictor_configuration,
                   seed=stable_seed(r["image_id"]))
         tensor = np.stack([dec(h) for h in hist])
         if method == "Knn" and hyperparameters == "Custom":
-            filled, scores = batch.fill_image_knn(final, tensor, **kw)
-        else:
-            filled, scores = frame.fill_image(final, tensor, method=method,
+            filled, scores = batch.fill_image(final, tensor, method=method,
                                               **kw)
+        else:
+            filled, scores = fill_image_per_pixel(final, tensor,
+                                                  method=method, **kw)
         mean = float(np.mean(scores)) if len(scores) else float("nan")
         out[r["image_id"]] = (filled, scores, (
             codecs.encode(filled, r["fmt"]), int((final == GAP).sum()),
@@ -1184,3 +1187,130 @@ def fill_gathered_knn(hist, last, k, weights, seed, sv=None):
         scores[sel] = sc
 
     return preds, scores, skip_px
+
+
+# ---------------------------------------------------------------------
+# The per-pixel fill loop that ``batch.fill_image`` replaced, kept
+# verbatim (from kernels/frame.py) as its frozen reference: selection
+# is re-run for every gap pixel (``select_biome`` / ``select_random``
+# / ``select_all``) and each frame is built on its own
+# (``build_frame``). Cleaning and fitting are the product's
+# (``frame.clean_frame``, ``regressors.fit_predict``).
+#
+# Known fault kept: the grid-search seed salt takes the numpy ints of
+# ``for r, c in gaps``, so for an image seed below ~50,300 the salted
+# seed is an np.int64 and the forests' ``seed * 1_000_003 + t`` wraps
+# (ExtraTrees/RandomGridSearch at seed 21 raises "expected
+# non-negative integer"). The product salts with Python ints. Parity
+# tests of forest grid modes must use a large image seed.
+# ---------------------------------------------------------------------
+
+
+def select_all(final, coord, sv=None):
+    """'All' strategy: every non-gap pixel (incl. skip/NoData — they
+    are cleaned later), target appended last (gapfiller.py:438-443)."""
+    from ssgp_toolbox_spark.sentinels import DEFAULT_SENTINELS
+
+    sv = sv or DEFAULT_SENTINELS
+    coords = np.argwhere(final != sv.gap)
+    return np.vstack([coords, [coord]])
+
+
+def select_random(final, coord, rng, sv=None):
+    """'Random' strategy: 101 distinct valid coords, target appended
+    last (gapfiller.py:457-486), from a seeded permutation of the
+    valid set (``frame.random_pool``)."""
+    from ssgp_toolbox_spark.kernels import frame as FR
+    from ssgp_toolbox_spark.sentinels import DEFAULT_SENTINELS
+
+    sv = sv or DEFAULT_SENTINELS
+    valid = FR.random_pool(final, sv)
+    chosen = valid[rng.permutation(len(valid))[:FR.N_RANDOM]]
+    return np.vstack([chosen, [coord]])
+
+
+def k_nearest(coords, coord, k):
+    """k smallest Euclidean pixel distances with np.argmin first-index
+    tie-break parity (gapfiller.py:519-530): sort by (distance, index)."""
+    d = np.sqrt(((coords - np.array(coord)) ** 2).sum(axis=1).astype(np.float64))
+    # stable argsort == lexsort((arange(n), d)): equal distances keep
+    # ascending original-index order — same np.argmin first-index
+    # parity, ~2x faster than the two-key lexsort
+    order = np.argsort(d, kind="stable")[:k]
+    return coords[order]
+
+
+def select_biome(final, coord, extra, rng, sv=None):
+    """'Biome' strategy (gapfiller.py:500-586): same-biome candidates
+    not currently gapped; >41 → 40 nearest; else 101 random valid →
+    40 nearest of those. Target appended last."""
+    from ssgp_toolbox_spark.kernels import frame as FR
+    from ssgp_toolbox_spark.sentinels import DEFAULT_SENTINELS
+
+    sv = sv or DEFAULT_SENTINELS
+    code = extra[coord[0], coord[1]]
+    masked = np.where(final == sv.gap, sv.gap, extra)
+    coords = np.argwhere(masked == code)
+    if len(coords) > FR.BIOME_MIN:
+        sel = k_nearest(coords, coord, FR.N_NEAREST)
+    else:
+        rand = select_random(final, coord, rng, sv)[:-1]  # drop appended target
+        sel = k_nearest(rand, coord, FR.N_NEAREST)
+    return np.vstack([sel, [coord]])
+
+
+def build_frame(tensor, final, coords):
+    """(layers+1, n_coords) frame: history series per coord + final-
+    matrix value as the last row (gapfiller.py:446-454)."""
+    hist = tensor[:, coords[:, 0], coords[:, 1]]
+    last = final[coords[:, 0], coords[:, 1]]
+    return np.vstack([hist, last[None, :]])
+
+
+def fill_image_per_pixel(final, tensor, extra=None, method="Knn",
+                         predictor_configuration="Random",
+                         hyperparameters="Custom", params=None, seed=0,
+                         gap_slice=None, sv=None):
+    """Fill every gap pixel of ``final`` using the temporal stack
+    ``tensor``, one pixel at a time; returns (filled matrix, list of
+    |CV-MAE| scores). ``gap_slice=(lo, hi)`` fills only that
+    positional range of the row-major gap scan."""
+    from ssgp_toolbox_spark.kernels import regressors
+    from ssgp_toolbox_spark.kernels.frame import clean_frame, cv_seed
+    from ssgp_toolbox_spark.sentinels import DEFAULT_SENTINELS
+
+    sv = sv or DEFAULT_SENTINELS
+    gaps = np.argwhere(final == sv.gap)
+    if gap_slice is not None:
+        gaps = gaps[gap_slice[0] : gap_slice[1]]
+    filled = final.copy()
+    scores = []
+    for r, c in gaps:
+        rng = pixel_rng(seed, int(r), int(c))
+        if predictor_configuration == "Biome":
+            if extra is None:
+                raise ValueError("Biome mode requires the extra (zone) matrix")
+            coords = select_biome(final, (r, c), extra, rng, sv)
+        elif predictor_configuration == "All":
+            coords = select_all(final, (r, c), sv)
+        elif predictor_configuration == "Random":
+            coords = select_random(final, (r, c), rng, sv)
+        else:
+            raise ValueError(f"unknown predictor_configuration {predictor_configuration!r}")
+        res = clean_frame(build_frame(tensor, final, coords), sv)
+        if isinstance(res, str):  # 'skip': skip target or empty train
+            filled[r, c] = sv.skip
+            continue
+        X_train, y_train, X_test = res
+        s = cv_seed(seed, len(y_train))
+        if hyperparameters in ("RandomGridSearch", "GridSearch"):
+            # grid modes sample candidates per PIXEL; r, c are numpy
+            # ints here (the fault noted above)
+            s = (s * 69069 + r * 8191 + c * 131) % (2**63 - 1)
+        pred, score = regressors.fit_predict(
+            method, hyperparameters, params, X_train, y_train, X_test,
+            seed=s,
+        )
+        filled[r, c] = float(np.ravel(pred)[0])
+        scores.append(abs(float(np.ravel(score).mean() if np.ndim(score) else score)))
+    return filled, scores

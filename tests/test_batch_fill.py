@@ -1,5 +1,6 @@
-"""Batched kNN fill (kernels/batch.py) and the planned ``gapfill``
-wave must be bit-identical to the per-pixel, whole-image path."""
+"""The fill kernel (``batch.fill_image``) and the planned ``gapfill``
+wave must be bit-identical to the per-pixel, whole-image reference
+(``oracles.fill_image_per_pixel``)."""
 
 import numpy as np
 import oracles
@@ -26,14 +27,14 @@ def scene():
 @pytest.mark.parametrize("config", ["Biome", "Random", "All"])
 def test_batched_equals_perpixel(scene, config):
     final, tensor, extra = scene
-    slow_m, slow_s = FR.fill_image(final, tensor, extra=extra, method="Knn",
-                                   predictor_configuration=config,
-                                   hyperparameters="Custom",
-                                   params={"n_neighbors": 5}, seed=21)
-    fast_m, fast_s = B.fill_image_knn(final, tensor, extra=extra,
-                                      predictor_configuration=config,
-                                      hyperparameters="Custom",
-                                      params={"n_neighbors": 5}, seed=21)
+    slow_m, slow_s = oracles.fill_image_per_pixel(
+        final, tensor, extra=extra, method="Knn",
+        predictor_configuration=config, hyperparameters="Custom",
+        params={"n_neighbors": 5}, seed=21)
+    fast_m, fast_s = B.fill_image(final, tensor, extra=extra, method="Knn",
+                                  predictor_configuration=config,
+                                  hyperparameters="Custom",
+                                  params={"n_neighbors": 5}, seed=21)
     assert np.array_equal(slow_m, fast_m, equal_nan=True)
     assert len(slow_s) == len(fast_s)
     assert np.allclose(slow_s, fast_s, equal_nan=True)
@@ -41,16 +42,15 @@ def test_batched_equals_perpixel(scene, config):
 
 def test_batched_distance_weights(scene):
     final, tensor, extra = scene
-    slow_m, _ = FR.fill_image(final, tensor, extra=extra, method="Knn",
-                              predictor_configuration="Biome",
-                              hyperparameters="Custom",
-                              params={"n_neighbors": 3, "weights": "distance"},
-                              seed=4)
-    fast_m, _ = B.fill_image_knn(final, tensor, extra=extra,
-                                 predictor_configuration="Biome",
-                                 hyperparameters="Custom",
-                                 params={"n_neighbors": 3, "weights": "distance"},
-                                 seed=4)
+    slow_m, _ = oracles.fill_image_per_pixel(
+        final, tensor, extra=extra, method="Knn",
+        predictor_configuration="Biome", hyperparameters="Custom",
+        params={"n_neighbors": 3, "weights": "distance"}, seed=4)
+    fast_m, _ = B.fill_image(final, tensor, extra=extra, method="Knn",
+                             predictor_configuration="Biome",
+                             hyperparameters="Custom",
+                             params={"n_neighbors": 3, "weights": "distance"},
+                             seed=4)
     # distance weights divide by ||a-b||: the batched path computes it
     # as a²+b²−2ab (matmul) vs the direct (a−b)² sum — last-ulp float
     # differences in 1/d are expected, so allclose not array_equal
@@ -60,8 +60,9 @@ def test_batched_distance_weights(scene):
 def test_empty_training_set_fills_skip(scene):
     """A gap px whose whole target history is gap/NoData has no
     training row. It becomes skip with no score, as a skip target
-    does, in the batched and the per-pixel Knn paths and a per-pixel
-    non-Knn method: no NaN reaches the raster or ``mean_cv_mae``."""
+    does, in the batched Knn core, the per-pixel reference and the
+    per-pixel core of a non-Knn method: no NaN reaches the raster or
+    ``mean_cv_mae``."""
     final, tensor, extra = scene
     tensor = tensor.copy()
     gaps = np.argwhere(final == GAP)
@@ -72,10 +73,11 @@ def test_empty_training_set_fills_skip(scene):
               hyperparameters="Custom", seed=21)
     knn = {"n_neighbors": 5}
     runs = [
-        (B.fill_image_knn(final, tensor, params=knn, **kw), gaps),
-        (FR.fill_image(final, tensor, method="Knn", params=knn, **kw), gaps),
-        (FR.fill_image(final, tensor, method="Lasso", params={"alpha": 1.0},
-                       gap_slice=(38, 44), **kw), gaps[38:44]),
+        (B.fill_image(final, tensor, method="Knn", params=knn, **kw), gaps),
+        (oracles.fill_image_per_pixel(final, tensor, method="Knn",
+                                      params=knn, **kw), gaps),
+        (B.fill_image(final, tensor, method="Lasso", params={"alpha": 1.0},
+                      gaps=gaps[38:44], **kw), gaps[38:44]),
     ]
     for (filled, scores), done in runs:
         assert not np.isnan(filled).any()
@@ -135,8 +137,9 @@ def test_slow_path_batched_bit_equals_loop(weights, monkeypatch):
     extra = generator.zone_raster("slowb", H, W).astype(float)
 
     def fill():
-        return B.fill_image_knn(
-            final, tensor, extra=extra, predictor_configuration="Biome",
+        return B.fill_image(
+            final, tensor, extra=extra, method="Knn",
+            predictor_configuration="Biome",
             hyperparameters="Custom",
             params={"n_neighbors": 5, "weights": weights}, seed=99)
 
@@ -158,21 +161,16 @@ def test_gap_slice_union_equals_whole(scene):
     """Chunked fills (the balanced operator's unit) reassemble to the
     exact whole-image fill — per-pixel seeding guarantees it."""
     final, tensor, extra = scene
-    whole, scores = B.fill_image_knn(final, tensor, extra=extra,
-                                     predictor_configuration="Biome",
-                                     hyperparameters="Custom",
-                                     params={"n_neighbors": 5}, seed=7)
+    kw = dict(extra=extra, method="Knn", predictor_configuration="Biome",
+              hyperparameters="Custom", params={"n_neighbors": 5}, seed=7)
+    whole, scores = B.fill_image(final, tensor, **kw)
     gaps = np.argwhere(final == GAP)
     stitched = final.copy()
     parts = []
     for lo in range(0, len(gaps), 137):
         hi = min(lo + 137, len(gaps))
-        part, psc = B.fill_image_knn(final, tensor, extra=extra,
-                                     predictor_configuration="Biome",
-                                     hyperparameters="Custom",
-                                     params={"n_neighbors": 5}, seed=7,
-                                     gap_slice=(lo, hi))
         sel = gaps[lo:hi]
+        part, psc = B.fill_image(final, tensor, gaps=sel, **kw)
         stitched[sel[:, 0], sel[:, 1]] = part[sel[:, 0], sel[:, 1]]
         parts.extend(psc)
     assert np.array_equal(whole, stitched, equal_nan=True)
@@ -333,22 +331,21 @@ def test_small_biome_fallback_bit_equals_oracle(monkeypatch):
         return real(final, gaps, sel, *args, **kwargs)
 
     monkeypatch.setattr(B, "_random_nearest_batched", spy)
-    kw = dict(extra=extra, predictor_configuration="Biome",
+    kw = dict(extra=extra, method="Knn", predictor_configuration="Biome",
               hyperparameters="Custom", params={"n_neighbors": 5}, seed=13)
     for offset in [(0, 0), (37, 5)]:
         want_m, want_s = oracles.gapfill_image_oracle(
             final, tensor, extra, 13, coord_offset=offset)
         fallback.clear()
-        got_m, got_s = B.fill_image_knn(final, tensor, coord_offset=offset,
-                                        **kw)
+        got_m, got_s = B.fill_image(final, tensor, coord_offset=offset, **kw)
         assert sum(fallback) > 0.8 * len(gaps)
         assert np.array_equal(got_m, want_m, equal_nan=True)
         assert len(got_s) == len(gaps)
         assert np.array_equal(np.asarray(got_s), np.asarray(want_s))
         lo, hi = 200, 600
-        part_m, part_s = B.fill_image_knn(final, tensor, coord_offset=offset,
-                                          gap_slice=(lo, hi), **kw)
         sel = gaps[lo:hi]
+        part_m, part_s = B.fill_image(final, tensor, coord_offset=offset,
+                                      gaps=sel, **kw)
         assert np.array_equal(part_m[sel[:, 0], sel[:, 1]],
                               want_m[sel[:, 0], sel[:, 1]], equal_nan=True)
         # no skip px in the scene: one score per gap px, in scan order
@@ -357,20 +354,70 @@ def test_small_biome_fallback_bit_equals_oracle(monkeypatch):
 
 def test_small_biome_fallback_needs_101_valid_px():
     """An image with fewer than 101 valid px cannot draw the fallback's
-    101 random predictors: ``select_random``'s ValueError still stops
-    it."""
+    101 random predictors: ``frame.random_pool``'s ValueError still
+    stops it."""
     final, tensor, extra = _high_gap_scene(100)
     with pytest.raises(ValueError, match="needs 101 valid pixels"):
-        B.fill_image_knn(final, tensor, extra=extra,
-                         predictor_configuration="Biome",
-                         hyperparameters="Custom",
-                         params={"n_neighbors": 5}, seed=13)
+        B.fill_image(final, tensor, extra=extra, method="Knn",
+                     predictor_configuration="Biome",
+                     hyperparameters="Custom",
+                     params={"n_neighbors": 5}, seed=13)
 
 
-def test_fill_image_knn_rejects_grid_search_modes(scene):
-    """Only Custom hyperparameters have a batched kernel; another mode
-    is an error, not a silent switch to the per-pixel path."""
-    final, tensor, extra = scene
-    with pytest.raises(ValueError, match="'RandomGridSearch'"):
-        B.fill_image_knn(final, tensor, extra=extra,
-                         hyperparameters="RandomGridSearch")
+def _matrix_scene():
+    """24×20 px, 6 history layers, ~23% gaps: small enough that every
+    method fits per pixel in well under a second."""
+    h, w = 24, 20
+    tensor = np.stack([
+        generator.make_layer("mm", h, w, t, "history", 0.02) for t in range(6)
+    ])
+    final = generator.make_layer("mm", h, w, 8, "input", 0.23)
+    extra = generator.zone_raster("mm", h, w).astype(float)
+    return final, tensor, extra
+
+
+@pytest.mark.parametrize("config", ["Biome", "Random", "All"])
+@pytest.mark.parametrize("method,hp,params", [
+    ("Lasso", "Custom", {"alpha": 1.0}),
+    ("Lasso", "RandomGridSearch", None),
+    ("Knn", "RandomGridSearch", None),
+    ("Knn", "GridSearch", None),
+    ("SVR", "Custom", None),
+    ("RandomForest", "Custom", {"n_estimators": 5}),
+])
+def test_fill_image_matches_per_pixel(method, hp, params, config):
+    """Every method and mode through the one entry (batched selection,
+    keyed frame, the method's core) equals the per-pixel reference on
+    filled payload and score bits, on a gap slice (one px under 'All',
+    whose frames hold every valid px: per-pixel Lasso is slow there)."""
+    final, tensor, extra = _matrix_scene()
+    gaps = np.argwhere(final == GAP)
+    lo, hi = (40, 41) if config == "All" else (40, 45)
+    kw = dict(extra=extra, method=method, predictor_configuration=config,
+              hyperparameters=hp, params=params, seed=21)
+    want_m, want_s = oracles.fill_image_per_pixel(
+        final, tensor, gap_slice=(lo, hi), **kw)
+    got_m, got_s = B.fill_image(final, tensor, gaps=gaps[lo:hi], **kw)
+    assert got_m.tobytes() == want_m.tobytes()
+    assert [v.hex() for v in got_s] == [v.hex() for v in want_s]
+    assert len(got_s) > 0
+
+
+def test_forest_grid_small_image_seed_fills():
+    """A forest grid mode at a small image seed fills every gap with
+    a finite score. The per-pixel loop this entry replaced salted the
+    grid seed with numpy ints, so below an image seed of ~50,300 the
+    forests' ``seed * 1_000_003 + t`` wrapped in int64 and a negative
+    seed raised "expected non-negative integer"."""
+    from ssgp_toolbox_spark.sentinels import is_valid
+
+    _, tensor, _ = _matrix_scene()
+    final = generator.make_layer("mm", 24, 20, 8, "input", 0.0)
+    gaps = np.argwhere(is_valid(final))[::53][:6]
+    final[tuple(gaps.T)] = GAP
+    filled, scores = B.fill_image(
+        final, tensor, method="ExtraTrees", predictor_configuration="Random",
+        hyperparameters="RandomGridSearch", params={"n_estimators": 5},
+        seed=21)
+    assert is_valid(filled[tuple(gaps.T)]).all()
+    assert len(scores) == 6 and np.isfinite(scores).all()

@@ -49,8 +49,9 @@ def test_deep_equals_gapfill(spark, images, method, config, hp, params):
 
 
 def test_deep_gridsearch_parity(spark, images):
-    """Grid-search modes route through frame.fill_keyed with the
-    per-pixel seed salt — must match gapfill exactly."""
+    """Grid-search modes route through batch.fill_keyed to the
+    per-pixel core with its per-pixel seed salt — must match gapfill
+    exactly."""
     kw = dict(method="Lasso", predictor_configuration="Biome",
               hyperparameters="RandomGridSearch", params=None)
     base = _by_id(gapfill.gapfill(images, **kw).collect())

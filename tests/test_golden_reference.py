@@ -89,10 +89,10 @@ def test_gapfill_envelope_on_reference_data(spark):
         final = np.load(os.path.join(GF_SRC, "Inputs", f)).astype(np.float64)
         ref_fill = np.load(os.path.join(GF_SRC, "Outputs", f)).astype(np.float64)
         gaps = final == GAP
-        ours, _ = batch.fill_image_knn(final, tensor, extra=extra,
-                                       predictor_configuration="Biome",
-                                       hyperparameters="Custom",
-                                       params={"n_neighbors": 5}, seed=1)
+        ours, _ = batch.fill_image(final, tensor, extra=extra, method="Knn",
+                                   predictor_configuration="Biome",
+                                   hyperparameters="Custom",
+                                   params={"n_neighbors": 5}, seed=1)
         both = gaps & is_valid(ref_fill) & is_valid(ours)
         mae = float(np.abs(ours[both] - ref_fill[both]).mean())
         maes.append(mae)
@@ -103,15 +103,13 @@ def test_gapfill_envelope_on_reference_data(spark):
     assert max(maes) < 5.0, maes
     # Lasso/Biome tracks the committed fill tighter (measured 0.75 K
     # MAE on the first sample; CV-MAE 1.07 K vs their 1.45 K)
-    from ssgp_toolbox_spark.kernels import frame as FR
-
     f0 = sorted(os.listdir(os.path.join(GF_SRC, "Inputs")))[0]
     final = np.load(os.path.join(GF_SRC, "Inputs", f0)).astype(np.float64)
     ref_fill = np.load(os.path.join(GF_SRC, "Outputs", f0)).astype(np.float64)
-    ours, sc = FR.fill_image(final, tensor, extra=extra, method="Lasso",
-                             predictor_configuration="Biome",
-                             hyperparameters="Custom", params={"alpha": 1.0},
-                             seed=1)
+    ours, sc = batch.fill_image(final, tensor, extra=extra, method="Lasso",
+                                predictor_configuration="Biome",
+                                hyperparameters="Custom",
+                                params={"alpha": 1.0}, seed=1)
     both = (final == GAP) & is_valid(ref_fill) & is_valid(ours)
     assert float(np.abs(ours[both] - ref_fill[both]).mean()) < 2.0
     assert 0.5 < float(np.mean(sc)) < 2.5  # same CV regime as 1.45 K
@@ -133,9 +131,9 @@ def test_reference_metadata_envelope():
 
     f = sorted(os.listdir(os.path.join(GF_SRC, "Inputs")))[0]
     final = np.load(os.path.join(GF_SRC, "Inputs", f)).astype(np.float64)
-    _, scores = batch.fill_image_knn(final, tensor, extra=extra,
-                                     predictor_configuration="Biome",
-                                     hyperparameters="Custom",
-                                     params={"n_neighbors": 5}, seed=1)
+    _, scores = batch.fill_image(final, tensor, extra=extra, method="Knn",
+                                 predictor_configuration="Biome",
+                                 hyperparameters="Custom",
+                                 params={"n_neighbors": 5}, seed=1)
     ours = float(np.mean(scores))
     assert 0.3 < ours < 6.0, ours

@@ -6,6 +6,7 @@ import pytest
 
 import oracles
 from ssgp_toolbox_spark import generator
+from ssgp_toolbox_spark.kernels import batch as B
 from ssgp_toolbox_spark.kernels import frame as FR
 from ssgp_toolbox_spark.kernels import nn as NN
 from ssgp_toolbox_spark.kernels import regressors as R
@@ -48,8 +49,8 @@ def test_nn_fill_viability_and_passthrough():
 def test_clean_frame_matches_oracle(small_scene):
     tensor, final = small_scene
     for coord in [(5, 5), (4, 8), (7, 4)]:
-        coords = FR.select_all(final, coord)
-        f = FR.build_frame(tensor, final, coords)
+        coords = oracles.select_all(final, coord)
+        f = oracles.build_frame(tensor, final, coords)
         ours = FR.clean_frame(f.copy())
         ref = oracles.clean_frame_oracle(f.copy())
         assert not isinstance(ours, str) and not isinstance(ref, str)
@@ -62,8 +63,8 @@ def test_clean_frame_skip_target(small_scene):
     # gap pixel whose history contains skip -> 'skip' (gapfiller.py:634-635)
     final2 = final.copy()
     final2[1, 1] = GAP  # history layer 1 has SKIP at (1,1)
-    coords = FR.select_all(final2, (1, 1))
-    f = FR.build_frame(tensor, final2, coords)
+    coords = oracles.select_all(final2, (1, 1))
+    f = oracles.build_frame(tensor, final2, coords)
     assert FR.clean_frame(f) == "skip"
     assert oracles.clean_frame_oracle(f) == "skip"
 
@@ -81,19 +82,19 @@ def test_knn_regressor_matches_oracle():
 
 
 def test_k_nearest_tiebreak_parity():
-    """np.argmin first-index tie-break (gapfiller.py:519-530)."""
-    coords = np.array([[0, 2], [2, 0], [0, -2], [-2, 0], [1, 1], [3, 3]])
-    ours = FR._k_nearest(coords, (0, 0), 4)
-    ref = oracles.k_nearest_coords_oracle(coords, (0, 0), 4)
+    """np.argmin first-index tie-break (gapfiller.py:519-530) in the
+    Biome selection's exact k-nearest search."""
+    coords = np.array([[2, 4], [4, 2], [2, 0], [0, 2], [3, 3], [5, 5]])
+    ours = B._knn_coords_exact(coords, np.array([[2, 2]]), 4, (6, 6))[0]
+    ref = oracles.k_nearest_coords_oracle(coords, (2, 2), 4)
     assert np.array_equal(ours, np.asarray(ref, dtype=coords.dtype))
 
 
 def test_random_sample_count_and_determinism():
     final = generator.temperature_field("k", 30, 30, 0)
-    rng1 = FR._pixel_rng(42, 3, 4)
-    rng2 = FR._pixel_rng(42, 3, 4)
-    c1 = FR.select_random(final, (3, 4), rng1)
-    c2 = FR.select_random(final, (3, 4), rng2)
+    target = np.array([[3, 4]])
+    c1 = B.select_coords(final, None, target, "Random", 42)[0]
+    c2 = B.select_coords(final, None, target, "Random", 42)[0]
     # 101 sampled + target = 102 (reference O4 quirk, gapfiller.py:463-486)
     assert len(c1) == 102 and np.array_equal(c1, c2)
     assert tuple(c1[-1]) == (3, 4)
@@ -116,11 +117,12 @@ def test_seeded_draws_equal_default_rng(n):
 
 
 def test_pixel_draws_equal_pixel_rng():
-    """``pixel_draws`` keys each pixel exactly as ``_pixel_rng`` does,
+    """``pixel_draws`` keys each pixel exactly as the per-pixel
+    reference's ``pixel_rng`` does,
     including image seeds whose ``seed * 1_000_003`` leaves int64."""
     coords = np.array([[0, 0], [3, 4], [108, 61], [1500, 1499]])
     for seed in (0, 7, 2**62 + 11, 2**63 - 2):
-        want = np.stack([FR._pixel_rng(seed, int(r), int(c)).permutation(300)[:101]
+        want = np.stack([oracles.pixel_rng(seed, int(r), int(c)).permutation(300)[:101]
                          for r, c in coords])
         assert np.array_equal(FR.pixel_draws(seed, coords, 300), want)
 
@@ -128,8 +130,7 @@ def test_pixel_draws_equal_pixel_rng():
 def test_biome_selection_branches(small_scene):
     tensor, final = small_scene
     extra = generator.zone_raster("k", 24, 18, n_zones=4).astype(float)
-    rng = FR._pixel_rng(1, 5, 5)
-    sel = FR.select_biome(final, (5, 5), extra, rng)
+    sel = B.select_coords(final, extra, np.array([[5, 5]]), "Biome", 1)[0]
     assert len(sel) == 41  # 40 nearest + target
     # currently-gapped pixels must not be candidates (gapfiller.py:507-511)
     for i, j in sel[:-1]:
@@ -137,20 +138,22 @@ def test_biome_selection_branches(small_scene):
     # tiny-zone fallback: target in the forced 5x5 zone (<=41 px)
     tiny_code = extra.max()
     ti, tj = map(int, np.argwhere(extra == tiny_code)[0])
-    sel2 = FR.select_biome(final, (ti, tj), extra, FR._pixel_rng(1, ti, tj))
+    sel2 = B.select_coords(final, extra, np.array([[ti, tj]]), "Biome", 1)[0]
     assert len(sel2) == 41
+    assert np.array_equal(sel2, oracles.select_biome(
+        final, (ti, tj), extra, oracles.pixel_rng(1, ti, tj)))
 
 
 def test_fill_image_deterministic_and_complete(small_scene):
     tensor, final = small_scene
-    f1, s1 = FR.fill_image(final, tensor, method="Knn",
-                           predictor_configuration="Random",
-                           hyperparameters="Custom",
-                           params={"n_neighbors": 5}, seed=9)
-    f2, s2 = FR.fill_image(final, tensor, method="Knn",
-                           predictor_configuration="Random",
-                           hyperparameters="Custom",
-                           params={"n_neighbors": 5}, seed=9)
+    f1, s1 = B.fill_image(final, tensor, method="Knn",
+                          predictor_configuration="Random",
+                          hyperparameters="Custom",
+                          params={"n_neighbors": 5}, seed=9)
+    f2, s2 = B.fill_image(final, tensor, method="Knn",
+                          predictor_configuration="Random",
+                          hyperparameters="Custom",
+                          params={"n_neighbors": 5}, seed=9)
     assert np.array_equal(f1, f2) and s1 == s2
     assert (f1 == GAP).sum() == 0
     # untouched pixels pass through
@@ -165,10 +168,10 @@ def test_fill_accuracy_envelope():
     truth = generator.temperature_field("e", 30, 30, 13)
     final = truth.copy()
     final[10:18, 10:18] = GAP
-    filled, _ = FR.fill_image(final, tensor, method="Lasso",
-                              predictor_configuration="Random",
-                              hyperparameters="Custom",
-                              params={"alpha": 0.1}, seed=5)
+    filled, _ = B.fill_image(final, tensor, method="Lasso",
+                             predictor_configuration="Random",
+                             hyperparameters="Custom",
+                             params={"alpha": 0.1}, seed=5)
     mae = np.abs(filled[10:18, 10:18] - truth[10:18, 10:18]).mean()
     assert mae < 2.0, mae
 

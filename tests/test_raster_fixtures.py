@@ -8,7 +8,7 @@ import oracles
 
 from ssgp_toolbox_spark import codecs, generator
 from ssgp_toolbox_spark.kernels import cellular as ck
-from ssgp_toolbox_spark.kernels import frame as fk
+from ssgp_toolbox_spark.kernels import batch
 from ssgp_toolbox_spark.kernels import nn
 from ssgp_toolbox_spark.operators.gapfill import _stable_seed
 
@@ -28,7 +28,7 @@ def _corpus():
 def test_naive_gapfill_oracle_matches_engine_bitwise():
     hist, codes, iid, inp = _corpus()
     seed = _stable_seed(iid)
-    f_eng, s_eng = fk.fill_image(
+    f_eng, s_eng = batch.fill_image(
         inp, hist, extra=codes, method="Knn",
         predictor_configuration="Biome", hyperparameters="Custom",
         params={"n_neighbors": 5}, seed=seed)

@@ -6,7 +6,7 @@ from pyspark.sql import functions as F
 
 from ssgp_toolbox_spark import codecs, generator
 from ssgp_toolbox_spark.io import images as img_io
-from ssgp_toolbox_spark.kernels import frame as FR
+from ssgp_toolbox_spark.kernels import batch
 from ssgp_toolbox_spark.operators import gapfill, stats
 
 
@@ -29,18 +29,20 @@ def test_sequential_chaining_matches_local(spark):
     inputs = sorted((r for r in rows if r["role"] == "input"), key=lambda r: r["ts"])
     i1, i2 = inputs
     m1 = codecs.decode(bytes(i1["bytes"]), i1["h"], i1["w"], i1["fmt"])
-    f1, _ = FR.fill_image(m1, tensor, method="Knn",
-                          predictor_configuration="Random",
-                          hyperparameters="Custom", params={"n_neighbors": 5},
-                          seed=gapfill._stable_seed(i1["image_id"]))
+    f1, _ = batch.fill_image(m1, tensor, method="Knn",
+                             predictor_configuration="Random",
+                             hyperparameters="Custom",
+                             params={"n_neighbors": 5},
+                             seed=gapfill._stable_seed(i1["image_id"]))
     # chained: the filled layer sorts into the stack chronologically
     # (it is the latest timestamp, so it appends)
     tensor2 = np.concatenate([tensor, f1[None]])
     m2 = codecs.decode(bytes(i2["bytes"]), i2["h"], i2["w"], i2["fmt"])
-    f2, _ = FR.fill_image(m2, tensor2, method="Knn",
-                          predictor_configuration="Random",
-                          hyperparameters="Custom", params={"n_neighbors": 5},
-                          seed=gapfill._stable_seed(i2["image_id"]))
+    f2, _ = batch.fill_image(m2, tensor2, method="Knn",
+                             predictor_configuration="Random",
+                             hyperparameters="Custom",
+                             params={"n_neighbors": 5},
+                             seed=gapfill._stable_seed(i2["image_id"]))
     assert got[i1["image_id"]] == codecs.encode(f1, i1["fmt"])
     assert got[i2["image_id"]] == codecs.encode(f2, i2["fmt"])
 
