@@ -24,8 +24,10 @@ shuffle of its deltas feed an assemble stage. A Python UDF plan costs
 mostly what its task count and Arrow traffic cost, so the plan counts
 tasks, not join shapes.
 
-Past what the driver can collect: ``gapfill_balanced_checkpointed``
-(bounded batches) or ``operators/deep_gapfill.py`` (no stack at all).
+Past what the driver can collect: ``operators/deep_gapfill.py`` runs
+on this planner (the same side-input collect and ``plan_fill``) but
+never collects a history layer; corpora with too many inputs go
+through ``gapfill_balanced_checkpointed`` (bounded batches).
 The one join-shaped fill left is the stream-static join of
 ``streaming/gapfill_stream.py`` (``_fill_batches``).
 
@@ -79,11 +81,12 @@ _MANY_EXTRAS = ("site '%s' has more than one role='extra' row; a site "
 
 def pack_history(history: DataFrame) -> DataFrame:
     """One row per site: chronologically sorted temporal stack
-    (reference O1 sort, gapfiller.py:91 + tensor build 846-848), one
+    (reference O1 sort, gapfiller.py:91 + tensor build 846-848; ts ties
+    by the layer's image_id, as the reference sorts file names), one
     groupBy(site) shuffle — the static side of the stream-static join
     (streaming/gapfill_stream.py). ``gapfill`` builds the same stacks
     on the driver from one scan (``_collect_side_inputs``)."""
-    layer = F.struct("ts", "bytes", "h", "w", "fmt")
+    layer = F.struct("ts", "image_id", "bytes", "h", "w", "fmt")
     return history.groupBy("site").agg(
         F.sort_array(F.collect_list(layer)).alias("hist_layers")
     )
@@ -293,29 +296,24 @@ def _plan_fill_batches(plan, method, predictor_configuration,
     return fn
 
 
-def _assemble_batches_fn(sv: Sentinels = DEFAULT_SENTINELS, originals=None):
-    """Scatter each image's chunk deltas into its original raster and
-    finish the row. The original comes from the row's own
-    bytes/w/h/fmt/caption columns, or with ``originals`` (image_id →
-    (payload, h, w, fmt, caption) of ``gapfill``'s split images)
-    from the task closure; there a row whose ``done`` list holds the
-    image's finished row (finished in its fill task) passes it through
-    unchanged."""
+def _assemble_batches_fn(originals: dict, sv: Sentinels = DEFAULT_SENTINELS):
+    """Scatter each image's ``chunks`` deltas into its original raster
+    and finish the row; the originals (image_id → the input tuple of
+    ``_collect_side_inputs``) ride in the task closure. A row of an
+    image outside ``originals`` holds in ``done`` the row its fill task
+    finished, and passes it through unchanged."""
     def _assemble_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = {k: [] for k in GAPFILL_SCHEMA.fieldNames()}
             for row in pdf.itertuples(index=False):
-                if originals is None:
-                    fmt, w, h, caption = row.fmt, row.w, row.h, row.caption
-                    final = codecs.decode(row.bytes, int(h), int(w), fmt)
-                elif len(row.done):
+                if row.image_id not in originals:
                     out["image_id"].append(row.image_id)
                     for k, v in row.done[0].items():
                         out[k].append(v)
                     continue
-                else:
-                    payload, h, w, fmt, caption = originals[row.image_id]
-                    final = codecs.decode(payload, h, w, fmt)
+                payload, h, w, fmt, _site, caption, _planned = \
+                    originals[row.image_id]
+                final = codecs.decode(payload, h, w, fmt)
                 filled = final.copy()
                 all_scores = []
                 n_px = 0
@@ -348,14 +346,14 @@ def _collect_side_inputs(images: DataFrame, viable, biome: bool):
     Returns ``(sites, inputs)``: ``sites`` maps a site to
     ``(history layers, extra layer)`` with each layer a
     ``(payload, h, w, fmt)`` tuple and the history in
-    ``sort_array(struct(ts, bytes, h, w, fmt))`` order (``pack_history``'s:
-    ts ascending, nulls first, ties by payload, h, w, fmt); ``inputs``
-    maps an image_id to ``(payload, h, w, fmt, site, caption,
-    gap_count)``. A site enters only with history rows, and under Biome
-    only with its extra layer; the inputs of other sites are dropped —
-    there is nothing to train on. A site with more than one extra row
-    raises ValueError: the reference loads exactly one
-    ``Extra/Extra.npy`` (gapfiller.py:830-835)."""
+    ``pack_history``'s order (ts ascending, nulls first, ties by the
+    layer's image_id); a history payload that ``images`` holds as null
+    stays None. ``inputs`` maps an image_id to ``(payload, h, w, fmt,
+    site, caption, gap_count)``. A site enters only with history rows,
+    and under Biome only with its extra layer; the inputs of other
+    sites are dropped — there is nothing to train on. A site with more
+    than one extra row raises ValueError: the reference loads exactly
+    one ``Extra/Extra.npy`` (gapfiller.py:830-835)."""
     side = F.col("role") == "history"
     if biome:
         side = side | (F.col("role") == "extra")
@@ -366,8 +364,10 @@ def _collect_side_inputs(images: DataFrame, viable, biome: bool):
     extras: dict = {}
     for r in rows:
         if r["role"] == "history":
+            p = r["bytes"]
             history.setdefault(r["site"], []).append(
-                (r["ts"], bytes(r["bytes"]), r["h"], r["w"], r["fmt"]))
+                (r["ts"], r["image_id"], None if p is None else bytes(p),
+                 r["h"], r["w"], r["fmt"]))
         elif r["role"] == "extra":
             if r["site"] in extras:
                 raise ValueError(_MANY_EXTRAS % r["site"])
@@ -378,14 +378,26 @@ def _collect_side_inputs(images: DataFrame, viable, biome: bool):
         if biome and site not in extras:
             continue
         layers.sort(key=_nulls_first)
-        sites[site] = ([(p, int(h), int(w), fmt) for _, p, h, w, fmt in layers],
-                       extras.get(site))
+        sites[site] = ([(p, int(h), int(w), fmt)
+                        for _, _, p, h, w, fmt in layers], extras.get(site))
     inputs = {
         r["image_id"]: (bytes(r["bytes"]), int(r["h"]), int(r["w"]), r["fmt"],
                         r["site"], r["caption"], int(r["gap_count"]))
         for r in rows if r["role"] == "input" and r["site"] in sites
     }
     return sites, inputs
+
+
+def _passthrough(images: DataFrame, kept) -> DataFrame:
+    """The rows matched by ``kept`` that have no gaps, as finished
+    GAPFILL_SCHEMA rows with status 'passthrough' and metric 0.0
+    (gapfiller.py:862-873)."""
+    return images.filter(kept & (F.col("gap_count") == 0)).select(
+        "image_id", "bytes", "w", "h", "fmt", "caption", "phash",
+        F.lit("passthrough").alias("status"),
+        F.lit(0).alias("filled_px"),
+        F.lit(0.0).alias("mean_cv_mae"),
+    )
 
 
 def gapfill(images: DataFrame, method: str = "Lasso",
@@ -429,9 +441,10 @@ def gapfill(images: DataFrame, method: str = "Lasso",
     images' originals in the assemble closure; PySpark broadcasts a
     UDF command over ``spark.broadcast.UDFCompressionThreshold`` (1 MiB)
     for the life of the plan, so nothing is left to release. The
-    collected set must fit the driver; beyond that, use
-    ``gapfill_balanced_checkpointed(batch_rows=...)`` or
-    ``deep_gapfill.gapfill_deep``."""
+    collected set must fit the driver: histories too deep for that go
+    through ``deep_gapfill.gapfill_deep``, which collects the viable
+    inputs the same way but never a history layer; too many inputs go
+    through ``gapfill_balanced_checkpointed(batch_rows=...)``."""
     sv = resolve_key_values(key_values)
     kept = (F.col("role") == "input") & (F.col("valid_px") > min_valid)
     # side inputs ride in the task closure, not as join columns:
@@ -443,13 +456,7 @@ def gapfill(images: DataFrame, method: str = "Lasso",
     site_map, input_map = _collect_side_inputs(
         images, kept & (F.col("gap_count") > 0),
         predictor_configuration == "Biome")
-
-    pass_df = images.filter(kept & (F.col("gap_count") == 0)).select(
-        "image_id", "bytes", "w", "h", "fmt", "caption", "phash",
-        F.lit("passthrough").alias("status"),
-        F.lit(0).alias("filled_px"),
-        F.lit(0.0).alias("mean_cv_mae"),
-    )
+    pass_df = _passthrough(images, kept)
     if not input_map:
         return pass_df
 
@@ -473,9 +480,9 @@ def gapfill(images: DataFrame, method: str = "Lasso",
             *GAPFILL_SCHEMA.fieldNames()[1:]))).alias("done")
         deltas = F.collect_list(F.when(is_delta, F.struct(
             *CHUNK_SCHEMA.fieldNames()[1:]))).alias("chunks")
-        originals = {i: input_map[i][:4] + (input_map[i][5],) for i in split}
+        originals = {i: input_map[i] for i in split}
         filled = filled.groupBy("image_id").agg(done, deltas) \
-            .mapInPandas(_assemble_batches_fn(sv, originals), GAPFILL_SCHEMA)
+            .mapInPandas(_assemble_batches_fn(originals, sv), GAPFILL_SCHEMA)
     return filled.select(*GAPFILL_SCHEMA.fieldNames()).unionByName(pass_df)
 
 

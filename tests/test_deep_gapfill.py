@@ -63,22 +63,100 @@ def test_deep_gridsearch_parity(spark, images):
         assert np.array_equal(m, e), iid
 
 
+def test_deep_equals_gapfill_with_tied_and_null_ts(spark, images):
+    """History layers that share a ts, or have none, keep ``gapfill``'s
+    order — ts ascending, nulls first, ties by the layer's image_id, as
+    the reference sorts file names (gapfiller.py:91) — so deep equals
+    ``gapfill`` at any ``chunk_px``."""
+    hist = sorted((r["image_id"], r["ts"]) for r in images.filter(
+        "role = 'history'").select("image_id", "ts").collect())
+    images = images.withColumn(
+        "ts", F.when(F.col("image_id") == hist[1][0], F.lit(hist[4][1]))
+        .when(F.col("image_id") == hist[2][0], F.lit(None))
+        .otherwise(F.col("ts")))
+    kw = dict(method="Knn", predictor_configuration="Biome",
+              hyperparameters="Custom", params={"n_neighbors": 5})
+
+    def rows(out):
+        return {r["image_id"]: (bytes(r["bytes"]), r["filled_px"], r["phash"],
+                                float(r["mean_cv_mae"]).hex())
+                for r in out.collect()}
+
+    base = rows(gapfill.gapfill(images, **kw))
+    assert base
+    for chunk_px in (97, 4096):
+        assert rows(deep_gapfill.gapfill_deep(images, chunk_px=chunk_px,
+                                              **kw)) == base, chunk_px
+
+
+def _exchange_columns(plan):
+    """(node name, output column names) of every exchange in a physical
+    plan, adaptive query stages unwrapped."""
+    out, todo = [], [plan]
+    while todo:
+        node = todo.pop()
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            todo.append(node.executedPlan())
+            continue
+        if name.endswith("QueryStageExec"):
+            todo.append(node.plan())
+            continue
+        if "Exchange" in name:
+            attrs = node.output()
+            out.append((name, [attrs.apply(i).name()
+                               for i in range(attrs.size())]))
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
+def test_deep_plan_shape(spark):
+    """The call runs the side-input collect and the coords pass, one
+    job each, neither writing shuffle bytes; the query's exchanges are
+    keyed (no round-robin) and none carries a raster ``bytes``
+    column."""
+    from test_gapfill_spark import _new_jobs
+
+    df = generator.images_df(spark, sites=("stp", "vlad"), n_history=3,
+                             n_inputs=2, shape=(30, 24))
+    images = stats.with_stats(img_io.with_id_parts(df)).cache()
+    images.count()
+    seen = set()
+    _new_jobs(spark, seen)
+
+    out = deep_gapfill.gapfill_deep(images, "Knn", "Biome", "Custom",
+                                    {"n_neighbors": 5}, chunk_px=64)
+    assert _new_jobs(spark, seen) == [(1, 0), (1, 0)]
+    assert out.collect()
+    plan = out._jdf.queryExecution().executedPlan()
+    assert "RoundRobinPartitioning" not in plan.toString()
+    exchanges = _exchange_columns(plan)
+    assert exchanges
+    for name, cols in exchanges:
+        assert "bytes" not in cols, (name, cols)
+    images.unpersist()
+
+
 def test_deep_stack_bounded_rows(spark):
     """120-layer history on a small site: runs end-to-end, fills all
-    gaps, and the coords/extract row payloads respect the documented
-    bound (chunk_px × (C+1) × 8 bytes per value blob) — i.e. nothing
+    gaps, and the planned coords rows respect the documented bound
+    (chunk_px × (C+1) × 8 bytes per value blob) — i.e. nothing
     resembling a stacked history crosses the shuffle."""
     df = generator.images_df(spark, sites=("stp",), n_history=120, n_inputs=1)
     images = stats.with_stats(img_io.with_id_parts(df))
 
     chunk_px = 128
     n_coord = 42  # Biome: 40-nearest + target + slack is <= 41+1
-    coords = deep_gapfill._coords_batches("Biome", chunk_px)
-    sel = images.filter(F.col("role") == "input").join(
-        F.broadcast(gapfill.pack_extra(images.filter(F.col("role") == "extra"))),
-        "site")
-    coord_rows = sel.select("image_id", "site", "bytes", "h", "w", "fmt",
-                            "gap_count", "extra_layer").mapInPandas(
+    sites, inputs = gapfill._collect_side_inputs(
+        images, (F.col("role") == "input") & (F.col("gap_count") > 0),
+        biome=True)
+    bins, _split = gapfill.plan_fill({i: m[6] for i, m in inputs.items()},
+                                     spark.sparkContext.defaultParallelism,
+                                     chunk_px)
+    coords = deep_gapfill._coords_batches(bins, inputs, sites, "Biome",
+                                          chunk_px)
+    coord_rows = spark.range(0, len(bins), 1, len(bins)).mapInPandas(
         coords, deep_gapfill.COORDS_SCHEMA).collect()
     assert coord_rows
     for r in coord_rows:

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from ssgp_toolbox_spark import codecs, generator
 from ssgp_toolbox_spark.io import images as img_io
-from ssgp_toolbox_spark.operators import gapfill, stats
+from ssgp_toolbox_spark.operators import deep_gapfill, gapfill, stats
 from ssgp_toolbox_spark.sentinels import GAP
 
 
@@ -114,17 +114,23 @@ def test_gridsearch_mode_smoke(spark):
     assert 250 < np.median(m[m > -50]) < 330
 
 
-@pytest.mark.parametrize("config", ["Biome", "Random"])
-def test_input_without_stack_is_excluded(mixed_stack_images, config):
+@pytest.mark.parametrize("fill,config", [
+    pytest.param(gapfill.gapfill, "Biome", id="Biome"),
+    pytest.param(gapfill.gapfill, "Random", id="Random"),
+    pytest.param(deep_gapfill.gapfill_deep, "Biome", id="deep-Biome"),
+    pytest.param(deep_gapfill.gapfill_deep, "Random", id="deep-Random"),
+])
+def test_input_without_stack_is_excluded(mixed_stack_images, fill, config):
     """An input whose site has no history rows (or, under Biome, no
-    extra layer) has nothing to train on and is left out; the other
-    inputs equal the whole-image kernel."""
+    extra layer) has nothing to train on and is left out, by
+    ``gapfill`` and ``gapfill_deep`` alike; the other inputs equal the
+    whole-image kernel."""
     images = mixed_stack_images
     mode = ("Knn", config, "Custom", {"n_neighbors": 5})
     want = oracles.whole_image_fills(images.collect(), *mode)
     got = {r["image_id"]: (bytes(r["bytes"]), r["filled_px"], r["phash"],
                            float(r["mean_cv_mae"]).hex())
-           for r in gapfill.gapfill(images, *mode).collect()}
+           for r in fill(images, *mode).collect()}
     filled_sites = {"stp", "nox"} if config == "Random" else {"stp"}
     assert set(got) == {r["image_id"] for r in images.filter(
         "role = 'input'").collect() if r["site"] in filled_sites}
@@ -197,8 +203,9 @@ def test_unsplit_call_runs_one_side_input_job_and_one_fill_job(spark):
 
 def test_side_input_stacks_follow_pack_history_order(spark):
     """The driver-built stacks keep ``pack_history``'s
-    ``sort_array(struct(ts, bytes, h, w, fmt))`` order: ts ascending,
-    nulls first, ties broken by the payload bytes."""
+    ``sort_array(struct(ts, image_id, bytes, h, w, fmt))`` order: ts
+    ascending, nulls first, ties broken by the layer's image_id (the
+    reference sorts file names, gapfiller.py:91)."""
     df = generator.images_df(spark, sites=("stp",), n_history=5,
                              n_inputs=1, shape=(20, 16))
     images = stats.with_stats(img_io.with_id_parts(df))
@@ -216,6 +223,10 @@ def test_side_input_stacks_follow_pack_history_order(spark):
         images, F.lit(False), biome=False)
     assert sites["stp"][0] == want
     assert want[0][0] == bytes(hist[4]["bytes"])  # the null ts leads
+    # the tied pair follows image_id order
+    payloads = [p for p, *_ in want]
+    assert payloads.index(bytes(hist[0]["bytes"])) \
+        < payloads.index(bytes(hist[2]["bytes"]))
 
 
 def test_two_extra_layers_for_one_site_raise(two_extra_images):
