@@ -83,7 +83,15 @@ def _ivf_assign(spark):
 
 
 def _persisted(sc) -> int:
-    return sc._jsc.getPersistentRDDs().size()
+    """Count of persisted RDDs. ``getPersistentRDDs`` answers with a map
+    that holds each RDD strongly; it is detached at once, because a map
+    the gateway still holds keeps the RDDs it counts from being cleaned
+    up."""
+    rdds = sc._jsc.getPersistentRDDs()
+    try:
+        return rdds.size()
+    finally:
+        sc._gateway.detach(rdds)
 
 
 @pytest.mark.parametrize("make_op", [_balanced_fill, _deep_fill, _ivf_assign],
