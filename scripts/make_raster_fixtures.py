@@ -131,7 +131,8 @@ def main():
         rows["mean_px_raw"].append(float(m.mean()))
     write("r05_expected", rows)
 
-    # ---- r06: tiled gapfill (counts; value parity is pytest-proven)
+    # ---- r06: checkpointed gapfill, one snapshot per input (counts;
+    # value parity with one-shot gapfill is pytest-proven)
     rows = {"image_id": [], "status": [], "filled_px": []}
     for iid, m in inputs:
         rows["image_id"].append(iid)

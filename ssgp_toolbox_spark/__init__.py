@@ -3,7 +3,7 @@
 A from-scratch reimplementation of the capabilities of the reference
 SSGP-toolbox (Dreamlone/SSGP-toolbox, surveyed in SURVEY.md) on Apache
 Spark: Iceberg-style image+caption tables, Arrow-vectorized pandas UDF
-pixel kernels, an H3-style tile index with halo'd tile windows,
+pixel kernels, an H3-style tile index with pixel tiles,
 kNN spatial joins, point-in-polygon zone masking, salted skew handling
 and resumable snapshot checkpoints.
 

@@ -367,14 +367,14 @@ def write_netcdf_stacks_partitioned(images, out_dir: str,
             rows = []
             for row in pdf.itertuples(index=False):
                 m = codecs.decode(row.bytes, int(row.h), int(row.w), row.fmt)
-                t = tiling.explode_tiles_pdf(row.image_id, m, tile, halo=0)
+                t = tiling.explode_tiles_pdf(row.image_id, m, tile)
                 for r in t.itertuples(index=False):
                     # float32 tile payload — the same cast the
                     # whole-site file applies at encode time
                     block = np.frombuffer(r.tile_bytes, dtype="<f8") \
-                        .reshape(r.ph, r.pw).astype("<f4")
+                        .reshape(r.core_h, r.core_w).astype("<f4")
                     rows.append((row.site, row.image_id, r.tx, r.ty,
-                                 r.row0, r.col0, r.ph, r.pw,
+                                 r.row0, r.col0, r.core_h, r.core_w,
                                  block.tobytes()))
             yield pd.DataFrame(rows, columns=[
                 "site", "image_id", "tx", "ty", "row0", "col0",

@@ -211,18 +211,17 @@ def _knn_coords_exact(cands: np.ndarray, blk: np.ndarray, k: int,
         m *= 2
 
 
-def _biome_coords_batched(final, extra, gaps, seed, coord_offset=(0, 0),
+def _biome_coords_batched(final, extra, gaps, seed,
                           sv: Sentinels = DEFAULT_SENTINELS):
     """Predictor coords for all gap pixels under 'Biome' (reference
     gapfiller.py:500-586 semantics incl. first-index tie-break and the
-    101-random fallback for small biomes). ``coord_offset`` is the
-    window's absolute origin (tiled path): fallback RNG seeds key on
-    ABSOLUTE pixel coords so tiling never changes a pixel's seed."""
+    101-random fallback for small biomes). Fallback RNG seeds key on
+    each pixel's coords, so any slice of the gap scan draws the same
+    predictors per pixel."""
     masked = np.where(final == sv.gap, sv.gap, extra)
     P = len(gaps)
     out = np.empty((P, FR.N_NEAREST + 1, 2), dtype=np.int64)
     codes = extra[gaps[:, 0], gaps[:, 1]]
-    dr, dc = int(coord_offset[0]), int(coord_offset[1])
     # per-code candidate sets via one flatnonzero scan per code:
     # ascending flat (row-major) index order — exactly np.argwhere's
     # order, so tie-breaks are unchanged (measured faster than the
@@ -245,13 +244,12 @@ def _biome_coords_batched(final, extra, gaps, seed, coord_offset=(0, 0),
             small.append(sel)
     if small:
         _random_nearest_batched(final, gaps, np.concatenate(small), out,
-                                seed, (dr, dc), sv)
+                                seed, sv)
     out[:, -1] = gaps
     return out
 
 
-def _random_nearest_batched(final, gaps, sel, out, seed, offset,
-                            sv: Sentinels):
+def _random_nearest_batched(final, gaps, sel, out, seed, sv: Sentinels):
     """The small-biome fallback for gap pixels ``gaps[sel]``, written
     into ``out[sel, :-1]``: 101 random valid coords per pixel, then
     their 40 nearest. The draws are each pixel's own seeded
@@ -263,7 +261,7 @@ def _random_nearest_batched(final, gaps, sel, out, seed, offset,
     for lo in range(0, len(sel), 1024):
         blk = sel[lo : lo + 1024]
         pts = gaps[blk]  # (s, 2)
-        picks = FR.pixel_draws(seed, pts + np.asarray(offset), len(valid))
+        picks = FR.pixel_draws(seed, pts, len(valid))
         rand = valid[picks]  # (s, 101, 2)
         d = np.sqrt(((rand - pts[:, None, :]) ** 2).sum(-1)
                     .astype(np.float64))
@@ -273,19 +271,17 @@ def _random_nearest_batched(final, gaps, sel, out, seed, offset,
 
 def select_coords(final: np.ndarray, extra: np.ndarray | None,
                   gaps: np.ndarray, predictor_configuration: str,
-                  seed: int, coord_offset: tuple[int, int] = (0, 0),
-                  sv: Sentinels = DEFAULT_SENTINELS) -> np.ndarray:
+                  seed: int, sv: Sentinels = DEFAULT_SENTINELS) -> np.ndarray:
     """Predictor coords (P, C, 2) for the given gap pixels, target
     coord appended last — the selection block shared by ``fill_image``
     and the deep-history operator's coords pass. Per-pixel
-    deterministic (seeded RNG keyed on absolute coords), so any
+    deterministic (seeded RNG keyed on pixel coords), so any
     gap-subset slicing yields identical coords per pixel."""
     P = len(gaps)
     if predictor_configuration == "Biome":
         if extra is None:
             raise ValueError("Biome mode requires the extra (zone) matrix")
-        return _biome_coords_batched(final, extra, gaps, seed, coord_offset,
-                                     sv)
+        return _biome_coords_batched(final, extra, gaps, seed, sv)
     if predictor_configuration == "Random":
         # each pixel's seeded draw, with one scan of the valid set
         valid = FR.random_pool(final, sv)
@@ -307,7 +303,6 @@ def fill_image(final: np.ndarray, tensor: np.ndarray,
                predictor_configuration: str = "Biome",
                hyperparameters: str = "Custom", params: dict | None = None,
                seed: int = 0, gaps: np.ndarray | None = None,
-               coord_offset: tuple[int, int] = (0, 0),
                sv: Sentinels = DEFAULT_SENTINELS):
     """Fill the gap pixels ``gaps`` (P, 2) of ``final`` from the
     temporal stack ``tensor`` — every gap pixel, in row-major scan
@@ -320,9 +315,7 @@ def fill_image(final: np.ndarray, tensor: np.ndarray,
     The whole image stays the selection context whatever ``gaps``
     holds, and every seed keys on the pixel, so filling the gap scan
     slice by slice is bit-identical to one whole-image call — what
-    lets the ``gapfill`` wave split a hot image across tasks.
-    ``coord_offset`` is the raster's origin in a larger one (the tiled
-    operator's windows): seeds key on absolute coords."""
+    lets the ``gapfill`` wave split a hot image across tasks."""
     if gaps is None:
         gaps = np.argwhere(final == sv.gap)
     filled = final.copy()
@@ -330,10 +323,9 @@ def fill_image(final: np.ndarray, tensor: np.ndarray,
         return filled, []
     # the (P, C, 2) coords die here: under 'All' C is every valid px
     table, idx = keyed_table(final, tensor, select_coords(
-        final, extra, gaps, predictor_configuration, seed, coord_offset, sv))
+        final, extra, gaps, predictor_configuration, seed, sv))
     preds, scores, skip_px = fill_keyed(
-        table, idx, gaps + np.asarray(coord_offset), method,
-        hyperparameters, params, seed, sv)
+        table, idx, gaps, method, hyperparameters, params, seed, sv)
     filled[gaps[skip_px, 0], gaps[skip_px, 1]] = sv.skip
     done = ~skip_px
     filled[gaps[done, 0], gaps[done, 1]] = preds[done]

@@ -151,7 +151,7 @@ def _fill_group(filling_method, n_neighbors, poly_degree,
 
 # ---- tiled fill stage: bounds group memory to buckets × tile² ------
 
-_GRID_TILE_SCHEMA = T.StructType([
+_TILE_GRID_SCHEMA = T.StructType([
     T.StructField("site", T.StringType()),
     T.StructField("bucket", T.IntegerType()),
     T.StructField("centroid", T.TimestampType()),
@@ -162,25 +162,20 @@ _GRID_TILE_SCHEMA = T.StructType([
     T.StructField("tx", T.IntegerType()), T.StructField("ty", T.IntegerType()),
     T.StructField("row0", T.IntegerType()), T.StructField("col0", T.IntegerType()),
     T.StructField("core_h", T.IntegerType()), T.StructField("core_w", T.IntegerType()),
-    T.StructField("prow0", T.IntegerType()), T.StructField("pcol0", T.IntegerType()),
-    T.StructField("ph", T.IntegerType()), T.StructField("pw", T.IntegerType()),
     T.StructField("tile_bytes", T.BinaryType()),
 ])
-
-_TILE_META = ["tx", "ty", "row0", "col0", "core_h", "core_w",
-              "prow0", "pcol0", "ph", "pw"]
 
 
 def _tile_explode_grid(tile: int):
     from ssgp_toolbox_spark import tiling
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = _GRID_TILE_SCHEMA.fieldNames()
+        cols = _TILE_GRID_SCHEMA.fieldNames()
         for pdf in batches:
             outs = []
             for row in pdf.itertuples(index=False):
                 m = codecs.decode(row.bytes, int(row.h), int(row.w), row.fmt)
-                t = tiling.explode_tiles_pdf("_", m, tile, halo=0)
+                t = tiling.explode_tiles_pdf("_", m, tile)
                 for col in ("site", "bucket", "centroid", "w", "h", "fmt",
                             "n_layers"):
                     t[col] = getattr(row, col)
@@ -194,9 +189,9 @@ def _fill_tile_group(filling_method, n_neighbors, poly_degree,
                      sv: Sentinels = DEFAULT_SENTINELS):
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("bucket").reset_index(drop=True)
-        ph, pw = int(pdf["ph"].iloc[0]), int(pdf["pw"].iloc[0])
+        th, tw = int(pdf["core_h"].iloc[0]), int(pdf["core_w"].iloc[0])
         stack = np.stack([
-            np.frombuffer(b, dtype="<f8").reshape(ph, pw)
+            np.frombuffer(b, dtype="<f8").reshape(th, tw)
             for b in pdf["tile_bytes"]
         ])
         filled = ts_kernel.fill_stack(stack, filling_method, n_neighbors,
@@ -268,10 +263,10 @@ def discretize(layers: DataFrame, timestep: str = "12H",
             _fill_group(filling_method, n_neighbors, poly_degree, sv),
             GRID_SCHEMA
         )
-    tiles = resolved.mapInPandas(_tile_explode_grid(tile), _GRID_TILE_SCHEMA)
+    tiles = resolved.mapInPandas(_tile_explode_grid(tile), _TILE_GRID_SCHEMA)
     filled = tiles.groupBy("site", "tx", "ty").applyInPandas(
         _fill_tile_group(filling_method, n_neighbors, poly_degree, sv),
-        _GRID_TILE_SCHEMA,
+        _TILE_GRID_SCHEMA,
     )
     return filled.groupBy("site", "bucket").applyInPandas(
         _assemble_grid, GRID_SCHEMA

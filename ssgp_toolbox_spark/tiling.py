@@ -1,4 +1,4 @@
-"""H3/S2-style hierarchical tile index + tile explode with halos.
+"""H3/S2-style hierarchical tile index + pixel tile explode.
 
 The h3 library is not available in this sandbox, so the engine ships
 its own deterministic cell index (same role as H3: fixed discrete
@@ -12,9 +12,9 @@ global grid, parent/child hierarchy, k-ring neighborhoods):
   (lon wraps, lat clamps) — the ring-neighbor halo join key set
   (SURVEY.md J3: kNN candidates restricted to same cell + ring-1).
 - **Pixel tiles**: per-image fixed blocks ``tile = (tx, ty)`` of size
-  ``T`` with an optional halo. ``explode_tiles_pdf`` fans an image
-  out into tile rows (the shuffle unit of the tiled operators) and
-  ``assemble_from_tiles`` stitches their cores back.
+  ``T``. ``explode_tiles_pdf`` fans an image out into tile rows (the
+  unit of discretize's tiled fill stage and of the per-tile NetCDF
+  sink) and ``assemble_from_tiles`` stitches them back.
 
 UTM-zone arithmetic (reference C3, S3_L2_LST.py:66-88 duplicated in
 both MODIS preparators) is reproduced as a pure column expression.
@@ -26,7 +26,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 MAX_RES = 29  # 2^29 lat cells ≈ 2 cm at the equator; id fits int64
 
@@ -112,69 +111,41 @@ def n_tiles(h: int, w: int, tile: int) -> tuple[int, int]:
     return (h + tile - 1) // tile, (w + tile - 1) // tile
 
 
-TILE_SCHEMA = T.StructType([
-    T.StructField("image_id", T.StringType()),
-    T.StructField("tx", T.IntegerType()),
-    T.StructField("ty", T.IntegerType()),
-    T.StructField("row0", T.IntegerType()),   # tile origin in the image
-    T.StructField("col0", T.IntegerType()),
-    T.StructField("core_h", T.IntegerType()),  # tile extent w/o halo
-    T.StructField("core_w", T.IntegerType()),
-    T.StructField("halo", T.IntegerType()),
-    T.StructField("prow0", T.IntegerType()),  # payload origin (with halo)
-    T.StructField("pcol0", T.IntegerType()),
-    T.StructField("tile_bytes", T.BinaryType()),  # f64 LE payload incl. halo
-    T.StructField("ph", T.IntegerType()),     # payload shape
-    T.StructField("pw", T.IntegerType()),
-])
-
-
-def tile_bounds(h: int, w: int, tile: int, halo: int):
+def tile_bounds(h: int, w: int, tile: int):
     """Deterministic tile grid for an (h, w) image: yields
-    (tx, ty, row0, col0, core_h, core_w, prow0, pcol0, ph, pw)."""
+    (tx, ty, row0, col0, core_h, core_w)."""
     tys, txs = n_tiles(h, w, tile)
     for ty in range(tys):
         for tx in range(txs):
             row0, col0 = ty * tile, tx * tile
-            core_h = min(tile, h - row0)
-            core_w = min(tile, w - col0)
-            prow0 = max(0, row0 - halo)
-            pcol0 = max(0, col0 - halo)
-            prow1 = min(h, row0 + core_h + halo)
-            pcol1 = min(w, col0 + core_w + halo)
-            yield (tx, ty, row0, col0, core_h, core_w,
-                   prow0, pcol0, prow1 - prow0, pcol1 - pcol0)
+            yield (tx, ty, row0, col0, min(tile, h - row0), min(tile, w - col0))
 
 
-def explode_tiles_pdf(image_id: str, matrix: np.ndarray, tile: int, halo: int) -> pd.DataFrame:
+def explode_tiles_pdf(image_id: str, matrix: np.ndarray, tile: int) -> pd.DataFrame:
     """One image → tile rows (pandas side, called inside mapInPandas)."""
     h, w = matrix.shape
     rows = []
-    for (tx, ty, row0, col0, ch, cw, pr0, pc0, ph_, pw_) in tile_bounds(h, w, tile, halo):
+    for (tx, ty, row0, col0, ch, cw) in tile_bounds(h, w, tile):
         block = np.ascontiguousarray(
-            matrix[pr0 : pr0 + ph_, pc0 : pc0 + pw_], dtype="<f8"
+            matrix[row0 : row0 + ch, col0 : col0 + cw], dtype="<f8"
         )
         rows.append({
             "image_id": image_id, "tx": tx, "ty": ty, "row0": row0,
-            "col0": col0, "core_h": ch, "core_w": cw, "halo": halo,
-            "prow0": pr0, "pcol0": pc0, "tile_bytes": block.tobytes(),
-            "ph": ph_, "pw": pw_,
+            "col0": col0, "core_h": ch, "core_w": cw,
+            "tile_bytes": block.tobytes(),
         })
     return pd.DataFrame(rows)
 
 
 def assemble_from_tiles(tiles: pd.DataFrame, h: int, w: int) -> np.ndarray:
-    """Inverse of explode: core regions stitched back (halo discarded).
+    """Inverse of explode: tile regions stitched back.
     Exactness of this round trip is the 'per-tile assignment' parity
     test (north_rule)."""
     out = np.full((h, w), np.nan)
     for r in tiles.itertuples(index=False):
-        block = np.frombuffer(r.tile_bytes, dtype="<f8").reshape(r.ph, r.pw)
-        ri = r.row0 - r.prow0
-        ci = r.col0 - r.pcol0
-        out[r.row0 : r.row0 + r.core_h, r.col0 : r.col0 + r.core_w] = block[
-            ri : ri + r.core_h, ci : ci + r.core_w
-        ]
+        out[r.row0 : r.row0 + r.core_h, r.col0 : r.col0 + r.core_w] = \
+            np.frombuffer(r.tile_bytes, dtype="<f8").reshape(r.core_h,
+                                                             r.core_w)
     return out
 
 

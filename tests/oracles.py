@@ -261,20 +261,17 @@ def _k_nearest_first_index(coords, target, k):
 
 
 def gapfill_image_oracle(final, tensor, extra, seed, k=5,
-                         predictor_configuration="Biome",
-                         coord_offset=(0, 0)):
+                         predictor_configuration="Biome"):
     """Naive per-pixel transcription of the full gapfill dataflow
     (gapfiller.py:600-781) for method='Knn', hyperparameters='Custom':
     predictor selection → frame build → clean_frame_oracle → 3-fold CV
-    + kNN fill. ``coord_offset``: the raster's origin in a larger one;
-    the per-pixel RNG keys on absolute coords. Returns (filled matrix,
-    list of |CV-MAE| scores)."""
+    + kNN fill. Returns (filled matrix, list of |CV-MAE| scores)."""
     final = np.asarray(final, float)
     filled = final.copy()
     scores = []
     for r, c in np.argwhere(final == GAP):
         r, c = int(r), int(c)
-        rng = pixel_rng(seed, r + coord_offset[0], c + coord_offset[1])
+        rng = pixel_rng(seed, r, c)
         if predictor_configuration == "Biome":
             code = extra[r, c]
             masked = np.where(final == GAP, GAP, extra)

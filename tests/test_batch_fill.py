@@ -318,8 +318,7 @@ def _high_gap_scene(n_valid):
 def test_small_biome_fallback_bit_equals_oracle(monkeypatch):
     """The batched small-biome fallback (one gather, one distance, one
     stable argsort per block) fills and scores every pixel exactly as
-    the per-pixel oracle, whole, in a gap slice and at a non-zero
-    coord_offset."""
+    the per-pixel oracle, whole and in a gap slice."""
     final, tensor, extra = _high_gap_scene(104)
     gaps = np.argwhere(final == GAP)
     assert len(gaps) >= 0.9 * final.size
@@ -333,23 +332,19 @@ def test_small_biome_fallback_bit_equals_oracle(monkeypatch):
     monkeypatch.setattr(B, "_random_nearest_batched", spy)
     kw = dict(extra=extra, method="Knn", predictor_configuration="Biome",
               hyperparameters="Custom", params={"n_neighbors": 5}, seed=13)
-    for offset in [(0, 0), (37, 5)]:
-        want_m, want_s = oracles.gapfill_image_oracle(
-            final, tensor, extra, 13, coord_offset=offset)
-        fallback.clear()
-        got_m, got_s = B.fill_image(final, tensor, coord_offset=offset, **kw)
-        assert sum(fallback) > 0.8 * len(gaps)
-        assert np.array_equal(got_m, want_m, equal_nan=True)
-        assert len(got_s) == len(gaps)
-        assert np.array_equal(np.asarray(got_s), np.asarray(want_s))
-        lo, hi = 200, 600
-        sel = gaps[lo:hi]
-        part_m, part_s = B.fill_image(final, tensor, coord_offset=offset,
-                                      gaps=sel, **kw)
-        assert np.array_equal(part_m[sel[:, 0], sel[:, 1]],
-                              want_m[sel[:, 0], sel[:, 1]], equal_nan=True)
-        # no skip px in the scene: one score per gap px, in scan order
-        assert np.array_equal(np.asarray(part_s), np.asarray(want_s[lo:hi]))
+    want_m, want_s = oracles.gapfill_image_oracle(final, tensor, extra, 13)
+    got_m, got_s = B.fill_image(final, tensor, **kw)
+    assert sum(fallback) > 0.8 * len(gaps)
+    assert np.array_equal(got_m, want_m, equal_nan=True)
+    assert len(got_s) == len(gaps)
+    assert np.array_equal(np.asarray(got_s), np.asarray(want_s))
+    lo, hi = 200, 600
+    sel = gaps[lo:hi]
+    part_m, part_s = B.fill_image(final, tensor, gaps=sel, **kw)
+    assert np.array_equal(part_m[sel[:, 0], sel[:, 1]],
+                          want_m[sel[:, 0], sel[:, 1]], equal_nan=True)
+    # no skip px in the scene: one score per gap px, in scan order
+    assert np.array_equal(np.asarray(part_s), np.asarray(want_s[lo:hi]))
 
 
 def test_small_biome_fallback_needs_101_valid_px():

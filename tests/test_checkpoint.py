@@ -189,3 +189,86 @@ def test_batch_that_commits_nothing_raises(spark, inputs, tmp_path,
     assert sum(i in str(err.value) for i in ids) == 1, err.value
     # the empty snapshot leaves the table readable
     assert img_io.committed_ids(spark, table).count() == 0
+
+
+_KILLED_RUN = r'''
+import os
+import signal
+import sys
+
+from ssgp_toolbox_spark import generator
+from ssgp_toolbox_spark.io import images as img_io
+from ssgp_toolbox_spark.operators import gapfill, stats
+from ssgp_toolbox_spark.session import get_spark
+
+table = sys.argv[1]
+real_rename = os.rename
+published = []
+
+
+def rename(src, dst):
+    # the manifest rename is the commit point of append_snapshot: die
+    # just before the second one, with its data dir already written
+    if os.path.dirname(dst) == os.path.join(table, img_io.SNAPDIR):
+        if len(published) == 1:
+            sid = os.path.basename(dst)[:-len(".json")]
+            assert os.path.isdir(os.path.join(table, "data", sid))
+            os.kill(os.getpid(), signal.SIGKILL)
+        published.append(dst)
+    real_rename(src, dst)
+
+
+os.rename = rename
+spark = get_spark("ssgp-killed-run", master="local[2]",
+                  extra_confs={"spark.sql.shuffle.partitions": "4",
+                               "spark.driver.memory": "1g"})
+imgs = stats.with_stats(img_io.with_id_parts(generator.images_df(
+    spark, sites=("stp",), n_history=4, n_inputs=3)))
+gapfill.gapfill_balanced_checkpointed(imgs, table, batch_rows=1,
+                                      params={"n_neighbors": 5})
+'''
+
+
+def test_gapfill_balanced_checkpointed_resumes_after_kill(spark, tmp_path):
+    """A run SIGKILLed inside its second commit (data dir written,
+    manifest not yet published) resumes to exactly a one-shot
+    ``gapfill``: every input once, bit-identical, and the torn
+    snapshot stays invisible."""
+    import os
+    import signal
+    import subprocess
+    import sys
+
+    from ssgp_toolbox_spark.operators import gapfill
+
+    table = str(tmp_path / "gf_killed")
+    script = tmp_path / "killed_run.py"
+    script.write_text(_KILLED_RUN)
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "PYTHONPATH": os.pathsep.join(
+        p for p in (root, os.environ.get("PYTHONPATH")) if p)}
+    proc = subprocess.run([sys.executable, str(script), table], env=env,
+                          capture_output=True, text=True, timeout=600)
+    assert proc.returncode == -signal.SIGKILL, proc.stderr[-2000:]
+    assert len(img_io.snapshots(table)) == 1
+    assert len(os.listdir(os.path.join(table, "data"))) == 2
+    assert img_io.load(spark, table).count() == 1
+
+    df = generator.images_df(spark, sites=("stp",), n_history=4, n_inputs=3)
+    imgs = stats.with_stats(img_io.with_id_parts(df)).cache()
+    oneshot = {r["image_id"]: (bytes(r["bytes"]), r["filled_px"],
+                               r["mean_cv_mae"])
+               for r in gapfill.gapfill(
+                   imgs, method="Knn", predictor_configuration="Biome",
+                   hyperparameters="Custom",
+                   params={"n_neighbors": 5}).collect()}
+    assert len(oneshot) == 3
+
+    sids = gapfill.gapfill_balanced_checkpointed(
+        imgs, table, batch_rows=1, params={"n_neighbors": 5})
+    assert len(sids) == 2
+    rows = img_io.load(spark, table).collect()
+    assert sorted(r["image_id"] for r in rows) == sorted(oneshot)
+    assert {r["image_id"]: (bytes(r["bytes"]), r["filled_px"],
+                            r["mean_cv_mae"]) for r in rows} == oneshot
+    imgs.unpersist()

@@ -249,6 +249,8 @@ def test_key_values_rejects_lossy_fmt(spark):
     sentinels only — a custom encoding there would be silently
     corrupted (custom codes quantized as data, nothing filled). The
     operators must raise up front instead."""
+    from ssgp_toolbox_spark.operators import deep_gapfill
+
     imgs = stats.with_stats(img_io.with_id_parts(generator.images_df(
         spark, sites=("mini",), shape=(30, 20), n_history=2, n_inputs=1,
         fmt=codecs.FMT_PNG16)))
@@ -259,27 +261,33 @@ def test_key_values_rejects_lossy_fmt(spark):
         gapfill.gapfill(imgs, method="Knn", predictor_configuration="Random",
                         hyperparameters="Custom", params={"n_neighbors": 5},
                         key_values=KV).collect()
+    with pytest.raises(Exception, match="npy-f64"):
+        deep_gapfill.gapfill_deep(imgs, method="Knn",
+                                  predictor_configuration="Random",
+                                  hyperparameters="Custom",
+                                  params={"n_neighbors": 5},
+                                  key_values=KV).collect()
     # default encoding on png16 keeps working
     assert nn_fill.nn_fill(imgs.filter(F.col("role") == "input")).count() == 1
 
 
-def test_key_values_rejects_lossy_fmt_tiled_and_stats(spark):
+def test_key_values_rejects_lossy_fmt_tiled_and_stats(spark, tmp_path):
     """The guard must fire on EVERY entry point: with_stats(kv) on
     png16 would otherwise count the DEFAULT codes (gap_count=0 →
     all images routed to passthrough, bypassing the fill operators'
     own guard, which only runs inside the viable-row mapInPandas);
-    tiled_gapfill would silently find zero gaps yet report
-    status='filled'."""
-    from ssgp_toolbox_spark.operators import tiled_gapfill
-
+    the checkpointed fill (the plan contract query r06 runs) must
+    raise before it commits any snapshot."""
     imgs = img_io.with_id_parts(generator.images_df(
         spark, sites=("mini",), shape=(30, 20), n_history=2, n_inputs=1,
         fmt=codecs.FMT_PNG16))
     with pytest.raises(Exception, match="npy-f64"):
         stats.with_stats(imgs, KV).select("gap_count").collect()
+    table = tmp_path / "ckpt"
     with pytest.raises(Exception, match="npy-f64"):
-        tiled_gapfill.tiled_gapfill(imgs, tile=16, halo=8,
-                                    params={"n_neighbors": 5},
-                                    key_values=KV).collect()
+        gapfill.gapfill_balanced_checkpointed(
+            stats.with_stats(imgs), str(table), batch_rows=1, params={"n_neighbors": 5},
+            key_values=KV)
+    assert not list(table.glob("**/*.parquet"))
     # the default encoding still passes with_stats
     assert stats.with_stats(imgs).count() == imgs.count()

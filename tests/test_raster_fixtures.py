@@ -81,3 +81,33 @@ def test_hamming_pairs_plan_has_no_cross_join(spark):
     rows = df.collect()
     assert len(rows) == 3  # planted dup pair + exact-copy pair vs history t3
     assert all(r["hamming"] <= 8 for r in rows)
+
+
+def test_r06_checkpointed_fill_matches_fixture(spark, monkeypatch):
+    """r06 runs the resumable checkpointed fill (one snapshot per input)
+    and returns exactly the fixture rows; its temporary table is gone
+    once the query returns."""
+    import os
+    import tempfile
+
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as entry
+
+    made = []
+    real_mkdtemp = tempfile.mkdtemp
+
+    def spy(*args, **kwargs):
+        made.append(real_mkdtemp(*args, **kwargs))
+        return made[-1]
+
+    monkeypatch.setattr(tempfile, "mkdtemp", spy)
+    # r06 builds its corpus from the generator: no scale-factor dir
+    got = [tuple(r) for r in entry.r06_tiled_gapfill(spark, None).collect()]
+    t = pq.read_table(os.path.join(os.path.dirname(__file__), "..",
+                                   "fixtures", "r06_expected.parquet")) \
+        .to_pydict()
+    want = sorted(zip(t["image_id"], t["status"], t["filled_px"]))
+    assert got == want
+    assert len(made) == 1 and os.path.basename(made[0]).startswith("r06_")
+    assert not os.path.exists(made[0])
